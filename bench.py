@@ -236,7 +236,7 @@ def main() -> None:
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     iters = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_ITERS", "3")))
-    from gizmosql_spark.session import get_spark
+    from gizmosql_spark.session import DEFAULT_CPUS, get_spark
 
     import __spark_entry__ as entrymod
 
@@ -394,7 +394,7 @@ def main() -> None:
         # 250-entry per-query map — so every run must leave a
         # self-describing per-query artifact in the repo. `cpus` +
         # `ts` make runs distinguishable in the append-only log.
-        "cpus": int(os.environ.get("SPARK_GRAFT_CPUS", "32")),
+        "cpus": DEFAULT_CPUS,
         "ts": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
         "batch_value": round(total - streaming, 4),
         "streaming_value": streaming,

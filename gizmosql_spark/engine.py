@@ -29,7 +29,8 @@ import uuid
 from dataclasses import dataclass, field
 from typing import Any
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import functions as F
 
 from gizmosql_spark import security
 from gizmosql_spark.admission import AdmissionController
@@ -205,6 +206,25 @@ def _count_positional_params(sql: str) -> int:
     clients prepare with; the reference inherits it from DuckDB's
     prepared statements)."""
     return _mask_sql_literals(sql).count("?")
+
+
+#: ``Engine.ingest`` mode → ``DataFrameWriter`` save mode (``fail`` is
+#: the ADBC name for ``create``).
+_INGEST_SAVE_MODES = {"create": "errorifexists", "fail": "errorifexists",
+                      "replace": "overwrite", "append": "append"}
+
+
+def _counted_write(df: DataFrame, write) -> int:
+    """Run ``write`` on ``df`` with a row count observed inside the
+    write job; return the rows that job wrote. One Spark job, where a
+    ``count()`` first would read the source twice.
+
+    ``Observation.get`` blocks until the observed action has finished,
+    so it is read only after ``write`` returned: a write that raises
+    never reaches it (a wait there would hang the caller's thread)."""
+    obs = Observation()
+    write(df.observe(obs, F.count(F.lit(1)).alias("rows")))
+    return obs.get["rows"]
 
 
 class Engine:
@@ -1007,18 +1027,18 @@ class Engine:
             direction, src, path, fmt, opts = cp
             if direction == "to":
                 q = src[1:-1] if src.startswith("(") else f"SELECT * FROM {src}"
-                df = st.spark.sql(q)
-                n = df.count()
-                copy_to(df, path, fmt=fmt, **opts)
+                n = _counted_write(
+                    st.spark.sql(q),
+                    lambda d: copy_to(d, path, fmt=fmt, **opts))
                 return StatementResult("update", affected_rows=n)
             reader = st.spark.read.format(fmt)
             for k, v in opts.items():
                 reader = reader.option(k, v)
             if fmt == "csv" and "inferSchema" not in opts:
                 reader = reader.option("inferSchema", "true")
-            src_df = reader.load(path)
-            n = src_df.count()
-            src_df.write.mode("append").insertInto(src)
+            n = _counted_write(
+                reader.load(path),
+                lambda d: d.write.mode("append").insertInto(src))
             self._refresh_everywhere(src)
             self.warehouse.record(st.spark, src)
             return StatementResult("update", affected_rows=n)
@@ -1438,18 +1458,26 @@ class Engine:
 
     def ingest(self, session_id: str, table: str, data,
                mode: str = "create") -> int:
-        """Arrow table / pandas / DataFrame → managed table.
+        """Arrow table / RecordBatchReader / batch iterator / pandas /
+        DataFrame → managed table, in one Spark job.
 
         Modes mirror the reference: ``create`` (error if exists),
         ``replace`` (overwrite), ``append`` (by-name column alignment —
         the ``INSERT INTO ... BY NAME`` path, duckdb_server.cpp:
-        1954-1974). Returns ingested row count (verified the way the
-        reference verifies the interim insert, :1960-1970)."""
+        1954-1974). Returns the row count the write job committed,
+        observed inside that job. For Arrow and pandas input it is
+        checked against the rows received and a mismatch raises, as the
+        reference verifies the interim insert (:1960-1970); a DataFrame
+        has no received count, so its observed count is returned as is."""
         st = self._session(session_id)
         if st.role == "readonly":
             raise security.CommandDenied("readonly role may not ingest")
+        save_mode = _INGEST_SAVE_MODES.get(mode)
+        if save_mode is None:
+            raise ValueError(f"unknown ingest mode: {mode}")
         if st.txn is not None:
             self._txn_snapshot(st, table)
+        received = None
         if not isinstance(data, DataFrame):
             import pyarrow as pa
 
@@ -1457,11 +1485,11 @@ class Engine:
                 data = data.read_all()
             elif not isinstance(data, pa.Table) and hasattr(data, "__iter__") \
                     and not hasattr(data, "columns"):
-                batches = list(data)
-                if batches and isinstance(batches[0], pa.RecordBatch):
-                    data = pa.Table.from_batches(batches)
+                data = list(data)
+                if data and isinstance(data[0], pa.RecordBatch):
+                    data = pa.Table.from_batches(data)
+            received = data.num_rows if isinstance(data, pa.Table) else len(data)
         df = data if isinstance(data, DataFrame) else st.spark.createDataFrame(data)
-        n = df.count()
         if mode == "replace":
             try:
                 self.warehouse.snapshot(st.spark, table)
@@ -1469,17 +1497,16 @@ class Engine:
                 pass
         self.warehouse.prepare_write(st.spark, table,
                                      overwrite=mode == "replace")
-        if mode in ("create", "fail"):
-            df.write.mode("errorifexists").saveAsTable(table)
-        elif mode == "replace":
-            df.write.mode("overwrite").saveAsTable(table)
-        elif mode == "append":
-            target_cols = [f.name for f in st.spark.table(table).schema.fields]
-            df.select(*target_cols).write.mode("append").saveAsTable(table)
-        else:
-            raise ValueError(f"unknown ingest mode: {mode}")
+        if mode == "append":
+            df = df.select(*st.spark.table(table).schema.fieldNames())
+        n = _counted_write(
+            df, lambda d: d.write.mode(save_mode).saveAsTable(table))
         self._refresh_everywhere(table)
         self.warehouse.record(st.spark, table)
+        if received is not None and n != received:
+            raise RuntimeError(
+                f"ingest into {table}: received {received} rows, "
+                f"the write committed {n}")
         return n
 
     def _summarize(self, st: SessionState, target: str):
@@ -1491,8 +1518,6 @@ class Engine:
         collected row unpivots into the per-column report — scalars to
         the driver, never data."""
         import re as _re
-
-        from pyspark.sql import functions as F
 
         t = target.strip()
         df = (st.spark.table(t)
@@ -1554,8 +1579,6 @@ class Engine:
         """DuckDB client-compat PRAGMAs (the reference passes PRAGMA
         statements through to DuckDB; admin_command_guard.cpp:372
         gates the dangerous ones). Unknown pragmas fail closed."""
-        from pyspark.sql import functions as F
-
         spark = st.spark
         if name == "version":
             df = spark.createDataFrame(

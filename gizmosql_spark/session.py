@@ -8,9 +8,9 @@ coalescing), Arrow-based Python interchange, parquet pushdown, and a
 shuffle-partition count sized to the cluster rather than the 200
 default.
 
-Local testing uses ``local[$SPARK_GRAFT_CPUS]`` (default 32); on a real
-cluster the same builder works — only ``master`` and the partition
-counts change.
+Local testing uses ``local[$SPARK_GRAFT_CPUS]`` (default: the machine's
+core count, ``os.cpu_count()``); on a real cluster the same builder
+works — only ``master`` and the partition counts change.
 """
 
 from __future__ import annotations
@@ -21,7 +21,7 @@ from pyspark.sql import SparkSession
 
 # One partition per core locally; on a 1000-executor cluster this would
 # be set to 2-3x total cores (and AQE coalesces down after shuffles).
-DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count() or 1)
 
 #: Configs applied to every session. Each is chosen for 100 TB scale:
 #: - AQE: runtime join-strategy re-pick + skew splitting + partition

@@ -209,8 +209,13 @@ class WarehouseCatalog:
         return out
 
     def record(self, spark: SparkSession, table: str) -> None:
-        """Upsert a table's manifest entry (no-op for temp views /
-        unknown names — e.g. a DROP that already ran)."""
+        """Upsert a table's manifest entry after a catalog write; a name
+        the catalog no longer has (e.g. a DROP that already ran) is
+        forgotten, and a temp view is skipped.
+
+        The name is looked up with ``catalog.getTable``, which resolves
+        a temp view first, as SQL does. It runs no Spark job and lists
+        no other table."""
         if not _IDENT_RE.match(table or ""):
             return
         name = table.split(".")[-1].lower()
@@ -218,14 +223,11 @@ class WarehouseCatalog:
             if not spark.catalog.tableExists(table):
                 self.forget(table)
                 return
-            # temp views have no files to persist
-            t = next((t for t in spark.catalog.listTables()
-                      if t.name.lower() == name), None)
-            if t is not None and t.isTemporary:
-                return
+            t = spark.catalog.getTable(table)
+            if t.isTemporary:
+                return  # temp views have no files to persist
             d = self._describe(spark, table)
-            if (t is not None and t.tableType == "VIEW") or \
-                    d.get("View Text"):
+            if t.tableType == "VIEW" or d.get("View Text"):
                 # persistent VIEW: the in-memory catalog forgets the
                 # definition at exit — the manifest carries it (the
                 # reference keeps views in its database file)
@@ -405,6 +407,10 @@ class WarehouseCatalog:
         if not _IDENT_RE.match(table or ""):
             return None
         try:
+            # a first write has nothing to archive; DESCRIBE on a
+            # missing name would fail analysis and log it at ERROR
+            if not spark.catalog.tableExists(table):
+                return None
             d = self._describe(spark, table)
         except Exception:
             return None

@@ -11,6 +11,7 @@ from __future__ import annotations
 import threading
 import time
 
+import pyarrow as pa
 import pytest
 
 from gizmosql_spark import security
@@ -270,6 +271,106 @@ def test_ingest_modes(engine, session, spark):
     with pytest.raises(Exception):
         engine.ingest(session, "ingest_t", df, mode="create")
     spark.sql("DROP TABLE IF EXISTS ingest_t")
+
+
+@pytest.fixture()
+def ingest_table(engine, session):
+    """A table name dropped (through the engine, so the warehouse
+    manifest follows) before and after the test."""
+    name = "ingest_contract"
+    engine.execute_sql(session, f"DROP TABLE IF EXISTS {name}")
+    yield name
+    engine.execute_sql(session, f"DROP TABLE IF EXISTS {name}")
+
+
+def _ingest_rows(n: int, start: int = 0) -> pa.Table:
+    return pa.table({"id": pa.array(range(start, start + n), pa.int64()),
+                     "v": [f"r{i}" for i in range(start, start + n)]})
+
+
+# each input kind: rows → the object handed to Engine.ingest
+_INGEST_INPUTS = {
+    "arrow": lambda spark, t: t,
+    "arrow_empty": lambda spark, t: t.slice(0, 0),
+    "reader": lambda spark, t: pa.RecordBatchReader.from_batches(
+        t.schema, t.to_batches(max_chunksize=2)),
+    "batch_iter": lambda spark, t: iter(t.to_batches(max_chunksize=2)),
+    "pandas": lambda spark, t: t.to_pandas(),
+    "spark_df": lambda spark, t: spark.createDataFrame(t),
+    "spark_df_empty": lambda spark, t: spark.createDataFrame(t.slice(0, 0)),
+}
+
+
+@pytest.mark.parametrize("mode", ["create", "replace", "append"])
+@pytest.mark.parametrize("kind", sorted(_INGEST_INPUTS))
+def test_ingest_returns_committed_rows(engine, session, spark, ingest_table,
+                                       kind, mode):
+    """Every input kind in every mode: the returned count is the rows
+    received, and the table then holds exactly those rows (plus the
+    prior ones on append)."""
+    table = ingest_table
+    prior = _ingest_rows(2, start=100)
+    if mode != "create":
+        engine.ingest(session, table, prior, mode="create")
+    rows = _ingest_rows(5)
+    data = _INGEST_INPUTS[kind](spark, rows)
+    expected = [] if kind.endswith("_empty") else rows["id"].to_pylist()
+    assert engine.ingest(session, table, data, mode=mode) == len(expected)
+    if mode == "append":
+        expected = prior["id"].to_pylist() + expected
+    got = engine.collect(session, engine.execute_sql(
+        session, f"SELECT id FROM {table} ORDER BY id"))
+    assert [r["id"] for r in got] == sorted(expected)
+
+
+@pytest.mark.parametrize("mode", ["create", "replace", "append"])
+def test_ingest_is_one_spark_job(engine, session, spark, ingest_table, mode):
+    """The row count rides inside the write and the manifest entry is
+    recorded without a catalog listing: one upload, one Spark job."""
+    table = ingest_table
+    if mode != "create":
+        engine.ingest(session, table, _ingest_rows(3), mode="create")
+    sc = spark.sparkContext
+    group = f"ingest-jobs-{mode}-{time.monotonic_ns()}"
+    sc.setJobGroup(group, "ingest job count")
+    try:
+        assert engine.ingest(session, table, _ingest_rows(1000),
+                             mode=mode) == 1000
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
+
+
+def test_ingest_create_over_existing_fails_promptly(engine, session,
+                                                    ingest_table):
+    """A failed write never waits on the row-count observation (which
+    would block until an action that never ran finished)."""
+    table = ingest_table
+    engine.ingest(session, table, _ingest_rows(3), mode="create")
+    out: dict = {}
+
+    def run():
+        try:
+            engine.ingest(session, table, _ingest_rows(3), mode="create")
+        except Exception as exc:  # noqa: BLE001 - asserted below
+            out["error"] = exc
+
+    t = threading.Thread(target=run, daemon=True)
+    t.start()
+    t.join(60)
+    assert not t.is_alive(), "create over an existing table blocked"
+    assert "already exists" in str(out.get("error", "")).lower()
+
+
+def test_ingest_raises_when_committed_rows_differ(engine, session,
+                                                   ingest_table, monkeypatch):
+    from gizmosql_spark import engine as engine_mod
+
+    real = engine_mod._counted_write
+    monkeypatch.setattr(engine_mod, "_counted_write",
+                        lambda df, write: real(df, write) - 1)
+    with pytest.raises(RuntimeError, match="received 4 rows.*committed 3"):
+        engine.ingest(session, ingest_table, _ingest_rows(4), mode="create")
 
 
 def test_drain_rejects_new_work(spark):

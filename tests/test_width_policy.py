@@ -21,6 +21,11 @@ def clone(spark):
     """A fresh conf-isolated session so width mutations never leak
     into the shared test session."""
     s = spark.newSession()
+    # launch width above the narrow width on any core count, so the
+    # narrow-then-restore policy is observable (the first width seen is
+    # the restore target)
+    s.conf.set("spark.sql.shuffle.partitions",
+               str(2 * loader.SMALL_SHUFFLE_PARTITIONS))
     yield s
     loader._WIDTH_STATE.pop(s, None)
 
