@@ -499,28 +499,24 @@ class Engine:
                 )
             check_system_catalog_write(sql)
         except Exception as exc:
-            elapsed = (time.perf_counter() - t_start) * 1000
-            self.query_log.record(session_id, sql, "denied", elapsed)
+            self._record_outcome(st, sql, "denied", t_start)
             self.instr.statement(
                 session_id, sql, "execute_sql", False, str(exc))
-            self.access_log.record(
-                "execute_sql", identity=st.username, status="DENIED",
-                duration_ms=elapsed, detail=sql)
             raise
         # ATTACH/DETACH of remote Flight engines (adbc_scanner analog;
         # reaches here only for admins — the admin gate above blocks
         # ATTACH/DETACH for everyone else)
-        att = parse_attach_flight(sql)
-        if att is not None:
-            alias, uri, user, pw = att
-            st.attached[alias] = (uri, user, pw)
-            self.query_log.record(
-                session_id, sql, "ok", (time.perf_counter() - t_start) * 1000)
-            return StatementResult("set", info={"attached": alias})
-        det = parse_detach(sql)
-        if det is not None and det in st.attached:
-            st.attached.pop(det)
-            return StatementResult("set", info={"detached": det})
+        att, det = parse_attach_flight(sql), parse_detach(sql)
+        if att is not None or det in st.attached:
+            if att is not None:
+                alias, uri, user, pw = att
+                st.attached[alias] = (uri, user, pw)
+                info = {"attached": alias}
+            else:
+                st.attached.pop(det)
+                info = {"detached": det}
+            self._record_outcome(st, sql, "ok", t_start)
+            return StatementResult("set", info=info)
 
         self.system_catalog.observe_statement(sql)
         write_target = dml_target(sql) or ddl_write_target(sql)
@@ -534,15 +530,9 @@ class Engine:
                 result = self._run_statement(st, sql)
                 sp.set_attribute("statement.kind", result.kind)
         except Exception as exc:
-            elapsed = (time.perf_counter() - t_start) * 1000
-            self.query_log.record(session_id, sql, "error", elapsed)
+            elapsed = self._record_outcome(st, sql, "error", t_start)
             self.instr.execution(
                 stmt_id, "error", duration_ms=elapsed, error=str(exc))
-            self.access_log.record(
-                "execute_sql", identity=st.username, status="ERROR",
-                duration_ms=elapsed, detail=sql)
-            self.telemetry.add_counter(
-                "engine.statements_total", status="error")
             raise
         if write_target is not None:
             # keep the persistent manifest in step with catalog writes
@@ -555,8 +545,7 @@ class Engine:
                 # forgotten above); record the NEW name so the files
                 # survive a restart under it
                 self.warehouse.record(st.spark, ren.group(1).strip("`"))
-        elapsed = (time.perf_counter() - t_start) * 1000
-        self.query_log.record(session_id, sql, "ok", elapsed)
+        elapsed = self._record_outcome(st, sql, "ok", t_start)
         result.statement_id = stmt_id
         result.trace_id = sp.trace_id
         result.root_span_id = sp.span_id
@@ -566,11 +555,22 @@ class Engine:
             self.instr.execution(
                 stmt_id, "success", duration_ms=elapsed,
                 rows_fetched=result.affected_rows)
-        self.access_log.record(
-            "execute_sql", identity=st.username, status="OK",
-            duration_ms=elapsed, detail=sql)
-        self.telemetry.add_counter("engine.statements_total", status="ok")
         return result
+
+    def _record_outcome(self, st: SessionState, sql: str, status: str,
+                        t_start: float) -> float:
+        """Fan one ``execute_sql`` outcome (``ok``/``error``/``denied``)
+        out to the query log, the access log and the statement counter;
+        returns the elapsed ms. The instrumentation rows stay with the
+        caller: a denial is a failed prepare, a lazy query records its
+        execution when it is materialized."""
+        elapsed = (time.perf_counter() - t_start) * 1000
+        self.query_log.record(st.session_id, sql, status, elapsed)
+        self.access_log.record(
+            "execute_sql", identity=st.username, status=status.upper(),
+            duration_ms=elapsed, detail=sql)
+        self.telemetry.add_counter("engine.statements_total", status=status)
+        return elapsed
 
     def enable_catalog_logging(self, path: str | None = None,
                                queue_max: int = 1000):
@@ -1223,73 +1223,102 @@ class Engine:
 
     def collect(self, session_id: str, result: StatementResult,
                 timeout: float | None = None) -> list:
-        """Materialize under admission control + timeout watchdog
-        (duckdb_statement.cpp:1956-2038 admission; :2042-2192 async
-        execute + interrupt)."""
+        """Materialize as a list of Rows. Shares one statement lifecycle
+        with ``collect_arrow`` (``_materialize``: admission, timeout
+        watchdog, cancel, execution record and collect span)."""
         st = self._session(session_id)
+        return self._materialize(st, result, result.df.collect, timeout)[0]
+
+    def collect_arrow(self, session_id: str, result: StatementResult,
+                      timeout: float | None = None):
+        """Materialize as a pyarrow Table — the Arrow-stream result path
+        (reference: RecordBatchStream over gRPC,
+        duckdb_statement_batch_reader.cpp:68-85; here ``df.toArrow()``).
+        Shares one statement lifecycle with ``collect``
+        (``_materialize``)."""
+        st = self._session(session_id)
+        table = self._materialize(st, result, result.df.toArrow, timeout)[0]
+        # GeoArrow export: stamp geometry (WKB) binary columns with
+        # extension metadata at the Arrow boundary, like the reference
+        # (docs/geometry.md; only binary columns are even inspected)
+        from gizmosql_spark.geo import attach_geoarrow_metadata
+
+        return attach_geoarrow_metadata(table)
+
+    def _materialize(self, st: SessionState, result: StatementResult,
+                     action, timeout: float | None,
+                     rows=len) -> tuple[Any, float]:
+        """Run ``action`` (an action on ``result.df``) as one statement
+        execution: admission first (duckdb_statement.cpp:1956-2038),
+        then the action on a worker thread in the session's job group,
+        interrupted on timeout or cancel (:2042-2192). Every outcome
+        leaves one execution row (queue wait + duration) and one
+        ``statement.collect`` span on the statement's trace. ``rows``
+        maps the action's value to its row count. Returns the value and
+        the execution time in ms."""
         if timeout is None:
-            timeout = float(st.settings.get("engine.query_timeout", self.global_settings) or 0)
+            timeout = float(st.settings.get(
+                "engine.query_timeout", self.global_settings) or 0)
         bypass = bool(st.settings.get("engine.bypass_queue", self.global_settings))
         t_enqueue = time.perf_counter()
         if not bypass:
             self._admission.acquire()
-        queue_wait_ms = (time.perf_counter() - t_enqueue) * 1000
-        t_exec = time.perf_counter()
-        st.statement_seq += 1
-        group = st.session_id
-        sc = self.spark.sparkContext
-        out: dict[str, Any] = {}
-
-        def _run():
-            sc.setJobGroup(group, f"stmt-{st.statement_seq}", interruptOnCancel=True)
-            try:
-                out["rows"] = result.df.collect()
-            except Exception as e:  # surfaced below
-                out["error"] = e
-
-        def _record(status: str, rows: int | None = None,
-                    error: str | None = None) -> None:
-            if result.statement_id is not None:
-                self.instr.execution(
-                    result.statement_id, status, queue_wait_ms=queue_wait_ms,
-                    duration_ms=(time.perf_counter() - t_exec) * 1000,
-                    rows_fetched=rows, error=error)
-            # child span onto the statement's trace (collect phase)
-            with self.telemetry.span(
-                "statement.collect", trace_id=result.trace_id,
-                parent_id=result.root_span_id, session=st.session_id,
-                queue_wait_ms=queue_wait_ms) as sp:
-                sp.set_attribute("status", status)
-                if rows is not None:
-                    sp.set_attribute("rows", rows)
-                if error is not None:
-                    sp.set_error(error)
-            if rows is not None:
-                self.telemetry.add_counter(
-                    "engine.rows_fetched_total", float(rows))
-
         try:
+            t_exec = time.perf_counter()
+            queue_wait_ms = (t_exec - t_enqueue) * 1000
+            st.statement_seq += 1
+            job_desc = f"stmt-{st.statement_seq}"
+            sc = self.spark.sparkContext
+            out: dict[str, Any] = {}
+
+            def _run():
+                sc.setJobGroup(st.session_id, job_desc, interruptOnCancel=True)
+                try:
+                    out["value"] = action()
+                except Exception as e:  # surfaced below
+                    out["error"] = e
+
             worker = threading.Thread(target=_run, daemon=True)
             worker.start()
-            worker.join(timeout if timeout and timeout > 0 else None)
-            if worker.is_alive():
-                sc.cancelJobGroup(group)
+            worker.join(timeout if timeout > 0 else None)
+            timed_out = worker.is_alive()
+            if timed_out:
+                sc.cancelJobGroup(st.session_id)
                 worker.join(10)
-                _record("timeout", error=f"exceeded {timeout}s")
-                raise StatementTimeout(f"statement exceeded {timeout}s")
         finally:
             if not bypass:
                 self._admission.release()
-        if "error" in out:
-            err = out["error"]
-            if st.killed or "cancelled" in str(err).lower():
-                _record("cancelled", error=str(err))
-                raise StatementCancelled(str(err))
-            _record("error", error=str(err))
+        err, n_rows = out.get("error"), None
+        if timed_out:
+            status, err = "timeout", StatementTimeout(
+                f"statement exceeded {timeout}s")
+        elif err is None:
+            status, n_rows = "success", rows(out["value"])
+            self._maybe_capture_profile(st, result)
+        elif st.killed or "cancelled" in str(err).lower():
+            status, err = "cancelled", StatementCancelled(str(err))
+        else:
+            status = "error"
+        elapsed_ms = (time.perf_counter() - t_exec) * 1000
+        if result.statement_id is not None:
+            self.instr.execution(
+                result.statement_id, status, queue_wait_ms=queue_wait_ms,
+                duration_ms=elapsed_ms, rows_fetched=n_rows,
+                error=None if err is None else str(err))
+        # child span onto the statement's trace (collect phase)
+        with self.telemetry.span(
+            "statement.collect", trace_id=result.trace_id,
+            parent_id=result.root_span_id, session=st.session_id,
+            queue_wait_ms=queue_wait_ms) as sp:
+            sp.set_attribute("status", status)
+            if err is None:
+                sp.set_attribute("rows", n_rows)
+            else:
+                sp.set_error(str(err))
+        if err is not None:
             raise err
-        self._maybe_capture_profile(st, result)
-        _record("success", rows=len(out["rows"]))
-        return out["rows"]
+        self.telemetry.add_counter("engine.rows_fetched_total", float(n_rows))
+        return out["value"], elapsed_ms
 
     def _explain_analyze(self, st: SessionState,
                          inner_sql: str) -> StatementResult:
@@ -1302,8 +1331,6 @@ class Engine:
         Restricted to query statements (documented deviation: DuckDB
         also accepts DML here) so the EXPLAIN prefix can never smuggle
         a write past a readonly session's statement classifier."""
-        import time as _time
-
         if not __import__("re").match(
             r"^\s*(SELECT|WITH|VALUES|TABLE|FROM)\b", inner_sql,
             __import__("re").IGNORECASE,
@@ -1313,9 +1340,14 @@ class Engine:
         result = self._run_statement(st, inner_sql)
         if result.df is None:
             raise ValueError("EXPLAIN ANALYZE requires a query statement")
-        t0 = _time.time()
-        n_rows = result.df.count()
-        elapsed = _time.time() - t0
+        # the run is a statement execution like any other (admission,
+        # engine.query_timeout, cancel). The noop sink evaluates every
+        # column, where count() would prune the projections away.
+        n_rows, elapsed_ms = self._materialize(
+            st, result, lambda: _counted_write(
+                result.df,
+                lambda d: d.write.format("noop").mode("overwrite").save()),
+            None, rows=int)
         try:
             plan = result.df._sc._jvm.PythonSQLUtils.explainString(
                 result.df._jdf.queryExecution(), "formatted"
@@ -1323,7 +1355,7 @@ class Engine:
         except Exception:
             plan = result.df._jdf.queryExecution().toString()
         header = (
-            f"rows: {n_rows}\nelapsed_sec: {round(elapsed, 4)}\n"
+            f"rows: {n_rows}\nelapsed_sec: {round(elapsed_ms / 1000, 4)}\n"
         )
         df = st.spark.createDataFrame(
             [(header + plan,)], "explain_analyze string")
@@ -1357,56 +1389,6 @@ class Engine:
             if p["session_id"] == session_id:
                 return p
         return None
-
-    def collect_arrow(self, session_id: str, result: StatementResult,
-                      timeout: float | None = None):
-        """Materialize as a pyarrow Table — the Arrow-stream result path
-        (reference: RecordBatchStream over gRPC,
-        duckdb_statement_batch_reader.cpp:68-85; here ``df.toArrow()``
-        with the same admission/watchdog wrapping as ``collect``)."""
-        st = self._session(session_id)
-        if timeout is None:
-            timeout = float(st.settings.get("engine.query_timeout", self.global_settings) or 0)
-        bypass = bool(st.settings.get("engine.bypass_queue", self.global_settings))
-        if not bypass:
-            self._admission.acquire()
-        st.statement_seq += 1
-        sc = self.spark.sparkContext
-        out: dict[str, Any] = {}
-
-        def _run():
-            sc.setJobGroup(st.session_id, f"stmt-{st.statement_seq}", interruptOnCancel=True)
-            try:
-                out["table"] = result.df.toArrow()
-            except Exception as e:
-                out["error"] = e
-
-        try:
-            worker = threading.Thread(target=_run, daemon=True)
-            worker.start()
-            worker.join(timeout if timeout and timeout > 0 else None)
-            if worker.is_alive():
-                sc.cancelJobGroup(st.session_id)
-                worker.join(10)
-                raise StatementTimeout(f"statement exceeded {timeout}s")
-        finally:
-            if not bypass:
-                self._admission.release()
-        if "error" in out:
-            if result.statement_id is not None:
-                self.instr.execution(
-                    result.statement_id, "error", error=str(out["error"]))
-            raise out["error"]
-        if result.statement_id is not None:
-            self.instr.execution(
-                result.statement_id, "success",
-                rows_fetched=out["table"].num_rows)
-        # GeoArrow export: stamp geometry (WKB) binary columns with
-        # extension metadata at the Arrow boundary, like the reference
-        # (docs/geometry.md; only binary columns are even inspected)
-        from gizmosql_spark.geo import attach_geoarrow_metadata
-
-        return attach_geoarrow_metadata(out["table"])
 
     # --- prepared statements (§3.2) -----------------------------------
 

@@ -15,7 +15,9 @@ This module re-expresses that surface on ``pyarrow.flight``:
   the reference's prepare-only pass; the returned endpoint carries a
   one-shot ticket.
 - **DoGet** (ticket) → ``Engine.collect_arrow`` under admission
-  control + timeout watchdog, streamed back as record batches.
+  control + timeout watchdog, streamed back as record batches. The
+  statement's execution row records its queue wait and duration, and
+  a ``statement.collect`` span joins the statement's trace.
 - **GetSchema** → analyzed schema only, no job.
 - **DoPut** (ingest command) → ``Engine.ingest`` (create / replace /
   append by-name — the ADBC ``adbc_ingest`` modes).

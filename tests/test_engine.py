@@ -23,7 +23,13 @@ from gizmosql_spark.dialect import (
     extract_file_scans,
     replace_pseudo_functions,
 )
-from gizmosql_spark.engine import Engine, ServerDraining, SessionClosed
+from gizmosql_spark.engine import (
+    Engine,
+    ServerDraining,
+    SessionClosed,
+    StatementCancelled,
+    StatementTimeout,
+)
 from gizmosql_spark.settings import SettingError, SettingsState
 
 
@@ -487,6 +493,51 @@ def test_cancel_noop_on_idle_session(engine, session):
     engine.cancel(session)  # no in-flight statement: must not raise
 
 
+#: one task that sleeps 20 s in the JVM; ``cancelJobGroup`` interrupts it
+_SLEEP_SQL = ("SELECT java_method('java.lang.Thread', 'sleep',"
+              " CAST(20000 AS BIGINT)) AS s FROM range(1)")
+
+
+@pytest.fixture()
+def admission_cap(engine, session):
+    """Two admission slots, so the gate counts executing statements."""
+    before = engine._admission.max_concurrent
+    engine.execute_sql(
+        session, "SET GLOBAL engine.max_concurrent_statements = 2")
+    yield
+    engine.execute_sql(
+        session, f"SET GLOBAL engine.max_concurrent_statements = {before}")
+
+
+@pytest.mark.parametrize("interrupt", ["timeout", "cancel"])
+@pytest.mark.parametrize("sink", ["collect", "collect_arrow"])
+def test_watchdog_interrupts_both_sinks(engine, session, admission_cap,
+                                        sink, interrupt):
+    """Timeout and cancel take the same lifecycle whatever the sink: the
+    job is interrupted, the admission slot comes back, and the execution
+    row records the outcome with its duration."""
+    res = engine.execute_sql(session, _SLEEP_SQL)
+    materialize = getattr(engine, sink)
+    t0 = time.monotonic()
+    if interrupt == "timeout":
+        with pytest.raises(StatementTimeout):
+            materialize(session, res, timeout=1.0)
+    else:
+        timer = threading.Timer(1.5, engine.cancel, [session])
+        timer.start()
+        try:
+            with pytest.raises(StatementCancelled):
+                materialize(session, res)
+        finally:
+            timer.cancel()
+    assert time.monotonic() - t0 < 10
+    assert engine._admission.stats().executing == 0
+    last = engine.instr.executions[-1]
+    assert last[1] == res.statement_id
+    assert last[2] == {"timeout": "timeout", "cancel": "cancelled"}[interrupt]
+    assert last[4] > 0
+
+
 # --- system catalog / query log / BY NAME -----------------------------
 
 
@@ -848,6 +899,15 @@ class TestSummarizePragma:
         assert "elapsed_sec:" in text
         # the AQE-finalized physical plan is included
         assert "HashAggregate" in text or "Physical Plan" in text
+
+    def test_explain_analyze_obeys_query_timeout(self, engine, session):
+        """The analyzed run is a statement execution: the session's
+        engine.query_timeout interrupts it."""
+        engine.execute_sql(session, "SET engine.query_timeout = 1")
+        t0 = time.monotonic()
+        with pytest.raises(StatementTimeout):
+            engine.execute_sql(session, f"EXPLAIN ANALYZE {_SLEEP_SQL}")
+        assert time.monotonic() - t0 < 10
 
     def test_explain_analyze_rejects_dml(self, engine, session):
         engine.execute_sql(session, "DROP TABLE IF EXISTS t_ea")

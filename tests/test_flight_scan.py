@@ -100,6 +100,14 @@ def test_attach_flight_catalog(remote, local):
     with pytest.raises(Exception):
         eng.collect(sid, eng.execute_sql(
             sid, "SELECT * FROM rmt.t_remote_inv"))
+    # both statements reach the query log and the access log, redacted
+    logged = [e.sql for e in eng.query_log.entries() if e.status == "ok"]
+    accessed = [e[6] for e in eng.access_log.entries() if e[4] == "OK"]
+    for seen in (logged, accessed):
+        attach = [q for q in seen if q.startswith(f"ATTACH '{uri}' AS rmt")]
+        assert attach and "'pw'" not in attach[-1]
+        assert "PASSWORD '[REDACTED]'" in attach[-1]
+        assert "DETACH rmt" in seen
 
 
 def test_attach_requires_admin(remote, local):
