@@ -15,6 +15,7 @@ from __future__ import annotations
 
 import os
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 
 #: The driver fixture tables (TESTDATA.md).
@@ -54,17 +55,26 @@ def register_tables(
 # --- metadata operators (Flight SQL metadata RPC analogs) -------------
 
 
+def _local_frame(spark: SparkSession, columns: dict[str, list]) -> DataFrame:
+    """A local frame of string columns. ``createDataFrame`` of an
+    Arrow table is a LocalRelation: filtering and collecting it run no
+    Spark job (a Python row list would launch one)."""
+    return spark.createDataFrame(pa.table(
+        {k: pa.array(v, pa.string()) for k, v in columns.items()}))
+
+
 def get_catalogs(spark: SparkSession) -> DataFrame:
     """DoGetCatalogs analog (duckdb_server.cpp:1310-1319)."""
-    rows = [(c.name,) for c in spark.catalog.listCatalogs()]
-    return spark.createDataFrame(rows, "catalog_name string")
+    names = [r.catalog for r in spark.sql("SHOW CATALOGS").collect()]
+    return _local_frame(spark, {"catalog_name": names})
 
 
 def get_db_schemas(spark: SparkSession, pattern: str | None = None) -> DataFrame:
     """DoGetDbSchemas analog (duckdb_server.cpp:1327-1352)."""
     cat = spark.catalog.currentCatalog()
-    rows = [(cat, d.name) for d in spark.catalog.listDatabases()]
-    df = spark.createDataFrame(rows, "catalog_name string, db_schema_name string")
+    names = [r.namespace for r in spark.sql("SHOW NAMESPACES").collect()]
+    df = _local_frame(spark, {"catalog_name": [cat] * len(names),
+                              "db_schema_name": names})
     if pattern is not None:
         df = df.filter(df.db_schema_name.like(pattern))
     return df
@@ -81,61 +91,42 @@ def get_tables(
     analog of the serialized Arrow schema the reference attaches via
     duckdb_tables_schema_batch_reader.cpp).
     """
-    from pyspark.sql import functions as F
-
     cat = spark.catalog.currentCatalog()
-    # Two SHOW statements — one JVM round-trip each — instead of the
-    # former `spark.catalog.listTables()` Python loop, whose per-entry
-    # metadata resolution made this RPC O(accumulated session objects)
-    # (14 s recorded in a 250-query session vs 0.04 s oracle; round-6
-    # verdict).  The reference issues exactly one information_schema
-    # query here (duckdb_server.cpp:692-745).
-    tables = spark.sql("SHOW TABLES").select(
-        F.col("namespace").alias("ns"),
-        F.col("tableName").alias("table_name"),
-        F.col("isTemporary").alias("is_temp"),
-    )
-    views = spark.sql("SHOW VIEWS").select(
-        F.col("namespace").alias("ns"),
-        F.col("viewName").alias("table_name"),
-        F.lit(True).alias("is_view"),
-    )
-    df = (
-        tables.join(F.broadcast(views), ["ns", "table_name"], "left")
-        .select(
-            F.lit(cat).alias("table_catalog"),
-            F.when(F.col("ns") != "", F.col("ns"))
-            .otherwise(F.lit(None))
-            .alias("table_schema"),
-            "table_name",
-            F.when(F.col("is_temp"), "LOCAL TEMPORARY")
-            .when(F.coalesce(F.col("is_view"), F.lit(False)), "VIEW")
-            .otherwise("BASE TABLE")
-            .alias("table_type"),
-        )
-    )
+    # Two SHOW commands, collected and joined in Python: no Spark job
+    # (a join of the two frames ran two). The reference runs one
+    # information_schema query (duckdb_server.cpp:692-745).
+    views = {(r.namespace, r.viewName)
+             for r in spark.sql("SHOW VIEWS").collect()}
+    rows = [
+        (r.namespace or None, r.tableName,
+         "LOCAL TEMPORARY" if r.isTemporary
+         else "VIEW" if (r.namespace, r.tableName) in views
+         else "BASE TABLE")
+        for r in spark.sql("SHOW TABLES").collect()
+    ]
+    df = _local_frame(spark, {
+        "table_catalog": [cat] * len(rows),
+        "table_schema": [r[0] for r in rows],
+        "table_name": [r[1] for r in rows],
+        "table_type": [r[2] for r in rows],
+    })
     if name_pattern is not None:
         df = df.filter(df.table_name.like(name_pattern))
     if include_schema:
         # schema resolution is the expensive per-table step — do it
         # only on request, and only for the pattern-filtered names
-        rows = []
-        for r in df.collect():
-            name = (
-                f"{r.table_schema}.{r.table_name}"
-                if r.table_schema
-                else r.table_name
-            )
-            rows.append(
-                (r.table_catalog, r.table_schema, r.table_name,
-                 r.table_type, spark.table(name).schema.json())
-            )
-        return spark.createDataFrame(
-            rows,
-            "table_catalog string, table_schema string, "
-            "table_name string, table_type string, "
-            "table_schema_json string",
-        )
+        got = df.collect()
+        return _local_frame(spark, {
+            "table_catalog": [r.table_catalog for r in got],
+            "table_schema": [r.table_schema for r in got],
+            "table_name": [r.table_name for r in got],
+            "table_type": [r.table_type for r in got],
+            "table_schema_json": [
+                spark.table(f"{r.table_schema}.{r.table_name}"
+                            if r.table_schema else r.table_name
+                            ).schema.json()
+                for r in got],
+        })
     return df
 
 

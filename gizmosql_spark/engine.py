@@ -22,12 +22,15 @@ prepare-only pass (duckdb_statement.cpp:2456-2467).
 
 from __future__ import annotations
 
+import glob
 import os
+import re
 import threading
 import time
 import uuid
 from dataclasses import dataclass, field
 from typing import Any
+from urllib.parse import urlparse
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
@@ -142,6 +145,10 @@ class SessionState:
     #: (adbc_scanner ATTACH analog)
     attached: dict[str, tuple[str, str | None, str | None]] = field(
         default_factory=dict)
+    #: file-scan relations: (format, path) -> (file identity, frame),
+    #: least recently used first (_file_relation)
+    file_relations: dict[tuple[str, str], tuple[tuple, DataFrame]] = field(
+        default_factory=dict)
 
     @property
     def is_admin(self) -> bool:
@@ -212,6 +219,86 @@ def _count_positional_params(sql: str) -> int:
 #: the ADBC name for ``create``).
 _INGEST_SAVE_MODES = {"create": "errorifexists", "fail": "errorifexists",
                       "replace": "overwrite", "append": "append"}
+
+
+#: file-scan relations one session keeps; the least recently used
+#: is dropped past this
+_FILE_RELATIONS_PER_SESSION = 64
+
+#: Hadoop glob syntax Python's glob reads differently: alternation,
+#: escapes and ``[^…]``/``[!…]`` classes
+_HADOOP_ONLY_GLOB_RE = re.compile(r"[{}\\]|\[[!^]")
+#: any URI scheme (``s3a://``, ``hdfs:/``, ``file:``)
+_SCHEME_RE = re.compile(r"^[A-Za-z][A-Za-z0-9+.-]*:")
+#: a Spark-level SET/RESET (engine SETs are claimed by classify_command)
+_SPARK_SET_RE = re.compile(r"^\s*(?:SET|RESET)\b", re.IGNORECASE)
+
+
+def _file_identity(path: str) -> tuple | None:
+    """Sorted ``(file, size, mtime_ns, inode)`` of every file a local
+    scan path names: one file, a directory (walked recursively) or a
+    glob. None for a remote or relative path, a glob only Hadoop can
+    expand, or a stat error — such a path has no identity and is read
+    anew."""
+    if _SCHEME_RE.match(path):
+        url = urlparse(path)
+        if url.scheme != "file" or url.netloc not in ("", "localhost"):
+            return None
+        path = url.path
+    if not os.path.isabs(path) or _HADOOP_ONLY_GLOB_RE.search(path):
+        return None
+
+    roots = [path]
+    if any(c in path for c in "*?["):
+        roots = glob.glob(path, include_hidden=True)
+        if not roots:
+            return None
+
+    def _raise(exc: OSError):
+        raise exc
+
+    files = []
+    try:
+        for root in roots:
+            if not os.path.isdir(root):
+                files.append(root)
+                continue
+            for d, _, names in os.walk(root, onerror=_raise,
+                                       followlinks=True):
+                files.extend(os.path.join(d, n) for n in names)
+        stats = [(f, os.stat(f)) for f in files]
+    except OSError:
+        return None
+    return tuple(sorted((f, s.st_size, s.st_mtime_ns, s.st_ino)
+                        for f, s in stats))
+
+
+def _file_relation(st: SessionState, fmt: str, path: str) -> DataFrame:
+    """The session's relation for a file scan. It is rebuilt only when
+    the files' identity (``_file_identity``) changes, so a repeated
+    scan skips Spark's listing and schema-inference job; a path
+    without an identity is read anew on every call. Entries go with
+    the session, and a Spark-level SET/RESET drops them all (confs
+    such as ``spark.sql.caseSensitive`` shape inference)."""
+    key = (fmt, path)
+    ident = _file_identity(path)
+    got = st.file_relations.pop(key, None)
+    if ident is not None and got is not None and got[0] == ident:
+        st.file_relations[key] = got  # now the most recently used
+        return got[1]
+    df = st.spark.read.format(fmt).load(path)
+    if ident is not None:
+        st.file_relations[key] = (ident, df)
+        # list() copies the keys atomically, so statements running
+        # concurrently on one session cannot break the trim
+        for old in list(st.file_relations)[:-_FILE_RELATIONS_PER_SESSION]:
+            st.file_relations.pop(old, None)
+    return df
+
+
+def _forget_file_relations_on_set(st: SessionState, sql: str) -> None:
+    if _SPARK_SET_RE.match(sql):
+        st.file_relations.clear()
 
 
 def _counted_write(df: DataFrame, write) -> int:
@@ -362,6 +449,7 @@ class Engine:
             return
         st.closed = True
         st.prepared.clear()
+        st.file_relations.clear()
         self._cancel_session_jobs(st)
         with self._lock:
             self.sessions.pop(session_id, None)
@@ -875,7 +963,8 @@ class Engine:
             if vpath is None:
                 st.spark.table(tbl).createOrReplaceTempView(view)
             else:
-                st.spark.read.parquet(vpath).createOrReplaceTempView(view)
+                _file_relation(st, "parquet", vpath).createOrReplaceTempView(
+                    view)
 
         # pipeline-operator table function: every registered operator
         # (dedup, quality, sampling, sketches, …) callable from SQL —
@@ -910,7 +999,7 @@ class Engine:
                 # credentials to the Hadoop conf before the read (the
                 # httpfs-pickup analog; secrets.py)
                 self.secrets.apply_for_path(st.spark, path)
-            st.spark.read.format(fmt).load(path).createOrReplaceTempView(view)
+            _file_relation(st, fmt, path).createOrReplaceTempView(view)
 
         # remote-engine scans (flight_scan table function + attached
         # Flight catalogs) — admin-only, like ATTACH itself; results
@@ -1125,6 +1214,7 @@ class Engine:
             affected = abs(after - before) if before is not None else None
             return StatementResult("update", df=df, affected_rows=affected)
 
+        _forget_file_relations_on_set(st, sql)
         df = st.spark.sql(sql)
         if df.isStreaming or df.schema.fields:
             return StatementResult("query", df=df)
@@ -1401,6 +1491,7 @@ class Engine:
         n_pos = 0 if params else _count_positional_params(sql)
         schema = None
         if not params and not n_pos:
+            _forget_file_relations_on_set(st, sql)
             schema = st.spark.sql(sql).schema  # analysis only, no job
         names = params or [f"param_{i + 1}" for i in range(n_pos)]
         ps = PreparedStatement(
@@ -1415,6 +1506,7 @@ class Engine:
         ps = st.prepared.get(handle)
         if ps is None:
             raise KeyError(f"no such prepared statement: {handle}")
+        _forget_file_relations_on_set(st, ps.sql)
         if ps.positional:
             # `?` markers bind by position (Spark takes a list). A
             # stock client's parameter batch carries arbitrary column

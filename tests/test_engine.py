@@ -184,6 +184,234 @@ def test_engine_file_scan_rewrite(engine, session, sf_smoke):
     assert engine.collect(session, res)[0]["n"] == 5
 
 
+def _jobs_during(spark, fn) -> int:
+    """Spark jobs ``fn`` launches from this thread (its own job group)."""
+    sc = spark.sparkContext
+    group = f"jobs-{time.monotonic_ns()}"
+    sc.setJobGroup(group, "job count")
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _write_ids(path, ids, name="id") -> None:
+    import pyarrow.parquet as pq
+
+    pq.write_table(pa.table({name: pa.array(ids, pa.int64())}), str(path))
+
+
+def _scan_ids(engine, sid, path) -> tuple[list[str], list[int]]:
+    """(columns, first-column values) of a file scan."""
+    res = engine.execute_sql(
+        sid, f"SELECT * FROM read_parquet('{path}') ORDER BY 1")
+    return res.df.columns, [r[0] for r in engine.collect(sid, res)]
+
+
+def _fresh_ids(engine, path) -> list[int]:
+    sid = engine.create_session(role="admin")
+    try:
+        return _scan_ids(engine, sid, path)
+    finally:
+        engine.close_session(sid)
+
+
+def test_repeated_file_scan_launches_no_job(engine, session, spark,
+                                            sf_smoke):
+    """The second identical read_parquet statement reuses the session's
+    relation: no listing or schema-inference job before its result."""
+    sql = (f"SELECT count(*) AS n FROM "
+           f"read_parquet('{sf_smoke}/region.parquet')")
+    assert _jobs_during(spark, lambda: engine.execute_sql(session, sql)) == 1
+    assert _jobs_during(spark, lambda: engine.execute_sql(session, sql)) == 0
+    assert engine.collect(session, engine.execute_sql(session, sql)) \
+        [0]["n"] == 5
+
+# A reused relation carries the files' schema and listing, so each
+# change below renames the column or changes the file set: a stale
+# relation would answer with the old column (all NULL) or old files.
+
+
+def test_file_scan_sees_in_place_rewrite(engine, session, tmp_path):
+    f = tmp_path / "t.parquet"
+    _write_ids(f, [1, 2, 3], name="id")
+    assert _scan_ids(engine, session, f) == (["id"], [1, 2, 3])
+    size = f.stat().st_size
+    # identity is (path, size, mtime, inode): wait out the filesystem's
+    # timestamp tick so the same-size rewrite moves the mtime
+    time.sleep(0.05)
+    _write_ids(f, [7, 8, 9], name="xy")
+    assert f.stat().st_size == size
+    assert _scan_ids(engine, session, f) == _fresh_ids(engine, f) == (
+        ["xy"], [7, 8, 9])
+
+
+def test_file_scan_sees_replace_by_rename(engine, session, tmp_path):
+    import os
+
+    f = tmp_path / "t.parquet"
+    _write_ids(f, [1, 2], name="id")
+    assert _scan_ids(engine, session, f) == (["id"], [1, 2])
+    _write_ids(tmp_path / "next.tmp", [5, 6], name="xy")
+    assert (tmp_path / "next.tmp").stat().st_size == f.stat().st_size
+    os.replace(tmp_path / "next.tmp", f)
+    assert _scan_ids(engine, session, f) == _fresh_ids(engine, f) == (
+        ["xy"], [5, 6])
+
+
+def test_file_scan_sees_file_added_to_directory(engine, session, tmp_path):
+    d = tmp_path / "parts"
+    d.mkdir()
+    _write_ids(d / "a.parquet", [1])
+    assert _scan_ids(engine, session, d) == (["id"], [1])
+    _write_ids(d / "b.parquet", [2])
+    assert _scan_ids(engine, session, d) == _fresh_ids(engine, d) == (
+        ["id"], [1, 2])
+
+
+def test_file_scan_sees_new_glob_match(engine, session, tmp_path):
+    _write_ids(tmp_path / "p1.parquet", [1])
+    pattern = tmp_path / "p*.parquet"
+    assert _scan_ids(engine, session, pattern) == (["id"], [1])
+    _write_ids(tmp_path / "p2.parquet", [2])
+    assert _scan_ids(engine, session, pattern) == \
+        _fresh_ids(engine, pattern) == (["id"], [1, 2])
+
+
+def test_spark_set_drops_file_relations(engine, session, tmp_path):
+    f = tmp_path / "t.parquet"
+    _write_ids(f, [1], name="ID")
+    st = engine._session(session)
+    _scan_ids(engine, session, f)
+    assert ("parquet", str(f)) in st.file_relations
+    engine.execute_sql(session, "SET spark.sql.caseSensitive = true")
+    assert st.file_relations == {}
+    try:
+        res = engine.execute_sql(
+            session, f"SELECT ID FROM read_parquet('{f}')")
+        assert [r[0] for r in engine.collect(session, res)] == [1]
+        with pytest.raises(Exception, match="(?i)id"):
+            engine.execute_sql(session, f"SELECT id FROM read_parquet('{f}')")
+    finally:
+        engine.execute_sql(session, "RESET spark.sql.caseSensitive")
+    assert st.file_relations == {}
+    # a prepared SET runs at prepare (schema) and again at execute
+    _scan_ids(engine, session, f)
+    ps = engine.prepare(session, "SET spark.sql.caseSensitive = false")
+    assert st.file_relations == {}
+    _scan_ids(engine, session, f)
+    engine.execute_prepared(session, ps.handle)
+    assert st.file_relations == {}
+    engine.close_prepared(session, ps.handle)
+
+
+class _PathReader:
+    """Stands in for ``spark.read``: a load returns its path."""
+
+    def __init__(self):
+        self.read = self
+        self.built: list[str] = []
+
+    def format(self, fmt):
+        return self
+
+    def load(self, path):
+        self.built.append(path)
+        return path
+
+
+def test_remote_file_scan_is_never_stored(engine, session, monkeypatch):
+    from gizmosql_spark import engine as engine_mod
+
+    st = engine._session(session)
+    reader = _PathReader()
+    built = reader.built
+    monkeypatch.setattr(st, "spark", reader)
+    for _ in range(2):
+        engine_mod._file_relation(st, "parquet", "s3://bucket/t.parquet")
+    assert built == ["s3://bucket/t.parquet"] * 2
+    assert st.file_relations == {}
+    assert engine_mod._file_identity("s3a://bucket/t.parquet") is None
+    assert engine_mod._file_identity("/tmp/{a,b}.parquet") is None
+
+
+def test_file_relations_bounded_under_concurrent_scans(engine, session,
+                                                       monkeypatch, tmp_path):
+    """Threads scanning many paths on one session each get their own
+    path's relation, and the session keeps at most the bound."""
+    import sys
+
+    from gizmosql_spark import engine as engine_mod
+
+    st = engine._session(session)
+    monkeypatch.setattr(st, "spark", _PathReader())
+    paths = []
+    for i in range(160):
+        f = tmp_path / f"f{i}.parquet"
+        f.write_bytes(b"x")
+        paths.append(str(f))
+    errors, wrong = [], []
+
+    def scan(mine):
+        try:
+            for _ in range(3):
+                for p in mine:
+                    if engine_mod._file_relation(st, "parquet", p) != p:
+                        wrong.append(p)
+        except Exception as exc:  # noqa: BLE001 - asserted below
+            errors.append(exc)
+
+    threads = [threading.Thread(target=scan, args=(paths[i::8],))
+               for i in range(8)]
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(60)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(t.is_alive() for t in threads)
+    assert errors == [] and wrong == []
+    cap = engine_mod._FILE_RELATIONS_PER_SESSION
+    assert 0 < len(st.file_relations) <= cap
+    # least recently used goes first: a hit keeps paths[0] past paths[1]
+    st.file_relations.clear()
+    for p in paths[:cap] + paths[:1] + paths[cap:cap + 1]:
+        engine_mod._file_relation(st, "parquet", p)
+    assert ("parquet", paths[0]) in st.file_relations
+    assert ("parquet", paths[1]) not in st.file_relations
+    assert len(st.file_relations) == cap
+
+
+def test_version_as_of_read_is_reused(engine, session, spark, tmp_path):
+    table = f"vao_{time.monotonic_ns()}"
+    engine.execute_sql(
+        session, f"CREATE TABLE {table} AS SELECT id FROM range(1, 3)")
+    try:
+        engine.execute_sql(session, f"DELETE FROM {table} WHERE id = 1")
+        sql = f"SELECT id FROM {table} VERSION AS OF 1 ORDER BY id"
+        assert [r[0] for r in engine.collect(
+            session, engine.execute_sql(session, sql))] == [1, 2]
+        assert _jobs_during(
+            spark, lambda: engine.execute_sql(session, sql)) == 0
+        assert [r[0] for r in engine.collect(
+            session, engine.execute_sql(session, sql))] == [1, 2]
+    finally:
+        engine.execute_sql(session, f"DROP TABLE IF EXISTS {table}")
+
+
+def test_close_session_drops_file_relations(engine, sf_smoke):
+    sid = engine.create_session(role="admin")
+    st = engine._session(sid)
+    _scan_ids(engine, sid, f"{sf_smoke}/region.parquet")
+    assert st.file_relations
+    engine.close_session(sid)
+    assert st.file_relations == {}
+
+
 def test_prepared_statement_roundtrip(engine, session, sf_smoke):
     ps = engine.prepare(
         session,

@@ -515,3 +515,10 @@ def test_ntile_closed_form_matches_window_ntile(spark, n):
         .alias("got"),
     ).collect()
     assert all(r["want"] == r["got"] for r in rows)
+
+
+def test_lit_vec_sql_rejects_null_element():
+    assert similarity._lit_vec_sql([1, 0.5]) == (
+        "array(CAST('1.0' AS DOUBLE),CAST('0.5' AS DOUBLE))")
+    with pytest.raises(ValueError, match="element 2 is NULL"):
+        similarity._lit_vec_sql([0.1, 0.2, None, 0.4])

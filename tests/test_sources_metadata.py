@@ -3,6 +3,7 @@
 from __future__ import annotations
 
 import os
+import time
 
 import pytest
 
@@ -78,6 +79,68 @@ def test_catalog_metadata(spark, sf_smoke):
     assert "n_nationkey" in with_schema[0]["table_schema_json"]
     types = [r["table_type"] for r in catalog.get_table_types(spark).collect()]
     assert types == ["BASE TABLE", "LOCAL TEMPORARY", "VIEW"]
+
+
+def _jobs_during(spark, fn):
+    sc = spark.sparkContext
+    group = f"catalog-jobs-{time.monotonic_ns()}"
+    sc.setJobGroup(group, "catalog job count")
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_catalog_frames_rows_and_no_spark_job(spark):
+    """A base table, a permanent view and a temp view each get their
+    table type, with and without a name pattern, and building plus
+    collecting the catalog frames runs no Spark job."""
+    s = spark.newSession()
+    tag = f"cat{time.monotonic_ns()}"
+    s.sql(f"CREATE TABLE {tag}_t USING parquet AS SELECT 1 AS x")
+    try:
+        s.sql(f"CREATE VIEW {tag}_v AS SELECT x FROM {tag}_t")
+        s.sql(f"CREATE TEMP VIEW {tag}_tv AS SELECT 2 AS y")
+        cat = s.catalog.currentCatalog()
+        db = s.catalog.currentDatabase()
+        expected = [
+            (cat, db, f"{tag}_t", "BASE TABLE"),
+            (cat, None, f"{tag}_tv", "LOCAL TEMPORARY"),
+            (cat, db, f"{tag}_v", "VIEW"),
+        ]
+        rows, jobs = _jobs_during(
+            s, lambda: catalog.get_tables(s).collect())
+        assert jobs == 0
+        assert sorted((tuple(r) for r in rows
+                       if r.table_name.startswith(tag)),
+                      key=lambda r: r[2]) == expected
+        rows, jobs = _jobs_during(
+            s, lambda: catalog.get_tables(s, f"{tag}_t%").collect())
+        assert jobs == 0
+        assert sorted((tuple(r) for r in rows), key=lambda r: r[2]) == [
+            expected[0], expected[1]]
+        rows, jobs = _jobs_during(s, lambda: catalog.get_tables(
+            s, f"{tag}_v", include_schema=True).collect())
+        assert jobs == 0
+        assert [tuple(r)[:4] for r in rows] == [expected[2]]
+        assert '"x"' in rows[0].table_schema_json
+
+        cats, jobs = _jobs_during(
+            s, lambda: catalog.get_catalogs(s).collect())
+        assert jobs == 0
+        assert [r.catalog_name for r in cats] == [
+            c.name for c in s.catalog.listCatalogs()]
+        dbs, jobs = _jobs_during(
+            s, lambda: catalog.get_db_schemas(s).collect())
+        assert jobs == 0
+        assert [tuple(r) for r in dbs] == [
+            (cat, d.name) for d in s.catalog.listDatabases()]
+        assert [r.db_schema_name for r in catalog.get_db_schemas(
+            s, db[:3] + "%").collect()] == [db]
+    finally:
+        s.sql(f"DROP VIEW IF EXISTS {tag}_v")
+        s.sql(f"DROP TABLE IF EXISTS {tag}_t")
 
 
 def test_python_datasource_batch(spark):
