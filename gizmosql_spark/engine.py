@@ -55,6 +55,7 @@ from gizmosql_spark.dialect import (
 )
 from gizmosql_spark.querylog import QueryLog
 from gizmosql_spark.session import get_spark
+from gizmosql_spark.session_cache import SessionLRU
 from gizmosql_spark.settings import (
     SETTINGS_SCHEMA,
     SettingsState,
@@ -107,6 +108,9 @@ class StatementResult:
     #: trace context (telemetry.py; collect spans parent onto these)
     trace_id: str | None = None
     root_span_id: str | None = None
+    #: plan cache outcome of a query (``hit``/``miss``/``ineligible``);
+    #: None for every other statement
+    plan_cache: str | None = None
 
 
 @dataclass
@@ -145,10 +149,14 @@ class SessionState:
     #: (adbc_scanner ATTACH analog)
     attached: dict[str, tuple[str, str | None, str | None]] = field(
         default_factory=dict)
-    #: file-scan relations: (format, path) -> (file identity, frame),
-    #: least recently used first (_file_relation)
-    file_relations: dict[tuple[str, str], tuple[tuple, DataFrame]] = field(
-        default_factory=dict)
+    #: file-scan relations: (format, path) -> (file identity, frame)
+    #: (_file_relation)
+    file_relations: SessionLRU = field(
+        default_factory=lambda: SessionLRU(_FILE_RELATIONS_PER_SESSION))
+    #: analyzed queries: (rewritten SQL, file scans) -> _Plan
+    #: (Engine._cached_plan)
+    plans: SessionLRU = field(
+        default_factory=lambda: SessionLRU(_PLANS_PER_SESSION))
 
     @property
     def is_admin(self) -> bool:
@@ -221,9 +229,32 @@ _INGEST_SAVE_MODES = {"create": "errorifexists", "fail": "errorifexists",
                       "replace": "overwrite", "append": "append"}
 
 
-#: file-scan relations one session keeps; the least recently used
-#: is dropped past this
+#: file-scan relations and analyzed queries one session keeps; the
+#: least recently used is dropped past these
 _FILE_RELATIONS_PER_SESSION = 64
+_PLANS_PER_SESSION = 64
+
+#: analyzed-plan leaves a reused plan may read: file and catalog
+#: relations, a one-row or inline relation, range()
+_REUSABLE_LEAVES = frozenset({"LogicalRelation", "HiveTableRelation",
+                              "OneRowRelation", "LocalRelation", "Range"})
+#: current-time and current-user calls, which the optimizer folds into
+#: a literal once per plan
+_NOW_CALL_RE = re.compile(
+    r"\b(?:current_\w+|now|localtimestamp|session_user|user)\(",
+    re.IGNORECASE)
+#: physical nodes a re-run would not run again (shuffle and broadcast
+#: exchanges, subquery results, adaptive stages) and eagerly run
+#: commands
+_STATEFUL_EXEC_RE = re.compile(
+    r"Exchange|Subquery|AdaptiveSparkPlan|CommandResult")
+#: analyzed-plan operators and subqueries that plan an exchange; a run
+#: of such a plan keeps its shuffle or broadcast output alive for as
+#: long as the plan is held, so its first run is not kept
+_EXCHANGE_OPS_RE = re.compile(
+    r"\b(?:Aggregate|Join|Sort|Window|Distinct|Deduplicate\w*|"
+    r"Repartition\w*|RebalancePartitions|Intersect|Except)\b|"
+    r"\b(?:scalar-subquery|exists|list)#\d")
 
 #: Hadoop glob syntax Python's glob reads differently: alternation,
 #: escapes and ``[^…]``/``[!…]`` classes
@@ -273,32 +304,90 @@ def _file_identity(path: str) -> tuple | None:
                         for f, s in stats))
 
 
-def _file_relation(st: SessionState, fmt: str, path: str) -> DataFrame:
-    """The session's relation for a file scan. It is rebuilt only when
-    the files' identity (``_file_identity``) changes, so a repeated
-    scan skips Spark's listing and schema-inference job; a path
-    without an identity is read anew on every call. Entries go with
-    the session, and a Spark-level SET/RESET drops them all (confs
-    such as ``spark.sql.caseSensitive`` shape inference)."""
+def _file_relation(st: SessionState, fmt: str, path: str,
+                   telemetry=None) -> tuple[DataFrame, tuple | None]:
+    """The session's relation for a file scan, and the files' identity
+    (``_file_identity``; None when the path has none). The relation is
+    rebuilt only when the identity changes, so a repeated scan skips
+    Spark's listing and schema-inference job; a path without an
+    identity is read anew on every call. Entries go with the session,
+    and a Spark-level SET/RESET drops them all (confs such as
+    ``spark.sql.caseSensitive`` shape inference).
+
+    A rebuild empties the session's plan cache: the scan's temp view
+    now names a new relation, and so does every view defined over it."""
     key = (fmt, path)
     ident = _file_identity(path)
-    got = st.file_relations.pop(key, None)
-    if ident is not None and got is not None and got[0] == ident:
-        st.file_relations[key] = got  # now the most recently used
-        return got[1]
+    got = st.file_relations.get(key)
+    hit = ident is not None and got is not None and got[0] == ident
+    if telemetry is not None:
+        telemetry.add_counter("engine.file_relations_total",
+                              result="hit" if hit else "miss")
+    if hit:
+        return got[1], ident
+    generation = st.file_relations.generation
     df = st.spark.read.format(fmt).load(path)
+    st.plans.clear()
     if ident is not None:
-        st.file_relations[key] = (ident, df)
-        # list() copies the keys atomically, so statements running
-        # concurrently on one session cannot break the trim
-        for old in list(st.file_relations)[:-_FILE_RELATIONS_PER_SESSION]:
-            st.file_relations.pop(old, None)
-    return df
+        st.file_relations.put(key, (ident, df), generation)
+    return df, ident
 
 
-def _forget_file_relations_on_set(st: SessionState, sql: str) -> None:
-    if _SPARK_SET_RE.match(sql):
-        st.file_relations.clear()
+def _forget_session_caches_on_set(st: SessionState, sql: str) -> bool:
+    """Empty the session's caches if ``sql`` is a Spark-level SET/RESET;
+    whether it is one."""
+    if not _SPARK_SET_RE.match(sql):
+        return False
+    st.file_relations.clear()
+    st.plans.clear()
+    return True
+
+
+@dataclass(frozen=True)
+class _Plan:
+    """A plan cache entry: a query's analyzed DataFrame and the engine's
+    write sequence number read before it was analyzed."""
+
+    #: None once the plan was found not reusable
+    df: DataFrame | None
+    seq: int
+    #: lower-case names of the catalog tables the plan reads; None
+    #: until the first repeat checked the plan (_plan_tables)
+    tables: tuple[str, ...] | None = None
+
+
+def _table_key(name: str) -> str:
+    """A table name as plan cache entries record it: the last part,
+    unquoted, lower case."""
+    return name.split(".")[-1].strip("`").lower()
+
+
+def _plan_tables(df: DataFrame) -> tuple[str, ...] | None:
+    """The catalog tables a query's plan reads, or None when the plan
+    must not be reused: a nondeterministic or current-time/user
+    expression, a leaf outside ``_REUSABLE_LEAVES`` (a command result,
+    a Python-built frame, a streaming source), or a physical plan with
+    an exchange, a subquery or an adaptive wrapper. The tables are
+    taken from the analyzed plan's leaves, after view expansion."""
+    qe = df._jdf.queryExecution()
+    analyzed = qe.analyzed()
+    if not analyzed.deterministic() or _NOW_CALL_RE.search(
+            analyzed.toString()):
+        return None
+    tables = set()
+    leaves = analyzed.collectLeaves()
+    for i in range(leaves.size()):
+        leaf = leaves.apply(i)
+        kind = leaf.getClass().getSimpleName()
+        if kind not in _REUSABLE_LEAVES:
+            return None
+        if kind == "LogicalRelation" and leaf.catalogTable().isDefined():
+            tables.add(_table_key(leaf.catalogTable().get().identifier().table()))
+        elif kind == "HiveTableRelation":
+            tables.add(_table_key(leaf.tableMeta().identifier().table()))
+    if _STATEFUL_EXEC_RE.search(qe.executedPlan().toString()):
+        return None
+    return tuple(sorted(tables))
 
 
 def _counted_write(df: DataFrame, write) -> int:
@@ -327,6 +416,13 @@ class Engine:
         self.global_settings = SettingsState()
         self.sessions: dict[str, SessionState] = {}
         self._lock = threading.Lock()
+        #: plan cache freshness (_cached_plan): a sequence number that
+        #: every write moves; the number of the last engine-wide
+        #: invalidation, and of the last write to each table (by
+        #: _table_key)
+        self._plan_seq = 0
+        self._invalidated_at = 0
+        self._written_at: dict[str, int] = {}
         self._admission = AdmissionController()
         self.draining = False
         self.system_catalog = SystemCatalog()
@@ -450,6 +546,7 @@ class Engine:
         st.closed = True
         st.prepared.clear()
         st.file_relations.clear()
+        st.plans.clear()
         self._cancel_session_jobs(st)
         with self._lock:
             self.sessions.pop(session_id, None)
@@ -617,11 +714,16 @@ class Engine:
                 user=st.username) as sp:
                 result = self._run_statement(st, sql)
                 sp.set_attribute("statement.kind", result.kind)
+                if result.plan_cache is not None:
+                    sp.set_attribute("plan_cache", result.plan_cache)
         except Exception as exc:
+            self._invalidate_plans()
             elapsed = self._record_outcome(st, sql, "error", t_start)
             self.instr.execution(
                 stmt_id, "error", duration_ms=elapsed, error=str(exc))
             raise
+        if result.kind != "query":
+            self._invalidate_plans()
         if write_target is not None:
             # keep the persistent manifest in step with catalog writes
             # (record() no-ops for temp views; resolves to forget()
@@ -725,6 +827,11 @@ class Engine:
         r"\bengine_(?:instr_\w+|active_sessions|session_activity)\b",
         __import__("re").IGNORECASE,
     )
+    #: table functions that register a view per statement
+    _EPHEMERAL_VIEW_RES = (
+        _QUERY_LOG_FN_RE, _MACROS_FN_RE, _ACCESS_LOG_FN_RE,
+        _CATALOG_LOG_FN_RE, _SECRETS_FN_RE, _ADMISSION_FN_RE,
+        _INSTR_VIEW_RE, _TABLE_CHANGES_RE)
 
     def _run_statement(self, st: SessionState, sql: str) -> StatementResult:
         from gizmosql_spark.dialect import (
@@ -829,6 +936,12 @@ class Engine:
 
             sql = rewrite_order_by_all(sql, st.spark)
         sql, used_settings = rewrite_settings_function(sql)
+        # a statement that registers views of its own, other than
+        # identity-checked file scans, is never reused; and since views
+        # over those names (an operator may register any name) now read
+        # the new registrations, it empties the session's plan cache
+        ephemeral = used_settings or bool(st.attached) or any(
+            r.search(sql) for r in self._EPHEMERAL_VIEW_RES)
         if used_settings:
             self._register_settings_view(st)
         if self._QUERY_LOG_FN_RE.search(sql):
@@ -963,8 +1076,8 @@ class Engine:
             if vpath is None:
                 st.spark.table(tbl).createOrReplaceTempView(view)
             else:
-                _file_relation(st, "parquet", vpath).createOrReplaceTempView(
-                    view)
+                df, _ = _file_relation(st, "parquet", vpath, self.telemetry)
+                df.createOrReplaceTempView(view)
 
         # pipeline-operator table function: every registered operator
         # (dedup, quality, sampling, sketches, …) callable from SQL —
@@ -993,13 +1106,16 @@ class Engine:
             fn(st.spark, op_dir).createOrReplaceTempView(view)
 
         sql, scans = extract_file_scans(sql)
+        relations, scan_ids = [], []
         for view, fmt, path in scans:
             if "://" in path and not path.startswith("file:"):
                 # remote path: apply the best-scope-matching secret's
                 # credentials to the Hadoop conf before the read (the
                 # httpfs-pickup analog; secrets.py)
                 self.secrets.apply_for_path(st.spark, path)
-            _file_relation(st, fmt, path).createOrReplaceTempView(view)
+            df, ident = _file_relation(st, fmt, path, self.telemetry)
+            relations.append((view, df))
+            scan_ids.append((fmt, path, ident))
 
         # remote-engine scans (flight_scan table function + attached
         # Flight catalogs) — admin-only, like ATTACH itself; results
@@ -1008,6 +1124,27 @@ class Engine:
         if fscans and not st.is_admin:
             raise security.CommandDenied(
                 "flight_scan requires admin role")
+
+        is_set = _forget_session_caches_on_set(st, sql)
+        if ephemeral or travels or pops or fscans:
+            st.plans.clear()
+            key = None
+        elif is_set or any(ident is None for *_, ident in scan_ids):
+            key = None
+        else:
+            key = (sql, tuple(scan_ids))
+        cached = self._cached_plan(st, key)
+        if cached is not None and cached.df is not None:
+            # the scan views still name these relations: a rebuilt
+            # relation or a re-pointed view would have made the entry
+            # stale, so their registration is skipped
+            self.telemetry.add_counter("engine.plan_cache_total",
+                                       result="hit")
+            return StatementResult("query", df=cached.df, plan_cache="hit")
+        if cached is not None:  # checked, and not reusable
+            key = None
+        for view, df in relations:
+            df.createOrReplaceTempView(view)
         if fscans or st.attached:
             from gizmosql_spark.sources.flight_scan import flight_scan_df
 
@@ -1214,11 +1351,65 @@ class Engine:
             affected = abs(after - before) if before is not None else None
             return StatementResult("update", df=df, affected_rows=affected)
 
-        _forget_file_relations_on_set(st, sql)
-        df = st.spark.sql(sql)
-        if df.isStreaming or df.schema.fields:
-            return StatementResult("query", df=df)
+        df, outcome = self._analyze(st, sql, key)
+        if outcome is not None:
+            return StatementResult("query", df=df, plan_cache=outcome)
         return StatementResult("update", df=df, affected_rows=None)
+
+    # --- plan cache ---------------------------------------------------
+    # A query repeated in a session reuses its analyzed DataFrame,
+    # skipping parse, analysis and planning; every run still reads its
+    # rows anew. The key is the final SQL plus each file scan's
+    # identity. The session's map is emptied by a Spark-level SET/RESET,
+    # a rebuilt file scan relation and a statement that registers views
+    # of its own; an entry goes stale once a table its plan reads is
+    # written (_refresh_everywhere) or all plans are invalidated
+    # (_invalidate_plans).
+
+    def _cached_plan(self, st: SessionState,
+                     key: tuple | None) -> _Plan | None:
+        """The session's entry for ``key`` while it is fresh. The first
+        repeat checks the plan (``_plan_tables``); ``df`` is None when
+        the plan may not be reused."""
+        generation = st.plans.generation
+        got = st.plans.get(key) if key is not None else None
+        if got is None or got.seq < self._invalidated_at:
+            return None
+        if got.tables is None:
+            tables = _plan_tables(got.df)
+            got = _Plan(got.df if tables is not None else None, got.seq,
+                        tables or ())
+            st.plans.put(key, got, generation)
+        if any(self._written_at.get(t, 0) > got.seq for t in got.tables):
+            return None
+        return got
+
+    def _analyze(self, st: SessionState, sql: str,
+                 key: tuple | None) -> tuple[DataFrame, str | None]:
+        """Analyze the statement's final SQL, keeping a query's
+        DataFrame under ``key`` (None: not reusable) for its repeats.
+        Returns the frame and its plan cache outcome, None when the
+        statement is not a query."""
+        generation, seq = st.plans.generation, self._plan_seq
+        df = st.spark.sql(sql)
+        if not (df.isStreaming or df.schema.fields):
+            return df, None
+        if key is None or _EXCHANGE_OPS_RE.search(
+                df._jdf.queryExecution().analyzed().toString()):
+            outcome = "ineligible"
+        else:
+            outcome = "miss"
+            st.plans.put(key, _Plan(df, seq), generation)
+        self.telemetry.add_counter("engine.plan_cache_total", result=outcome)
+        return df, outcome
+
+    def _invalidate_plans(self) -> None:
+        """Make every session's cached plans stale: a statement that is
+        not a query ran (DDL, DML, USE, a failed statement), or a session
+        re-pointed names its queries resolve."""
+        with self._lock:
+            self._plan_seq += 1
+            self._invalidated_at = self._plan_seq
 
     def refresh_system_views(self) -> None:
         """Publish/refresh ``global_temp.engine_index_info`` and
@@ -1290,6 +1481,8 @@ class Engine:
                 st.spark.table(backup).write.mode("overwrite").saveAsTable(table)
                 self._refresh_everywhere(table)
                 st.spark.sql(f"DROP TABLE IF EXISTS {backup}")
+        # a rollback drops the tables the transaction created
+        self._invalidate_plans()
 
     def reattach(self) -> list[str]:
         """Re-register manifest tables and views, then invalidate any
@@ -1304,12 +1497,16 @@ class Engine:
     def _refresh_everywhere(self, table: str) -> None:
         """Invalidate a table's relation cache in every session — the
         cache is per-SparkSession, so an overwrite in one session would
-        otherwise leave stale file listings in the others."""
+        otherwise leave stale file listings in the others — and then
+        the cached plans that read it (every write path calls this)."""
         for sp in [self.spark] + [s.spark for s in self.sessions.values()]:
             try:
                 sp.catalog.refreshTable(table)
             except Exception:
                 pass
+        with self._lock:
+            self._plan_seq += 1
+            self._written_at[_table_key(table)] = self._plan_seq
 
     def collect(self, session_id: str, result: StatementResult,
                 timeout: float | None = None) -> list:
@@ -1491,8 +1688,11 @@ class Engine:
         n_pos = 0 if params else _count_positional_params(sql)
         schema = None
         if not params and not n_pos:
-            _forget_file_relations_on_set(st, sql)
+            _forget_session_caches_on_set(st, sql)
             schema = st.spark.sql(sql).schema  # analysis only, no job
+            if not schema.fields:
+                # a command (DDL, DML) runs inside spark.sql
+                self._invalidate_plans()
         names = params or [f"param_{i + 1}" for i in range(n_pos)]
         ps = PreparedStatement(
             str(uuid.uuid4()), sql, schema, names, positional=n_pos > 0)
@@ -1506,7 +1706,7 @@ class Engine:
         ps = st.prepared.get(handle)
         if ps is None:
             raise KeyError(f"no such prepared statement: {handle}")
-        _forget_file_relations_on_set(st, ps.sql)
+        _forget_session_caches_on_set(st, ps.sql)
         if ps.positional:
             # `?` markers bind by position (Spark takes a list). A
             # stock client's parameter batch carries arbitrary column
@@ -1523,6 +1723,8 @@ class Engine:
             df = st.spark.sql(ps.sql, args=params or {})
         if ps.schema is None:
             ps.schema = df.schema
+        if not ps.schema.fields:
+            self._invalidate_plans()
         return StatementResult("query", df=df)
 
     def close_prepared(self, session_id: str, handle: str) -> None:
@@ -1750,6 +1952,7 @@ class Engine:
             raise ValueError(f"invalid view name: {name!r}")
         df = st.spark.createDataFrame(table)
         df.createOrReplaceTempView(name)
+        self._invalidate_plans()
         return table.num_rows
 
     # --- metadata + health (§2A) --------------------------------------
@@ -1770,6 +1973,7 @@ class Engine:
             st.spark.catalog.setCurrentCatalog(catalog)
         if schema:
             st.spark.catalog.setCurrentDatabase(schema)
+        self._invalidate_plans()
 
     def health_check(self) -> bool:
         """SELECT 1 heartbeat (health_service.cpp)."""

@@ -299,15 +299,24 @@ def column_minmax(sf_dir: str, name: str, col: str) -> tuple | None:
     """(min, max) of a fixture column from the parquet FOOTER
     statistics (no scan, no Spark job) — the same §6 metadata class as
     row_count: at 100 TB these are the table-level column stats every
-    warehouse keeps. Returns None (callers fall back to a scan) when
-    any row group lacks min/max stats. Footer stats exclude nulls,
-    exactly like F.min/F.max. Memoized per (dir, table, column); the
-    fixtures are immutable for a session's lifetime."""
+    warehouse keeps. Footer stats exclude nulls, exactly like
+    F.min/F.max. Returns None (callers fall back to a scan) when the
+    footer cannot give F.min/F.max's answer:
+
+    - a floating-point column: writers leave NaN out of the stats,
+      where Spark orders NaN above every number;
+    - a row group without min/max stats. pyarrow reports none for a
+      column whose sort order is unknown, or whose writer is known to
+      order it wrongly.
+
+    Memoized per (dir, table, column); the fixtures are immutable for
+    a session's lifetime."""
     key = (sf_dir, name, col)
     if key in _COL_STATS:
         return _COL_STATS[key]
     got = None
     try:
+        import pyarrow as pa
         import pyarrow.parquet as pq
 
         f = pq.ParquetFile(os.path.join(sf_dir, f"{name}.parquet"))
@@ -320,7 +329,8 @@ def column_minmax(sf_dir: str, name: str, col: str) -> tuple | None:
                 break
             lo = st.min if lo is None else min(lo, st.min)
             hi = st.max if hi is None else max(hi, st.max)
-        if lo is not None:
+        if lo is not None and not pa.types.is_floating(
+                f.schema_arrow.field(idx).type):
             got = (lo, hi)
     except Exception:
         got = None

@@ -387,12 +387,11 @@ def histogram_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("l_extendedprice").cast("double").alias("x"))
     # 1-row min/max feeding both the binning pass and the
     # interpolation edges (r5 audit: each crossJoin use replayed the
-    # scan). r12: the edges come from the parquet FOOTER column
-    # statistics when present (guide §6 — "bin edges come from known
-    # column stats" is the docstring's own design point; the column
-    # is physically double, so the footer doubles ARE the scan's
-    # F.min/F.max values, nulls excluded identically). The old
-    # min/max pass remains the fallback for statless files.
+    # scan). The edges come from the parquet FOOTER column statistics
+    # when they give F.min/F.max's answer (guide §6 — "bin edges come
+    # from known column stats" is the docstring's own design point);
+    # column_minmax declines floating-point columns, whose stats leave
+    # NaN out, so a double column takes the min/max pass.
     mm = loader.column_minmax(sf_dir, "lineitem", "l_extendedprice")
     if mm is not None:
         rng = spark.range(1).select(

@@ -286,7 +286,7 @@ def test_spark_set_drops_file_relations(engine, session, tmp_path):
     _scan_ids(engine, session, f)
     assert ("parquet", str(f)) in st.file_relations
     engine.execute_sql(session, "SET spark.sql.caseSensitive = true")
-    assert st.file_relations == {}
+    assert len(st.file_relations) == 0
     try:
         res = engine.execute_sql(
             session, f"SELECT ID FROM read_parquet('{f}')")
@@ -295,14 +295,14 @@ def test_spark_set_drops_file_relations(engine, session, tmp_path):
             engine.execute_sql(session, f"SELECT id FROM read_parquet('{f}')")
     finally:
         engine.execute_sql(session, "RESET spark.sql.caseSensitive")
-    assert st.file_relations == {}
+    assert len(st.file_relations) == 0
     # a prepared SET runs at prepare (schema) and again at execute
     _scan_ids(engine, session, f)
     ps = engine.prepare(session, "SET spark.sql.caseSensitive = false")
-    assert st.file_relations == {}
+    assert len(st.file_relations) == 0
     _scan_ids(engine, session, f)
     engine.execute_prepared(session, ps.handle)
-    assert st.file_relations == {}
+    assert len(st.file_relations) == 0
     engine.close_prepared(session, ps.handle)
 
 
@@ -331,7 +331,7 @@ def test_remote_file_scan_is_never_stored(engine, session, monkeypatch):
     for _ in range(2):
         engine_mod._file_relation(st, "parquet", "s3://bucket/t.parquet")
     assert built == ["s3://bucket/t.parquet"] * 2
-    assert st.file_relations == {}
+    assert len(st.file_relations) == 0
     assert engine_mod._file_identity("s3a://bucket/t.parquet") is None
     assert engine_mod._file_identity("/tmp/{a,b}.parquet") is None
 
@@ -357,7 +357,7 @@ def test_file_relations_bounded_under_concurrent_scans(engine, session,
         try:
             for _ in range(3):
                 for p in mine:
-                    if engine_mod._file_relation(st, "parquet", p) != p:
+                    if engine_mod._file_relation(st, "parquet", p)[0] != p:
                         wrong.append(p)
         except Exception as exc:  # noqa: BLE001 - asserted below
             errors.append(exc)
@@ -409,7 +409,7 @@ def test_close_session_drops_file_relations(engine, sf_smoke):
     _scan_ids(engine, sid, f"{sf_smoke}/region.parquet")
     assert st.file_relations
     engine.close_session(sid)
-    assert st.file_relations == {}
+    assert len(st.file_relations) == 0
 
 
 def test_prepared_statement_roundtrip(engine, session, sf_smoke):

@@ -134,39 +134,49 @@ def test_statement_query_roundtrip(client, admin_session):
 def test_served_statement_is_recorded(server, client, admin_session):
     """GetFlightInfo then DoGet leaves the statement one execution row
     with its duration and one statement.collect span under the
-    statement.execute span, carrying the rows the client read."""
+    statement.execute span, carrying the rows the client read. The
+    repeat is served from the plan cache and leaves the same records."""
     eng = server.engine
     sid, opts = admin_session
     sql = "SELECT id, id * 2 AS twice FROM range(37)"
     desc = flight.FlightDescriptor.for_command(
         json.dumps({"type": "statement_query", "session": sid,
                     "sql": sql}).encode())
-    info = client.get_flight_info(desc, options=opts)
-    execute = [s for s in eng.telemetry.spans()
-               if s.name == "statement.execute"
-               and s.attributes["session"] == sid][-1]
-    table = client.do_get(info.endpoints[0].ticket, options=opts).read_all()
-    assert table.num_rows == 37
+    for outcome in ("miss", "hit"):
+        ok0 = eng.telemetry.counter_value(
+            "engine.statements_total", status="ok")
+        info = client.get_flight_info(desc, options=opts)
+        execute = [s for s in eng.telemetry.spans()
+                   if s.name == "statement.execute"
+                   and s.attributes["session"] == sid][-1]
+        assert execute.attributes["plan_cache"] == outcome
+        table = client.do_get(
+            info.endpoints[0].ticket, options=opts).read_all()
+        assert table.num_rows == 37
+        assert eng.telemetry.counter_value(
+            "engine.statements_total", status="ok") == ok0 + 1
+        last = eng.query_log.entries()[-1]
+        assert (last.session_id, last.sql, last.status) == (sid, sql, "ok")
 
-    stmt_id = [s[0] for s in eng.instr.statements
-               if s[1] == sid and s[2] == sql][-1]
-    eng.instr.publish(eng.spark)
-    rows = eng.spark.sql(
-        "SELECT status, duration_ms, start_time, end_time, rows_fetched"
-        " FROM global_temp.engine_instr_executions"
-        f" WHERE statement_id = '{stmt_id}'").collect()
-    assert len(rows) == 1
-    assert rows[0]["status"] == "success"
-    assert rows[0]["rows_fetched"] == 37
-    assert rows[0]["duration_ms"] > 0
-    assert rows[0]["end_time"] > rows[0]["start_time"]
+        stmt_id = [s[0] for s in eng.instr.statements
+                   if s[1] == sid and s[2] == sql][-1]
+        eng.instr.publish(eng.spark)
+        rows = eng.spark.sql(
+            "SELECT status, duration_ms, start_time, end_time, rows_fetched"
+            " FROM global_temp.engine_instr_executions"
+            f" WHERE statement_id = '{stmt_id}'").collect()
+        assert len(rows) == 1
+        assert rows[0]["status"] == "success"
+        assert rows[0]["rows_fetched"] == 37
+        assert rows[0]["duration_ms"] > 0
+        assert rows[0]["end_time"] > rows[0]["start_time"]
 
-    collects = [s for s in eng.telemetry.spans()
-                if s.name == "statement.collect"
-                and s.trace_id == execute.trace_id]
-    assert len(collects) == 1
-    assert collects[0].parent_id == execute.span_id
-    assert collects[0].attributes["rows"] == table.num_rows
+        collects = [s for s in eng.telemetry.spans()
+                    if s.name == "statement.collect"
+                    and s.trace_id == execute.trace_id]
+        assert len(collects) == 1
+        assert collects[0].parent_id == execute.span_id
+        assert collects[0].attributes["rows"] == table.num_rows
 
 
 def test_tpch_q01_over_flight(client, admin_session):

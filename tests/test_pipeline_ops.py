@@ -522,3 +522,37 @@ def test_lit_vec_sql_rejects_null_element():
         "array(CAST('1.0' AS DOUBLE),CAST('0.5' AS DOUBLE))")
     with pytest.raises(ValueError, match="element 2 is NULL"):
         similarity._lit_vec_sql([0.1, 0.2, None, 0.4])
+
+
+@pytest.mark.parametrize("values", [
+    [1.5, float("nan"), -2.0],      # NaN: the stats leave it out
+    [1.5, 4.0, -2.0],
+])
+def test_column_minmax_matches_spark_on_doubles(spark, tmp_path, values):
+    """The footer answer, or the scan callers fall back to when there is
+    none, equals F.min/F.max; for doubles the footer is never used."""
+    import math
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql import functions as F
+
+    from gizmosql_spark.operators import loader
+
+    pq.write_table(pa.table({"x": values, "k": [3, 1, 2]}),
+                   str(tmp_path / "t.parquet"))
+    df = spark.read.parquet(str(tmp_path / "t.parquet"))
+
+    def minmax(col):
+        got = loader.column_minmax(str(tmp_path), "t", col)
+        if got is None:
+            got = tuple(df.agg(F.min(col), F.max(col)).first())
+        return got, tuple(df.agg(F.min(col), F.max(col)).first())
+
+    got, want = minmax("x")
+    assert loader.column_minmax(str(tmp_path), "t", "x") is None
+    assert [str(v) for v in got] == [str(v) for v in want]
+    assert math.isnan(want[1]) == any(math.isnan(v) for v in values)
+    # an integer column is still answered from the footer
+    got, want = minmax("k")
+    assert loader.column_minmax(str(tmp_path), "t", "k") == want == (1, 3)
