@@ -296,6 +296,9 @@ _FORMAT_BY_FN = {
     "read_text": "text",
 }
 _FORMAT_BY_EXT = {"parquet": "parquet", "csv": "csv", "json": "json", "ndjson": "json"}
+#: the text before the quoted source of ``COPY t FROM 'path'``
+_COPY_FROM_HEAD_RE = re.compile(r"\s*COPY\s+[A-Za-z_][\w.]*\s+FROM\s+",
+                                re.IGNORECASE)
 
 
 def extract_file_scans(sql: str) -> tuple[str, list[tuple[str, str, str]]]:
@@ -319,6 +322,8 @@ def extract_file_scans(sql: str) -> tuple[str, list[tuple[str, str, str]]]:
 
     def _scan_sub(m: re.Match) -> str:
         kw, path = m.group(1), m.group(2)
+        if _COPY_FROM_HEAD_RE.fullmatch(m.string, 0, m.end(1)):
+            return m.group(0)  # COPY's source file, read by COPY itself
         ext = path.rsplit(".", 1)[-1].lower()
         view = _name(path)
         scans.append((view, _FORMAT_BY_EXT[ext], path))

@@ -32,6 +32,7 @@ from dataclasses import dataclass, field
 from typing import Any
 from urllib.parse import urlparse
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
@@ -65,6 +66,7 @@ from gizmosql_spark.system_catalog import (
     SystemCatalog,
     check_system_catalog_write,
 )
+from gizmosql_spark.types import widen_for_spark
 
 __version__ = "0.1.0"
 
@@ -157,6 +159,9 @@ class SessionState:
     #: (Engine._cached_plan)
     plans: SessionLRU = field(
         default_factory=lambda: SessionLRU(_PLANS_PER_SESSION))
+    #: held while an upload lowers the session's local-relation
+    #: threshold (_upload_frame)
+    upload_lock: threading.Lock = field(default_factory=threading.Lock)
 
     @property
     def is_admin(self) -> bool:
@@ -227,6 +232,10 @@ def _count_positional_params(sql: str) -> int:
 #: the ADBC name for ``create``).
 _INGEST_SAVE_MODES = {"create": "errorifexists", "fail": "errorifexists",
                       "replace": "overwrite", "append": "append"}
+
+#: uploads under this size ``createDataFrame`` decodes on the driver
+#: into a LocalRelation (Spark's default: 48 MB); see _upload_frame
+_LOCAL_RELATION_THRESHOLD = "spark.sql.execution.arrow.localRelationThreshold"
 
 
 #: file-scan relations and analyzed queries one session keeps; the
@@ -401,6 +410,42 @@ def _counted_write(df: DataFrame, write) -> int:
     obs = Observation()
     write(df.observe(obs, F.count(F.lit(1)).alias("rows")))
     return obs.get["rows"]
+
+
+def _upload_frame(st: SessionState,
+                  table: pa.Table) -> tuple[DataFrame, int]:
+    """An uploaded Arrow table as a DataFrame that the write tasks
+    decode, in at most one partition per core; returns the frame and
+    its partition count.
+
+    Under the local-relation threshold ``createDataFrame`` decodes every
+    row on the driver into a LocalRelation, and each write task then
+    receives its rows Java-serialized. At threshold 0 it ships the Arrow
+    batches instead, one partition per ``arrow.maxRecordsPerBatch`` rows,
+    and the tasks decode them; the coalesce keeps that to one task and
+    one file per core. The choice is made inside the call, so the
+    threshold is lowered around this call only: the session's other
+    frames (catalog frames, Arrow views) stay LocalRelations. The lock
+    keeps two uploads of one session from restoring each other's value."""
+    conf = st.spark.conf
+    with st.upload_lock:
+        prev = conf.get(_LOCAL_RELATION_THRESHOLD, None)
+        conf.set(_LOCAL_RELATION_THRESHOLD, "0")
+        try:
+            df = st.spark.createDataFrame(table)
+        finally:
+            if prev is None:
+                conf.unset(_LOCAL_RELATION_THRESHOLD)
+            else:
+                conf.set(_LOCAL_RELATION_THRESHOLD, prev)
+    # one partition per Arrow batch, read off the LogicalRDD (planning
+    # the frame to ask it would cost ~30 ms); an empty upload stays a
+    # one-partition LocalRelation
+    plan = df._jdf.queryExecution().logical()
+    batches = (plan.rdd().getNumPartitions()
+               if plan.nodeName() == "LogicalRDD" else 1)
+    parts = min(batches, st.spark.sparkContext.defaultParallelism)
+    return df.coalesce(parts), parts
 
 
 class Engine:
@@ -1740,11 +1785,16 @@ class Engine:
         Modes mirror the reference: ``create`` (error if exists),
         ``replace`` (overwrite), ``append`` (by-name column alignment —
         the ``INSERT INTO ... BY NAME`` path, duckdb_server.cpp:
-        1954-1974). Returns the row count the write job committed,
-        observed inside that job. For Arrow and pandas input it is
-        checked against the rows received and a mismatch raises, as the
-        reference verifies the interim insert (:1960-1970); a DataFrame
-        has no received count, so its observed count is returned as is."""
+        1954-1974). pandas input is taken as Arrow; Arrow columns Spark
+        refuses widen by the §1.2 rules (``types.widen_for_spark``), and
+        the upload is decoded in the write tasks (``_upload_frame``).
+        Returns the row count the write job committed, observed inside
+        that job. For Arrow, pandas and row input it is checked against
+        the rows received and a mismatch raises, as the reference
+        verifies the interim insert (:1960-1970); a DataFrame has no
+        received count, so its observed count is returned as is. Each
+        call leaves one ``statement.ingest`` span (rows, Arrow bytes,
+        mode, partitions written)."""
         st = self._session(session_id)
         if st.role == "readonly":
             raise security.CommandDenied("readonly role may not ingest")
@@ -1753,36 +1803,49 @@ class Engine:
             raise ValueError(f"unknown ingest mode: {mode}")
         if st.txn is not None:
             self._txn_snapshot(st, table)
-        received = None
-        if not isinstance(data, DataFrame):
-            import pyarrow as pa
-
-            if isinstance(data, pa.RecordBatchReader):
-                data = data.read_all()
-            elif not isinstance(data, pa.Table) and hasattr(data, "__iter__") \
-                    and not hasattr(data, "columns"):
-                data = list(data)
-                if data and isinstance(data[0], pa.RecordBatch):
-                    data = pa.Table.from_batches(data)
-            received = data.num_rows if isinstance(data, pa.Table) else len(data)
-        df = data if isinstance(data, DataFrame) else st.spark.createDataFrame(data)
-        if mode == "replace":
-            try:
-                self.warehouse.snapshot(st.spark, table)
-            except Exception:
-                pass
-        self.warehouse.prepare_write(st.spark, table,
-                                     overwrite=mode == "replace")
-        if mode == "append":
-            df = df.select(*st.spark.table(table).schema.fieldNames())
-        n = _counted_write(
-            df, lambda d: d.write.mode(save_mode).saveAsTable(table))
-        self._refresh_everywhere(table)
-        self.warehouse.record(st.spark, table)
-        if received is not None and n != received:
-            raise RuntimeError(
-                f"ingest into {table}: received {received} rows, "
-                f"the write committed {n}")
+        with self.telemetry.span("statement.ingest", session=session_id,
+                                 user=st.username, table=table,
+                                 mode=mode) as sp:
+            received = None
+            if isinstance(data, DataFrame):
+                df = data
+            else:
+                if isinstance(data, pa.RecordBatchReader):
+                    data = data.read_all()
+                elif not isinstance(data, pa.Table):
+                    if hasattr(data, "columns"):  # pandas
+                        data = pa.Table.from_pandas(data,
+                                                    preserve_index=False)
+                    else:
+                        data = list(data)
+                        if data and isinstance(data[0], pa.RecordBatch):
+                            data = pa.Table.from_batches(data)
+                received = len(data)
+                if isinstance(data, pa.Table):
+                    sp.set_attribute("arrow_bytes", data.nbytes)
+                    df, parts = _upload_frame(st, widen_for_spark(data))
+                    sp.set_attribute("partitions", parts)
+                else:  # Python rows
+                    df = st.spark.createDataFrame(data)
+            if mode == "replace":
+                try:
+                    self.warehouse.snapshot(st.spark, table)
+                except Exception:
+                    pass
+            self.warehouse.prepare_write(st.spark, table,
+                                         overwrite=mode == "replace")
+            if mode == "append":
+                df = df.select(*st.spark.table(table).schema.fieldNames())
+            n = _counted_write(
+                df, lambda d: d.write.mode(save_mode).saveAsTable(table))
+            sp.set_attribute("rows", n)
+            self._refresh_everywhere(table)
+            self.warehouse.record(st.spark, table)
+            if received is not None and n != received:
+                raise RuntimeError(
+                    f"ingest into {table}: received {received} rows, "
+                    f"the write committed {n}")
+        self.telemetry.add_counter("engine.ingest_rows_total", float(n))
         return n
 
     def _summarize(self, st: SessionState, target: str):

@@ -15,8 +15,12 @@ on the result path (/root/reference/src/duckdb/duckdb_statement.cpp:
 - fixed_size_list → ArrayType (length enforced as a constraint, not a
   type)
 
-Used by the ingest path (Engine.ingest) and verified bidirectionally in
-tests/test_types.py.
+The ingest path (``Engine.ingest``) applies these rules through
+``widen_for_spark``, to the columns Spark itself refuses (unsigned ints,
+half floats, date64, time of day, decimals over 38 digits); every other
+column goes to Spark's own Arrow conversion unchanged. The mapping is
+verified bidirectionally in tests/test_types.py and over the wire in
+tests/test_flight.py.
 """
 
 from __future__ import annotations
@@ -90,6 +94,50 @@ def arrow_to_spark(dt: pa.DataType) -> T.DataType:
     if isinstance(dt, pa.DictionaryType):
         return arrow_to_spark(dt.value_type)
     return T.StringType()
+
+
+def _spark_refuses(dt: pa.DataType) -> bool:
+    """Whether Spark's Arrow conversion, or the table it writes to,
+    refuses ``dt`` as it is, at any depth: unsigned ints, half floats,
+    date64, time of day (Spark's TIME cannot be stored) and decimals
+    over 38 digits."""
+    if (pa.types.is_unsigned_integer(dt) or pa.types.is_float16(dt)
+            or pa.types.is_date64(dt) or pa.types.is_time(dt)):
+        return True
+    if pa.types.is_decimal(dt):
+        return dt.precision > 38
+    if isinstance(dt, pa.DictionaryType):
+        return _spark_refuses(dt.value_type)
+    if (pa.types.is_list(dt) or pa.types.is_large_list(dt)
+            or pa.types.is_fixed_size_list(dt)):
+        return _spark_refuses(dt.value_type)
+    if pa.types.is_map(dt):
+        return _spark_refuses(dt.key_type) or _spark_refuses(dt.item_type)
+    if pa.types.is_struct(dt):
+        return any(_spark_refuses(f.type) for f in dt)
+    return False
+
+
+def widen_for_spark(table: pa.Table) -> pa.Table:
+    """Cast the columns of an upload that Spark refuses to their §1.2
+    type (``arrow_to_spark``, then ``spark_to_arrow``); the other
+    columns pass unchanged. A column Spark cannot hold, such as a
+    decimal256 over 38 digits, raises a ValueError naming it. A time of
+    day becomes µs since midnight; nested in a list, struct or map it
+    must already be in µs."""
+    for i, f in enumerate(table.schema):
+        if not _spark_refuses(f.type):
+            continue
+        try:
+            want = spark_to_arrow(arrow_to_spark(f.type))
+            col = table.column(i)
+            if pa.types.is_time(f.type):
+                col = col.cast(pa.time64("us"), safe=False)
+            col = col.cast(want)
+        except (ValueError, pa.ArrowException) as exc:
+            raise ValueError(f"column {f.name!r}: {exc}") from None
+        table = table.set_column(i, pa.field(f.name, want, f.nullable), col)
+    return table
 
 
 def spark_to_arrow(dt: T.DataType) -> pa.DataType:

@@ -12,8 +12,10 @@ end-to-end checks the reference runs against its own server
 from __future__ import annotations
 
 import base64
+import datetime as dt
 import json
 import os
+from decimal import Decimal
 
 import pyarrow as pa
 import pyarrow.flight as flight
@@ -219,36 +221,165 @@ def test_get_schema_without_execution(client, admin_session):
     assert schema.field("b").type == pa.float64()
 
 
-def test_ingest_roundtrip(client, admin_session):
-    sid, opts = admin_session
-    data = pa.table({"id": [1, 2, 3], "v": ["a", "b", "c"]})
+def _put(client, opts, sid, table, data, mode="replace") -> int:
+    """One DoPut ingest; the record count the server acknowledged."""
     desc = flight.FlightDescriptor.for_command(
-        json.dumps({"type": "ingest", "session": sid,
-                    "table": "t_flight_ingest",
-                    "mode": "replace"}).encode())
+        json.dumps({"type": "ingest", "session": sid, "table": table,
+                    "mode": mode}).encode())
     writer, meta_reader = client.do_put(desc, data.schema, options=opts)
     writer.write_table(data)
     writer.done_writing()
-    ack = json.loads(meta_reader.read().to_pybytes())
-    writer.close()
-    assert ack["record_count"] == 3
+    ack = meta_reader.read()
+    writer.close()  # raises the server's error, if any
+    return json.loads(ack.to_pybytes())["record_count"]
+
+
+def test_ingest_roundtrip(client, admin_session):
+    sid, opts = admin_session
+    data = pa.table({"id": [1, 2, 3], "v": ["a", "b", "c"]})
+    assert _put(client, opts, sid, "t_flight_ingest", data) == 3
     t = _run_query(client, opts, sid,
                    "SELECT * FROM t_flight_ingest ORDER BY id")
     assert t.column("id").to_pylist() == [1, 2, 3]
     # append mode aligns by name
     more = pa.table({"v": ["d"], "id": [4]})
-    desc2 = flight.FlightDescriptor.for_command(
-        json.dumps({"type": "ingest", "session": sid,
-                    "table": "t_flight_ingest",
-                    "mode": "append"}).encode())
-    w2, mr2 = client.do_put(desc2, more.schema, options=opts)
-    w2.write_table(more)
-    w2.done_writing()
-    assert json.loads(mr2.read().to_pybytes())["record_count"] == 1
-    w2.close()
+    assert _put(client, opts, sid, "t_flight_ingest", more,
+                mode="append") == 1
     t2 = _run_query(client, opts, sid,
                     "SELECT count(*) AS n FROM t_flight_ingest")
     assert t2.column("n")[0].as_py() == 4
+
+
+_T = dt.time(1, 2, 3, 4)
+_TS = dt.datetime(2024, 2, 29, 12, 30, 45, 123456)
+_UTC = dt.timezone.utc
+
+#: SURVEY §1.2 rows a managed table can hold: (name, sent, type read
+#: back, values read back). Naive timestamps come back as UTC
+#: timestamps (the session time zone), at µs.
+_WIRE_TYPES = [
+    ("bool", pa.array([True, None], pa.bool_()), pa.bool_(), [True, None]),
+    ("int8", pa.array([-128, None], pa.int8()), pa.int8(), [-128, None]),
+    ("int16", pa.array([-2**15, None], pa.int16()), pa.int16(),
+     [-2**15, None]),
+    ("int32", pa.array([2**31 - 1, None], pa.int32()), pa.int32(),
+     [2**31 - 1, None]),
+    ("int64", pa.array([-2**63, None], pa.int64()), pa.int64(),
+     [-2**63, None]),
+    ("uint8", pa.array([255, None], pa.uint8()), pa.int16(), [255, None]),
+    ("uint16", pa.array([65535, None], pa.uint16()), pa.int32(),
+     [65535, None]),
+    ("uint32", pa.array([2**32 - 1, None], pa.uint32()), pa.int64(),
+     [2**32 - 1, None]),
+    ("uint64", pa.array([2**64 - 1, None], pa.uint64()),
+     pa.decimal128(20, 0), [Decimal(2**64 - 1), None]),
+    ("hugeint", pa.array([Decimal(10**37), None], pa.decimal128(38, 0)),
+     pa.decimal128(38, 0), [Decimal(10**37), None]),
+    ("float32", pa.array([1.5, None], pa.float32()), pa.float32(),
+     [1.5, None]),
+    ("float64", pa.array([-2.25, None], pa.float64()), pa.float64(),
+     [-2.25, None]),
+    ("decimal", pa.array([Decimal("123.45"), None], pa.decimal128(15, 2)),
+     pa.decimal128(15, 2), [Decimal("123.45"), None]),
+    ("decimal256", pa.array([Decimal("1.25"), None], pa.decimal256(20, 2)),
+     pa.decimal128(20, 2), [Decimal("1.25"), None]),
+    ("varchar", pa.array(["é", None], pa.string()), pa.string(),
+     ["é", None]),
+    ("large_varchar", pa.array(["x", None], pa.large_string()), pa.string(),
+     ["x", None]),
+    ("blob", pa.array([b"\x00\xff", None], pa.binary()), pa.binary(),
+     [b"\x00\xff", None]),
+    ("date", pa.array([dt.date(2024, 2, 29), None], pa.date32()),
+     pa.date32(), [dt.date(2024, 2, 29), None]),
+    ("time", pa.array([_T, None], pa.time64("us")), pa.int64(),
+     [3_723_000_004, None]),
+    ("timestamp_s", pa.array([_TS.replace(microsecond=0), None],
+                             pa.timestamp("s")),
+     pa.timestamp("us", tz="UTC"),
+     [_TS.replace(microsecond=0, tzinfo=_UTC), None]),
+    ("timestamp_ms", pa.array([_TS.replace(microsecond=123000), None],
+                              pa.timestamp("ms")),
+     pa.timestamp("us", tz="UTC"),
+     [_TS.replace(microsecond=123000, tzinfo=_UTC), None]),
+    ("timestamp_us", pa.array([_TS, None], pa.timestamp("us")),
+     pa.timestamp("us", tz="UTC"), [_TS.replace(tzinfo=_UTC), None]),
+    # ns truncates to µs
+    ("timestamp_ns", pa.array([1_709_209_845_123_456_789, None],
+                              pa.timestamp("ns")),
+     pa.timestamp("us", tz="UTC"),
+     [dt.datetime(2024, 2, 29, 12, 30, 45, 123456, tzinfo=_UTC), None]),
+    ("timestamp_tz", pa.array([_TS.replace(tzinfo=_UTC), None],
+                              pa.timestamp("us", tz="UTC")),
+     pa.timestamp("us", tz="UTC"), [_TS.replace(tzinfo=_UTC), None]),
+    ("interval", pa.array([dt.timedelta(days=2, microseconds=7), None],
+                          pa.duration("us")),
+     pa.duration("us"), [dt.timedelta(days=2, microseconds=7), None]),
+    ("list", pa.array([[1, None], None], pa.list_(pa.int32())),
+     pa.list_(pa.field("element", pa.int32())), [[1, None], None]),
+    ("large_list", pa.array([[2**40], None], pa.large_list(pa.int64())),
+     pa.list_(pa.field("element", pa.int64())), [[2**40], None]),
+    ("list_uint8", pa.array([[0, 255], None], pa.list_(pa.uint8())),
+     pa.list_(pa.field("element", pa.int16())), [[0, 255], None]),
+    ("fixed_size_list", pa.array([[1, 2], None], pa.list_(pa.int32(), 2)),
+     pa.list_(pa.field("element", pa.int32())), [[1, 2], None]),
+    ("struct", pa.array([{"a": 1, "b": "x"}, None],
+                        pa.struct([("a", pa.int32()), ("b", pa.string())])),
+     pa.struct([("a", pa.int32()), ("b", pa.string())]),
+     [{"a": 1, "b": "x"}, None]),
+    ("map", pa.array([[("k", 1)], None], pa.map_(pa.string(), pa.int64())),
+     pa.map_(pa.string(), pa.int64()), [[("k", 1)], None]),
+    ("enum", pa.array(["red", None]).dictionary_encode(), pa.string(),
+     ["red", None]),
+    ("sqlnull", pa.array([None, None], pa.null()), pa.null(), [None, None]),
+]
+
+
+@pytest.mark.parametrize("name,sent,typ,values", _WIRE_TYPES,
+                         ids=[c[0] for c in _WIRE_TYPES])
+def test_ingest_type_roundtrip(client, admin_session, name, sent, typ,
+                               values):
+    """DoPut then DoGet of one column of each type: Spark's missing
+    types widen by the §1.2 rules (types.widen_for_spark)."""
+    sid, opts = admin_session
+    table = f"t_wire_{name}"
+    data = pa.table({"id": [0, 1], "v": sent})
+    assert _put(client, opts, sid, table, data) == 2
+    got = _run_query(client, opts, sid, f"SELECT v FROM {table} ORDER BY id")
+    assert got.schema.field("v").type == typ
+    assert got.column("v").to_pylist() == values
+
+
+def test_ingest_rejects_decimal256_naming_the_column(client, admin_session):
+    sid, opts = admin_session
+    data = pa.table({"id": [0], "wide": pa.array([Decimal("1.5")],
+                                                 pa.decimal256(40, 2))})
+    with pytest.raises(flight.FlightError, match="'wide'.*38"):
+        _put(client, opts, sid, "t_wire_decimal256_wide", data)
+
+
+def test_ingest_leaves_span_and_counter(server, client, admin_session):
+    """One DoPut leaves one statement.ingest span (rows, Arrow bytes,
+    mode, partitions written) and adds its rows to the counter."""
+    eng = server.engine
+    sid, opts = admin_session
+    rows0 = eng.telemetry.counter_value("engine.ingest_rows_total")
+    data = pa.table({"id": list(range(25_000)), "v": ["x"] * 25_000})
+    assert _put(client, opts, sid, "t_flight_ingest_obs", data) == 25_000
+    spans = [s for s in eng.telemetry.spans()
+             if s.name == "statement.ingest"
+             and s.attributes["table"] == "t_flight_ingest_obs"]
+    assert len(spans) == 1
+    attrs = spans[0].attributes
+    assert attrs["session"] == sid
+    assert attrs["mode"] == "replace"
+    assert attrs["rows"] == 25_000
+    assert attrs["arrow_bytes"] == data.nbytes
+    cores = eng.spark.sparkContext.defaultParallelism
+    # 25k rows arrive as three 10k-row Arrow batches
+    assert attrs["partitions"] == min(3, cores)
+    assert spans[0].status_code == "STATUS_CODE_OK"
+    assert eng.telemetry.counter_value(
+        "engine.ingest_rows_total") == rows0 + 25_000
 
 
 def test_statement_update_via_doput(client, admin_session):

@@ -153,6 +153,46 @@ def test_copy_statement_round_trip(spark, tmp_path):
     eng.close_session(sid)
 
 
+@pytest.mark.parametrize("source,options", [
+    ("x.parquet", ""),
+    ("x.parquet", " (FORMAT parquet)"),
+    ("parts", ""),
+    ("parts.parquet", " (FORMAT parquet)"),
+])
+def test_copy_from_parquet_file_and_directory(spark, tmp_path, source,
+                                              options):
+    """COPY t FROM 'x.parquet' reads the file itself: the replacement
+    scan rewrite leaves a COPY's source path alone. A directory source
+    reads every file in it."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from gizmosql_spark.engine import Engine
+
+    path = tmp_path / source
+    rows = pa.table({"id": [1, 2, 3], "v": ["a", "b", "c"]})
+    if source.startswith("parts"):
+        path.mkdir()
+        pq.write_table(rows.slice(0, 2), str(path / "part-0.parquet"))
+        pq.write_table(rows.slice(2), str(path / "part-1.parquet"))
+    else:
+        pq.write_table(rows, str(path))
+    eng = Engine(spark=spark)
+    sid = eng.create_session(role="admin")
+    eng.execute_sql(sid, "DROP TABLE IF EXISTS t_copy_pq")
+    eng.execute_sql(
+        sid, "CREATE TABLE t_copy_pq (id BIGINT, v STRING) USING parquet")
+    try:
+        res = eng.execute_sql(sid, f"COPY t_copy_pq FROM '{path}'{options}")
+        assert res.affected_rows == 3
+        got = eng.collect(sid, eng.execute_sql(
+            sid, "SELECT id, v FROM t_copy_pq ORDER BY id"))
+        assert [tuple(r) for r in got] == [(1, "a"), (2, "b"), (3, "c")]
+    finally:
+        eng.execute_sql(sid, "DROP TABLE IF EXISTS t_copy_pq")
+        eng.close_session(sid)
+
+
 def test_copy_denied_for_non_admin(spark, tmp_path):
     from gizmosql_spark.security import CommandDenied
 

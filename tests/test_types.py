@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import datetime as dt
+
 import pyarrow as pa
 import pytest
 from pyspark.sql import types as T
@@ -10,6 +12,7 @@ from gizmosql_spark.types import (
     arrow_schema_to_spark,
     arrow_to_spark,
     spark_to_arrow,
+    widen_for_spark,
 )
 
 CASES = [
@@ -51,6 +54,36 @@ def test_struct_recursion():
 def test_decimal256_rejected():
     with pytest.raises(ValueError):
         arrow_to_spark(pa.decimal256(40, 2))
+
+
+def test_widen_for_spark_casts_only_refused_columns():
+    t = pa.table({
+        "keep": pa.array([1, None], pa.int32()),
+        "u8": pa.array([255, None], pa.uint8()),
+        "half": pa.array([1.5, None], pa.float32()).cast(pa.float16()),
+        "d64": pa.array([86_400_000, None], pa.date64()),
+        "t32": pa.array([3_723_000, None], pa.time32("ms")),
+        "t64ns": pa.array([3_723_000_004_999, None], pa.time64("ns")),
+        "nested": pa.array([[0, 255], None], pa.list_(pa.uint8())),
+    })
+    out = widen_for_spark(t)
+    assert out.schema.types == [
+        pa.int32(), pa.int16(), pa.float32(), pa.date32(), pa.int64(),
+        pa.int64(), pa.list_(pa.int16())]
+    assert out.column("keep") == t.column("keep")
+    assert out.to_pydict() == {
+        "keep": [1, None], "u8": [255, None], "half": [1.5, None],
+        "d64": [dt.date(1970, 1, 2), None],
+        # µs since midnight; ns truncate
+        "t32": [3_723_000_000, None], "t64ns": [3_723_000_004, None],
+        "nested": [[0, 255], None]}
+    assert widen_for_spark(out).equals(out)
+
+
+def test_widen_for_spark_names_a_column_spark_cannot_hold():
+    t = pa.table({"ok": [1], "wide": pa.array([1], pa.decimal256(40, 2))})
+    with pytest.raises(ValueError, match="'wide'.*38"):
+        widen_for_spark(t)
 
 
 def test_result_direction():
