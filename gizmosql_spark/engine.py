@@ -22,7 +22,6 @@ prepare-only pass (duckdb_statement.cpp:2456-2467).
 
 from __future__ import annotations
 
-import glob
 import os
 import re
 import threading
@@ -30,7 +29,6 @@ import time
 import uuid
 from dataclasses import dataclass, field
 from typing import Any
-from urllib.parse import urlparse
 
 import pyarrow as pa
 from pyspark.sql import DataFrame, Observation, SparkSession
@@ -56,6 +54,7 @@ from gizmosql_spark.dialect import (
 )
 from gizmosql_spark.querylog import QueryLog
 from gizmosql_spark.session import get_spark
+from gizmosql_spark import session_cache
 from gizmosql_spark.session_cache import SessionLRU
 from gizmosql_spark.settings import (
     SETTINGS_SCHEMA,
@@ -151,10 +150,6 @@ class SessionState:
     #: (adbc_scanner ATTACH analog)
     attached: dict[str, tuple[str, str | None, str | None]] = field(
         default_factory=dict)
-    #: file-scan relations: (format, path) -> (file identity, frame)
-    #: (_file_relation)
-    file_relations: SessionLRU = field(
-        default_factory=lambda: SessionLRU(_FILE_RELATIONS_PER_SESSION))
     #: analyzed queries: (rewritten SQL, file scans) -> _Plan
     #: (Engine._cached_plan)
     plans: SessionLRU = field(
@@ -238,9 +233,8 @@ _INGEST_SAVE_MODES = {"create": "errorifexists", "fail": "errorifexists",
 _LOCAL_RELATION_THRESHOLD = "spark.sql.execution.arrow.localRelationThreshold"
 
 
-#: file-scan relations and analyzed queries one session keeps; the
-#: least recently used is dropped past these
-_FILE_RELATIONS_PER_SESSION = 64
+#: analyzed queries one session keeps; the least recently used is
+#: dropped past this
 _PLANS_PER_SESSION = 64
 
 #: analyzed-plan leaves a reused plan may read: file and catalog
@@ -265,80 +259,34 @@ _EXCHANGE_OPS_RE = re.compile(
     r"Repartition\w*|RebalancePartitions|Intersect|Except)\b|"
     r"\b(?:scalar-subquery|exists|list)#\d")
 
-#: Hadoop glob syntax Python's glob reads differently: alternation,
-#: escapes and ``[^…]``/``[!…]`` classes
-_HADOOP_ONLY_GLOB_RE = re.compile(r"[{}\\]|\[[!^]")
-#: any URI scheme (``s3a://``, ``hdfs:/``, ``file:``)
-_SCHEME_RE = re.compile(r"^[A-Za-z][A-Za-z0-9+.-]*:")
 #: a Spark-level SET/RESET (engine SETs are claimed by classify_command)
 _SPARK_SET_RE = re.compile(r"^\s*(?:SET|RESET)\b", re.IGNORECASE)
-
-
-def _file_identity(path: str) -> tuple | None:
-    """Sorted ``(file, size, mtime_ns, inode)`` of every file a local
-    scan path names: one file, a directory (walked recursively) or a
-    glob. None for a remote or relative path, a glob only Hadoop can
-    expand, or a stat error — such a path has no identity and is read
-    anew."""
-    if _SCHEME_RE.match(path):
-        url = urlparse(path)
-        if url.scheme != "file" or url.netloc not in ("", "localhost"):
-            return None
-        path = url.path
-    if not os.path.isabs(path) or _HADOOP_ONLY_GLOB_RE.search(path):
-        return None
-
-    roots = [path]
-    if any(c in path for c in "*?["):
-        roots = glob.glob(path, include_hidden=True)
-        if not roots:
-            return None
-
-    def _raise(exc: OSError):
-        raise exc
-
-    files = []
-    try:
-        for root in roots:
-            if not os.path.isdir(root):
-                files.append(root)
-                continue
-            for d, _, names in os.walk(root, onerror=_raise,
-                                       followlinks=True):
-                files.extend(os.path.join(d, n) for n in names)
-        stats = [(f, os.stat(f)) for f in files]
-    except OSError:
-        return None
-    return tuple(sorted((f, s.st_size, s.st_mtime_ns, s.st_ino)
-                        for f, s in stats))
 
 
 def _file_relation(st: SessionState, fmt: str, path: str,
                    telemetry=None) -> tuple[DataFrame, tuple | None]:
     """The session's relation for a file scan, and the files' identity
-    (``_file_identity``; None when the path has none). The relation is
-    rebuilt only when the identity changes, so a repeated scan skips
-    Spark's listing and schema-inference job; a path without an
-    identity is read anew on every call. Entries go with the session,
-    and a Spark-level SET/RESET drops them all (confs such as
+    (``session_cache.file_identity``; None when the path has none).
+    The relation is an entry of the session's data map, keyed
+    ``(format, path)``, and is rebuilt only when the identity changes,
+    so a repeated scan skips Spark's listing and schema-inference job;
+    a path without an identity is read anew on every call. A
+    Spark-level SET/RESET empties the map (confs such as
     ``spark.sql.caseSensitive`` shape inference).
 
     A rebuild empties the session's plan cache: the scan's temp view
     now names a new relation, and so does every view defined over it."""
-    key = (fmt, path)
-    ident = _file_identity(path)
-    got = st.file_relations.get(key)
-    hit = ident is not None and got is not None and got[0] == ident
+
+    def build() -> DataFrame:
+        df = st.spark.read.format(fmt).load(path)
+        st.plans.clear()
+        return df
+
+    df, ident, hit = session_cache.for_spark(st.spark).get_or_build(
+        (fmt, path), path, build)
     if telemetry is not None:
         telemetry.add_counter("engine.file_relations_total",
                               result="hit" if hit else "miss")
-    if hit:
-        return got[1], ident
-    generation = st.file_relations.generation
-    df = st.spark.read.format(fmt).load(path)
-    st.plans.clear()
-    if ident is not None:
-        st.file_relations.put(key, (ident, df), generation)
     return df, ident
 
 
@@ -347,7 +295,7 @@ def _forget_session_caches_on_set(st: SessionState, sql: str) -> bool:
     whether it is one."""
     if not _SPARK_SET_RE.match(sql):
         return False
-    st.file_relations.clear()
+    session_cache.for_spark(st.spark).clear()
     st.plans.clear()
     return True
 
@@ -590,7 +538,7 @@ class Engine:
             return
         st.closed = True
         st.prepared.clear()
-        st.file_relations.clear()
+        session_cache.drop(st.spark)
         st.plans.clear()
         self._cancel_session_jobs(st)
         with self._lock:
@@ -2007,13 +1955,14 @@ class Engine:
         """Arrow data → SESSION temp view (no storage write). The
         DoExchange seam: pushed batches become queryable mid-call
         without a managed-table round trip; the view lives and dies
-        with the session's isolated SparkSession."""
+        with the session's isolated SparkSession. Columns Spark cannot
+        hold widen as they do on ingest (``types.widen_for_spark``)."""
         import re
 
         st = self._session(session_id)
         if not re.fullmatch(r"[A-Za-z_]\w*", name):
             raise ValueError(f"invalid view name: {name!r}")
-        df = st.spark.createDataFrame(table)
+        df = st.spark.createDataFrame(widen_for_spark(table))
         df.createOrReplaceTempView(name)
         self._invalidate_plans()
         return table.num_rows

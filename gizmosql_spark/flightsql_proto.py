@@ -8,9 +8,10 @@ tickets, and action bodies are protobuf messages from the public
 apache/arrow ``format/FlightSql.proto`` contract). The protobuf
 package is unavailable in this environment, but every message involved
 is simple — strings, bytes, varints, one nested message, one map — so
-this module implements the proto3 *wire format* (a public, stable
-spec: little-endian base-128 varints + tag/length-delimited fields)
-directly in stdlib Python. With it, a stock Flight SQL / ADBC client's
+this module maps a field table per message onto the proto3 *wire
+format* (a public, stable spec: little-endian base-128 varints +
+tag/length-delimited fields), whose primitives come from the vendored
+``google.protobuf._wire``. With it, a stock Flight SQL / ADBC client's
 bytes decode to the same command structures the JSON dialect uses, and
 our replies re-encode to bytes a stock client parses.
 
@@ -24,7 +25,8 @@ Wire-format rules implemented (proto3):
   key = field 1, value = field 2
 - ``repeated uint32`` accepts both packed (length-delimited) and
   unpacked encodings on decode and emits packed
-- unknown fields are skipped by wire type (forward compatibility)
+- unknown fields are skipped by wire type (forward compatibility); a
+  length-delimited field that runs past the buffer is an error
 
 ``google.protobuf.Any`` is itself a two-field message
 (``type_url = 1``, ``value = 2``); Flight SQL type URLs are
@@ -35,65 +37,7 @@ from __future__ import annotations
 
 from typing import Any as _PyAny
 
-# ---------------------------------------------------------------------
-# varint + tag primitives
-# ---------------------------------------------------------------------
-
-
-def encode_varint(value: int) -> bytes:
-    """Unsigned little-endian base-128 varint."""
-    if value < 0:
-        # proto3 negative int32/int64/enum values widen to 10 bytes
-        value &= (1 << 64) - 1
-    out = bytearray()
-    while True:
-        bits = value & 0x7F
-        value >>= 7
-        if value:
-            out.append(bits | 0x80)
-        else:
-            out.append(bits)
-            return bytes(out)
-
-
-def decode_varint(buf: bytes, pos: int) -> tuple[int, int]:
-    """Returns (value, new_pos)."""
-    result = 0
-    shift = 0
-    while True:
-        if pos >= len(buf):
-            raise ValueError("truncated varint")
-        b = buf[pos]
-        pos += 1
-        result |= (b & 0x7F) << shift
-        if not b & 0x80:
-            return result, pos
-        shift += 7
-        if shift > 70:
-            raise ValueError("varint too long")
-
-
-def _tag(field_number: int, wire_type: int) -> bytes:
-    return encode_varint((field_number << 3) | wire_type)
-
-
-def _len_delimited(field_number: int, payload: bytes) -> bytes:
-    return _tag(field_number, 2) + encode_varint(len(payload)) + payload
-
-
-def _skip_field(buf: bytes, pos: int, wire_type: int) -> int:
-    if wire_type == 0:
-        _, pos = decode_varint(buf, pos)
-        return pos
-    if wire_type == 1:
-        return pos + 8
-    if wire_type == 2:
-        n, pos = decode_varint(buf, pos)
-        return pos + n
-    if wire_type == 5:
-        return pos + 4
-    raise ValueError(f"unsupported wire type {wire_type}")
-
+from gizmosql_spark.vendor.google.protobuf import _wire
 
 # ---------------------------------------------------------------------
 # message registry — apache/arrow format/FlightSql.proto field numbers
@@ -272,6 +216,18 @@ _TYPE_URL_PREFIX = "type.googleapis.com/arrow.flight.protocol.sql."
 # ---------------------------------------------------------------------
 
 
+def _put_len(out: bytearray, number: int, payload: bytes) -> None:
+    _wire.write_tag(out, number, _wire.WIRETYPE_LENGTH_DELIMITED)
+    _wire.write_len_delimited(out, payload)
+
+
+def _map_entry(key: str, value: bytes) -> bytes:
+    entry = bytearray()
+    _put_len(entry, 1, key.encode("utf-8"))
+    _put_len(entry, 2, value)
+    return bytes(entry)
+
+
 def encode(message: str, values: dict[str, _PyAny]) -> bytes:
     """Serialize ``values`` as the named message (proto3 canonical:
     defaults omitted, fields in number order)."""
@@ -287,43 +243,35 @@ def encode(message: str, values: dict[str, _PyAny]) -> bytes:
             continue
         if kind == "string":
             if v != "":
-                out += _len_delimited(number, v.encode("utf-8"))
+                _put_len(out, number, v.encode("utf-8"))
         elif kind == "bytes":
             if v != b"":
-                out += _len_delimited(number, bytes(v))
-        elif kind == "bool":
+                _put_len(out, number, bytes(v))
+        elif kind in ("bool", "int32", "int64", "uint32", "enum"):
             if v:
-                out += _tag(number, 0) + encode_varint(1)
-        elif kind in ("int32", "int64", "uint32", "enum"):
-            if v != 0:
-                out += _tag(number, 0) + encode_varint(int(v))
+                _wire.write_tag(out, number, _wire.WIRETYPE_VARINT)
+                _wire.write_varint(out, int(v))
         elif kind == "rep_uint32":
             if v:
-                packed = b"".join(encode_varint(int(x)) for x in v)
-                out += _len_delimited(number, packed)
+                packed = bytearray()
+                for x in v:
+                    _wire.write_varint(packed, int(x))
+                _put_len(out, number, bytes(packed))
         elif kind == "rep_string":
             for item in v:
-                out += _len_delimited(number, item.encode("utf-8"))
+                _put_len(out, number, item.encode("utf-8"))
         elif kind == "double":
             if v != 0.0:
-                import struct as _struct
-
-                out += _tag(number, 1) + _struct.pack("<d", float(v))
+                _wire.write_tag(out, number, _wire.WIRETYPE_FIXED64)
+                _wire.encode_double(out, float(v))
         elif kind == "map_str":
             for k in sorted(v):
-                entry = _len_delimited(1, k.encode("utf-8")) + _len_delimited(
-                    2, v[k].encode("utf-8")
-                )
-                out += _len_delimited(number, entry)
+                _put_len(out, number, _map_entry(k, v[k].encode("utf-8")))
         elif kind.startswith("map_msg:"):
-            inner = kind[8:]
             for k in sorted(v):
-                entry = _len_delimited(1, k.encode("utf-8")) + _len_delimited(
-                    2, encode(inner, v[k])
-                )
-                out += _len_delimited(number, entry)
+                _put_len(out, number, _map_entry(k, encode(kind[8:], v[k])))
         elif kind.startswith("msg:"):
-            out += _len_delimited(number, encode(kind[4:], v))
+            _put_len(out, number, encode(kind[4:], v))
         else:  # pragma: no cover - registry is static
             raise ValueError(f"unsupported kind {kind}")
     return bytes(out)
@@ -331,7 +279,8 @@ def encode(message: str, values: dict[str, _PyAny]) -> bytes:
 
 def decode(message: str, buf: bytes) -> dict[str, _PyAny]:
     """Parse the named message; missing scalars get proto3 defaults,
-    unknown fields are skipped."""
+    unknown fields are skipped. A length-delimited field, known or
+    not, that runs past the end of ``buf`` raises ValueError."""
     fields = {number: (name, kind) for number, name, kind in MESSAGES[message]}
     out: dict[str, _PyAny] = {}
     for _, name, kind in MESSAGES[message]:
@@ -353,43 +302,33 @@ def decode(message: str, buf: bytes) -> dict[str, _PyAny]:
             out[name] = None
     pos = 0
     while pos < len(buf):
-        tag, pos = decode_varint(buf, pos)
-        number, wire_type = tag >> 3, tag & 0x7
+        number, wire_type, pos = _wire.read_tag(buf, pos)
         spec = fields.get(number)
         if spec is None:
-            pos = _skip_field(buf, pos, wire_type)
+            pos = _wire.skip_field(buf, pos, wire_type)
             continue
         name, kind = spec
         if kind == "double":
-            import struct as _struct
-
-            out[name] = _struct.unpack_from("<d", buf, pos)[0]
-            pos += 8
+            out[name], pos = _wire.decode_double(buf, pos)
         elif kind in ("bool", "int32", "int64", "uint32", "enum"):
-            v, pos = decode_varint(buf, pos)
+            v, pos = _wire.read_varint(buf, pos)
             if kind == "bool":
                 out[name] = bool(v)
-            elif kind == "int32" and v >= 1 << 63:
-                out[name] = v - (1 << 64)
+            elif kind == "int32":
+                out[name] = _wire.sign_extend_64(v)
             else:
                 out[name] = v
-        elif kind == "rep_uint32":
-            if wire_type == 2:  # packed
-                n, pos = decode_varint(buf, pos)
-                end = pos + n
-                while pos < end:
-                    v, pos = decode_varint(buf, pos)
-                    out[name].append(v)
-            else:  # unpacked
-                v, pos = decode_varint(buf, pos)
-                out[name].append(v)
+        elif kind == "rep_uint32" and wire_type != 2:  # unpacked
+            v, pos = _wire.read_varint(buf, pos)
+            out[name].append(v)
         else:
-            n, pos = decode_varint(buf, pos)
-            payload = buf[pos : pos + n]
-            if len(payload) != n:
-                raise ValueError("truncated length-delimited field")
-            pos += n
-            if kind == "string":
+            payload, pos = _wire.read_len_delimited(buf, pos)
+            if kind == "rep_uint32":  # packed
+                i = 0
+                while i < len(payload):
+                    v, i = _wire.read_varint(payload, i)
+                    out[name].append(v)
+            elif kind == "string":
                 out[name] = payload.decode("utf-8")
             elif kind == "bytes":
                 out[name] = payload

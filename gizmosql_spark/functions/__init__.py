@@ -19,6 +19,7 @@ gaps so the SQL surface reaches parity:
 from __future__ import annotations
 
 import math
+import weakref
 
 import pandas as pd
 from pyspark.sql import SparkSession
@@ -247,19 +248,21 @@ def _pandas_gap_udfs():
 #: sessions already carrying the surface — re-registering ~70 temp
 #: functions costs ~0.45 s of spark.sql DDL round-trips per call, and
 #: operators call this at build time, so the guard is a real win on
-#: any multi-query session (bench: ~3 s across the spatial tier)
-_REGISTERED: set[int] = set()
+#: any multi-query session (bench: ~3 s across the spatial tier).
+#: Weak on the session object: an id() could hand a recycled address a
+#: dead session's registration.
+_REGISTERED: "weakref.WeakSet[SparkSession]" = weakref.WeakSet()
 
 
 def register_all(spark: SparkSession) -> None:
     """Register the full gap-filler surface on a session (idempotent
     per session — temp functions survive for the session lifetime)."""
-    if id(spark) in _REGISTERED:
+    if spark in _REGISTERED:
         from gizmosql_spark.geo import register_geo
 
         register_geo(spark)
         return
-    _REGISTERED.add(id(spark))
+    _REGISTERED.add(spark)
     for name, (sig, body) in _SQL_FUNCTIONS.items():
         spark.sql(f"CREATE OR REPLACE TEMPORARY FUNCTION {name}{sig} RETURN {body}")
     for name, fn in _pandas_gap_udfs().items():

@@ -31,6 +31,7 @@ or where a user explicitly materializes WKB.
 from __future__ import annotations
 
 import struct
+import weakref
 from typing import Iterable
 
 import numpy as np
@@ -972,20 +973,22 @@ _GEO_SQL_FUNCTIONS.update({
         " ELSE NULL END"),
 })
 
-_REGISTERED: set[int] = set()
+#: sessions already carrying the geo surface, weak on the session
+#: object as in functions.register_all
+_REGISTERED: "weakref.WeakSet" = weakref.WeakSet()
 
 
 def register_geo(spark) -> None:
     """Idempotent per session; requires functions.register_all first
     (st_distance et al. live there)."""
-    if id(spark) in _REGISTERED:
+    if spark in _REGISTERED:
         return
     for name, fn in _pandas_geo_udfs().items():
         spark.udf.register(name, fn)
     for name, (sig, body) in _GEO_SQL_FUNCTIONS.items():
         spark.sql(
             f"CREATE OR REPLACE TEMPORARY FUNCTION {name}{sig} RETURN {body}")
-    _REGISTERED.add(id(spark))
+    _REGISTERED.add(spark)
 
 
 # --- GeoArrow export at the Arrow boundary ---------------------------

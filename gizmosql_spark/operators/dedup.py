@@ -143,10 +143,10 @@ def _lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def _build() -> DataFrame:
         sh = loader.keyed_persist(
-            spark, f"dedup.shingles:{sf_dir}",
+            spark, sf_dir, f"dedup.shingles:{sf_dir}",
             lambda: _shingles(spark, sf_dir))
         bands = loader.keyed_persist(
-            spark, f"dedup.minhash_bands:{sf_dir}",
+            spark, sf_dir, f"dedup.minhash_bands:{sf_dir}",
             lambda: _minhash_bands(sh))
         a = bands.alias("a")
         b = bands.alias("b")
@@ -162,7 +162,8 @@ def _lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         return _verify_jaccard(cand, sh)
 
-    return loader.keyed_persist(spark, f"dedup.lsh_pairs:{sf_dir}", _build)
+    return loader.keyed_persist(
+        spark, sf_dir, f"dedup.lsh_pairs:{sf_dir}", _build)
 
 
 def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -183,7 +184,8 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     posting-list length — at 100 TB use dedup_minhash_lsh; this is the
     exact ground truth for verification."""
     sh = loader.keyed_persist(
-        spark, f"dedup.shingles:{sf_dir}", lambda: _shingles(spark, sf_dir))
+        spark, sf_dir, f"dedup.shingles:{sf_dir}",
+        lambda: _shingles(spark, sf_dir))
     a = sh.alias("a")
     b = sh.alias("b")
     # one shuffle: the postings self-join on shingle IS the common
@@ -268,10 +270,10 @@ def dedup_pair_classify(spark: SparkSession, sf_dir: str) -> DataFrame:
     frame — but rebuilding it per call re-ran 8 md5 min-aggs over
     every shingle (the dominant CPU of this query at sf0.1)."""
     sh = loader.keyed_persist(
-        spark, f"dedup.shingles:{sf_dir}",
+        spark, sf_dir, f"dedup.shingles:{sf_dir}",
         lambda: _shingles(spark, sf_dir))
     bands = loader.keyed_persist(
-        spark, f"dedup.minhash_bands:{sf_dir}",
+        spark, sf_dir, f"dedup.minhash_bands:{sf_dir}",
         lambda: _minhash_bands(sh))
     a, b = bands.alias("a"), bands.alias("b")
     cand = (
@@ -359,9 +361,6 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_CLUSTER_EDGE_COUNT: dict[tuple, int] = {}
-
-
 def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Transitive near-dup clusters: connected components over the
     MinHash-LSH verified pair graph, labels = min doc_id per component.
@@ -390,16 +389,13 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     # then co-partitions against it), never via the session conf: the
     # engine is multi-session, and a set-then-restore window would
     # leak the clamped width into concurrently planned statements.
-    # bounded width scalar, cached per session (r12): the edge count
-    # only sizes loop_parts, is deterministic per fixture dir, and
-    # cost one full materialization job per call — the same
-    # bounded-scalar class as scale._BOUNDS_CACHE. The propagation
+    # bounded width scalar, kept in the session's data map (r12): the
+    # edge count only sizes loop_parts, is deterministic per fixture
+    # dir, and cost one full materialization job per call — the same
+    # bounded-scalar class as scale.range_boundaries. The propagation
     # loop itself still runs in full on every invocation.
-    ck = (id(spark), sf_dir)
-    n_edges = _CLUSTER_EDGE_COUNT.get(ck)
-    if n_edges is None:
-        n_edges = sym.count()
-        _CLUSTER_EDGE_COUNT[ck] = n_edges
+    n_edges = loader.memo(spark, sf_dir, f"dedup.cluster_edges:{sf_dir}",
+                          sym.count)
     session_parts = int(
         pairs.sparkSession.conf.get("spark.sql.shuffle.partitions"))
     loop_parts = max(4, min(session_parts, n_edges // 50_000 + 1))

@@ -299,7 +299,7 @@ def events_rfm(spark: SparkSession, sf_dir: str) -> DataFrame:
     bnds = scale.range_boundaries(
         per_user, ["last_ts_s", "freq", "monetary"],
         int(spark.conf.get("spark.sql.shuffle.partitions", "32")),
-        cache_key=sf_dir + ":rfm_per_user")
+        cache_key=(sf_dir, "rfm_per_user"))
     # one materialization + ONE bounded bucket-stats job for all three
     # ranks (r11 optimization: the stacked per-rank form paid a
     # localCheckpoint + broadcast-offsets build PER rank — 5x the r10
@@ -311,10 +311,10 @@ def events_rfm(spark: SparkSession, sf_dir: str) -> DataFrame:
          (["monetary", "user_id"], "rn_m", "monetary", bnds[2])],
         total_col="n_total",
         # r12: the per-user frame is deterministic per fixture dir, so
-        # the bucketed materialization + its counts ride the
-        # keyed-persist registry — warm invocations run one job
-        # (VERDICT r11 item 6; see scale._GRN_STATS_CACHE contract)
-        cache_key=sf_dir + ":rfm_per_user")
+        # the bucketed materialization + its counts share one entry of
+        # the session's data map — warm invocations run one job
+        # (VERDICT r11 item 6; see scale._persisted_with)
+        cache_key=(sf_dir, "rfm_per_user"))
     n = F.col("n_total")
     scored = g.select(
         "user_id", "monetary",
@@ -464,7 +464,7 @@ def events_error_burst(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = _error_sliver(spark, sf_dir)
     n_buckets = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
     bnds = scale.range_boundaries(
-        e, ["ts_us"], n_buckets, cache_key=sf_dir + ":error_ts")[0]
+        e, ["ts_us"], n_buckets, cache_key=(sf_dir, "error_ts"))[0]
     bexpr = F.lit(0)
     for b in sorted({v for v in bnds if v is not None}):
         bexpr = bexpr + (F.col("ts_us") > F.lit(b)).cast("int")
@@ -496,7 +496,8 @@ def events_error_burst(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (scale.keyed_frame_scalars) replaces the per-call
     # localCheckpoint + collect, so warm invocations run one job
     be, stats = scale.keyed_frame_scalars(
-        spark, f"{sf_dir}:error_burst_sliver:{scale._boundary_sig([bnds])}",
+        spark, sf_dir,
+        f"{sf_dir}:error_burst_sliver:{scale._boundary_sig([bnds])}",
         e.withColumn("__bkt", bexpr),
         lambda bdf: sorted(
             (r["__bkt"], r["__mn"], r["__mx"], r["__f"])
@@ -1405,7 +1406,7 @@ def acf_lags(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type", "lag", "n_pairs",
         (F.round(r, 6) + F.lit(0.0)).alias("acf"))
     out = loader.keyed_persist(
-        spark, f"events.acf:{sf_dir}", lambda: res)
+        spark, sf_dir, f"events.acf:{sf_dir}", lambda: res)
     out.count()
     return out.orderBy("event_type", "lag")
 

@@ -89,7 +89,8 @@ def kneser_ney_bigram(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-token beyond the first wordcount.
     """
     bg = loader.keyed_persist(
-        spark, f"lm.bigrams:{sf_dir}", lambda: _bigrams(spark, sf_dir))
+        spark, sf_dir, f"lm.bigrams:{sf_dir}",
+        lambda: _bigrams(spark, sf_dir))
     hist = bg.groupBy("w1").agg(
         F.sum("c").alias("c1"),
         F.count(F.lit(1)).alias("n1_fwd"),  # N1+(w1, ·)

@@ -1,11 +1,22 @@
-"""Shared fixture-table loader with plan memoization.
+"""Fixture-table loader and the operator tier's reuse rule.
 
-``spark.read.parquet`` builds a fresh InMemoryFileIndex + reads the
-footer schema every call; operators run many queries over the same ten
-tables, so the resolved DataFrames (immutable logical plans) are
-memoized per (session, dir, table). On a cluster the same role is
-played by the catalog (tables registered once); this keeps the
-fixture-path API allocation-free per query.
+Operators run many queries over the ten tables of one fixture
+directory. What they reuse within a session lives in the session's
+data map (``session_cache.for_spark``) and is rebuilt when the files
+it was built from change, so a result follows the data:
+
+- ``table`` is the session's file relation for ``<dir>/<name>.parquet``,
+  the same entry a ``read_parquet`` of that file gets in the engine. It
+  is rebuilt when that file's identity changes.
+- ``memo`` and ``keyed_persist`` (fitted models, collected scalars,
+  persisted intermediate frames) are keyed by a key string and rebuilt
+  when the identity of the directory they read changes. A frame that a
+  rebuild, an eviction or the session's end lets go is unpersisted.
+- ``row_count``, ``column_minmax`` and the input-size probe behind the
+  adaptivity and width policies read the files on every call (a footer
+  read costs 0.1-0.2 ms), so they cannot be stale.
+
+A cold run is a fresh ``spark.newSession()``.
 """
 
 from __future__ import annotations
@@ -15,9 +26,7 @@ import weakref
 
 from pyspark.sql import DataFrame, SparkSession
 
-_CACHE: dict[tuple[int, str, str], DataFrame] = {}
-
-_CONFD: set[int] = set()
+from gizmosql_spark import session_cache
 
 
 def ensure_session_confs(spark: SparkSession) -> None:
@@ -25,18 +34,21 @@ def ensure_session_confs(spark: SparkSession) -> None:
     defensively in case the caller's session wasn't built by
     gizmosql_spark.session.get_spark: ns-timestamp parquet reads
     (events fixture) and the UTC session timezone the oracles assume
-    (the reference exports TIMESTAMP_TZ as UTC µs)."""
-    if id(spark) in _CONFD:
-        return
-    for k, v in (
-        ("spark.sql.legacy.parquet.nanosAsLong", "true"),
-        ("spark.sql.session.timeZone", "UTC"),
-    ):
-        try:
-            spark.conf.set(k, v)
-        except Exception:
-            pass
-    _CONFD.add(id(spark))
+    (the reference exports TIMESTAMP_TZ as UTC µs). Applied once per
+    session, and again after a Spark-level SET/RESET empties the
+    session's data map."""
+
+    def apply() -> None:
+        for k, v in (
+            ("spark.sql.legacy.parquet.nanosAsLong", "true"),
+            ("spark.sql.session.timeZone", "UTC"),
+        ):
+            try:
+                spark.conf.set(k, v)
+            except Exception:
+                pass
+
+    memo(spark, None, "loader.session_confs", apply)
 
 
 #: Input-size threshold for runtime re-planning. AQE's per-stage
@@ -53,45 +65,35 @@ def ensure_session_confs(spark: SparkSession) -> None:
 AQE_MIN_INPUT_BYTES = int(
     os.environ.get("SPARK_GRAFT_AQE_MIN_BYTES", str(1 << 30)))
 
-_AQE_DECISION: dict[str, str | None] = {}
-
 #: Last value THIS policy wrote per session — when the live conf
 #: differs, someone else (a user SET, a test probe) changed it after
 #: us, and an explicit override outranks the size heuristic until the
 #: session goes away. Weak-keyed on the session itself: an id()-keyed
 #: dict can hand a NEW session a dead session's state when CPython
-#: reuses the address (nothing here keeps sessions alive, unlike
-#: _CACHE/_PERSISTED).
+#: reuses the address.
 _AQE_SET: "weakref.WeakKeyDictionary[SparkSession, str]" = (
     weakref.WeakKeyDictionary())
 
 
 def _dir_is_small(sf_dir: str) -> bool | None:
     """True if the fixture directory's total parquet bytes sit below
-    the adaptivity threshold; None if the probe fails. Cached via
-    _AQE_DECISION (string-typed for historical reasons)."""
-    decision = _AQE_DECISION.get(sf_dir, "unset")
-    if decision == "unset":
-        size = None
-        try:
-            size = sum(
-                os.path.getsize(os.path.join(sf_dir, f))
-                for f in os.listdir(sf_dir)
-                if f.endswith(".parquet")
-            )
-        except OSError:
-            pass
-        decision = (
-            None if size is None
-            else ("true" if size >= AQE_MIN_INPUT_BYTES else "false"))
-        _AQE_DECISION[sf_dir] = decision
-    return None if decision is None else decision == "false"
+    the adaptivity threshold; None if the probe fails. Probed on every
+    call (a listing and one stat per file)."""
+    try:
+        size = sum(
+            os.path.getsize(os.path.join(sf_dir, f))
+            for f in os.listdir(sf_dir)
+            if f.endswith(".parquet")
+        )
+    except OSError:
+        return None
+    return size < AQE_MIN_INPUT_BYTES
 
 
 def tune_adaptivity(spark: SparkSession, sf_dir: str) -> None:
     """Align spark.sql.adaptive.enabled with the fixture directory's
-    total parquet bytes. The size probe is cached per dir; the conf is
-    re-aligned on EVERY table() call so the setting always tracks the
+    total parquet bytes. The conf is re-aligned on EVERY table() call
+    so the setting always tracks the
     dir being queried — the previous once-per-(session, dir) form left
     the conf wherever the most recently *first-seen* dir put it, so
     one small-dir operator could park AQE off for every later query
@@ -176,8 +178,6 @@ def tune_shuffle_width(spark: SparkSession, sf_dir: str) -> None:
         pass
 
 
-_PERSISTED: dict[tuple[int, str], DataFrame] = {}
-
 
 class conf_scope:
     """Context manager applying session confs for the duration of a
@@ -209,8 +209,6 @@ class conf_scope:
                 self.spark.conf.set(k, v)
 
 
-_BOUNDED: dict[int, SparkSession] = {}
-
 #: Shuffle width for the bounded clone — graph edges, day grids, and
 #: other frames whose size is constant (or corpus-sliver) at any SF.
 BOUNDED_SHUFFLE_PARTITIONS = int(
@@ -230,12 +228,13 @@ def bounded_session(spark: SparkSession) -> SparkSession:
     A ``newSession()`` clone shares the SparkContext (executors,
     block manager, broadcast caches) but owns its conf, so the clamp
     is permanent here and invisible everywhere else. Frames built on
-    the clone plan their shuffles at the clamped width; keyed_persist
-    keys on session id, so operators that share cached graph frames
-    must consistently build them through this clone."""
-    key = id(spark.sparkContext)
-    s = _BOUNDED.get(key)
-    if s is None:
+    the clone plan their shuffles at the clamped width, and the clone
+    has a data map of its own, so operators that share cached graph
+    frames must consistently build them through this clone. The clone
+    is an entry of the parent's data map: dropping the parent's map
+    drops the clone's and unpersists the frames persisted on it."""
+
+    def build() -> SparkSession:
         s = spark.newSession()
         s.conf.set(
             "spark.sql.shuffle.partitions",
@@ -243,34 +242,43 @@ def bounded_session(spark: SparkSession) -> SparkSession:
                 "spark.sql.shuffle.partitions")),
                 BOUNDED_SHUFFLE_PARTITIONS))))
         ensure_session_confs(s)
-        _BOUNDED[key] = s
-    return s
+        return s
+
+    return memo(spark, None, "loader.bounded_session", build)
 
 
-def keyed_persist(spark: SparkSession, key: str, builder,
+def memo(spark: SparkSession, path: str | None, key, build):
+    """``build()``'s value, kept in the session's data map under
+    ``key`` while the files under ``path`` (a fixture dir or one file;
+    None: no files) keep their identity (``session_cache``). ``key``
+    names everything else the value depends on (tables, filters,
+    parameters) and includes ``path``; ``build`` must be deterministic
+    over those files."""
+    return session_cache.for_spark(spark).get_or_build(
+        key, path, build)[0]
+
+
+def keyed_persist(spark: SparkSession, sf_dir: str, key: str, builder,
                   materialize: bool = False) -> DataFrame:
     """Persist-once registry for intermediate frames shared across
-    queries (shingle postings, LSH buckets, term counts). Repeated
-    calls reuse the one cached frame instead of stacking a new
-    ``persist()`` per call — a long-lived session would otherwise
-    accumulate cached partitions without bound.
+    queries (shingle postings, LSH buckets, term counts): the ``memo``
+    of ``builder().persist()``. Repeated calls reuse the one cached
+    frame instead of stacking a new ``persist()`` per call, and the
+    frame is unpersisted when the session's data map lets it go.
 
     ``materialize=True`` runs the pinning ``count()`` on the FIRST
     build only: callers that need the frame materialized inside a
     specific conf scope (e.g. the graph-width bounded session) used to
     call ``.count()`` on every invocation — a redundant cached-scan
     job per call once the frame is warm (r12)."""
-    k = (id(spark), key)
-    df = _PERSISTED.get(k)
-    if df is None:
+
+    def build() -> DataFrame:
         df = builder().persist()
         if materialize:
             df.count()
-        _PERSISTED[k] = df
-    return df
+        return df
 
-
-_ROW_COUNTS: dict[tuple[str, str], int] = {}
+    return memo(spark, sf_dir, key, build)
 
 
 def row_count(sf_dir: str, name: str) -> int:
@@ -278,21 +286,11 @@ def row_count(sf_dir: str, name: str) -> int:
     Spark job). Operators that size parameters from corpus cardinality
     (embedding_neardup's block count, LSH rows-per-band) were paying a
     full-scan ``count()`` per invocation — 3x per bench pass — for a
-    number the file metadata already holds. Memoized per (dir, table);
-    the fixtures are immutable for a session's lifetime (same contract
-    the plan cache above relies on)."""
-    key = (sf_dir, name)
-    n = _ROW_COUNTS.get(key)
-    if n is None:
-        import pyarrow.parquet as pq
+    number the file metadata already holds. Read on every call."""
+    import pyarrow.parquet as pq
 
-        n = pq.ParquetFile(
-            os.path.join(sf_dir, f"{name}.parquet")).metadata.num_rows
-        _ROW_COUNTS[key] = n
-    return n
-
-
-_COL_STATS: dict[tuple[str, str, str], tuple | None] = {}
+    return pq.ParquetFile(
+        os.path.join(sf_dir, f"{name}.parquet")).metadata.num_rows
 
 
 def column_minmax(sf_dir: str, name: str, col: str) -> tuple | None:
@@ -309,11 +307,7 @@ def column_minmax(sf_dir: str, name: str, col: str) -> tuple | None:
       column whose sort order is unknown, or whose writer is known to
       order it wrongly.
 
-    Memoized per (dir, table, column); the fixtures are immutable for
-    a session's lifetime."""
-    key = (sf_dir, name, col)
-    if key in _COL_STATS:
-        return _COL_STATS[key]
+    Read on every call."""
     got = None
     try:
         import pyarrow as pa
@@ -334,17 +328,16 @@ def column_minmax(sf_dir: str, name: str, col: str) -> tuple | None:
             got = (lo, hi)
     except Exception:
         got = None
-    _COL_STATS[key] = got
     return got
 
 
 def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """The session's relation for ``<sf_dir>/<name>.parquet``: the data
+    map's ``("parquet", path)`` entry, shared with the engine's file
+    scans and rebuilt when the file's identity changes."""
     ensure_session_confs(spark)
     tune_adaptivity(spark, sf_dir)
     tune_shuffle_width(spark, sf_dir)
-    key = (id(spark), sf_dir, name)
-    df = _CACHE.get(key)
-    if df is None:
-        df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
-        _CACHE[key] = df
-    return df
+    path = os.path.join(sf_dir, f"{name}.parquet")
+    return memo(spark, path, ("parquet", path),
+                lambda: spark.read.format("parquet").load(path))

@@ -165,7 +165,7 @@ def pmi_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
     # deterministic per fixture dir — the same bounded class as
     # tfidf's df frame (r12 §9)
     uni = loader.keyed_persist(
-        spark, f"quality.pmi_unigrams:{sf_dir}",
+        spark, sf_dir, f"quality.pmi_unigrams:{sf_dir}",
         lambda: _term_counts(spark, sf_dir)
         .groupBy(F.col("term").alias("tok"))
         .agg(F.sum("tc").alias("c")),

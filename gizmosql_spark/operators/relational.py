@@ -1454,7 +1454,7 @@ def skyline_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_buckets = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
     bnds = scale.range_boundaries(
         pts, ["price_cents"], n_buckets,
-        cache_key=sf_dir + ":part_price")[0]
+        cache_key=(sf_dir, "part_price"))[0]
     # materialize the bucketed frame once: the local-maxima window
     # branch and the per-bucket-max stats job are separate consumers,
     # and each would otherwise recompute the scan + DISTINCT shuffle
@@ -1466,7 +1466,8 @@ def skyline_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (scale.keyed_frame_scalars) replaces the per-call
     # localCheckpoint + collect, so warm invocations run one job
     bpts, bmax = scale.keyed_frame_scalars(
-        spark, f"{sf_dir}:skyline_pts:{scale._boundary_sig([bnds])}",
+        spark, sf_dir,
+        f"{sf_dir}:skyline_pts:{scale._boundary_sig([bnds])}",
         pts.withColumn(
             "__bkt", scale.bucket_expr(F.col("price_cents"), bnds)),
         lambda bdf: sorted(

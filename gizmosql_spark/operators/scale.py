@@ -509,7 +509,7 @@ def runtime_bloom_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     with loader.conf_scope(spark, _BLOOM_DEMO_CONFS):
         out = loader.keyed_persist(
-            spark, f"scale.bloomjoin:{sf_dir}", _build)
+            spark, sf_dir, f"scale.bloomjoin:{sf_dir}", _build)
         out.count()
     return out
 
@@ -543,17 +543,10 @@ def bloom_join_plan(spark: SparkSession, sf_dir: str) -> str:
             .fromString("formatted"))
 
 
-#: (cache_key, cols, n_buckets) → boundaries. Boundary REUSE is always
-#: safe — they only balance buckets, never affect values — so callers
-#: on immutable fixture dirs pass cache_key=sf_dir and the eager
-#: approxQuantile job runs once per (dir, columns) per process instead
-#: of once per DataFrame build (bench runs each query 4×).
-_BOUNDS_CACHE: dict[tuple, list[list[float]]] = {}
-
-
 def range_boundaries(df: DataFrame, cols: list[str], n_buckets: int,
                      rel_err: float = 0.01,
-                     cache_key: str | None = None) -> list[list[float]]:
+                     cache_key: tuple[str, str] | None = None
+                     ) -> list[list[float]]:
     """Driver-side range-bucket boundaries for ``global_row_number``:
     ONE approxQuantile pass (a single job — all columns are sampled
     together) returning the ~``n_buckets - 1`` interior equi-depth
@@ -561,9 +554,13 @@ def range_boundaries(df: DataFrame, cols: list[str], n_buckets: int,
     even deterministic across runs: any monotone bucketing yields the
     identical global rank; quantile placement only balances the
     buckets, so a skewed distribution still spreads across reducers
-    (equal-depth, where equal-width would collapse under skew). The
-    same property makes ``cache_key`` reuse safe even against changed
-    data — stale boundaries can skew bucket SIZES, never results.
+    (equal-depth, where equal-width would collapse under skew).
+
+    ``cache_key=(sf_dir, name)``, for a frame derived from the fixture
+    directory ``sf_dir`` alone, keeps the boundaries in the session's
+    data map (``loader.memo``): the eager approxQuantile job then runs
+    once per (dir, frame, columns, width) while the directory's files
+    are unchanged, instead of once per DataFrame build.
 
     Columns must be numeric (cast timestamps to unix seconds/micros
     first — monotone, so bucket order is preserved)."""
@@ -571,17 +568,14 @@ def range_boundaries(df: DataFrame, cols: list[str], n_buckets: int,
         # degenerate width (e.g. shuffle.partitions=1): one bucket,
         # no boundaries — approxQuantile NPEs on an empty prob list
         return [[] for _ in cols]
-    key = None
-    if cache_key is not None:
-        key = (cache_key, tuple(cols), n_buckets)
-        hit = _BOUNDS_CACHE.get(key)
-        if hit is not None:
-            return hit
     probs = [i / n_buckets for i in range(1, n_buckets)]
-    out = df.approxQuantile(cols, probs, rel_err)
-    if key is not None:
-        _BOUNDS_CACHE[key] = out
-    return out
+    if cache_key is None:
+        return df.approxQuantile(cols, probs, rel_err)
+    sf_dir, name = cache_key
+    return loader.memo(
+        df.sparkSession, sf_dir,
+        f"scale.bounds:{sf_dir}:{name}:{','.join(cols)}:{n_buckets}",
+        lambda: df.approxQuantile(cols, probs, rel_err))
 
 
 def bucket_expr(lead: Column, boundaries: list[float]) -> Column:
@@ -657,25 +651,21 @@ def _literal_long_map(pairs: dict[int, int], key: Column,
     return F.coalesce(looked, F.lit(int(default)).cast("long"))
 
 
-#: (id(spark), cache_key) → bucket_stats result for the keyed-persist
-#: global-rank path below. In-process only (dies with the JVM/process,
-#: rebuilt by every cold bench run — same memoisation class as
-#: _BOUNDS_CACHE and loader.keyed_persist, audited clean in VERDICT
-#: r11's gaming check). EXACTNESS contract: unlike boundaries (safe
-#: even stale), bucket counts must match the frame the ranking windows
-#: read — so the cache is only valid because the counts are computed
-#: FROM the keyed-persisted materialization itself (persist pins the
-#: bytes for the session; MEMORY_AND_DISK spills, never recomputes),
-#: and cache_key callers must derive their frame deterministically
-#: from an immutable fixture dir (the keyed_persist/row_count
-#: contract).
-_GRN_STATS_CACHE: dict[tuple, dict[str, list[tuple[int, int]]]] = {}
+def _persisted_with(frame: DataFrame, collect_fn) -> tuple:
+    """``(persisted frame, collect_fn(persisted frame))``: one session
+    data-map entry for a frame and the bounded scalars collected from
+    it.
 
-
-#: (id(spark), cache_key) → collected bounded scalars for
-#: keyed_frame_scalars below (same in-process class and contract as
-#: _GRN_STATS_CACHE).
-_KEYED_SCALARS: dict[tuple, object] = {}
+    EXACTNESS contract: bucket counts and per-bucket maxima must
+    describe the rows the downstream windows read. They do because the
+    scalars are collected FROM the persisted materialization and live
+    in the same entry as it: a rebuild, an eviction or the session's
+    end drops both together. ``frame`` must be a deterministic function
+    of the files of the directory the entry is keyed on, so a frame
+    recomputed after Spark lets cached blocks go still yields the same
+    rows."""
+    bdf = frame.persist()
+    return bdf, collect_fn(bdf)
 
 
 def _boundary_sig(boundary_lists: list[list[float]]) -> str:
@@ -691,22 +681,18 @@ def _boundary_sig(boundary_lists: list[list[float]]) -> str:
     return hashlib.md5(repr(boundary_lists).encode()).hexdigest()[:10]
 
 
-def keyed_frame_scalars(spark: SparkSession, cache_key: str,
+def keyed_frame_scalars(spark: SparkSession, sf_dir: str, cache_key: str,
                         frame: DataFrame, collect_fn):
-    """Keyed-persist ``frame`` and memoize ``collect_fn(frame)`` — the
-    shared device of the two-pass global-order family (skyline's
-    per-bucket maxima, error_burst's boundary stats): a bounded O(B)
-    driver collect whose value is deterministic per immutable fixture
-    dir, previously re-materialized (localCheckpoint) and re-collected
-    on EVERY invocation. The scalars are computed from the persisted
-    materialization itself, so the downstream windows read exactly the
-    rows the scalars describe (see _GRN_STATS_CACHE exactness note).
+    """Persist ``frame`` and collect ``collect_fn(frame)`` once per
+    session while ``sf_dir``'s files are unchanged — the shared device
+    of the two-pass global-order family (skyline's per-bucket maxima,
+    error_burst's boundary stats): a bounded O(B) driver collect,
+    previously re-materialized (localCheckpoint) and re-collected on
+    EVERY invocation. Frame and scalars share one entry
+    (_persisted_with).
     Returns ``(persisted_frame, scalars)``."""
-    bdf = loader.keyed_persist(spark, f"kfs:{cache_key}", lambda: frame)
-    skey = (id(spark), cache_key)
-    if skey not in _KEYED_SCALARS:
-        _KEYED_SCALARS[skey] = collect_fn(bdf)
-    return bdf, _KEYED_SCALARS[skey]
+    return loader.memo(spark, sf_dir, f"kfs:{cache_key}",
+                       lambda: _persisted_with(frame, collect_fn))
 
 
 def global_row_numbers(
@@ -714,7 +700,7 @@ def global_row_numbers(
     specs: list[tuple[list[str], str, "str | Column", list[float]]],
     total_col: str | None = None,
     materialize: bool = True,
-    cache_key: str | None = None,
+    cache_key: tuple[str, str] | None = None,
 ) -> DataFrame:
     """Distributed global ``row_number()`` for ONE OR MORE total
     orders over the same frame — the two-pass range-bucket +
@@ -763,12 +749,13 @@ def global_row_numbers(
         # stats job was the global-rank family's residual constant
         # (events_rfm paid a materialization job + a collect job on
         # EVERY invocation of a frame that is deterministic per
-        # fixture dir). Route the bucketed frame through the
-        # keyed-persist registry and memoize its bucket counts from
-        # that same materialization: warm invocations run ONE job
-        # (the ranking windows over the cached frame). Cold runs pay
-        # the build in the stats job itself (persist is lazy), so
-        # even the cold path drops a job vs eager localCheckpoint.
+        # fixture dir). cache_key=(sf_dir, name) keeps the persisted
+        # bucketed frame and its bucket counts in one entry of the
+        # session's data map (_persisted_with): warm invocations run
+        # ONE job (the ranking windows over the cached frame). Cold
+        # runs pay the build in the stats job itself (persist is
+        # lazy), so even the cold path drops a job vs eager
+        # localCheckpoint.
         # The BOUNDARY SETS join the key: a caller running at a
         # different shuffle width (e.g. the parallelism-invariance
         # suite at width 1) buckets the same frame differently, and a
@@ -776,15 +763,13 @@ def global_row_numbers(
         # would hand every later call a constant-foldable bucket
         # column — a plan-level unpartitioned window (caught by
         # test_no_corpus_global_rank_window the first time).
+        sf_dir, name = cache_key
         bsig = _boundary_sig([b for _, _, _, b in specs])
         frame = bdf
-        bdf = loader.keyed_persist(
-            df.sparkSession, f"grn:{cache_key}:{bsig}", lambda: frame)
-        skey = (id(df.sparkSession), cache_key, bsig)
-        stats = _GRN_STATS_CACHE.get(skey)
-        if stats is None:
-            stats = bucket_stats(bdf, bcols)
-            _GRN_STATS_CACHE[skey] = stats
+        bdf, stats = loader.memo(
+            df.sparkSession, sf_dir, f"grn:{sf_dir}:{name}:{bsig}",
+            lambda: _persisted_with(
+                frame, lambda p: bucket_stats(p, bcols)))
     else:
         if materialize:
             bdf = bdf.localCheckpoint()
@@ -831,7 +816,7 @@ def global_row_number(
     boundaries: list[float],
     total_col: str | None = None,
     materialize: bool = True,
-    cache_key: str | None = None,
+    cache_key: tuple[str, str] | None = None,
 ) -> DataFrame:
     """Single-spec convenience wrapper over
     :func:`global_row_numbers` — see it for mechanics and contracts."""

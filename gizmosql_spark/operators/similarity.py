@@ -219,13 +219,6 @@ N_CENTROIDS = 8
 N_PROBE = 2
 
 
-#: per-session cache of the bounded IVF model rows: the query vector
-#: (vec_id 0) + the N_CENTROIDS centroid vectors, deterministic per
-#: immutable fixture dir. Same in-process bounded-collect class as the
-#: knn probe cache (r12 §9) — a cold JVM rebuilds it in warmup.
-_IVF_MODEL_CACHE: dict[str, tuple[list, list, list]] = {}
-
-
 def _lit_vec_sql(vals: list) -> str:
     """array<double> literal as ONE SQL fragment. repr() is the
     shortest round-trip decimal and CAST(string AS DOUBLE) parses
@@ -245,9 +238,10 @@ def _ivf_model(spark: SparkSession, sf_dir: str) -> tuple[list, list, list]:
     """(q_emb, [(cent_id, cemb), ...], probe_ids) from ONE bounded
     9-row scan; probe selection runs the SAME Spark expressions as the
     old joined form over a local 8-row frame (engine rounding and tie
-    rules — no Python float comparisons)."""
-    got = _IVF_MODEL_CACHE.get(sf_dir)
-    if got is None:
+    rules — no Python float comparisons). Kept in the session's data
+    map while the fixture dir is unchanged (loader.memo)."""
+
+    def build() -> tuple[list, list, list]:
         from pyspark.sql import Window
 
         e = _emb(spark, sf_dir)
@@ -271,9 +265,10 @@ def _ivf_model(spark: SparkSession, sf_dir: str) -> tuple[list, list, list]:
             .filter(F.col("rn") <= N_PROBE)
             .collect()
         ]
-        got = (q_emb, cents, probe_ids)
-        _IVF_MODEL_CACHE[sf_dir] = got
-    return got
+        return q_emb, cents, probe_ids
+
+    return loader.memo(spark, sf_dir, f"similarity.ivf_model:{sf_dir}",
+                       build)
 
 
 def ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -377,8 +372,6 @@ _KNN_PROBE_MOD = 20  # every 20th vector is a held-out probe...
 #: r5 sf1 fixture measured as 68x wall for 10x data (100x work). With
 #: it the scan side alone grows and the op scales linearly.
 _KNN_PROBE_CAP = _KNN_PROBE_MOD * 100  # probe ids live in [0, cap)
-#: (id(spark), sf_dir) -> collected probe rows (bounded: <= cap/mod).
-_KNN_PROBES: dict[tuple, list] = {}
 
 
 def knn_label_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -413,15 +406,13 @@ def knn_label_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = _emb(spark, sf_dir)
     # sample-sized (≤ cap/mod rows) and deterministic per fixture dir:
     # the probe collect was a full corpus-scan job PER INVOCATION —
-    # cache it per session (r12; the bounded-scalar class of the
-    # boundaries cache, rebuilt by every cold run's warmup)
-    probe_rows = _KNN_PROBES.get((id(spark), sf_dir))
-    if probe_rows is None:
-        probe_rows = e.filter(
+    # keep it in the session's data map while the dir is unchanged
+    probe_rows = loader.memo(
+        spark, sf_dir, f"similarity.knn_probes:{sf_dir}",
+        lambda: e.filter(
             (F.col("vec_id") % _KNN_PROBE_MOD == 0)
             & (F.col("vec_id") < _KNN_PROBE_CAP)
-        ).select("vec_id", "emb", "label").collect()
-        _KNN_PROBES[(id(spark), sf_dir)] = probe_rows
+        ).select("vec_id", "emb", "label").collect())
     q_ids = np.array([r["vec_id"] for r in probe_rows], dtype=np.int64)
     q_mat = np.array([r["emb"] for r in probe_rows], dtype=np.float64)
 
@@ -664,7 +655,7 @@ def embedding_neardup_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     # ids+buckets only — the 64-double vectors never ride the
     # blocking join
     e = loader.keyed_persist(
-        spark, f"similarity.emb_sigs:{sf_dir}:{LSH_BANDS}x{r}",
+        spark, sf_dir, f"similarity.emb_sigs:{sf_dir}:{LSH_BANDS}x{r}",
         lambda: _band_signatures(spark, sf_dir, r))
     # candidate pairs dedup across bands BEFORE scoring — a true
     # near-dup collides in most bands, so scoring post-dedup does
@@ -678,7 +669,7 @@ def embedding_neardup_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
     )
     vecs = loader.keyed_persist(
-        spark, f"similarity.emb_norms:{sf_dir}",
+        spark, sf_dir, f"similarity.emb_norms:{sf_dir}",
         lambda: _emb(spark, sf_dir).withColumn(
             "norm",
             F.expr("sqrt(aggregate(transform(emb, x -> x * x), 0D,"

@@ -539,7 +539,7 @@ def hll_rolling_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     # of a per-call localCheckpoint — warm invocations skip the
     # register-build scan entirely.
     daily = loader.keyed_persist(
-        spark, f"sketch.hll_daily:{sf_dir}",
+        spark, sf_dir, f"sketch.hll_daily:{sf_dir}",
         lambda: e.select(
             day.alias("d"), bucket.alias("bucket"), rho.alias("rho"))
         .groupBy("d", "bucket")
@@ -556,7 +556,7 @@ def hll_rolling_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     from gizmosql_spark.operators import scale as _scale
 
     daily, day_list = _scale.keyed_frame_scalars(
-        spark, f"hll_days:{sf_dir}", daily,
+        spark, sf_dir, f"hll_days:{sf_dir}", daily,
         lambda bdf: sorted(
             r["d"] for r in bdf.select("d").distinct().collect()))
     days_local = spark.createDataFrame([(d,) for d in day_list], "d date")
@@ -603,7 +603,7 @@ def hll_rolling_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (the exact-check tier is a verification device; at 100 TB the
     # sketch side alone ships, as the docstring says)
     du = loader.keyed_persist(
-        spark, f"sketch.hll_day_user:{sf_dir}",
+        spark, sf_dir, f"sketch.hll_day_user:{sf_dir}",
         lambda: e.select(day.alias("ed"), "user_id").distinct())
     cand = du.select(
         F.explode(F.array(*[

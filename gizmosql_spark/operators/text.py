@@ -216,7 +216,7 @@ def _term_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id", F.explode(F.split(_norm(F.col("text")), " ")).alias("term"))
     )
     return loader.keyed_persist(
-        spark, f"text.term_counts:{sf_dir}",
+        spark, sf_dir, f"text.term_counts:{sf_dir}",
         lambda: tokens.groupBy("doc_id", "term").agg(
             F.count(F.lit(1)).alias("tc")))
 
@@ -245,7 +245,7 @@ def tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     # deterministic per fixture dir — persist it too, so the vocab
     # rollup shuffles once per session, not per invocation
     df_tbl = loader.keyed_persist(
-        spark, f"text.term_df:{sf_dir}",
+        spark, sf_dir, f"text.term_df:{sf_dir}",
         lambda: tc.groupBy("term").agg(F.count(F.lit(1)).alias("df")))
     n_docs = float(loader.row_count(sf_dir, "documents"))
     tfidf = F.round(
@@ -379,8 +379,7 @@ def unigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     # whole operator scans documents exactly twice (wordcount pass +
     # scoring pass), the minimum for a corpus-normalized score.
     uni = loader.keyed_persist(
-        spark,
-        f"unigram_counts:{sf_dir}",
+        spark, sf_dir, f"unigram_counts:{sf_dir}",
         lambda: toks.groupBy("tok").agg(F.count(F.lit(1)).alias("c")),
     )
     total_row = uni.agg(F.sum("c").cast("double").alias("_total"))
@@ -429,8 +428,7 @@ def perplexity_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.explode(F.split(F.col("text"), " ")).alias("tok"),
     )
     uni = loader.keyed_persist(
-        spark,
-        f"unigram_counts:{sf_dir}",
+        spark, sf_dir, f"unigram_counts:{sf_dir}",
         lambda: toks.select("doc_id", "tok").groupBy("tok").agg(
             F.count(F.lit(1)).alias("c")),
     )
@@ -515,8 +513,7 @@ def vocab_oov_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     toks = d.select(
         "source", F.explode(F.split(_norm(F.col("text")), " ")).alias("tok"))
     uni = loader.keyed_persist(
-        spark,
-        f"unigram_counts_src:{sf_dir}",
+        spark, sf_dir, f"unigram_counts_src:{sf_dir}",
         lambda: toks.groupBy("tok").agg(F.count(F.lit(1)).alias("c")),
     )
     vocab = (
@@ -970,14 +967,12 @@ def dsir_importance(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.explode(F.split(F.col("text"), " ")).alias("tok"),
     )
     uni = loader.keyed_persist(
-        spark,
-        f"unigram_counts:{sf_dir}",
+        spark, sf_dir, f"unigram_counts:{sf_dir}",
         lambda: toks.select("doc_id", "tok").groupBy("tok").agg(
             F.count(F.lit(1)).alias("c")),
     )
     tgt = loader.keyed_persist(
-        spark,
-        f"unigram_counts_tgt:{sf_dir}",
+        spark, sf_dir, f"unigram_counts_tgt:{sf_dir}",
         lambda: toks.filter(F.col("lang") == "en")
         .groupBy("tok")
         .agg(F.count(F.lit(1)).alias("ct")),
@@ -1324,13 +1319,14 @@ def quantile_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_buckets = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
     bnds = scale.range_boundaries(
         d.select("n_chars"), ["n_chars"], n_buckets,
-        cache_key=sf_dir + ":documents")[0]
+        cache_key=(sf_dir, "documents"))[0]
     pooled = scale.global_row_number(
         d.select(F.col("n_chars").alias("norm_len"), "doc_id"),
         ["norm_len", "doc_id"], "pos", "norm_len", bnds,
-        # r12: deterministic per fixture dir — keyed-persist + stats
-        # cache (scale._GRN_STATS_CACHE contract), one job when warm
-        cache_key=sf_dir + ":qnorm_pooled",
+        # r12: deterministic per fixture dir — frame + stats in one
+        # session data-map entry (scale._persisted_with), one job when
+        # warm
+        cache_key=(sf_dir, "qnorm_pooled"),
     ).select("norm_len", "pos")
     # discrete quantile position: floor(p * (N-1)) + 1, p = (rk-1)/(n-1).
     # LONG arithmetic throughout: rk is a 32-bit row_number and the

@@ -87,32 +87,15 @@ atexit.register(lambda: reset_all())
 
 def _event_source(session: SparkSession, sf_dir: str,
                   spool: str) -> DataFrame:
-    """events-schema stream over the spool dir, with ``run_id`` decoded
-    from the landed filename and the ts encoding normalized exactly as
-    windows.read_event_stream does."""
+    """events-schema stream over the spool dir (windows.event_stream),
+    with ``run_id`` decoded from the landed filename."""
     from gizmosql_spark.streaming import windows as W
 
-    cached = W._EVENT_SCHEMA_CACHE.get(sf_dir)
-    if cached is None:
-        batch = (
-            session.read.option("pathGlobFilter", "events.parquet")
-            .parquet(sf_dir)
-        )
-        cached = (batch.schema, dict(batch.dtypes).get("ts"))
-        W._EVENT_SCHEMA_CACHE[sf_dir] = cached
-    schema, ts_dtype = cached
-    stream = session.readStream.schema(schema).parquet(spool)
-    stream = stream.withColumn(
+    return W.event_stream(session, sf_dir, spool).withColumn(
         "run_id",
         F.regexp_extract(F.input_file_name(), r"run(\d+)\.parquet", 1)
         .cast("long"),
     )
-    if ts_dtype == "bigint":
-        stream = stream.withColumn(
-            "ts", F.timestamp_micros(F.expr("ts div 1000")))
-    elif ts_dtype != "timestamp":
-        stream = stream.withColumn("ts", F.col("ts").cast("timestamp"))
-    return stream
 
 
 def _with_run(schema: StructType) -> StructType:
@@ -437,7 +420,8 @@ class _SeededBuild:
         from gizmosql_spark.streaming import windows as W
 
         seed_one = loader.keyed_persist(
-            session, f"streaming.seeded_stats_seed:{self.sf_dir}",
+            session, self.sf_dir,
+            f"streaming.seeded_stats_seed:{self.sf_dir}",
             lambda: load_events(session, self.sf_dir)
             .filter(F.col("event_id") < W._SEED_SPLIT_ID)
             .groupBy("user_id")

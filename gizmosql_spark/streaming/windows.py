@@ -280,41 +280,47 @@ def _retry_streaming(attempt, attempts: int = STREAM_RETRIES,
     raise last  # pragma: no cover — loop always returns or raises
 
 
-#: events schema per sf_dir — the schema-discovery batch read costs a
-#: driver file listing + footer read per call; the fixtures are
-#: immutable, and 13 tier queries (some reading the stream twice)
-#: would otherwise repeat it.
-_EVENT_SCHEMA_CACHE: dict[str, tuple] = {}
-
-
 def read_event_stream(spark: SparkSession, sf_dir: str,
                       session: SparkSession | None = None) -> DataFrame:
-    """events as a file-source stream, robust to either fixture
-    encoding: TIMESTAMP(NANOS) read as long ns (legacy nanosAsLong) or
-    native timestamp[us]/TIMESTAMP_NTZ. The readStream schema is
-    derived from a batch read of the same parquet so it always matches
-    the file, and the ns→µs conversion mirrors
-    operators/events.load_events (applied only when ts is long ns).
-    Built on the streaming session clone (see streaming_session) by
-    default — at the width tier the fixture's input size calls for
-    (wide_for_dir) — TWS callers pass the RocksDB clone via
-    ``session``."""
+    """events as a file-source stream over the fixture's
+    events.parquet. Built on the streaming session clone (see
+    streaming_session) by default — at the width tier the fixture's
+    input size calls for (wide_for_dir) — TWS callers pass the RocksDB
+    clone via ``session``."""
     spark = (session if session is not None
              else streaming_session(spark, wide=wide_for_dir(sf_dir)))
-    cached = _EVENT_SCHEMA_CACHE.get(sf_dir)
-    if cached is None:
+    return event_stream(spark, sf_dir)
+
+
+def event_stream(session: SparkSession, sf_dir: str,
+                 path: str | None = None) -> DataFrame:
+    """A file-source stream of event rows over ``path`` (default: the
+    fixture's events.parquet), robust to either fixture encoding:
+    TIMESTAMP(NANOS) read as long ns (legacy nanosAsLong) or native
+    timestamp[us]/TIMESTAMP_NTZ. The readStream schema comes from a
+    batch read of ``sf_dir``'s events.parquet, so it always matches the
+    file; the schema is kept in the session's data map while the
+    directory is unchanged (loader.memo), since 13 tier queries (some
+    reading the stream twice) would otherwise repeat its listing and
+    footer read. The ns→µs conversion mirrors
+    operators/events.load_events (applied only when ts is long ns)."""
+    from gizmosql_spark.operators import loader
+
+    def read_schema() -> tuple:
         batch = (
-            spark.read.option("pathGlobFilter", "events.parquet")
+            session.read.option("pathGlobFilter", "events.parquet")
             .parquet(sf_dir)
         )
-        cached = (batch.schema, dict(batch.dtypes).get("ts"))
-        _EVENT_SCHEMA_CACHE[sf_dir] = cached
-    schema, ts_dtype = cached
-    stream = (
-        spark.readStream.schema(schema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir)
-    )
+        return batch.schema, dict(batch.dtypes).get("ts")
+
+    schema, ts_dtype = loader.memo(
+        session, sf_dir, f"streaming.event_schema:{sf_dir}", read_schema)
+    stream = session.readStream.schema(schema)
+    if path is None:
+        stream = stream.option(
+            "pathGlobFilter", "events.parquet").parquet(sf_dir)
+    else:
+        stream = stream.parquet(path)
     if ts_dtype == "bigint":
         stream = stream.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
     elif ts_dtype != "timestamp":
@@ -1604,7 +1610,7 @@ def stream_seeded_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         # run mirrors the deployment shape (and saves a full batch agg
         # per invocation)
         seed = loader.keyed_persist(
-            s, f"streaming.seeded_stats_seed:{sf_dir}",
+            s, sf_dir, f"streaming.seeded_stats_seed:{sf_dir}",
             lambda: load_events(s, sf_dir)
             .filter(F.col("event_id") < _SEED_SPLIT_ID)
             .groupBy("user_id")

@@ -14,7 +14,7 @@ import time
 import pyarrow as pa
 import pytest
 
-from gizmosql_spark import security
+from gizmosql_spark import security, session_cache
 from gizmosql_spark.admission import AdmissionController, QueueFullError
 from gizmosql_spark.dialect import (
     KillCommand,
@@ -282,11 +282,11 @@ def test_file_scan_sees_new_glob_match(engine, session, tmp_path):
 def test_spark_set_drops_file_relations(engine, session, tmp_path):
     f = tmp_path / "t.parquet"
     _write_ids(f, [1], name="ID")
-    st = engine._session(session)
+    relations = session_cache.for_spark(engine._session(session).spark)
     _scan_ids(engine, session, f)
-    assert ("parquet", str(f)) in st.file_relations
+    assert ("parquet", str(f)) in relations
     engine.execute_sql(session, "SET spark.sql.caseSensitive = true")
-    assert len(st.file_relations) == 0
+    assert len(relations) == 0
     try:
         res = engine.execute_sql(
             session, f"SELECT ID FROM read_parquet('{f}')")
@@ -295,14 +295,14 @@ def test_spark_set_drops_file_relations(engine, session, tmp_path):
             engine.execute_sql(session, f"SELECT id FROM read_parquet('{f}')")
     finally:
         engine.execute_sql(session, "RESET spark.sql.caseSensitive")
-    assert len(st.file_relations) == 0
+    assert len(relations) == 0
     # a prepared SET runs at prepare (schema) and again at execute
     _scan_ids(engine, session, f)
     ps = engine.prepare(session, "SET spark.sql.caseSensitive = false")
-    assert len(st.file_relations) == 0
+    assert len(relations) == 0
     _scan_ids(engine, session, f)
     engine.execute_prepared(session, ps.handle)
-    assert len(st.file_relations) == 0
+    assert len(relations) == 0
     engine.close_prepared(session, ps.handle)
 
 
@@ -331,9 +331,9 @@ def test_remote_file_scan_is_never_stored(engine, session, monkeypatch):
     for _ in range(2):
         engine_mod._file_relation(st, "parquet", "s3://bucket/t.parquet")
     assert built == ["s3://bucket/t.parquet"] * 2
-    assert len(st.file_relations) == 0
-    assert engine_mod._file_identity("s3a://bucket/t.parquet") is None
-    assert engine_mod._file_identity("/tmp/{a,b}.parquet") is None
+    assert len(session_cache.for_spark(reader)) == 0
+    assert session_cache.file_identity("s3a://bucket/t.parquet") is None
+    assert session_cache.file_identity("/tmp/{a,b}.parquet") is None
 
 
 def test_file_relations_bounded_under_concurrent_scans(engine, session,
@@ -346,8 +346,10 @@ def test_file_relations_bounded_under_concurrent_scans(engine, session,
 
     st = engine._session(session)
     monkeypatch.setattr(st, "spark", _PathReader())
+    relations = session_cache.for_spark(st.spark)
+    cap = session_cache.CAPACITY
     paths = []
-    for i in range(160):
+    for i in range(cap + 96):
         f = tmp_path / f"f{i}.parquet"
         f.write_bytes(b"x")
         paths.append(str(f))
@@ -375,15 +377,14 @@ def test_file_relations_bounded_under_concurrent_scans(engine, session,
         sys.setswitchinterval(interval)
     assert not any(t.is_alive() for t in threads)
     assert errors == [] and wrong == []
-    cap = engine_mod._FILE_RELATIONS_PER_SESSION
-    assert 0 < len(st.file_relations) <= cap
+    assert 0 < len(relations) <= cap
     # least recently used goes first: a hit keeps paths[0] past paths[1]
-    st.file_relations.clear()
+    relations.clear()
     for p in paths[:cap] + paths[:1] + paths[cap:cap + 1]:
         engine_mod._file_relation(st, "parquet", p)
-    assert ("parquet", paths[0]) in st.file_relations
-    assert ("parquet", paths[1]) not in st.file_relations
-    assert len(st.file_relations) == cap
+    assert ("parquet", paths[0]) in relations
+    assert ("parquet", paths[1]) not in relations
+    assert len(relations) == cap
 
 
 def test_version_as_of_read_is_reused(engine, session, spark, tmp_path):
@@ -405,11 +406,41 @@ def test_version_as_of_read_is_reused(engine, session, spark, tmp_path):
 
 def test_close_session_drops_file_relations(engine, sf_smoke):
     sid = engine.create_session(role="admin")
-    st = engine._session(sid)
+    relations = session_cache.for_spark(engine._session(sid).spark)
     _scan_ids(engine, sid, f"{sf_smoke}/region.parquet")
-    assert st.file_relations
+    assert relations
     engine.close_session(sid)
-    assert len(st.file_relations) == 0
+    assert len(relations) == 0
+
+
+@pytest.mark.parametrize("end", ["close", "kill"])
+def test_ended_session_unpersists_its_frames(engine, sf_smoke, tmp_path,
+                                             end):
+    """Frames a session's operators persisted go with the session:
+    after close_session or KILL SESSION, Spark's persistent-RDD count
+    is back to its value before the session ran pipeline_op. The
+    operators keep a persisted grouping frame (events_rfm), collected
+    probe rows (knn_label_eval) and persisted shingle, band and pair
+    frames (dedup_minhash_lsh); none hands back a localCheckpoint,
+    whose RDD lives as long as the result frame (ROADMAP)."""
+    import shutil
+
+    data = str(tmp_path / "sf")
+    shutil.copytree(sf_smoke, data)
+    jsc = engine.spark.sparkContext._jsc.sc()
+    before = jsc.getPersistentRDDs().size()
+    sid = engine.create_session(role="admin")
+    for op in ("knn_label_eval", "events_rfm", "dedup_minhash_lsh"):
+        engine.collect(sid, engine.execute_sql(
+            sid, f"SELECT count(*) FROM pipeline_op('{op}', '{data}')"))
+    assert jsc.getPersistentRDDs().size() > before
+    if end == "close":
+        engine.close_session(sid)
+    else:
+        admin = engine.create_session(role="admin")
+        engine.execute_sql(admin, f"KILL SESSION '{sid}'")
+        engine.close_session(admin)
+    assert jsc.getPersistentRDDs().size() == before
 
 
 def test_prepared_statement_roundtrip(engine, session, sf_smoke):

@@ -28,6 +28,7 @@ import pytest
 from gizmosql_spark import flightsql_proto as fsp
 from gizmosql_spark.engine import Engine
 from gizmosql_spark.flight_server import FlightEngineServer
+from gizmosql_spark.vendor.google.protobuf import _wire
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SMOKE_DIR", "/root/testdata/sf0.001")
 
@@ -36,13 +37,27 @@ SF_DIR = os.environ.get("SPARK_GRAFT_SMOKE_DIR", "/root/testdata/sf0.001")
 # ---------------------------------------------------------------------
 
 
+def _varint(value: int) -> bytes:
+    buf = bytearray()
+    _wire.write_varint(buf, value)
+    return bytes(buf)
+
+
 def test_varint_golden():
-    assert fsp.encode_varint(0) == b"\x00"
-    assert fsp.encode_varint(1) == b"\x01"
-    assert fsp.encode_varint(127) == b"\x7f"
-    assert fsp.encode_varint(128) == b"\x80\x01"
-    assert fsp.encode_varint(300) == b"\xac\x02"
-    assert fsp.decode_varint(b"\xac\x02", 0) == (300, 2)
+    assert _varint(0) == b"\x00"
+    assert _varint(1) == b"\x01"
+    assert _varint(127) == b"\x7f"
+    assert _varint(128) == b"\x80\x01"
+    assert _varint(300) == b"\xac\x02"
+    assert _wire.read_varint(b"\xac\x02", 0) == (300, 2)
+
+
+def test_decode_rejects_truncated_unknown_field():
+    # field 99 (wire type 2) claims 10 bytes and carries 2
+    msg = fsp.encode("CommandStatementQuery", {"query": "abc"})
+    unknown = _varint((99 << 3) | 2) + _varint(10) + b"xy"
+    with pytest.raises(ValueError, match="truncated"):
+        fsp.decode("CommandStatementQuery", msg + unknown)
 
 
 def test_command_statement_query_golden():
@@ -102,8 +117,8 @@ def test_any_wrapping_golden():
     wrapped = fsp.pack_any("CommandStatementQuery", {"query": "SELECT 1"})
     url = b"type.googleapis.com/arrow.flight.protocol.sql.CommandStatementQuery"
     expected = (
-        b"\x0a" + fsp.encode_varint(len(url)) + url
-        + b"\x12" + fsp.encode_varint(len(inner)) + inner
+        b"\x0a" + _varint(len(url)) + url
+        + b"\x12" + _varint(len(inner)) + inner
     )
     assert wrapped == expected
     name, msg = fsp.unpack_any(wrapped)

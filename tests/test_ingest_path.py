@@ -145,6 +145,29 @@ def test_arrow_view_stays_local_and_reusable(engine, session, table):
     assert outcomes == ["miss", "hit"]
 
 
+def test_arrow_view_widens_like_ingest(engine, session, table):
+    """Columns Spark refuses (unsigned ints, time of day) widen on the
+    DoExchange seam as they do on ingest."""
+    data = pa.table({
+        "u8": pa.array([0, 255], pa.uint8()),
+        "u64": pa.array([0, 2**64 - 1], pa.uint64()),
+        "t": pa.array([0, 86_399_999_999], pa.time64("us")),
+    })
+    engine.ingest(session, table, data)
+    engine.register_arrow_view(session, "ip_wide_view", data)
+
+    def read(name):
+        return engine.collect_arrow(
+            session, engine.execute_sql(
+                session, f"SELECT u8, u64, t FROM {name} ORDER BY u8"))
+
+    ingested, viewed = read(table), read("ip_wide_view")
+    assert viewed.schema == ingested.schema
+    assert viewed.to_pylist() == ingested.to_pylist()
+    assert [f.type for f in viewed.schema] == [
+        pa.int16(), pa.decimal128(20, 0), pa.int64()]
+
+
 def _mixed(n: int, pad: int) -> pa.Table:
     """Every kind of column an upload brings, a seventh of each null;
     ``pad`` bytes of binary per row set the size."""

@@ -92,7 +92,7 @@ def test_live_failure_falls_back(spark, sf_dir, monkeypatch):
     assert out is not None and out.count() > 0
 
 
-def test_jvm_tier_small_only_declines_super_threshold():
+def test_jvm_tier_small_only_declines_super_threshold(tmp_path, monkeypatch):
     """small_only is PERMANENT DESIGN for the JVM-tier live shapes
     (SCALING.md §6): a complete-mode memory sink accumulates every
     run's state/output rows in the one local JVM (the r9 sf10 heap
@@ -105,21 +105,21 @@ def test_jvm_tier_small_only_declines_super_threshold():
     from gizmosql_spark.session import get_spark
 
     spark = get_spark("gizmosql-spark-tests")
-    fake_big = "/fake/live-small-only-big"
-    loader._AQE_DECISION[fake_big] = "true"  # register as super-threshold
-    try:
-        before = dict(live._REGISTRY)
-        for shape in ("tumbling", "sliding", "session_windows",
-                      "static_join", "stream_join", "outer_join"):
-            assert live.run_live(spark, shape, fake_big) is None
-        # trailing-no-data-batch shapes also decline at scale: the
-        # barrier poll waits for a batch whose cost scales with the
-        # fixture (sf10: 699 s live vs 142 s bounded for timer_flush)
-        assert live.run_live(spark, "timer_flush", fake_big) is None
-        # declined BEFORE creating any instance — no query-start paid
-        assert live._REGISTRY == before
-    finally:
-        loader._AQE_DECISION.pop(fake_big, None)
+    # a dir the size probe reads as super-threshold: one 1-byte parquet
+    # file against a 1-byte threshold
+    fake_big = str(tmp_path)
+    (tmp_path / "events.parquet").write_bytes(b"x")
+    monkeypatch.setattr(loader, "AQE_MIN_INPUT_BYTES", 1)
+    before = dict(live._REGISTRY)
+    for shape in ("tumbling", "sliding", "session_windows",
+                  "static_join", "stream_join", "outer_join"):
+        assert live.run_live(spark, shape, fake_big) is None
+    # trailing-no-data-batch shapes also decline at scale: the
+    # barrier poll waits for a batch whose cost scales with the
+    # fixture (sf10: 699 s live vs 142 s bounded for timer_flush)
+    assert live.run_live(spark, "timer_flush", fake_big) is None
+    # declined BEFORE creating any instance — no query-start paid
+    assert live._REGISTRY == before
 
 
 def test_stream_clones_raise_idle_polling_cadence():

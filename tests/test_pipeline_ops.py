@@ -556,3 +556,61 @@ def test_column_minmax_matches_spark_on_doubles(spark, tmp_path, values):
     # an integer column is still answered from the footer
     got, want = minmax("k")
     assert loader.column_minmax(str(tmp_path), "t", "k") == want == (1, 3)
+
+
+#: the six operators that served stale answers from module-level
+#: memos, then one operator per other per-session memo: table
+#: relations (q06), persisted frames (pmi_collocations), the bounded
+#: clone (pagerank_suppliers), footer row counts
+#: (embedding_neardup_lsh) and column stats (histogram_quantiles), a
+#: persisted frame and its collected scalars (hll_rolling_merge), the
+#: cluster edge count (dedup_clusters), the IVF model (ann_ivf), the
+#: capped Lloyd's fit (semdedup_prune) and the event-stream schema
+#: (stream_tumbling)
+_FRESHNESS_OPS = [
+    "events_rfm", "quantile_normalize", "pca_power_iteration",
+    "kmeans_embeddings", "silhouette_kmeans", "knn_label_eval",
+    "q06", "pmi_collocations", "pagerank_suppliers",
+    "embedding_neardup_lsh", "histogram_quantiles", "hll_rolling_merge",
+    "dedup_clusters", "ann_ivf", "semdedup_prune", "stream_tumbling",
+]
+
+#: the tables the freshness check halves in place
+_HALVED = ("lineitem", "orders", "part", "customer", "supplier",
+           "documents", "embeddings", "events")
+
+
+@pytest.mark.parametrize("name", _FRESHNESS_OPS)
+def test_result_follows_data_within_session(spark, sf_smoke, tmp_path,
+                                            name):
+    """Halving the tables in place between two runs in one session
+    gives the second run the answer a fresh session gives on a fresh
+    copy of the halved data, not the first run's."""
+    import shutil
+
+    import pyarrow.parquet as pq
+
+    from gizmosql_spark import session_cache
+    from gizmosql_spark.operators import registry
+
+    data = str(tmp_path / "sf")
+    shutil.copytree(sf_smoke, data)
+    op = registry.resolve(name)
+
+    def rows(session, path=data):
+        return sorted(map(repr, op(session, path).collect()))
+
+    s = spark.newSession()
+    fresh = spark.newSession()
+    try:
+        before = rows(s)
+        for t in _HALVED:
+            path = f"{data}/{t}.parquet"
+            table = pq.read_table(path)
+            pq.write_table(table.slice(0, table.num_rows // 2), path)
+        after = rows(s)
+        assert after != before
+        assert after == rows(fresh, shutil.copytree(data, f"{tmp_path}/cp"))
+    finally:
+        session_cache.drop(s)
+        session_cache.drop(fresh)

@@ -163,16 +163,18 @@ def test_pmi_unigrams_reuse_shared_term_counts(spark, sf_dir):
     """PMI's unigram counts must roll up the shared persisted
     (doc, term) frame rather than run a second tokenize scan of the
     corpus — after r11 the bigram pass is pmi's only corpus scan."""
-    from gizmosql_spark.operators import loader, quality
+    from gizmosql_spark import session_cache
+    from gizmosql_spark.operators import quality
 
-    key = (id(spark), f"text.term_counts:{sf_dir}")
-    # the unigram rollup itself is registry-cached since r12 — drop it
-    # too, or a warm cache legitimately skips the term_counts rebuild
-    loader._PERSISTED.pop((id(spark), f"quality.pmi_unigrams:{sf_dir}"),
-                          None)
-    loader._PERSISTED.pop(key, None)
-    quality.pmi_collocations(spark, sf_dir)
-    assert key in loader._PERSISTED
+    key = f"text.term_counts:{sf_dir}"
+    # a fresh session: the unigram rollup itself is cached since r12,
+    # and a warm one legitimately skips the term_counts rebuild
+    s = spark.newSession()
+    try:
+        quality.pmi_collocations(s, sf_dir)
+        assert key in session_cache.for_spark(s)
+    finally:
+        session_cache.drop(s)
 
 
 def test_winnowing_is_shuffle_free_scan(spark, sf_dir):

@@ -97,6 +97,7 @@ def test_lsh_buckets_balanced_and_candidates_linear(spark, sf_dir):
     sub-quadratic blocking the operator exists for."""
     from pyspark.sql import functions as F
 
+    from gizmosql_spark import session_cache
     from gizmosql_spark.operators import loader, similarity as S
 
     n = loader.table(spark, sf_dir, "embeddings").count()
@@ -104,7 +105,8 @@ def test_lsh_buckets_balanced_and_candidates_linear(spark, sf_dir):
     # the operator registers the banded frame under this key; build it
     # through the public entry to exercise the real path
     S.embedding_neardup_lsh(spark, sf_dir).count()
-    e = loader._PERSISTED[(id(spark), f"similarity.emb_sigs:{sf_dir}:{S.LSH_BANDS}x{r}")]
+    e = session_cache.for_spark(spark).get(
+        f"similarity.emb_sigs:{sf_dir}:{S.LSH_BANDS}x{r}")[1]
     sizes = (
         e.groupBy("band", "bucket").count()
         .agg(
@@ -260,7 +262,7 @@ def test_ntile_from_rank_matches_window_ntile(spark):
         assert [r["t"] for r in got] == [r["t"] for r in expect], (n, k)
 
 
-def test_keyed_frame_scalars_memoizes(spark):
+def test_keyed_frame_scalars_memoizes(spark, tmp_path):
     """r12: the two-pass global-order family's bounded collects ride a
     per-session cache computed from the keyed-persisted frame itself —
     a second invocation must reuse both (no new collect job), and the
@@ -279,9 +281,9 @@ def test_keyed_frame_scalars_memoizes(spark):
             F.count(F.lit(1)).alias("n")).collect())
 
     f1, s1 = scale.keyed_frame_scalars(
-        spark, "test:kfs_memo", build(), collect_fn)
+        spark, str(tmp_path), "test:kfs_memo", build(), collect_fn)
     f2, s2 = scale.keyed_frame_scalars(
-        spark, "test:kfs_memo", build(), collect_fn)
+        spark, str(tmp_path), "test:kfs_memo", build(), collect_fn)
     assert len(calls) == 1
     assert f1 is f2 and s1 is s2
     assert s1 == [(i, 20) for i in range(5)]

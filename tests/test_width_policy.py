@@ -8,6 +8,8 @@ super-threshold dirs get the full-core-width session clone.
 
 from __future__ import annotations
 
+import os
+
 import pytest
 
 from gizmosql_spark.operators import loader
@@ -30,14 +32,27 @@ def clone(spark):
     loader._WIDTH_STATE.pop(s, None)
 
 
-def _fake_big_dir(name: str) -> str:
-    """Register a synthetic dir as super-threshold in the cached size
-    probe (no need for a real >1 GiB fixture on disk)."""
-    loader._AQE_DECISION[name] = "true"  # big: adaptive on
-    return name
+@pytest.fixture()
+def _fake_big_dir(tmp_path, monkeypatch):
+    """Makes dirs the size probe reads as super-threshold (no need for
+    a real >1 GiB fixture on disk): the threshold drops to just above
+    SMALL's parquet bytes, and each dir holds one sparse parquet file
+    of that size."""
+    threshold = 1 + sum(os.path.getsize(os.path.join(SMALL, f))
+                        for f in os.listdir(SMALL) if f.endswith(".parquet"))
+    monkeypatch.setattr(loader, "AQE_MIN_INPUT_BYTES", threshold)
+
+    def make(name: str) -> str:
+        d = tmp_path / name.strip("/").replace("/", "_")
+        d.mkdir()
+        with open(d / "big.parquet", "wb") as f:
+            f.truncate(threshold)
+        return str(d)
+
+    return make
 
 
-def test_small_dir_narrows_and_big_dir_restores(clone):
+def test_small_dir_narrows_and_big_dir_restores(clone, _fake_big_dir):
     launch = clone.conf.get("spark.sql.shuffle.partitions")
     assert int(launch) > loader.SMALL_SHUFFLE_PARTITIONS
     loader.tune_shuffle_width(clone, SMALL)
@@ -48,7 +63,7 @@ def test_small_dir_narrows_and_big_dir_restores(clone):
     assert clone.conf.get("spark.sql.shuffle.partitions") == launch
 
 
-def test_external_set_outranks_policy(clone):
+def test_external_set_outranks_policy(clone, _fake_big_dir):
     loader.tune_shuffle_width(clone, SMALL)
     clone.conf.set("spark.sql.shuffle.partitions", "13")  # user SET
     loader.tune_shuffle_width(clone, SMALL)
@@ -57,7 +72,7 @@ def test_external_set_outranks_policy(clone):
     assert clone.conf.get("spark.sql.shuffle.partitions") == "13"
 
 
-def test_prepinned_session_width_never_touched(clone):
+def test_prepinned_session_width_never_touched(clone, _fake_big_dir):
     """A clone whose width was set at construction (bounded/streaming
     clones) keeps it on big dirs: first-seen width is the restore
     target."""
@@ -67,7 +82,7 @@ def test_prepinned_session_width_never_touched(clone):
     assert clone.conf.get("spark.sql.shuffle.partitions") == "4"
 
 
-def test_wide_for_dir_keys_off_threshold():
+def test_wide_for_dir_keys_off_threshold(_fake_big_dir):
     assert w.wide_for_dir(SMALL) is False
     assert w.wide_for_dir(_fake_big_dir("/fake/wpb4")) is True
 
@@ -83,7 +98,7 @@ def test_wide_streaming_clone_width(spark):
     assert narrow is not wide
 
 
-def test_two_dir_query_runs_at_last_loaded_width(clone):
+def test_two_dir_query_runs_at_last_loaded_width(clone, _fake_big_dir):
     """The single-dir contract (r8 verdict item 6), pinned: the policy
     re-aligns per table() load, so a plan mixing two dirs executes at
     whichever dir was loaded LAST. Mixed-dir callers must load the big
