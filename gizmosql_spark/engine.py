@@ -44,12 +44,29 @@ from gizmosql_spark.dialect import (
     classify_command,
     ddl_write_target,
     dml_target,
+    expand_macros,
     extract_file_scans,
     extract_flight_scans,
+    extract_pipeline_ops,
+    extract_time_travel,
     parse_attach_flight,
+    parse_create_macro,
     parse_detach,
+    parse_drop_macro,
+    parse_pragma,
+    parse_summarize,
     replace_pseudo_functions,
+    rewrite_asof_join,
+    rewrite_columns,
+    rewrite_distinct_on,
+    rewrite_exclude,
+    rewrite_insert_upsert,
+    rewrite_order_by_all,
+    rewrite_pivot_statement,
+    rewrite_qualify,
     rewrite_settings_function,
+    rewrite_star_replace,
+    rewrite_unpivot_statement,
     split_statements,
 )
 from gizmosql_spark.querylog import QueryLog
@@ -89,13 +106,36 @@ class StatementCancelled(RuntimeError):
 @dataclass
 class PreparedStatement:
     handle: str
-    sql: str
-    schema: Any  # StructType | None (None until bindable for param'd SQL)
+    sql: str  # as sent, markers included
+    #: StructType; None until the first execution, unless prepare
+    #: analyzed a parameterless query
+    schema: Any
     parameter_names: list[str]
     #: True when the statement uses JDBC/ADBC-style positional `?`
     #: markers (the form stock Flight SQL clients send) rather than
     #: named :params; binding is then by column position.
     positional: bool = False
+    #: values last bound to the handle (Flight DoPut), used by an
+    #: execution that brings none
+    bound: dict[str, Any] | list | None = None
+
+    def args(self, params: dict[str, Any] | list | None
+             ) -> dict[str, Any] | list | None:
+        """``params`` (None: the bound values) as Spark's ``args``;
+        None for a statement without markers."""
+        params = self.bound if params is None else params
+        if not self.parameter_names:
+            return None
+        if not self.positional:
+            return dict(params or {})
+        # `?` markers bind by position. A stock client's parameter
+        # batch carries arbitrary column names, so bind in column order
+        # unless the names cover our synthetic param_i placeholders.
+        if isinstance(params, dict):
+            names = self.parameter_names
+            params = ([params[k] for k in names] if set(params) >= set(names)
+                      else params.values())
+        return list(params or ())
 
 
 @dataclass
@@ -164,7 +204,7 @@ class SessionState:
 
 
 # `::` excluded so DuckDB-style casts (x::int) never read as a param
-_PARAM_RE = __import__("re").compile(r"(?<!:):([A-Za-z_][A-Za-z0-9_]*)")
+_PARAM_RE = re.compile(r"(?<!:):([A-Za-z_][A-Za-z0-9_]*)")
 
 
 def _mask_sql_literals(sql: str) -> str:
@@ -261,6 +301,10 @@ _EXCHANGE_OPS_RE = re.compile(
 
 #: a Spark-level SET/RESET (engine SETs are claimed by classify_command)
 _SPARK_SET_RE = re.compile(r"^\s*(?:SET|RESET)\b", re.IGNORECASE)
+#: a query: the only statements EXPLAIN ANALYZE runs and prepare
+#: analyzes
+_QUERY_PREFIX_RE = re.compile(r"^\s*(SELECT|WITH|VALUES|TABLE|FROM)\b",
+                              re.IGNORECASE)
 
 
 def _file_relation(st: SessionState, fmt: str, path: str,
@@ -288,16 +332,6 @@ def _file_relation(st: SessionState, fmt: str, path: str,
         telemetry.add_counter("engine.file_relations_total",
                               result="hit" if hit else "miss")
     return df, ident
-
-
-def _forget_session_caches_on_set(st: SessionState, sql: str) -> bool:
-    """Empty the session's caches if ``sql`` is a Spark-level SET/RESET;
-    whether it is one."""
-    if not _SPARK_SET_RE.match(sql):
-        return False
-    session_cache.for_spark(st.spark).clear()
-    st.plans.clear()
-    return True
 
 
 @dataclass(frozen=True)
@@ -626,6 +660,15 @@ class Engine:
         """Validate, rewrite, gate, and analyze a statement; queries
         return a lazy DataFrame (schema available without execution),
         DML/DDL runs eagerly."""
+        return self._execute(session_id, sql, None, "execute_sql")
+
+    def _execute(self, session_id: str, sql: str,
+                 args: dict[str, Any] | list | None,
+                 entry: str) -> StatementResult:
+        """The one path that runs a statement, direct or prepared:
+        gate, rewrite, run, and record. ``args`` are the values bound
+        to the statement's parameter markers (None: it has none);
+        ``entry`` names the entry point on its statement row."""
         if self.draining:
             raise ServerDraining("server is draining")
         st = self._session(session_id)
@@ -659,28 +702,7 @@ class Engine:
             )
 
         t_start = time.perf_counter()
-        try:
-            security.check_admin_gate(sql, st.is_admin)
-            security.check_readonly(sql, st.role)
-            if st.read_catalogs is not None or st.write_catalogs is not None:
-                try:
-                    current_cat = st.spark.catalog.currentCatalog()
-                except Exception:
-                    current_cat = security.DEFAULT_CATALOG
-                # write DDL (CREATE/DROP/ALTER/TRUNCATE TABLE, views)
-                # is ACL-checked like DML — the reference tracks these
-                # in modified_databases
-                security.check_catalog_access(
-                    sql, st.read_catalogs, st.write_catalogs,
-                    dml_target(sql) or ddl_write_target(sql),
-                    current_catalog=current_cat,
-                )
-            check_system_catalog_write(sql)
-        except Exception as exc:
-            self._record_outcome(st, sql, "denied", t_start)
-            self.instr.statement(
-                session_id, sql, "execute_sql", False, str(exc))
-            raise
+        self._gate(st, sql, entry)
         # ATTACH/DETACH of remote Flight engines (adbc_scanner analog;
         # reaches here only for admins — the admin gate above blocks
         # ATTACH/DETACH for everyone else)
@@ -700,12 +722,12 @@ class Engine:
         write_target = dml_target(sql) or ddl_write_target(sql)
         if write_target is not None:
             self.warehouse.prepare_write(st.spark, write_target)
-        stmt_id = self.instr.statement(session_id, sql, "execute_sql", True)
+        stmt_id = self.instr.statement(session_id, sql, entry, True)
         try:
             with self.telemetry.span(
                 "statement.execute", session=session_id,
                 user=st.username) as sp:
-                result = self._run_statement(st, sql)
+                result = self._run_statement(st, sql, args, stmt_id, sp)
                 sp.set_attribute("statement.kind", result.kind)
                 if result.plan_cache is not None:
                     sp.set_attribute("plan_cache", result.plan_cache)
@@ -740,13 +762,43 @@ class Engine:
                 rows_fetched=result.affected_rows)
         return result
 
+    def _gate(self, st: SessionState, sql: str, entry: str) -> None:
+        """The checks a statement passes before it runs or is prepared:
+        admin gate, readonly role, catalog ACL, system-catalog writes.
+        A denial is recorded (``_record_outcome`` and a failed statement
+        row under ``entry``) and raised."""
+        t_start = time.perf_counter()
+        try:
+            security.check_admin_gate(sql, st.is_admin)
+            security.check_readonly(sql, st.role)
+            if st.read_catalogs is not None or st.write_catalogs is not None:
+                try:
+                    current_cat = st.spark.catalog.currentCatalog()
+                except Exception:
+                    current_cat = security.DEFAULT_CATALOG
+                # write DDL (CREATE/DROP/ALTER/TRUNCATE TABLE, views)
+                # is ACL-checked like DML — the reference tracks these
+                # in modified_databases
+                security.check_catalog_access(
+                    sql, st.read_catalogs, st.write_catalogs,
+                    dml_target(sql) or ddl_write_target(sql),
+                    current_catalog=current_cat,
+                )
+            check_system_catalog_write(sql)
+        except Exception as exc:
+            self._record_outcome(st, sql, "denied", t_start)
+            self.instr.statement(
+                st.session_id, sql, entry, False, str(exc))
+            raise
+
     def _record_outcome(self, st: SessionState, sql: str, status: str,
                         t_start: float) -> float:
-        """Fan one ``execute_sql`` outcome (``ok``/``error``/``denied``)
-        out to the query log, the access log and the statement counter;
-        returns the elapsed ms. The instrumentation rows stay with the
-        caller: a denial is a failed prepare, a lazy query records its
-        execution when it is materialized."""
+        """Fan one statement outcome (``ok``/``error``/``denied``), direct
+        or prepared, out to the query log, the access log (method
+        ``execute_sql``) and the statement counter; returns the elapsed
+        ms. The instrumentation rows stay with the caller: a denial is a
+        failed prepare, a lazy query records its execution when it is
+        materialized."""
         elapsed = (time.perf_counter() - t_start) * 1000
         self.query_log.record(st.session_id, sql, status, elapsed)
         self.access_log.record(
@@ -784,58 +836,44 @@ class Engine:
             self.catalog_log.close()
             self.catalog_log = None
 
-    _QUERY_LOG_FN_RE = __import__("re").compile(
-        r"\bengine_query_log\s*\(\s*\)", __import__("re").IGNORECASE
-    )
-    _CATALOG_LOG_FN_RE = __import__("re").compile(
-        r"\bengine_logs\s*\(\s*\)", __import__("re").IGNORECASE
-    )
-    _SECRETS_FN_RE = __import__("re").compile(
-        r"\bengine_secrets\s*\(\s*\)", __import__("re").IGNORECASE
-    )
-    _TABLE_CHANGES_RE = __import__("re").compile(
+    _QUERY_LOG_FN_RE = re.compile(
+        r"\bengine_query_log\s*\(\s*\)", re.IGNORECASE)
+    _CATALOG_LOG_FN_RE = re.compile(
+        r"\bengine_logs\s*\(\s*\)", re.IGNORECASE)
+    _SECRETS_FN_RE = re.compile(
+        r"\bengine_secrets\s*\(\s*\)", re.IGNORECASE)
+    _TABLE_CHANGES_RE = re.compile(
         r"\btable_changes\s*\(\s*'([A-Za-z_][\w.]*)'\s*,\s*(\d+)"
-        r"(?:\s*,\s*(\d+))?\s*\)",
-        __import__("re").IGNORECASE,
-    )
-    _ACCESS_LOG_FN_RE = __import__("re").compile(
-        r"\bengine_access_log\s*\(\s*\)", __import__("re").IGNORECASE
-    )
-    _MACROS_FN_RE = __import__("re").compile(
-        r"\bengine_macros\s*\(\s*\)", __import__("re").IGNORECASE
-    )
-    _EXPORT_DB_RE = __import__("re").compile(
+        r"(?:\s*,\s*(\d+))?\s*\)", re.IGNORECASE)
+    _ACCESS_LOG_FN_RE = re.compile(
+        r"\bengine_access_log\s*\(\s*\)", re.IGNORECASE)
+    _MACROS_FN_RE = re.compile(
+        r"\bengine_macros\s*\(\s*\)", re.IGNORECASE)
+    _EXPORT_DB_RE = re.compile(
         r"^\s*(EXPORT|IMPORT)\s+DATABASE\s+'([^']+)'\s*;?\s*$",
-        __import__("re").IGNORECASE,
-    )
-    _RENAME_TO_RE = __import__("re").compile(
+        re.IGNORECASE)
+    _RENAME_TO_RE = re.compile(
         r"^\s*ALTER\s+TABLE\s+(?:[A-Za-z_][\w.]*|`[^`]+`)\s+RENAME"
-        r"\s+TO\s+([A-Za-z_][\w.]*|`[^`]+`)\s*;?\s*$",
-        __import__("re").IGNORECASE,
-    )
-    _ADMISSION_FN_RE = __import__("re").compile(
-        r"\bengine_admission_stats\s*\(\s*\)", __import__("re").IGNORECASE
-    )
-    _INSTR_VIEW_RE = __import__("re").compile(
+        r"\s+TO\s+([A-Za-z_][\w.]*|`[^`]+`)\s*;?\s*$", re.IGNORECASE)
+    _ADMISSION_FN_RE = re.compile(
+        r"\bengine_admission_stats\s*\(\s*\)", re.IGNORECASE)
+    _INSTR_VIEW_RE = re.compile(
         r"\bengine_(?:instr_\w+|active_sessions|session_activity)\b",
-        __import__("re").IGNORECASE,
-    )
+        re.IGNORECASE)
     #: table functions that register a view per statement
     _EPHEMERAL_VIEW_RES = (
         _QUERY_LOG_FN_RE, _MACROS_FN_RE, _ACCESS_LOG_FN_RE,
         _CATALOG_LOG_FN_RE, _SECRETS_FN_RE, _ADMISSION_FN_RE,
         _INSTR_VIEW_RE, _TABLE_CHANGES_RE)
 
-    def _run_statement(self, st: SessionState, sql: str) -> StatementResult:
-        from gizmosql_spark.dialect import (
-            parse_pragma,
-            parse_summarize,
-            rewrite_asof_join,
-            rewrite_distinct_on,
-            rewrite_exclude,
-            rewrite_qualify,
-        )
-
+    def _run_statement(self, st: SessionState, sql: str,
+                       args: dict[str, Any] | list | None = None,
+                       stmt_id: str | None = None,
+                       span=None) -> StatementResult:
+        """Rewrite and run (a query: analyze) one gated statement.
+        ``args`` bind its markers in the final ``spark.sql``, never
+        plan-cached; ``stmt_id``/``span`` are what a run inside the
+        statement (EXPLAIN ANALYZE) records under."""
         from gizmosql_spark.secrets import parse_secret_ddl
 
         sec_ddl = parse_secret_ddl(sql)
@@ -856,11 +894,6 @@ class Engine:
                       "action": "drop" if dropped else "noop"})
 
         if "MACRO" in sql.upper():
-            from gizmosql_spark.dialect import (
-                parse_create_macro,
-                parse_drop_macro,
-            )
-
             cm = parse_create_macro(sql)
             if cm is not None:
                 name, params, defaults, body, is_table, replace = cm
@@ -881,29 +914,23 @@ class Engine:
                     "update", affected_rows=0,
                     info={"macro": name, "action": "drop"})
         if self.macros:
-            from gizmosql_spark.dialect import expand_macros
-
             sql = expand_macros(sql, self.macros)
 
         up0 = sql.upper().lstrip()
         if up0.startswith("PIVOT"):
-            from gizmosql_spark.dialect import rewrite_pivot_statement
-
             sql = rewrite_pivot_statement(sql, st.spark)
         elif up0.startswith("UNPIVOT"):
-            from gizmosql_spark.dialect import rewrite_unpivot_statement
-
             sql = rewrite_unpivot_statement(sql)
 
         summarize_target = parse_summarize(sql)
         if summarize_target is not None:
             return StatementResult(
                 "query", df=self._summarize(st, summarize_target))
-        ea = __import__("re").match(
-            r"^\s*EXPLAIN\s+ANALYZE\s+(.+)$", sql,
-            __import__("re").IGNORECASE | __import__("re").DOTALL)
+        ea = re.match(r"^\s*EXPLAIN\s+ANALYZE\s+(.+)$", sql,
+                      re.IGNORECASE | re.DOTALL)
         if ea is not None:
-            return self._explain_analyze(st, ea.group(1))
+            return self._explain_analyze(
+                st, ea.group(1), args, stmt_id, span)
         pragma = parse_pragma(sql)
         if pragma is not None:
             return self._run_pragma(st, *pragma)
@@ -915,18 +942,12 @@ class Engine:
         sql = rewrite_distinct_on(sql)
         sql = rewrite_exclude(sql)
         if "COLUMNS" in sql.upper():
-            from gizmosql_spark.dialect import rewrite_columns
-
             # schema-resolved rewrite (COLUMNS('re') star-expression);
             # ADD COLUMNS etc. never match the call-form regex
             sql = rewrite_columns(sql, st.spark)
         if "REPLACE" in sql.upper():
-            from gizmosql_spark.dialect import rewrite_star_replace
-
             sql = rewrite_star_replace(sql, st.spark)
         if "ALL" in sql.upper():
-            from gizmosql_spark.dialect import rewrite_order_by_all
-
             sql = rewrite_order_by_all(sql, st.spark)
         sql, used_settings = rewrite_settings_function(sql)
         # a statement that registers views of its own, other than
@@ -1040,15 +1061,13 @@ class Engine:
             from gizmosql_spark.maintenance import table_changes
 
             tbl, v1, v2 = m.group(1), int(m.group(2)), m.group(3)
-            view = __import__("re").sub(
+            view = re.sub(
                 r"\W", "_", f"table_changes_{tbl}_{v1}_{v2 or 'live'}")
             df = table_changes(
                 st.spark, self.warehouse, tbl, v1,
                 int(v2) if v2 is not None else None)
             df.createOrReplaceTempView(view)
             sql = sql.replace(m.group(0), view)
-        from gizmosql_spark.dialect import extract_time_travel
-
         sql, travels = extract_time_travel(sql)
         for view, tbl, spec in travels:
             if isinstance(spec, int):
@@ -1077,8 +1096,6 @@ class Engine:
         # the SQL surface a reference user gets for the extension tier.
         # Local dirs passed the read_* admin gate upstream
         # (security.check_admin_gate).
-        from gizmosql_spark.dialect import extract_pipeline_ops
-
         sql, pops = extract_pipeline_ops(sql)
         for view, op_name, op_dir in pops:
             from gizmosql_spark.operators import registry as op_registry
@@ -1118,11 +1135,16 @@ class Engine:
             raise security.CommandDenied(
                 "flight_scan requires admin role")
 
-        is_set = _forget_session_caches_on_set(st, sql)
-        if ephemeral or travels or pops or fscans:
+        is_set = bool(_SPARK_SET_RE.match(sql))
+        if is_set:
+            # a Spark-level SET/RESET: confs such as
+            # spark.sql.caseSensitive shape the file relations
+            session_cache.for_spark(st.spark).clear()
+        if ephemeral or travels or pops or fscans or is_set:
             st.plans.clear()
             key = None
-        elif is_set or any(ident is None for *_, ident in scan_ids):
+        elif args is not None or any(
+                ident is None for *_, ident in scan_ids):
             key = None
         else:
             key = (sql, tuple(scan_ids))
@@ -1153,9 +1175,9 @@ class Engine:
             for alias, (uri, user, pw) in st.attached.items():
                 if user is None and pw is None:
                     user, pw = self.secrets.flight_credentials(uri)
-                pat = __import__("re").compile(
+                pat = re.compile(
                     rf"\b(FROM|JOIN)\s+{alias}\s*\.\s*([A-Za-z_]\w*)",
-                    __import__("re").IGNORECASE)
+                    re.IGNORECASE)
 
                 def _sub(m, _alias=alias, _uri=uri, _user=user, _pw=pw):
                     tbl = m.group(2)
@@ -1198,8 +1220,7 @@ class Engine:
                 self.warehouse.upsert_entry(name, entry)
             return StatementResult("update", df=df, affected_rows=None)
 
-        if __import__("re").match(r"^\s*CHECKPOINT\s*;?\s*$", sql,
-                                  __import__("re").IGNORECASE):
+        if re.match(r"^\s*CHECKPOINT\s*;?\s*$", sql, re.IGNORECASE):
             # DuckDB CHECKPOINT = flush the WAL; here = snapshot+prune
             # the catalog commit log (admin-gated by _ADMIN_STMT_RE)
             seq = self.warehouse.checkpoint_now()
@@ -1220,11 +1241,9 @@ class Engine:
                 counts = export_database(st.spark, target)
                 return StatementResult(
                     "update", affected_rows=len(counts))
-            import os as _os
-
             tables = sorted(
-                d for d in _os.listdir(target)
-                if _os.path.isdir(_os.path.join(target, d)))
+                d for d in os.listdir(target)
+                if os.path.isdir(os.path.join(target, d)))
             for t in tables:
                 # an import overwrites: clear re-attached EXTERNAL
                 # tables / crash leftovers at the destination first
@@ -1298,8 +1317,6 @@ class Engine:
 
             up = sql.upper()
             if "OR REPLACE INTO" in up or "ON CONFLICT" in up:
-                from gizmosql_spark.dialect import rewrite_insert_upsert
-
                 sql = rewrite_insert_upsert(
                     sql, st.spark,
                     lambda t: self.system_catalog.registry.primary_keys
@@ -1338,13 +1355,13 @@ class Engine:
             if st.txn is not None:
                 self._txn_snapshot(st, target)
             before = self._table_count(st, target)
-            df = st.spark.sql(sql)
+            df = st.spark.sql(sql, args=args)
             self._refresh_everywhere(target)
             after = self._table_count(st, target)
             affected = abs(after - before) if before is not None else None
             return StatementResult("update", df=df, affected_rows=affected)
 
-        df, outcome = self._analyze(st, sql, key)
+        df, outcome = self._analyze(st, sql, key, args)
         if outcome is not None:
             return StatementResult("query", df=df, plan_cache=outcome)
         return StatementResult("update", df=df, affected_rows=None)
@@ -1377,14 +1394,15 @@ class Engine:
             return None
         return got
 
-    def _analyze(self, st: SessionState, sql: str,
-                 key: tuple | None) -> tuple[DataFrame, str | None]:
-        """Analyze the statement's final SQL, keeping a query's
-        DataFrame under ``key`` (None: not reusable) for its repeats.
-        Returns the frame and its plan cache outcome, None when the
-        statement is not a query."""
+    def _analyze(self, st: SessionState, sql: str, key: tuple | None,
+                 args: dict[str, Any] | list | None = None,
+                 ) -> tuple[DataFrame, str | None]:
+        """Analyze the statement's final SQL with ``args`` bound to its
+        markers, keeping a query's DataFrame under ``key`` (None: not
+        reusable) for its repeats. Returns the frame and its plan cache
+        outcome, None when the statement is not a query."""
         generation, seq = st.plans.generation, self._plan_seq
-        df = st.spark.sql(sql)
+        df = st.spark.sql(sql, args=args)
         if not (df.isStreaming or df.schema.fields):
             return df, None
         if key is None or _EXCHANGE_OPS_RE.search(
@@ -1600,8 +1618,9 @@ class Engine:
         self.telemetry.add_counter("engine.rows_fetched_total", float(n_rows))
         return out["value"], elapsed_ms
 
-    def _explain_analyze(self, st: SessionState,
-                         inner_sql: str) -> StatementResult:
+    def _explain_analyze(self, st: SessionState, inner_sql: str,
+                         args: dict[str, Any] | list | None,
+                         stmt_id: str | None, span) -> StatementResult:
         """DuckDB-style ``EXPLAIN ANALYZE <query>``: run the query to
         completion, then report the AQE-FINALIZED physical plan (the
         plan Spark actually executed, with runtime-re-planned joins
@@ -1611,18 +1630,19 @@ class Engine:
         Restricted to query statements (documented deviation: DuckDB
         also accepts DML here) so the EXPLAIN prefix can never smuggle
         a write past a readonly session's statement classifier."""
-        if not __import__("re").match(
-            r"^\s*(SELECT|WITH|VALUES|TABLE|FROM)\b", inner_sql,
-            __import__("re").IGNORECASE,
-        ):
+        if not _QUERY_PREFIX_RE.match(inner_sql):
             raise ValueError(
                 "EXPLAIN ANALYZE supports query statements only")
-        result = self._run_statement(st, inner_sql)
+        result = self._run_statement(st, inner_sql, args)
         if result.df is None:
             raise ValueError("EXPLAIN ANALYZE requires a query statement")
         # the run is a statement execution like any other (admission,
-        # engine.query_timeout, cancel). The noop sink evaluates every
+        # engine.query_timeout, cancel), recorded under the outer
+        # statement's row and trace. The noop sink evaluates every
         # column, where count() would prune the projections away.
+        result.statement_id = stmt_id
+        if span is not None:
+            result.trace_id, result.root_span_id = span.trace_id, span.span_id
         n_rows, elapsed_ms = self._materialize(
             st, result, lambda: _counted_write(
                 result.df,
@@ -1673,52 +1693,42 @@ class Engine:
     # --- prepared statements (§3.2) -----------------------------------
 
     def prepare(self, session_id: str, sql: str) -> PreparedStatement:
+        """Gate ``sql`` and register it under a new handle. A query
+        without parameter markers is analyzed through the statement
+        path for its schema (a plan cache miss its executions then
+        hit); nothing else runs before it is executed."""
         st = self._session(session_id)
-        security.check_admin_gate(sql, st.is_admin)
-        security.check_readonly(sql, st.role)
-        sql = replace_pseudo_functions(sql, self._pseudo_values(st))
+        self._gate(st, sql, "prepare")
         params = _named_params(sql)
         n_pos = 0 if params else _count_positional_params(sql)
         schema = None
-        if not params and not n_pos:
-            _forget_session_caches_on_set(st, sql)
-            schema = st.spark.sql(sql).schema  # analysis only, no job
-            if not schema.fields:
-                # a command (DDL, DML) runs inside spark.sql
-                self._invalidate_plans()
+        if not params and not n_pos and _QUERY_PREFIX_RE.match(sql):
+            schema = self._run_statement(st, sql).df.schema
         names = params or [f"param_{i + 1}" for i in range(n_pos)]
         ps = PreparedStatement(
             str(uuid.uuid4()), sql, schema, names, positional=n_pos > 0)
         st.prepared[ps.handle] = ps
         return ps
 
+    def prepared_statement(self, session_id: str,
+                           handle: str) -> PreparedStatement:
+        """The session's statement under ``handle``; KeyError if none."""
+        ps = self._session(session_id).prepared.get(handle)
+        if ps is None:
+            raise KeyError(f"no such prepared statement: {handle}")
+        return ps
+
     def execute_prepared(self, session_id: str, handle: str,
                          params: dict[str, Any] | list | None = None,
                          ) -> StatementResult:
-        st = self._session(session_id)
-        ps = st.prepared.get(handle)
-        if ps is None:
-            raise KeyError(f"no such prepared statement: {handle}")
-        _forget_session_caches_on_set(st, ps.sql)
-        if ps.positional:
-            # `?` markers bind by position (Spark takes a list). A
-            # stock client's parameter batch carries arbitrary column
-            # names, so fall back to column order unless the names are
-            # exactly our synthetic param_i placeholders.
-            if isinstance(params, (list, tuple)):
-                args: Any = list(params)
-            elif params and set(params) >= set(ps.parameter_names):
-                args = [params[k] for k in ps.parameter_names]
-            else:
-                args = list(params.values()) if params else []
-            df = st.spark.sql(ps.sql, args=args)
-        else:
-            df = st.spark.sql(ps.sql, args=params or {})
-        if ps.schema is None:
-            ps.schema = df.schema
-        if not ps.schema.fields:
-            self._invalidate_plans()
-        return StatementResult("query", df=df)
+        """Bind ``params`` (None: the values last bound to the handle)
+        and run the statement on the path ``execute_sql`` runs."""
+        ps = self.prepared_statement(session_id, handle)
+        result = self._execute(
+            session_id, ps.sql, ps.args(params), "execute_prepared")
+        if ps.schema is None and result.df is not None:
+            ps.schema = result.df.schema
+        return result
 
     def close_prepared(self, session_id: str, handle: str) -> None:
         self._session(session_id).prepared.pop(handle, None)

@@ -23,7 +23,9 @@ This module re-expresses that surface on ``pyarrow.flight``:
   append by-name — the ADBC ``adbc_ingest`` modes).
 - **DoPut** (update command) → ``Engine.execute_sql`` DML, affected
   count returned in the app metadata (the reference's
-  DoPutCommandStatementUpdate).
+  DoPutCommandStatementUpdate); a prepared update binds its batch and
+  runs through ``Engine.execute_prepared``, the same statement path.
+  A DoPut of a prepared query binds the values onto the handle.
 - **DoAction** → session create/close, BEGIN/COMMIT/ROLLBACK,
   prepared-statement lifecycle, cancel, kill-session, health check,
   session options — each a small JSON body.
@@ -71,6 +73,7 @@ from typing import Any
 
 import pyarrow as pa
 import pyarrow.flight as flight
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from gizmosql_spark import flightsql_meta as fsm
 from gizmosql_spark import flightsql_proto as fsp
@@ -78,17 +81,6 @@ from gizmosql_spark import security
 from gizmosql_spark.auth import AuthError
 from gizmosql_spark.constraints import tpch_constraints
 from gizmosql_spark.engine import Engine, StatementResult
-
-
-def _spark_to_arrow_schema(df) -> pa.Schema:
-    """Arrow schema from an analyzed DataFrame without running a job
-    (falls back to an empty collect if the converter is unavailable)."""
-    try:
-        from pyspark.sql.pandas.types import to_arrow_schema
-
-        return to_arrow_schema(df.schema)
-    except Exception:
-        return df.limit(0).toArrow().schema
 
 
 class _AuthMiddleware(flight.ServerMiddleware):
@@ -197,8 +189,6 @@ class FlightEngineServer(flight.FlightServerBase):
         #: protobuf-tier implicit sessions: principal key -> session id
         self._implicit_sessions: dict[str, str] = {}
         self._implicit_lock = threading.Lock()
-        #: parameters bound via DoPut(CommandPreparedStatementQuery)
-        self._bound_params: dict[tuple[str, str], dict[str, Any]] = {}
 
     # --- helpers ------------------------------------------------------
 
@@ -421,13 +411,11 @@ class FlightEngineServer(flight.FlightServerBase):
                 result = self._wrap_errors(
                     self.engine.execute_sql, sid, cmd["sql"])
             else:
-                params = cmd.get("parameters")
-                if params is None and proto:
-                    # bound earlier via DoPut(CommandPreparedStatementQuery)
-                    params = self._bound_params.get((sid, cmd["handle"]))
+                # no "parameters" (the protobuf tier): the values bound
+                # by DoPut(CommandPreparedStatementQuery)
                 result = self._wrap_errors(
                     self.engine.execute_prepared, sid, cmd["handle"],
-                    params or {})
+                    cmd.get("parameters"))
             if result.df is None:
                 # DML/SET through the query verb: surface the count as
                 # a 1-row frame, like the reference's update results
@@ -466,7 +454,7 @@ class FlightEngineServer(flight.FlightServerBase):
                 return flight.FlightInfo(
                     table.schema, descriptor, endpoints,
                     table.num_rows, table.nbytes)
-            schema = _spark_to_arrow_schema(result.df)
+            schema = to_arrow_schema(result.df.schema)
             tid = self._store_ticket(sid, result)
             return flight.FlightInfo(
                 schema, descriptor,
@@ -486,21 +474,18 @@ class FlightEngineServer(flight.FlightServerBase):
         if cmd["type"] == "statement_query":
             result = self._wrap_errors(self.engine.execute_sql, sid, cmd["sql"])
         elif cmd["type"] == "prepared_query":
-            ps = self.engine._session(sid).prepared.get(cmd["handle"])
-            if ps is None or ps.schema is None:
+            ps = self._wrap_errors(
+                self.engine.prepared_statement, sid, cmd["handle"])
+            if ps.schema is None:
                 raise flight.FlightServerError("prepared schema unavailable")
-            from pyspark.sql import DataFrame  # noqa: F401
-
-            class _Shim:
-                schema = ps.schema
-            return flight.SchemaResult(_spark_to_arrow_schema(_Shim()))
+            return flight.SchemaResult(to_arrow_schema(ps.schema))
         else:
             raise flight.FlightServerError(
                 f"unsupported command type: {cmd['type']}")
         if result.df is None:
             return flight.SchemaResult(
                 pa.schema([("affected_rows", pa.int64())]))
-        return flight.SchemaResult(_spark_to_arrow_schema(result.df))
+        return flight.SchemaResult(to_arrow_schema(result.df.schema))
 
     def do_get(self, context, ticket):
         raw = ticket.ticket
@@ -545,34 +530,29 @@ class FlightEngineServer(flight.FlightServerBase):
                 cmd.get("mode", "create"))
             put_count(n)
             return
-        if cmd["type"] == "statement_update":
-            result = self._wrap_errors(
-                self.engine.execute_sql, sid, cmd["sql"])
-            put_count(result.affected_rows
-                      if result.affected_rows is not None else -1)
-            return
         if cmd["type"] == "prepared_query" and proto:
             # bind parameters: one Arrow batch, column-per-parameter
             # (the reference binds each cell as a string the engine
             # re-casts, duckdb_server.cpp:747-772)
-            params = self._read_params(reader)
-            self._bound_params[(sid, cmd["handle"])] = params
+            ps = self._wrap_errors(
+                self.engine.prepared_statement, sid, cmd["handle"])
+            ps.bound = self._read_params(reader)
             writer.write(fsp.encode(
                 "DoPutPreparedStatementResult",
                 {"prepared_statement_handle": cmd["handle"].encode()}))
             return
-        if cmd["type"] == "prepared_update" and proto:
-            params = self._read_params(reader)
+        if cmd["type"] == "statement_update":
             result = self._wrap_errors(
-                self.engine.execute_prepared, sid, cmd["handle"], params)
-            n = result.affected_rows
-            if n is None and result.df is not None:
-                n = self._wrap_errors(
-                    self.engine.collect_arrow, sid, result).num_rows
-            put_count(n if n is not None else -1)
-            return
-        raise flight.FlightServerError(
-            f"unsupported DoPut command type: {cmd['type']}")
+                self.engine.execute_sql, sid, cmd["sql"])
+        elif cmd["type"] == "prepared_update" and proto:
+            result = self._wrap_errors(
+                self.engine.execute_prepared, sid, cmd["handle"],
+                self._read_params(reader))
+        else:
+            raise flight.FlightServerError(
+                f"unsupported DoPut command type: {cmd['type']}")
+        put_count(result.affected_rows
+                  if result.affected_rows is not None else -1)
 
     @staticmethod
     def _read_params(reader) -> dict[str, Any]:
@@ -708,11 +688,8 @@ class FlightEngineServer(flight.FlightServerBase):
         sid = self._implicit_session(context)
         if name == "CreatePreparedStatement":
             ps = self._wrap_errors(self.engine.prepare, sid, body["query"])
-            if ps.schema is not None:
-                dataset = _spark_to_arrow_schema(
-                    type("_S", (), {"schema": ps.schema}))
-            else:
-                dataset = pa.schema([])
+            dataset = (pa.schema([]) if ps.schema is None
+                       else to_arrow_schema(ps.schema))
             param_schema = pa.schema(
                 [pa.field(p, pa.utf8()) for p in ps.parameter_names])
             result = fsp.pack_any(
@@ -726,7 +703,6 @@ class FlightEngineServer(flight.FlightServerBase):
         if name == "ClosePreparedStatement":
             handle = body["prepared_statement_handle"].decode("utf-8")
             self.engine.close_prepared(sid, handle)
-            self._bound_params.pop((sid, handle), None)
             return iter([])
         if name == "BeginTransaction":
             txn = self._wrap_errors(self.engine.begin_transaction, sid)

@@ -261,3 +261,75 @@ def test_prepared_statement_lifecycle(client, opts):
     close = _any(b"ActionClosePreparedStatementRequest", _field(1, handle))
     list(client.do_action(
         flight.Action("ClosePreparedStatement", close), options=opts))
+
+
+def _prepare(client, opts, sql: bytes) -> bytes:
+    create = _any(b"ActionCreatePreparedStatementRequest", _field(1, sql))
+    res = list(client.do_action(
+        flight.Action("CreatePreparedStatement", create), options=opts))
+    return _fields(_fields(res[0].body.to_pybytes())[2][0])[1][0]
+
+
+def _bind(client, opts, handle: bytes, params: pa.Table) -> None:
+    desc = flight.FlightDescriptor.for_command(
+        _any(b"CommandPreparedStatementQuery", _field(1, handle)))
+    w, r = client.do_put(desc, params.schema, options=opts)
+    w.write_table(params)
+    w.done_writing()
+    r.read()
+    w.close()
+
+
+def _records(eng, sql: str) -> tuple:
+    """What the last statement left: its query-log entry, its access-log
+    entry, and the span names, parents and rows of its trace."""
+    last = eng.query_log.entries()[-1]
+    access = [e for e in eng.access_log.entries()
+              if e[1] == "execute_sql"][-1]
+    execute = [s for s in eng.telemetry.spans()
+               if s.name == "statement.execute"][-1]
+    trace = [s for s in eng.telemetry.spans()
+             if s.trace_id == execute.trace_id]
+    assert last.sql == sql
+    return ((last.session_id, last.sql, last.status),
+            (access[1], access[3], access[4], access[6]),
+            [(s.name, s.parent_id == execute.span_id,
+              s.attributes.get("rows")) for s in trace])
+
+
+def test_prepared_execution_recorded_like_direct(client, opts, server):
+    """A stock-protocol prepared execution leaves the records the same
+    statement sent directly leaves."""
+    eng = server.engine
+    q = "SELECT id * 2 AS twice FROM range(9)"
+    seen = []
+    for prepared in (False, True):
+        if prepared:
+            cmd = _any(b"CommandPreparedStatementQuery",
+                       _field(1, _prepare(client, opts, q.encode())))
+        else:
+            cmd = _any(b"CommandStatementQuery", _field(1, q.encode()))
+        ok0 = eng.telemetry.counter_value(
+            "engine.statements_total", status="ok")
+        assert _fetch(client, opts, cmd).num_rows == 9
+        assert eng.telemetry.counter_value(
+            "engine.statements_total", status="ok") == ok0 + 1
+        seen.append(_records(eng, q))
+    assert seen[0] == seen[1]
+    assert seen[1][2] == [("statement.execute", False, None),
+                          ("statement.collect", True, 9)]
+
+
+def test_prepared_binds_live_on_the_handle(client, opts):
+    """A re-bind replaces the values; a bind to an unknown handle fails
+    as an execution of it does."""
+    handle = _prepare(client, opts, b"SELECT ? AS v")
+    cmd = _any(b"CommandPreparedStatementQuery", _field(1, handle))
+    for value in (1, 2):
+        _bind(client, opts, handle, pa.table({"param_1": [value]}))
+        assert _fetch(client, opts, cmd).column("v").to_pylist() == [value]
+    unknown = _any(b"CommandPreparedStatementQuery", _field(1, b"nope"))
+    with pytest.raises(flight.FlightError, match="no such prepared"):
+        _bind(client, opts, b"nope", pa.table({"param_1": [1]}))
+    with pytest.raises(flight.FlightError, match="no such prepared"):
+        _fetch(client, opts, unknown)
