@@ -33,6 +33,7 @@ from typing import Any
 import pyarrow as pa
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from gizmosql_spark import security
 from gizmosql_spark.admission import AdmissionController
@@ -44,29 +45,12 @@ from gizmosql_spark.dialect import (
     classify_command,
     ddl_write_target,
     dml_target,
-    expand_macros,
     extract_file_scans,
     extract_flight_scans,
-    extract_pipeline_ops,
-    extract_time_travel,
     parse_attach_flight,
-    parse_create_macro,
     parse_detach,
-    parse_drop_macro,
-    parse_pragma,
-    parse_summarize,
     replace_pseudo_functions,
-    rewrite_asof_join,
-    rewrite_columns,
-    rewrite_distinct_on,
-    rewrite_exclude,
-    rewrite_insert_upsert,
-    rewrite_order_by_all,
-    rewrite_pivot_statement,
-    rewrite_qualify,
     rewrite_settings_function,
-    rewrite_star_replace,
-    rewrite_unpivot_statement,
     split_statements,
 )
 from gizmosql_spark.querylog import QueryLog
@@ -107,35 +91,37 @@ class StatementCancelled(RuntimeError):
 class PreparedStatement:
     handle: str
     sql: str  # as sent, markers included
-    #: StructType; None until the first execution, unless prepare
-    #: analyzed a parameterless query
+    #: StructType (empty for a parameterless statement prepare did not
+    #: analyze); None for one with markers until its first execution
     schema: Any
     parameter_names: list[str]
     #: True when the statement uses JDBC/ADBC-style positional `?`
     #: markers (the form stock Flight SQL clients send) rather than
-    #: named :params; binding is then by column position.
+    #: named :params; a batch of values may then bind in column order.
     positional: bool = False
     #: values last bound to the handle (Flight DoPut), used by an
     #: execution that brings none
     bound: dict[str, Any] | list | None = None
 
     def args(self, params: dict[str, Any] | list | None
-             ) -> dict[str, Any] | list | None:
-        """``params`` (None: the bound values) as Spark's ``args``;
-        None for a statement without markers."""
+             ) -> dict[str, Any] | None:
+        """``params`` (None: the bound values) as Spark's named
+        ``args``; None for a statement without markers. The i-th `?`
+        binds as ``param_i`` (``_name_positional_params``)."""
         params = self.bound if params is None else params
         if not self.parameter_names:
             return None
         if not self.positional:
             return dict(params or {})
-        # `?` markers bind by position. A stock client's parameter
-        # batch carries arbitrary column names, so bind in column order
-        # unless the names cover our synthetic param_i placeholders.
+        # A stock client's parameter batch carries arbitrary column
+        # names, so bind in column order unless the names cover our
+        # synthetic param_i placeholders.
+        names = self.parameter_names
         if isinstance(params, dict):
-            names = self.parameter_names
-            params = ([params[k] for k in names] if set(params) >= set(names)
-                      else params.values())
-        return list(params or ())
+            if set(params) >= set(names):
+                return {k: params[k] for k in names}
+            params = params.values()
+        return dict(zip(names, params or ()))
 
 
 @dataclass
@@ -204,7 +190,7 @@ class SessionState:
 
 
 # `::` excluded so DuckDB-style casts (x::int) never read as a param
-_PARAM_RE = re.compile(r"(?<!:):([A-Za-z_][A-Za-z0-9_]*)")
+_PARAM_RE = __import__("re").compile(r"(?<!:):([A-Za-z_][A-Za-z0-9_]*)")
 
 
 def _mask_sql_literals(sql: str) -> str:
@@ -263,6 +249,20 @@ def _count_positional_params(sql: str) -> int:
     return _mask_sql_literals(sql).count("?")
 
 
+def _name_positional_params(sql: str) -> str:
+    """``sql`` with the i-th `?` marker (as counted above) renamed
+    `:param_i`. A dialect rewrite may copy or reorder the text around a
+    marker (a macro body names its parameters in its own order, DISTINCT
+    ON repeats its keys); a name binds the right value wherever the
+    marker ends up, a position does not."""
+    out, n = list(sql), 0
+    for i, c in enumerate(_mask_sql_literals(sql)):
+        if c == "?":
+            n += 1
+            out[i] = f":param_{n}"
+    return "".join(out)
+
+
 #: ``Engine.ingest`` mode → ``DataFrameWriter`` save mode (``fail`` is
 #: the ADBC name for ``create``).
 _INGEST_SAVE_MODES = {"create": "errorifexists", "fail": "errorifexists",
@@ -301,10 +301,16 @@ _EXCHANGE_OPS_RE = re.compile(
 
 #: a Spark-level SET/RESET (engine SETs are claimed by classify_command)
 _SPARK_SET_RE = re.compile(r"^\s*(?:SET|RESET)\b", re.IGNORECASE)
-#: a query: the only statements EXPLAIN ANALYZE runs and prepare
-#: analyzes
-_QUERY_PREFIX_RE = re.compile(r"^\s*(SELECT|WITH|VALUES|TABLE|FROM)\b",
-                              re.IGNORECASE)
+#: leading blanks, comments and opening parentheses
+_LEAD = r"^(?:\s|--[^\n]*(?:\n|$)|/\*(?:[^*]|\*(?!/))*\*/|\()*"
+#: a query: the only statement EXPLAIN ANALYZE runs
+_QUERY_PREFIX_RE = re.compile(
+    _LEAD + r"(SELECT|WITH|VALUES|TABLE|FROM)\b", re.IGNORECASE | re.DOTALL)
+#: a read-only command prepare analyzes besides a query (EXPLAIN ANALYZE
+#: runs its query)
+_READ_COMMAND_RE = re.compile(
+    _LEAD + r"(SHOW|DESC|DESCRIBE|EXPLAIN(?!\s+ANALYZE))\b",
+    re.IGNORECASE | re.DOTALL)
 
 
 def _file_relation(st: SessionState, fmt: str, path: str,
@@ -663,7 +669,7 @@ class Engine:
         return self._execute(session_id, sql, None, "execute_sql")
 
     def _execute(self, session_id: str, sql: str,
-                 args: dict[str, Any] | list | None,
+                 args: dict[str, Any] | None,
                  entry: str) -> StatementResult:
         """The one path that runs a statement, direct or prepared:
         gate, rewrite, run, and record. ``args`` are the values bound
@@ -836,30 +842,42 @@ class Engine:
             self.catalog_log.close()
             self.catalog_log = None
 
-    _QUERY_LOG_FN_RE = re.compile(
-        r"\bengine_query_log\s*\(\s*\)", re.IGNORECASE)
-    _CATALOG_LOG_FN_RE = re.compile(
-        r"\bengine_logs\s*\(\s*\)", re.IGNORECASE)
-    _SECRETS_FN_RE = re.compile(
-        r"\bengine_secrets\s*\(\s*\)", re.IGNORECASE)
-    _TABLE_CHANGES_RE = re.compile(
+    _QUERY_LOG_FN_RE = __import__("re").compile(
+        r"\bengine_query_log\s*\(\s*\)", __import__("re").IGNORECASE
+    )
+    _CATALOG_LOG_FN_RE = __import__("re").compile(
+        r"\bengine_logs\s*\(\s*\)", __import__("re").IGNORECASE
+    )
+    _SECRETS_FN_RE = __import__("re").compile(
+        r"\bengine_secrets\s*\(\s*\)", __import__("re").IGNORECASE
+    )
+    _TABLE_CHANGES_RE = __import__("re").compile(
         r"\btable_changes\s*\(\s*'([A-Za-z_][\w.]*)'\s*,\s*(\d+)"
-        r"(?:\s*,\s*(\d+))?\s*\)", re.IGNORECASE)
-    _ACCESS_LOG_FN_RE = re.compile(
-        r"\bengine_access_log\s*\(\s*\)", re.IGNORECASE)
-    _MACROS_FN_RE = re.compile(
-        r"\bengine_macros\s*\(\s*\)", re.IGNORECASE)
-    _EXPORT_DB_RE = re.compile(
+        r"(?:\s*,\s*(\d+))?\s*\)",
+        __import__("re").IGNORECASE,
+    )
+    _ACCESS_LOG_FN_RE = __import__("re").compile(
+        r"\bengine_access_log\s*\(\s*\)", __import__("re").IGNORECASE
+    )
+    _MACROS_FN_RE = __import__("re").compile(
+        r"\bengine_macros\s*\(\s*\)", __import__("re").IGNORECASE
+    )
+    _EXPORT_DB_RE = __import__("re").compile(
         r"^\s*(EXPORT|IMPORT)\s+DATABASE\s+'([^']+)'\s*;?\s*$",
-        re.IGNORECASE)
-    _RENAME_TO_RE = re.compile(
+        __import__("re").IGNORECASE,
+    )
+    _RENAME_TO_RE = __import__("re").compile(
         r"^\s*ALTER\s+TABLE\s+(?:[A-Za-z_][\w.]*|`[^`]+`)\s+RENAME"
-        r"\s+TO\s+([A-Za-z_][\w.]*|`[^`]+`)\s*;?\s*$", re.IGNORECASE)
-    _ADMISSION_FN_RE = re.compile(
-        r"\bengine_admission_stats\s*\(\s*\)", re.IGNORECASE)
-    _INSTR_VIEW_RE = re.compile(
+        r"\s+TO\s+([A-Za-z_][\w.]*|`[^`]+`)\s*;?\s*$",
+        __import__("re").IGNORECASE,
+    )
+    _ADMISSION_FN_RE = __import__("re").compile(
+        r"\bengine_admission_stats\s*\(\s*\)", __import__("re").IGNORECASE
+    )
+    _INSTR_VIEW_RE = __import__("re").compile(
         r"\bengine_(?:instr_\w+|active_sessions|session_activity)\b",
-        re.IGNORECASE)
+        __import__("re").IGNORECASE,
+    )
     #: table functions that register a view per statement
     _EPHEMERAL_VIEW_RES = (
         _QUERY_LOG_FN_RE, _MACROS_FN_RE, _ACCESS_LOG_FN_RE,
@@ -867,15 +885,26 @@ class Engine:
         _INSTR_VIEW_RE, _TABLE_CHANGES_RE)
 
     def _run_statement(self, st: SessionState, sql: str,
-                       args: dict[str, Any] | list | None = None,
+                       args: dict[str, Any] | None = None,
                        stmt_id: str | None = None,
                        span=None) -> StatementResult:
         """Rewrite and run (a query: analyze) one gated statement.
         ``args`` bind its markers in the final ``spark.sql``, never
         plan-cached; ``stmt_id``/``span`` are what a run inside the
         statement (EXPLAIN ANALYZE) records under."""
+        from gizmosql_spark.dialect import (
+            parse_pragma,
+            parse_summarize,
+            rewrite_asof_join,
+            rewrite_distinct_on,
+            rewrite_exclude,
+            rewrite_qualify,
+        )
         from gizmosql_spark.secrets import parse_secret_ddl
 
+        if args is not None:
+            # before any rewrite copies or reorders a marker
+            sql = _name_positional_params(sql)
         sec_ddl = parse_secret_ddl(sql)
         if sec_ddl is not None:
             # CREATE/DROP SECRET (admin-only — check_admin_gate already
@@ -894,6 +923,11 @@ class Engine:
                       "action": "drop" if dropped else "noop"})
 
         if "MACRO" in sql.upper():
+            from gizmosql_spark.dialect import (
+                parse_create_macro,
+                parse_drop_macro,
+            )
+
             cm = parse_create_macro(sql)
             if cm is not None:
                 name, params, defaults, body, is_table, replace = cm
@@ -914,20 +948,27 @@ class Engine:
                     "update", affected_rows=0,
                     info={"macro": name, "action": "drop"})
         if self.macros:
+            from gizmosql_spark.dialect import expand_macros
+
             sql = expand_macros(sql, self.macros)
 
         up0 = sql.upper().lstrip()
         if up0.startswith("PIVOT"):
+            from gizmosql_spark.dialect import rewrite_pivot_statement
+
             sql = rewrite_pivot_statement(sql, st.spark)
         elif up0.startswith("UNPIVOT"):
+            from gizmosql_spark.dialect import rewrite_unpivot_statement
+
             sql = rewrite_unpivot_statement(sql)
 
         summarize_target = parse_summarize(sql)
         if summarize_target is not None:
             return StatementResult(
                 "query", df=self._summarize(st, summarize_target))
-        ea = re.match(r"^\s*EXPLAIN\s+ANALYZE\s+(.+)$", sql,
-                      re.IGNORECASE | re.DOTALL)
+        ea = __import__("re").match(
+            r"^\s*EXPLAIN\s+ANALYZE\s+(.+)$", sql,
+            __import__("re").IGNORECASE | __import__("re").DOTALL)
         if ea is not None:
             return self._explain_analyze(
                 st, ea.group(1), args, stmt_id, span)
@@ -942,12 +983,18 @@ class Engine:
         sql = rewrite_distinct_on(sql)
         sql = rewrite_exclude(sql)
         if "COLUMNS" in sql.upper():
+            from gizmosql_spark.dialect import rewrite_columns
+
             # schema-resolved rewrite (COLUMNS('re') star-expression);
             # ADD COLUMNS etc. never match the call-form regex
             sql = rewrite_columns(sql, st.spark)
         if "REPLACE" in sql.upper():
+            from gizmosql_spark.dialect import rewrite_star_replace
+
             sql = rewrite_star_replace(sql, st.spark)
         if "ALL" in sql.upper():
+            from gizmosql_spark.dialect import rewrite_order_by_all
+
             sql = rewrite_order_by_all(sql, st.spark)
         sql, used_settings = rewrite_settings_function(sql)
         # a statement that registers views of its own, other than
@@ -1061,13 +1108,15 @@ class Engine:
             from gizmosql_spark.maintenance import table_changes
 
             tbl, v1, v2 = m.group(1), int(m.group(2)), m.group(3)
-            view = re.sub(
+            view = __import__("re").sub(
                 r"\W", "_", f"table_changes_{tbl}_{v1}_{v2 or 'live'}")
             df = table_changes(
                 st.spark, self.warehouse, tbl, v1,
                 int(v2) if v2 is not None else None)
             df.createOrReplaceTempView(view)
             sql = sql.replace(m.group(0), view)
+        from gizmosql_spark.dialect import extract_time_travel
+
         sql, travels = extract_time_travel(sql)
         for view, tbl, spec in travels:
             if isinstance(spec, int):
@@ -1096,6 +1145,8 @@ class Engine:
         # the SQL surface a reference user gets for the extension tier.
         # Local dirs passed the read_* admin gate upstream
         # (security.check_admin_gate).
+        from gizmosql_spark.dialect import extract_pipeline_ops
+
         sql, pops = extract_pipeline_ops(sql)
         for view, op_name, op_dir in pops:
             from gizmosql_spark.operators import registry as op_registry
@@ -1175,9 +1226,9 @@ class Engine:
             for alias, (uri, user, pw) in st.attached.items():
                 if user is None and pw is None:
                     user, pw = self.secrets.flight_credentials(uri)
-                pat = re.compile(
+                pat = __import__("re").compile(
                     rf"\b(FROM|JOIN)\s+{alias}\s*\.\s*([A-Za-z_]\w*)",
-                    re.IGNORECASE)
+                    __import__("re").IGNORECASE)
 
                 def _sub(m, _alias=alias, _uri=uri, _user=user, _pw=pw):
                     tbl = m.group(2)
@@ -1220,7 +1271,8 @@ class Engine:
                 self.warehouse.upsert_entry(name, entry)
             return StatementResult("update", df=df, affected_rows=None)
 
-        if re.match(r"^\s*CHECKPOINT\s*;?\s*$", sql, re.IGNORECASE):
+        if __import__("re").match(r"^\s*CHECKPOINT\s*;?\s*$", sql,
+                                  __import__("re").IGNORECASE):
             # DuckDB CHECKPOINT = flush the WAL; here = snapshot+prune
             # the catalog commit log (admin-gated by _ADMIN_STMT_RE)
             seq = self.warehouse.checkpoint_now()
@@ -1241,9 +1293,11 @@ class Engine:
                 counts = export_database(st.spark, target)
                 return StatementResult(
                     "update", affected_rows=len(counts))
+            import os as _os
+
             tables = sorted(
-                d for d in os.listdir(target)
-                if os.path.isdir(os.path.join(target, d)))
+                d for d in _os.listdir(target)
+                if _os.path.isdir(_os.path.join(target, d)))
             for t in tables:
                 # an import overwrites: clear re-attached EXTERNAL
                 # tables / crash leftovers at the destination first
@@ -1317,6 +1371,8 @@ class Engine:
 
             up = sql.upper()
             if "OR REPLACE INTO" in up or "ON CONFLICT" in up:
+                from gizmosql_spark.dialect import rewrite_insert_upsert
+
                 sql = rewrite_insert_upsert(
                     sql, st.spark,
                     lambda t: self.system_catalog.registry.primary_keys
@@ -1395,7 +1451,7 @@ class Engine:
         return got
 
     def _analyze(self, st: SessionState, sql: str, key: tuple | None,
-                 args: dict[str, Any] | list | None = None,
+                 args: dict[str, Any] | None = None,
                  ) -> tuple[DataFrame, str | None]:
         """Analyze the statement's final SQL with ``args`` bound to its
         markers, keeping a query's DataFrame under ``key`` (None: not
@@ -1619,7 +1675,7 @@ class Engine:
         return out["value"], elapsed_ms
 
     def _explain_analyze(self, st: SessionState, inner_sql: str,
-                         args: dict[str, Any] | list | None,
+                         args: dict[str, Any] | None,
                          stmt_id: str | None, span) -> StatementResult:
         """DuckDB-style ``EXPLAIN ANALYZE <query>``: run the query to
         completion, then report the AQE-FINALIZED physical plan (the
@@ -1693,17 +1749,20 @@ class Engine:
     # --- prepared statements (§3.2) -----------------------------------
 
     def prepare(self, session_id: str, sql: str) -> PreparedStatement:
-        """Gate ``sql`` and register it under a new handle. A query
-        without parameter markers is analyzed through the statement
-        path for its schema (a plan cache miss its executions then
-        hit); nothing else runs before it is executed."""
+        """Gate ``sql`` and register it under a new handle. A query or
+        read-only command without parameter markers is analyzed through
+        the statement path for its schema (a plan cache miss its
+        executions then hit); any other statement without markers gets
+        no columns and runs only when it is executed."""
         st = self._session(session_id)
         self._gate(st, sql, "prepare")
         params = _named_params(sql)
         n_pos = 0 if params else _count_positional_params(sql)
-        schema = None
-        if not params and not n_pos and _QUERY_PREFIX_RE.match(sql):
-            schema = self._run_statement(st, sql).df.schema
+        schema = None  # with markers: learned on the first execution
+        if not params and not n_pos:
+            schema = (self._run_statement(st, sql).df.schema
+                      if _QUERY_PREFIX_RE.match(sql)
+                      or _READ_COMMAND_RE.match(sql) else StructType([]))
         names = params or [f"param_{i + 1}" for i in range(n_pos)]
         ps = PreparedStatement(
             str(uuid.uuid4()), sql, schema, names, positional=n_pos > 0)
@@ -1726,7 +1785,7 @@ class Engine:
         ps = self.prepared_statement(session_id, handle)
         result = self._execute(
             session_id, ps.sql, ps.args(params), "execute_prepared")
-        if ps.schema is None and result.df is not None:
+        if not ps.schema and result.df is not None:
             ps.schema = result.df.schema
         return result
 

@@ -58,7 +58,7 @@ def _prepared_rows(engine, sid, sql, params=None) -> list[tuple]:
 
 def test_parameterless_insert_runs_once(engine, session, table):
     ps = engine.prepare(session, f"INSERT INTO {table} VALUES (7)")
-    assert ps.schema is None
+    assert ps.schema is not None and not ps.schema.fields
     assert _count(engine, session, table) == 1
     res = engine.execute_prepared(session, ps.handle)
     assert res.affected_rows == 1
@@ -112,33 +112,48 @@ def ids_file(tmp_path_factory):
     return str(path)
 
 
-#: each row runs directly with the literal and prepared with it bound
-#: to the ``{}`` marker
+#: each row runs directly with its literals and prepared with them
+#: bound, in order, to its ``{}`` markers
 _DIALECT_ROWS = {
-    "read_parquet": "SELECT id FROM read_parquet('{f}') WHERE id < {}",
-    "bare_scan": "SELECT id FROM '{f}' WHERE id < {}",
-    "qualify": "SELECT g, id FROM '{f}' WHERE id < {} "
-               "QUALIFY row_number() OVER (PARTITION BY g ORDER BY id) = 1",
-    "distinct_on": "SELECT DISTINCT ON (g) g, id FROM '{f}' "
-                   "WHERE id < {} ORDER BY g, id",
-    "exclude": "SELECT * EXCLUDE (g) FROM '{f}' WHERE id < {}",
-    "order_by_all": "SELECT g, id FROM '{f}' WHERE id < {} ORDER BY ALL",
-    "macro": "SELECT pp_plus_ten(id) AS y FROM '{f}' WHERE id < {}",
-    "pipeline_op": "SELECT count(*) AS n FROM pipeline_op('dataset_split',"
-                   " '{sf}') WHERE n_docs > {}",
+    "read_parquet": ("SELECT id FROM read_parquet('{f}') WHERE id < {}",
+                     [7]),
+    "bare_scan": ("SELECT id FROM '{f}' WHERE id < {}", [7]),
+    "qualify": ("SELECT g, id FROM '{f}' WHERE id < {} QUALIFY "
+                "row_number() OVER (PARTITION BY g ORDER BY id) = 1", [7]),
+    "distinct_on": ("SELECT DISTINCT ON (g) g, id FROM '{f}' "
+                    "WHERE id < {} ORDER BY g, id", [7]),
+    # the rewrite moves the keys after the select list and repeats the
+    # ORDER BY inside the window
+    "distinct_on_marker_keys": (
+        "SELECT DISTINCT ON (id % {}) id, id * {} AS y FROM '{f}' "
+        "WHERE id < {} ORDER BY id % {}, id", [3, 10, 8, 3]),
+    "exclude": ("SELECT * EXCLUDE (g) FROM '{f}' WHERE id < {}", [7]),
+    "order_by_all": ("SELECT g, id FROM '{f}' WHERE id < {} ORDER BY ALL",
+                     [7]),
+    "macro": ("SELECT pp_plus_ten(id) AS y FROM '{f}' WHERE id < {}", [7]),
+    # the body names its parameters in the reverse order
+    "macro_reversed": ("SELECT id, pp_sub({}, {}) AS y FROM '{f}' "
+                       "WHERE id < {}", [10, 3, 4]),
+    # the body uses its parameter twice
+    "macro_twice": ("SELECT id + pp_square({}) AS y FROM '{f}' "
+                    "WHERE id < {}", [3, 4]),
+    "pipeline_op": ("SELECT count(*) AS n FROM pipeline_op("
+                    "'dataset_split', '{sf}') WHERE n_docs > {}", [7]),
 }
 
 
 @pytest.mark.parametrize("name", sorted(_DIALECT_ROWS))
 def test_dialect_parity(engine, session, ids_file, sf_smoke, name):
-    engine.execute_sql(
-        session, "CREATE OR REPLACE MACRO pp_plus_ten(x) AS x + 10")
-    template = _DIALECT_ROWS[name].replace("{f}", ids_file).replace(
-        "{sf}", sf_smoke)
-    direct = engine.execute_sql(session, template.format(7))
+    for macro in ("pp_plus_ten(x) AS x + 10", "pp_sub(a, b) AS b - a",
+                  "pp_square(x) AS x * x"):
+        engine.execute_sql(session, f"CREATE OR REPLACE MACRO {macro}")
+    template, values = _DIALECT_ROWS[name]
+    template = template.replace("{f}", ids_file).replace("{sf}", sf_smoke)
+    direct = engine.execute_sql(session, template.format(*values))
     expected = sorted(tuple(r) for r in engine.collect(session, direct))
     assert expected
-    got = _prepared_rows(engine, session, template.format("?"), [7])
+    got = _prepared_rows(
+        engine, session, template.format(*["?"] * len(values)), values)
     assert sorted(got) == expected
 
 
@@ -220,6 +235,21 @@ def test_prepare_runs_no_statement(engine, session):
         assert engine.instr.statements[-1][3:5] == ("prepare", False)
     finally:
         engine.close_session(user)
+
+
+def test_prepare_analyzes_read_only_statements(engine, session, table):
+    """Prepare analyzes a parameterless query, also one led by a comment
+    or a parenthesis, and a SHOW/DESCRIBE/EXPLAIN command; a write gets
+    no columns and does not run."""
+    for sql, first in (("-- note\nSELECT 1 AS one", "one"),
+                       ("/* note */ (SELECT 1 AS one)", "one"),
+                       ("SHOW TABLES", "namespace"),
+                       (f"DESCRIBE {table}", "col_name"),
+                       ("EXPLAIN SELECT 1", "plan")):
+        assert engine.prepare(session, sql).schema.fieldNames()[0] == first
+    ps = engine.prepare(session, f"/* note */ INSERT INTO {table} VALUES (2)")
+    assert not ps.schema.fields
+    assert _count(engine, session, table) == 1
 
 
 def test_explain_analyze_records_under_its_statement(engine, session):

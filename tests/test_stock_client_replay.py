@@ -333,3 +333,21 @@ def test_prepared_binds_live_on_the_handle(client, opts):
         _bind(client, opts, b"nope", pa.table({"param_1": [1]}))
     with pytest.raises(flight.FlightError, match="no such prepared"):
         _fetch(client, opts, unknown)
+
+
+def test_prepared_get_schema(client, opts, server):
+    """GetSchema of a prepared statement: a parameterless query or
+    read-only command reports its columns, a write reports none and has
+    not run, a statement with markers has no schema until executed."""
+    def schema(sql: bytes) -> pa.Schema:
+        cmd = _any(b"CommandPreparedStatementQuery",
+                   _field(1, _prepare(client, opts, sql)))
+        return client.get_schema(
+            flight.FlightDescriptor.for_command(cmd), options=opts).schema
+
+    assert schema(b"/* note */ (SELECT 1 AS one)").names == ["one"]
+    assert schema(b"SHOW TABLES").names[:2] == ["namespace", "tableName"]
+    assert schema(b"CREATE TABLE stockcl_never AS SELECT 1 AS x").names == []
+    assert not server.engine.spark.catalog.tableExists("stockcl_never")
+    with pytest.raises(pa.ArrowException, match="schema unavailable"):
+        schema(b"SELECT ? AS v")
