@@ -132,6 +132,46 @@ def classify_command(sql: str):
     return None
 
 
+#: leading blanks and comments; a leading WITH; the head of one entry
+#: of its list, up to the parenthesis that opens the entry's query
+_LEAD_RE = re.compile(r"(?:\s|--[^\n]*(?:\n|$)|/\*(?:[^*]|\*(?!/))*\*/)*")
+_WITH_RE = re.compile(r"WITH(?:\s+RECURSIVE)?\s", re.IGNORECASE)
+_CTE_HEAD_RE = re.compile(
+    r"\s*(?:[A-Za-z_]\w*|`[^`]*`)\s*(?:\([^()]*\)\s*)?AS\s*\(",
+    re.IGNORECASE)
+_CTE_COMMA_RE = re.compile(r"\s*,")
+
+
+def statement_body(sql: str) -> str:
+    """``sql`` past its leading blanks and comments and a leading
+    ``WITH`` list: the statement that runs. ``/* c */ INSERT …`` and
+    ``WITH c AS (…) INSERT …`` classify as the INSERT, ``WITH c AS (…)
+    SELECT …`` as a query. The list is scanned with literals masked, so
+    a parenthesis inside a string does not count; a list that does not
+    scan leaves the statement at its WITH."""
+    lead = _LEAD_RE.match(sql).end()
+    m = _WITH_RE.match(sql, lead)
+    if m is None:
+        return sql[lead:]
+    start = m.end()
+    masked = _mask_literals(sql[start:])
+    pos = 0
+    while True:
+        head = _CTE_HEAD_RE.match(masked, pos)
+        if head is None:
+            return sql[lead:]
+        depth, pos = 1, head.end()
+        while depth and pos < len(masked):
+            depth += {"(": 1, ")": -1}.get(masked[pos], 0)
+            pos += 1
+        if depth:
+            return sql[lead:]
+        comma = _CTE_COMMA_RE.match(masked, pos)
+        if comma is None:
+            return sql[start + pos:]
+        pos = comma.end()
+
+
 #: target-table extraction for DML statements (affected-count + txn
 #: tracking; the reference reads counts from DuckDB's 1x1 BIGINT
 #: convention, duckdb_statement.cpp:2341-2380 — Spark returns no count,
@@ -145,8 +185,10 @@ _DML_TARGET_RE = re.compile(
 
 
 def dml_target(sql: str) -> str | None:
-    """Target table of an INSERT/DELETE/UPDATE/MERGE, else None."""
-    m = _DML_TARGET_RE.match(_mask_literals(sql))
+    """Target table of an INSERT/DELETE/UPDATE/MERGE, else None;
+    leading comments and a WITH list are looked past
+    (``statement_body``)."""
+    m = _DML_TARGET_RE.match(_mask_literals(statement_body(sql)))
     if not m:
         return None
     return m.group(1).strip("`")
@@ -177,9 +219,10 @@ _TEMP_VIEW_RE = re.compile(
 
 def ddl_write_target(sql: str) -> str | None:
     """Target of a write DDL (CREATE/DROP/ALTER/TRUNCATE/REPLACE TABLE,
-    CREATE/DROP VIEW), else None. TEMP views are session-local state,
-    not a catalog write, and are excluded."""
-    masked = _mask_literals(sql)
+    CREATE/DROP VIEW), else None; leading comments are looked past
+    (``statement_body``). TEMP views are session-local state, not a
+    catalog write, and are excluded."""
+    masked = _mask_literals(statement_body(sql))
     if _TEMP_VIEW_RE.match(masked):
         return None
     m = _DDL_TARGET_RE.match(masked)

@@ -31,6 +31,7 @@ from dataclasses import dataclass, field
 from typing import Any
 
 import pyarrow as pa
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
@@ -52,6 +53,7 @@ from gizmosql_spark.dialect import (
     replace_pseudo_functions,
     rewrite_settings_function,
     split_statements,
+    statement_body,
 )
 from gizmosql_spark.querylog import QueryLog
 from gizmosql_spark.session import get_spark
@@ -67,6 +69,12 @@ from gizmosql_spark.system_catalog import (
     check_system_catalog_write,
 )
 from gizmosql_spark.types import widen_for_spark
+from gizmosql_spark.warehouse import (
+    WarehouseCatalog,
+    drop_cached_relation,
+    table_metadata,
+    warehouse_dir,
+)
 
 __version__ = "0.1.0"
 
@@ -303,7 +311,8 @@ _EXCHANGE_OPS_RE = re.compile(
 _SPARK_SET_RE = re.compile(r"^\s*(?:SET|RESET)\b", re.IGNORECASE)
 #: leading blanks, comments and opening parentheses
 _LEAD = r"^(?:\s|--[^\n]*(?:\n|$)|/\*(?:[^*]|\*(?!/))*\*/|\()*"
-#: a query: the only statement EXPLAIN ANALYZE runs
+#: a query: the only statement EXPLAIN ANALYZE runs (matched against
+#: ``statement_body``, so a write behind a WITH list is no query)
 _QUERY_PREFIX_RE = re.compile(
     _LEAD + r"(SELECT|WITH|VALUES|TABLE|FROM)\b", re.IGNORECASE | re.DOTALL)
 #: a read-only command prepare analyzes besides a query (EXPLAIN ANALYZE
@@ -491,8 +500,6 @@ class Engine:
         # persistent table catalog: manifest over the warehouse dir,
         # re-attaching tables from earlier processes (warehouse.py —
         # the DuckLake/ATTACH analog, docs/ducklake.md)
-        from gizmosql_spark.warehouse import WarehouseCatalog
-
         self.warehouse = WarehouseCatalog(self.spark)
         #: optional catalog-logging sink (docs/catalog_logging.md):
         #: enabled explicitly via enable_catalog_logging()
@@ -500,7 +507,6 @@ class Engine:
         # secrets manager (DuckDB secrets analog; admin_command_gating
         # .md:54-55): persistent entries reload from the warehouse
         from gizmosql_spark.secrets import SecretsManager
-        from gizmosql_spark.warehouse import warehouse_dir
 
         self.secrets = SecretsManager(
             store_dir=os.path.join(warehouse_dir(self.spark), "_secrets"))
@@ -823,7 +829,6 @@ class Engine:
         (not a catalog table — client DML cannot target it, and there
         is nothing to DETACH)."""
         from gizmosql_spark.catalog_logging import CatalogLogSink
-        from gizmosql_spark.warehouse import warehouse_dir
 
         if self.catalog_log is not None:
             return self.catalog_log
@@ -1253,7 +1258,7 @@ class Engine:
             self.warehouse.snapshot(st.spark, table)
             report = maintenance.apply_optimize(
                 st.spark, table, target_mb, zorder=zorder)
-            self._refresh_everywhere(table)
+            self._refresh_everywhere(table, st.spark)
             return StatementResult("query", df=report)
 
         an = maintenance.parse_analyze(sql)
@@ -1304,7 +1309,7 @@ class Engine:
                 self.warehouse.prepare_write(st.spark, t, overwrite=True)
             import_database(st.spark, target, tables)
             for t in tables:
-                self._refresh_everywhere(t)
+                self._refresh_everywhere(t, st.spark)
                 self.warehouse.record(st.spark, t)
             return StatementResult("update", affected_rows=len(tables))
 
@@ -1331,7 +1336,7 @@ class Engine:
             n = _counted_write(
                 reader.load(path),
                 lambda d: d.write.mode("append").insertInto(src))
-            self._refresh_everywhere(src)
+            self._refresh_everywhere(src, st.spark)
             self.warehouse.record(st.spark, src)
             return StatementResult("update", affected_rows=n)
 
@@ -1340,7 +1345,7 @@ class Engine:
             table, version = res
             report = maintenance.apply_restore(
                 st.spark, table, version, self.warehouse)
-            self._refresh_everywhere(table)
+            self._refresh_everywhere(table, st.spark)
             self.warehouse.record(st.spark, table)
             return StatementResult("query", df=report)
 
@@ -1362,7 +1367,7 @@ class Engine:
             self.warehouse.snapshot(st.spark, table)
             maintenance.apply_alter(
                 st.spark, kind, table, args, warehouse=self.warehouse)
-            self._refresh_everywhere(table)
+            self._refresh_everywhere(table, st.spark)
             return StatementResult("update", affected_rows=0)
 
         target = dml_target(sql)
@@ -1384,7 +1389,7 @@ class Engine:
                     self._txn_snapshot(st, target)
                 self.warehouse.snapshot(st.spark, target)
                 affected = dml.apply_merge(st.spark, mrg)
-                self._refresh_everywhere(target)
+                self._refresh_everywhere(target, st.spark)
                 return StatementResult("update", affected_rows=affected)
             upd = dml.parse_update(sql)
             dele = dml.parse_delete(sql)
@@ -1401,7 +1406,7 @@ class Engine:
                 else:
                     _, where = dele
                     affected = dml.apply_delete(st.spark, target, where)
-                self._refresh_everywhere(target)
+                self._refresh_everywhere(target, st.spark)
                 return StatementResult("update", affected_rows=affected)
             # DML path: runs eagerly inside spark.sql(). Affected count
             # is measured as the table's row-count delta — count() on a
@@ -1412,7 +1417,7 @@ class Engine:
                 self._txn_snapshot(st, target)
             before = self._table_count(st, target)
             df = st.spark.sql(sql, args=args)
-            self._refresh_everywhere(target)
+            self._refresh_everywhere(target, st.spark)
             after = self._table_count(st, target)
             affected = abs(after - before) if before is not None else None
             return StatementResult("update", df=df, affected_rows=affected)
@@ -1514,7 +1519,7 @@ class Engine:
         txn = st.txn
         if txn is None or table in txn.backups:
             return
-        if not st.spark.catalog.tableExists(table):
+        if table_metadata(st.spark, table) is None:
             txn.backups[table] = None
             return
         backup = f"{table}__txn_{txn.txn_id}"
@@ -1546,7 +1551,7 @@ class Engine:
                 st.spark.sql(f"DROP TABLE IF EXISTS {table}")
             else:
                 st.spark.table(backup).write.mode("overwrite").saveAsTable(table)
-                self._refresh_everywhere(table)
+                self._refresh_everywhere(table, st.spark)
                 st.spark.sql(f"DROP TABLE IF EXISTS {backup}")
         # a rollback drops the tables the transaction created
         self._invalidate_plans()
@@ -1558,19 +1563,31 @@ class Engine:
         deleted part files)."""
         attached = self.warehouse.reattach_all(self.spark)
         for name in attached:
-            self._refresh_everywhere(name)
+            self._refresh_everywhere(name, self.spark)
         return attached
 
-    def _refresh_everywhere(self, table: str) -> None:
-        """Invalidate a table's relation cache in every session — the
-        cache is per-SparkSession, so an overwrite in one session would
-        otherwise leave stale file listings in the others — and then
-        the cached plans that read it (every write path calls this)."""
-        for sp in [self.spark] + [s.spark for s in self.sessions.values()]:
-            try:
-                sp.catalog.refreshTable(table)
-            except Exception:
-                pass
+    def _refresh_everywhere(self, table: str, spark: SparkSession) -> None:
+        """Make every session read ``table`` as a write in ``spark``
+        left it; every write path calls this. One
+        ``catalog.refreshTable`` in ``spark`` refreshes the table's file
+        index and the cached data Spark shares across sessions (CACHE
+        TABLE); every other session then drops its own relation-cache
+        entry (``SessionCatalog.refreshTable``), so its next read
+        resolves and lists the table anew. The sessions are read under
+        the engine lock, so one opened or closed meanwhile cannot break
+        the loop. The cached plans that read the table go stale last."""
+        try:
+            spark.catalog.refreshTable(table)
+        except Exception:
+            pass
+        with self._lock:
+            others = [self.spark] + [s.spark for s in self.sessions.values()]
+        for sp in others:
+            if sp is not spark:
+                try:
+                    drop_cached_relation(sp, table)
+                except AnalysisException:  # a name the parser refuses
+                    pass
         with self._lock:
             self._plan_seq += 1
             self._written_at[_table_key(table)] = self._plan_seq
@@ -1686,7 +1703,7 @@ class Engine:
         Restricted to query statements (documented deviation: DuckDB
         also accepts DML here) so the EXPLAIN prefix can never smuggle
         a write past a readonly session's statement classifier."""
-        if not _QUERY_PREFIX_RE.match(inner_sql):
+        if not _QUERY_PREFIX_RE.match(statement_body(inner_sql)):
             raise ValueError(
                 "EXPLAIN ANALYZE supports query statements only")
         result = self._run_statement(st, inner_sql, args)
@@ -1761,7 +1778,7 @@ class Engine:
         schema = None  # with markers: learned on the first execution
         if not params and not n_pos:
             schema = (self._run_statement(st, sql).df.schema
-                      if _QUERY_PREFIX_RE.match(sql)
+                      if _QUERY_PREFIX_RE.match(statement_body(sql))
                       or _READ_COMMAND_RE.match(sql) else StructType([]))
         names = params or [f"param_{i + 1}" for i in range(n_pos)]
         ps = PreparedStatement(
@@ -1849,15 +1866,20 @@ class Engine:
                     self.warehouse.snapshot(st.spark, table)
                 except Exception:
                     pass
-            self.warehouse.prepare_write(st.spark, table,
-                                         overwrite=mode == "replace")
+            meta = self.warehouse.prepare_write(
+                st.spark, table, overwrite=mode == "replace")
             if mode == "append":
-                df = df.select(*st.spark.table(table).schema.fieldNames())
+                if meta is None:
+                    raise ValueError(
+                        f"ingest append: no such table {table!r}")
+                df = df.select(*meta.schema.fieldNames())
             n = _counted_write(
                 df, lambda d: d.write.mode(save_mode).saveAsTable(table))
             sp.set_attribute("rows", n)
-            self._refresh_everywhere(table)
-            self.warehouse.record(st.spark, table)
+            self._refresh_everywhere(table, st.spark)
+            # an append leaves the metadata it read unchanged
+            self.warehouse.record(
+                st.spark, table, meta if mode == "append" else None)
             if received is not None and n != received:
                 raise RuntimeError(
                     f"ingest into {table}: received {received} rows, "
@@ -1982,9 +2004,10 @@ class Engine:
                 raise ValueError("PRAGMA table_files requires a table")
             import os
 
-            from gizmosql_spark import maintenance
-
-            loc = maintenance._table_location(spark, arg)
+            meta = table_metadata(spark, arg)
+            if meta is None:
+                raise ValueError(f"PRAGMA table_files: no such table {arg!r}")
+            loc = meta.location
             rows = []
             if loc and os.path.isdir(loc):
                 for root, _d, files in os.walk(loc):
@@ -2015,7 +2038,7 @@ class Engine:
                 if os.path.isdir(os.path.join(arg, d)))
             import_database(spark, arg, tables)
             for t in tables:
-                self._refresh_everywhere(t)
+                self._refresh_everywhere(t, spark)
             return StatementResult("update", affected_rows=len(tables))
         raise ValueError(f"unsupported PRAGMA: {name}")
 

@@ -32,6 +32,8 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 
+from gizmosql_spark.warehouse import table_metadata
+
 _IDENT = r"[A-Za-z_][\w.]*|`[^`]+`"
 _COL = r"[A-Za-z_]\w*|`[^`]+`"
 
@@ -263,13 +265,6 @@ def apply_alter(spark: SparkSession, kind: str, table: str, args,
     _replace_table(spark, table, post, warehouse=warehouse)
 
 
-def _table_location(spark: SparkSession, table: str) -> str | None:
-    for row in spark.sql(f"DESCRIBE FORMATTED {table}").collect():
-        if (row["col_name"] or "").strip() == "Location":
-            return (row["data_type"] or "").strip().removeprefix("file:")
-    return None
-
-
 def _file_stats(location: str) -> tuple[int, int]:
     """(n_data_files, total_bytes) under a table location."""
     n = total = 0
@@ -405,8 +400,9 @@ def apply_optimize(spark: SparkSession, table: str,
     convention)."""
     from gizmosql_spark import dml
 
-    location = _table_location(spark, table)
-    if location is None or not os.path.isdir(location):
+    meta = table_metadata(spark, table)
+    location = meta.location if meta is not None else ""
+    if not location or not os.path.isdir(location):
         raise ValueError(f"OPTIMIZE: {table!r} has no file location")
     files_before, bytes_total = _file_stats(location)
     n_out = max(1, math.ceil(bytes_total / (target_mb * 1024 * 1024)))

@@ -15,7 +15,7 @@ from __future__ import annotations
 
 import re
 
-from gizmosql_spark.dialect import _mask_literals
+from gizmosql_spark.dialect import _mask_literals, statement_body
 
 #: remote schemes allowed for non-admin reads (admin_command_guard.cpp:68-76)
 REMOTE_SCHEMES = (
@@ -114,11 +114,12 @@ def check_admin_gate(sql: str, is_admin: bool) -> None:
 
 def check_readonly(sql: str, role: str) -> None:
     """Reject write statements for the readonly role
-    (duckdb_statement.cpp:1080-1094). TEMP VIEW creation is allowed
-    (session-local, like DuckDB temp schema writes)."""
+    (duckdb_statement.cpp:1080-1094), a write behind leading comments
+    or a WITH list included (``statement_body``). TEMP VIEW creation is
+    allowed (session-local, like DuckDB temp schema writes)."""
     if role != "readonly":
         return
-    masked = _mask_literals(sql)
+    masked = _mask_literals(statement_body(sql))
     m = _WRITE_STMT_RE.match(masked)
     if m and not re.match(
         r"^\s*CREATE\s+(?:OR\s+REPLACE\s+)?TEMP(?:ORARY)?\s+VIEW\b",

@@ -23,6 +23,8 @@ import json
 
 from pyspark.sql import DataFrame, SparkSession
 
+from gizmosql_spark.warehouse import table_metadata
+
 
 def read_parquet(spark: SparkSession, path: str) -> DataFrame:
     """read_parquet('glob') — vectorized scan, pushdown-capable."""
@@ -167,26 +169,6 @@ def copy_to(df: DataFrame, path: str, fmt: str = "parquet",
     writer.save(path)
 
 
-def _table_layout(spark: SparkSession, name: str) -> dict | None:
-    """Bucket spec of a catalog table (None when unbucketed)."""
-    d = {}
-    try:
-        for row in spark.sql(f"DESCRIBE FORMATTED {name}").collect():
-            k = (row["col_name"] or "").strip()
-            if k:
-                d[k] = (row["data_type"] or "").strip()
-    except Exception:
-        return None
-    if not d.get("Num Buckets"):
-        return None
-    cols = [c.strip(" `") for c in
-            d.get("Bucket Columns", "").strip("[]").split(",") if c.strip(" `")]
-    sort = [c.strip(" `") for c in
-            d.get("Sort Columns", "").strip("[]").split(",") if c.strip(" `")]
-    return {"num_buckets": int(d["Num Buckets"]),
-            "bucket_columns": cols, "sort_columns": sort or cols}
-
-
 def export_database(spark: SparkSession, out_dir: str, tables: list[str] | None = None) -> dict[str, int]:
     """EXPORT DATABASE analog: every (or named) catalog table → parquet
     under out_dir, plus a ``_layout.json`` carrying bucket specs so an
@@ -202,9 +184,9 @@ def export_database(spark: SparkSession, out_dir: str, tables: list[str] | None 
         df = spark.table(name)
         df.write.mode("overwrite").parquet(f"{out_dir}/{name}")
         counts[name] = df.count()
-        lay = _table_layout(spark, name)
-        if lay:
-            layouts[name] = lay
+        meta = table_metadata(spark, name)
+        if meta is not None and meta.buckets:
+            layouts[name] = meta.buckets
     _os.makedirs(out_dir, exist_ok=True)
     with open(f"{out_dir}/_layout.json", "w", encoding="utf-8") as f:
         _json.dump({"version": 1, "layouts": layouts}, f, indent=1)

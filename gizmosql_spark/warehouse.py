@@ -40,15 +40,93 @@ import shutil
 import tempfile
 import threading
 import time
+from dataclasses import dataclass
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import SparkSession
+from pyspark.sql.types import StructType, _parse_datatype_json_string
 
 _IDENT_RE = re.compile(r"^[A-Za-z_][\w.]*$")
+
+#: entry fields an upsert does not compare: the archive history it
+#: keeps and the time of the write
+_UNCOMPARED_FIELDS = ("versions", "recorded_at")
 
 
 def warehouse_dir(spark: SparkSession) -> str:
     return spark.conf.get(
         "spark.sql.warehouse.dir", "spark-warehouse").removeprefix("file:")
+
+
+@dataclass(frozen=True)
+class TableMetadata:
+    """A table's or view's entry in a session catalog."""
+
+    table_type: str  # MANAGED, EXTERNAL or VIEW
+    temporary: bool
+    schema: StructType
+    location: str  # without the file: scheme; "" for a view
+    provider: str
+    view_text: str
+    #: num_buckets, bucket_columns, sort_columns; None when unbucketed
+    buckets: dict | None
+
+
+def _column_list(text: str) -> list[str]:
+    """``[`a`, `b`]`` → ``["a", "b"]``."""
+    return [c.strip(" `") for c in text.strip("[]").split(",")
+            if c.strip(" `")]
+
+
+def _identifier(state, table: str):
+    """``table`` as a JVM ``TableIdentifier`` of the session catalog."""
+    parts = table.split(".")
+    if len(parts) == 3 and parts[0].lower() == "spark_catalog":
+        table = ".".join(parts[1:])
+    return state.sqlParser().parseTableIdentifier(table)
+
+
+def drop_cached_relation(spark: SparkSession, table: str) -> None:
+    """Drop ``spark``'s relation-cache entry for ``table``
+    (``SessionCatalog.refreshTable``), so the session's next read
+    resolves the table and lists its files anew. Unlike
+    ``catalog.refreshTable`` it resolves nothing and lists no file."""
+    state = spark._jsparkSession.sessionState()
+    state.catalog().refreshTable(_identifier(state, table))
+
+
+def table_metadata(spark: SparkSession, table: str) -> TableMetadata | None:
+    """What ``spark``'s catalog holds for ``table`` (a temp view first,
+    as SQL resolves names), or None when it holds no such name.
+
+    One ``SessionCatalog.getTempViewOrPermanentTableMetadata`` lookup:
+    no statement is parsed or analyzed, no relation is resolved and no
+    file is listed. The fields are those ``DESCRIBE FORMATTED`` prints,
+    read from the same map (``CatalogTable.toLinkedHashMap``)."""
+    state = spark._jsparkSession.sessionState()
+    try:
+        meta = state.catalog().getTempViewOrPermanentTableMetadata(
+            _identifier(state, table))
+    except AnalysisException:
+        return None
+    d: dict[str, str] = {}
+    for item in meta.toLinkedHashMap().mkString("\x1e").split("\x1e"):
+        key, _, value = item.partition(" -> ")
+        d[key] = value.strip()
+    buckets = None
+    if d.get("Num Buckets"):
+        buckets = {"num_buckets": int(d["Num Buckets"]),
+                   "bucket_columns": _column_list(d.get("Bucket Columns", "")),
+                   "sort_columns": _column_list(d.get("Sort Columns", ""))}
+    return TableMetadata(
+        table_type=d.get("Type", "").upper(),
+        # a temp view's identifier carries no catalog
+        temporary="Catalog" not in d,
+        schema=_parse_datatype_json_string(meta.schema().json()),
+        location=d.get("Location", "").removeprefix("file:"),
+        provider=d.get("Provider", ""),
+        view_text=d.get("View Text", ""),
+        buckets=buckets)
 
 
 class WarehouseCatalog:
@@ -185,82 +263,66 @@ class WarehouseCatalog:
     def upsert_entry(self, name: str, entry: dict) -> None:
         """Low-level manifest upsert (the CAS-protected write path —
         ``record`` builds the entry from a live table and lands here).
-        Preserves any snapshot-version history already recorded."""
-        def _apply(tables: dict[str, dict]) -> dict[str, dict]:
-            prior = tables.get(name, {}).get("versions")
+        Preserves any snapshot-version history already recorded. An
+        entry that matches the recorded one in everything but its
+        ``recorded_at`` time writes no commit."""
+        def _apply(tables: dict[str, dict]) -> dict[str, dict] | None:
+            prior = tables.get(name, {})
             e = dict(entry)
-            if prior:
-                e["versions"] = prior
+            if prior.get("versions"):
+                e["versions"] = prior["versions"]
+
+            def fields(x: dict) -> dict:
+                return {k: v for k, v in x.items()
+                        if k not in _UNCOMPARED_FIELDS}
+
+            if name in tables and fields(prior) == fields(e):
+                return None
             tables[name] = e
             return tables
 
         with self._lock:
             self._mutate(_apply)
 
-    # --- describe helpers ---------------------------------------------
-
-    @staticmethod
-    def _describe(spark: SparkSession, table: str) -> dict[str, str]:
-        out: dict[str, str] = {}
-        for row in spark.sql(f"DESCRIBE FORMATTED {table}").collect():
-            key = (row["col_name"] or "").strip()
-            if key:
-                out[key] = (row["data_type"] or "").strip()
-        return out
-
-    def record(self, spark: SparkSession, table: str) -> None:
+    def record(self, spark: SparkSession, table: str,
+               meta: TableMetadata | None = None) -> None:
         """Upsert a table's manifest entry after a catalog write; a name
         the catalog no longer has (e.g. a DROP that already ran) is
-        forgotten, and a temp view is skipped.
-
-        The name is looked up with ``catalog.getTable``, which resolves
-        a temp view first, as SQL does. It runs no Spark job and lists
-        no other table."""
+        forgotten, and a temp view is skipped. ``meta`` is the table's
+        metadata when the caller already holds it as the write left it
+        (an append changes none); otherwise it is read
+        (``table_metadata``). An unchanged entry writes no commit."""
         if not _IDENT_RE.match(table or ""):
             return
         name = table.split(".")[-1].lower()
         try:
-            if not spark.catalog.tableExists(table):
-                self.forget(table)
-                return
-            t = spark.catalog.getTable(table)
-            if t.isTemporary:
-                return  # temp views have no files to persist
-            d = self._describe(spark, table)
-            if t.tableType == "VIEW" or d.get("View Text"):
-                # persistent VIEW: the in-memory catalog forgets the
-                # definition at exit — the manifest carries it (the
-                # reference keeps views in its database file)
-                self.upsert_entry(name, {
-                    "type": "view",
-                    "view_text": d.get("View Text", ""),
-                    "recorded_at": time.time(),
-                })
-                return
-            location = d.get("Location", "").removeprefix("file:")
-            if not location:
-                return
-            schema_ddl = ", ".join(
-                f"`{f.name}` {f.dataType.simpleString()}"
-                for f in spark.table(table).schema.fields)
-            entry: dict[str, object] = {
-                "schema": schema_ddl,
-                "location": location,
-                "format": (d.get("Provider") or "parquet").lower(),
-                "recorded_at": time.time(),
-            }
-            if d.get("Num Buckets"):
-                entry["num_buckets"] = int(d["Num Buckets"])
-                entry["bucket_columns"] = [
-                    c.strip(" `")
-                    for c in d.get("Bucket Columns", "").strip("[]").split(",")
-                    if c.strip(" `")]
-                entry["sort_columns"] = [
-                    c.strip(" `")
-                    for c in d.get("Sort Columns", "").strip("[]").split(",")
-                    if c.strip(" `")]
+            if meta is None:
+                meta = table_metadata(spark, table)
         except Exception:
             return
+        if meta is None:
+            self.forget(table)
+            return
+        if meta.temporary:
+            return  # temp views have no files to persist
+        if meta.table_type == "VIEW" or meta.view_text:
+            # persistent VIEW: the in-memory catalog forgets the
+            # definition at exit — the manifest carries it (the
+            # reference keeps views in its database file)
+            entry: dict[str, object] = {
+                "type": "view", "view_text": meta.view_text}
+        elif not meta.location:
+            return
+        else:
+            entry = {
+                "schema": ", ".join(
+                    f"`{f.name}` {f.dataType.simpleString()}"
+                    for f in meta.schema.fields),
+                "location": meta.location,
+                "format": (meta.provider or "parquet").lower(),
+                **(meta.buckets or {}),
+            }
+        entry["recorded_at"] = time.time()
         self.upsert_entry(name, entry)
 
     def forget(self, table: str) -> None:
@@ -348,8 +410,9 @@ class WarehouseCatalog:
         return attached
 
     def prepare_write(self, spark: SparkSession, table: str,
-                      overwrite: bool = False) -> None:
-        """Pre-saveAsTable conflict resolution.
+                      overwrite: bool = False) -> TableMetadata | None:
+        """Pre-saveAsTable conflict resolution; returns the table's
+        metadata as the write will find it (None when the name is free).
 
         - A warehouse directory with neither a catalog entry nor a
           manifest entry is a crash leftover — removed, so the write
@@ -360,35 +423,33 @@ class WarehouseCatalog:
           deleting its files, then collides with them creating the
           managed replacement at the same default location."""
         name = table.split(".")[-1].lower()
-        if "/" in table or not _IDENT_RE.match(table or ""):
-            return
         try:
-            exists = spark.catalog.tableExists(table)
+            meta = table_metadata(spark, table)
         except Exception:
-            return
-        if exists:
+            return None
+        if "/" in table or not _IDENT_RE.match(table or ""):
+            return meta
+        if meta is not None:
             if not overwrite:
-                return
-            try:
-                d = self._describe(spark, table)
-            except Exception:
-                return
-            location = d.get("Location", "").removeprefix("file:")
+                return meta
+            location = meta.location
             is_ours = os.path.realpath(location).startswith(
                 os.path.realpath(self.dir) + os.sep) if location else False
-            if d.get("Type", "").upper() == "EXTERNAL" and is_ours:
+            if meta.table_type == "EXTERNAL" and is_ours:
                 try:
                     spark.sql(f"DROP TABLE IF EXISTS {table}")
                 except Exception:
-                    return
+                    return meta
                 shutil.rmtree(location, ignore_errors=True)
-            return
+                return None
+            return meta
         with self._lock:
             if name in self._load():
-                return  # reattachable — let the caller's mode decide
+                return None  # reattachable — let the caller's mode decide
         stale = os.path.join(self.dir, name)
         if os.path.isdir(stale):
             shutil.rmtree(stale, ignore_errors=True)
+        return None
 
     # --- snapshots / time travel --------------------------------------
     #
@@ -407,14 +468,11 @@ class WarehouseCatalog:
         if not _IDENT_RE.match(table or ""):
             return None
         try:
-            # a first write has nothing to archive; DESCRIBE on a
-            # missing name would fail analysis and log it at ERROR
-            if not spark.catalog.tableExists(table):
-                return None
-            d = self._describe(spark, table)
+            meta = table_metadata(spark, table)
         except Exception:
             return None
-        location = d.get("Location", "").removeprefix("file:")
+        # a first write has nothing to archive
+        location = meta.location if meta is not None else ""
         if not location or not os.path.isdir(location):
             return None
         committed_v: list[int] = []

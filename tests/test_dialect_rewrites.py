@@ -10,11 +10,14 @@ from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from gizmosql_spark.dialect import (
+    ddl_write_target,
+    dml_target,
     expand_macros,
     parse_create_macro,
     rewrite_asof_join,
     rewrite_insert_upsert,
     rewrite_unpivot_statement,
+    statement_body,
 )
 
 _PLAIN = [
@@ -150,3 +153,28 @@ def test_pivot_literal_typing():
     assert _pivot_literal(decimal.Decimal("12.30")) == "12.30"
     assert _pivot_literal("o'neil") == "'o''neil'"
     assert _pivot_literal(7) == "7"
+
+
+@pytest.mark.parametrize("sql,body,target", [
+    ("WITH c AS (SELECT 5L AS id) INSERT INTO t SELECT * FROM c",
+     " INSERT INTO t SELECT * FROM c", "t"),
+    ("with a(x) as (select '(' as x), b as (select ')') select * from a",
+     " select * from a", None),
+    ("-- don't\nWITH RECURSIVE c AS (SELECT (1)) DELETE FROM u",
+     " DELETE FROM u", "u"),
+    ("/* c */ INSERT INTO t VALUES (1)", "INSERT INTO t VALUES (1)", "t"),
+    ("-- c\n  UPDATE u SET a = 1", "UPDATE u SET a = 1", "u"),
+    ("/* c */ WITH `c d` AS (SELECT 1) MERGE INTO m USING c ON true",
+     " MERGE INTO m USING c ON true", "m"),
+    ("SELECT 1", "SELECT 1", None),
+    (" WITH c AS (SELECT 1", "WITH c AS (SELECT 1", None),
+    ("WITHOUT x", "WITHOUT x", None),
+])
+def test_statement_body_looks_past_comments_and_a_with_list(sql, body, target):
+    assert statement_body(sql) == body
+    assert dml_target(sql) == target
+
+
+def test_ddl_target_looks_past_comments():
+    assert ddl_write_target("/* c */ DROP TABLE t") == "t"
+    assert ddl_write_target("-- c\nCREATE TEMP VIEW v AS SELECT 1") is None

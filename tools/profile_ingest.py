@@ -2,13 +2,24 @@
 
 Ingests a ROWS-row upload (the benchmark's DoPut payload: id, grp,
 qty, price, ts, tag) with ``mode="replace"``, then appends a second
-one, and prints where each call's time went:
+one, and prints where each call's time went. Two sessions are open,
+as in the benchmark's two-client ``point_mixed`` workload, and both
+have read the table, so the refresh reaches a session other than the
+writer's. Each key is self time (a timed call nested in another is
+counted once, in its own key):
 
 - ``create_df``: ``SparkSession.createDataFrame`` (the Arrow decode
   choice is made here; see ``engine._upload_frame``)
 - ``write_job``: ``engine._counted_write``, the single Spark job
-- ``snapshot`` / ``prepare_write`` / ``record``: the warehouse manifest
-- ``refresh``: ``Engine._refresh_everywhere`` (relation caches, plans)
+- ``metadata``: ``warehouse.table_metadata``, the catalog lookups
+  (``metadata_n`` counts them)
+- ``refresh``: ``Engine._refresh_everywhere``: the one full
+  ``catalog.refreshTable`` in the writer's session, the other
+  sessions' relation-cache drops, the plan invalidation
+- ``snapshot`` / ``prepare_write`` / ``record``: the warehouse
+  bookkeeping around the lookups
+- ``commit``: ``WarehouseCatalog._mutate``, the manifest read and,
+  when an entry changed, its commit (``commits_n`` counts commits)
 - ``other``: the rest of ``ingest`` (widening, partitions, checks)
 
 Usage:
@@ -29,16 +40,24 @@ import tempfile
 import time
 
 
-def _timed(owner, attr: str, key: str, split: dict) -> None:
+def _timed(owner, attr: str, key: str, split: dict, calls: dict,
+           stack: list) -> None:
+    """Wrap ``owner.attr`` to add its self time to ``split[key]`` and
+    count its calls in ``calls[key]``."""
     orig = getattr(owner, attr)
 
     @functools.wraps(orig)
     def wrapper(*args, **kwargs):
+        calls[key] = calls.get(key, 0) + 1
+        stack.append(0.0)  # time of the timed calls nested in this one
         t0 = time.perf_counter()
         try:
             return orig(*args, **kwargs)
         finally:
-            split[key] = split.get(key, 0.0) + time.perf_counter() - t0
+            spent = time.perf_counter() - t0
+            split[key] = split.get(key, 0.0) + spent - stack.pop()
+            if stack:
+                stack[-1] += spent
 
     setattr(owner, attr, wrapper)
 
@@ -63,26 +82,40 @@ def _profile(rows: int, runs: int) -> None:
     from pyspark.sql import SparkSession
 
     from gizmosql_spark import engine as engine_mod
+    from gizmosql_spark import warehouse as warehouse_mod
     from gizmosql_spark.engine import Engine
     from gizmosql_spark.warehouse import WarehouseCatalog
     from perfbench.datagen import put_payload
 
     split: dict[str, float] = {}
-    _timed(SparkSession, "createDataFrame", "create_df_s", split)
-    _timed(engine_mod, "_counted_write", "write_job_s", split)
-    _timed(WarehouseCatalog, "snapshot", "snapshot_s", split)
-    _timed(WarehouseCatalog, "prepare_write", "prepare_write_s", split)
-    _timed(WarehouseCatalog, "record", "record_s", split)
-    _timed(Engine, "_refresh_everywhere", "refresh_s", split)
+    calls: dict[str, int] = {}
+    stack: list[float] = []
+    for owner, attr, key in (
+            (SparkSession, "createDataFrame", "create_df_s"),
+            (engine_mod, "_counted_write", "write_job_s"),
+            (warehouse_mod, "table_metadata", "metadata_s"),
+            (Engine, "_refresh_everywhere", "refresh_s"),
+            (WarehouseCatalog, "snapshot", "snapshot_s"),
+            (WarehouseCatalog, "prepare_write", "prepare_write_s"),
+            (WarehouseCatalog, "record", "record_s"),
+            (WarehouseCatalog, "_mutate", "commit_s")):
+        _timed(owner, attr, key, split, calls, stack)
 
     eng = Engine()
     sid = eng.create_session(role="admin")
+    other = eng.create_session(role="admin")
     first = put_payload(1, rows)
     more = put_payload(2, rows, first_id=rows)
+    eng.ingest(sid, "profile_ingest", first, mode="replace")
+    for s in (sid, other):
+        eng.collect(s, eng.execute_sql(
+            s, "SELECT count(*) FROM profile_ingest"))
     try:
         for _ in range(runs):
             for mode, data in (("replace", first), ("append", more)):
                 split.clear()
+                calls.clear()
+                seq = eng.warehouse._state()[1]
                 t0 = time.perf_counter()
                 eng.ingest(sid, "profile_ingest", data, mode=mode)
                 total = time.perf_counter() - t0
@@ -92,6 +125,8 @@ def _profile(rows: int, runs: int) -> None:
                 out.update({k: round(v, 4)
                             for k, v in sorted(split.items())})
                 out["other_s"] = round(total - sum(split.values()), 4)
+                out["metadata_n"] = calls.get("metadata_s", 0)
+                out["commits_n"] = eng.warehouse._state()[1] - seq
                 print(json.dumps(out), flush=True)
     finally:
         eng.spark.stop()
