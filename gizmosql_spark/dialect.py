@@ -17,6 +17,7 @@ quote-aware scanner.
 
 from __future__ import annotations
 
+import functools
 import re
 from dataclasses import dataclass
 
@@ -132,44 +133,111 @@ def classify_command(sql: str):
     return None
 
 
-#: leading blanks and comments; a leading WITH; the head of one entry
-#: of its list, up to the parenthesis that opens the entry's query
-_LEAD_RE = re.compile(r"(?:\s|--[^\n]*(?:\n|$)|/\*(?:[^*]|\*(?!/))*\*/)*")
-_WITH_RE = re.compile(r"WITH(?:\s+RECURSIVE)?\s", re.IGNORECASE)
+#: where a comment, a literal or a quoted name may open
+_CODE_OPEN_RE = re.compile(r"['\"`]|--|/\*")
+
+
+def _mask_code(sql: str) -> str:
+    """``sql`` with its comments, string literals and the insides of its
+    backquoted identifiers replaced by spaces (same length; the
+    backquotes stay), by Spark's lexer rules: a ``'``/``"`` literal
+    takes backslash escapes unless it is raw (``r'…'``), ``--`` runs to
+    the end of a line not continued by a backslash, and ``/* */``
+    nests. What is left is only the code Spark parses. (``_mask_literals``
+    reads the DuckDB text the rewrites edit; this reads what Spark
+    runs.)"""
+    out = list(sql)
+    n = len(sql)
+    m = _CODE_OPEN_RE.search(sql)
+    while m is not None:
+        i, c = m.start(), m.group()
+        if c in ("'", '"'):
+            raw = (i > 0 and sql[i - 1] in "rR"
+                   and (i < 2 or not (sql[i - 2].isalnum()
+                                      or sql[i - 2] == "_")))
+            j = i + 1
+            while j < n and sql[j] != c:
+                j += 1 if raw or sql[j] != "\\" else 2
+            j, a = min(j + 1, n), i
+        elif c == "`":  # blank up to, not over, the closing quote
+            j = sql.find("`", i + 1)
+            j, a = (n if j < 0 else j), i + 1
+        elif c == "--":
+            j = i + 2
+            while j < n and sql[j] not in "\r\n":
+                j += 2 if sql.startswith("\\\n", j) else 1
+            a = i
+        else:
+            depth, j, a = 1, i + 2, i
+            while depth and j < n:
+                if sql.startswith("/*", j):
+                    depth, j = depth + 1, j + 2
+                elif sql.startswith("*/", j):
+                    depth, j = depth - 1, j + 2
+                else:
+                    j += 1
+        out[a:j] = " " * (j - a)
+        m = _CODE_OPEN_RE.search(sql, j + (c == "`"))
+    return "".join(out)
+
+
+#: on the masked text: a leading WITH; the head of one entry of its
+#: list, up to the parenthesis that opens the entry's query
+_WITH_RE = re.compile(r"\s*WITH(?:\s+RECURSIVE)?\s", re.IGNORECASE)
 _CTE_HEAD_RE = re.compile(
-    r"\s*(?:[A-Za-z_]\w*|`[^`]*`)\s*(?:\([^()]*\)\s*)?AS\s*\(",
+    r"\s*(?:[A-Za-z_]\w*|(?:`[^`]*`)+)\s*(?:\([^()]*\)\s*)?"
+    r"(?:MAX\s+RECURSION\s+LEVEL\s+\d+\s+)?AS\s*\(",
     re.IGNORECASE)
 _CTE_COMMA_RE = re.compile(r"\s*,")
+_FROM_RE = re.compile(r"FROM\b", re.IGNORECASE)
+
+
+@functools.lru_cache(maxsize=32)
+def _statement_start(sql: str) -> tuple[str, int]:
+    """``(_mask_code(sql), start)``: ``start`` is the offset of the
+    first token of the statement that runs, past leading blanks and
+    comments and a leading ``WITH`` list; in a FROM-first multi-insert
+    (``FROM s INSERT INTO t SELECT …``) it is the first top-level
+    INSERT. A WITH list that does not scan leaves it at the WITH. The
+    gates and the write-target lookups read one statement several
+    times, so the last few scans are kept."""
+    masked = _mask_code(sql)
+    lead = len(masked) - len(masked.lstrip())
+    m = _WITH_RE.match(masked)
+    start = lead
+    if m is not None:
+        pos = m.end()
+        while True:
+            head = _CTE_HEAD_RE.match(masked, pos)
+            if head is None:
+                break
+            depth, pos = 1, head.end()
+            while depth and pos < len(masked):
+                depth += {"(": 1, ")": -1}.get(masked[pos], 0)
+                pos += 1
+            if depth:
+                break
+            comma = _CTE_COMMA_RE.match(masked, pos)
+            if comma is None:
+                rest = masked[pos:]
+                start = pos + len(rest) - len(rest.lstrip())
+                break
+            pos = comma.end()
+    if _FROM_RE.match(masked, start):
+        insert = _find_top_level(masked, "INSERT", start)
+        if insert is not None:
+            start = insert
+    return masked, start
 
 
 def statement_body(sql: str) -> str:
-    """``sql`` past its leading blanks and comments and a leading
-    ``WITH`` list: the statement that runs. ``/* c */ INSERT …`` and
-    ``WITH c AS (…) INSERT …`` classify as the INSERT, ``WITH c AS (…)
-    SELECT …`` as a query. The list is scanned with literals masked, so
-    a parenthesis inside a string does not count; a list that does not
-    scan leaves the statement at its WITH."""
-    lead = _LEAD_RE.match(sql).end()
-    m = _WITH_RE.match(sql, lead)
-    if m is None:
-        return sql[lead:]
-    start = m.end()
-    masked = _mask_literals(sql[start:])
-    pos = 0
-    while True:
-        head = _CTE_HEAD_RE.match(masked, pos)
-        if head is None:
-            return sql[lead:]
-        depth, pos = 1, head.end()
-        while depth and pos < len(masked):
-            depth += {"(": 1, ")": -1}.get(masked[pos], 0)
-            pos += 1
-        if depth:
-            return sql[lead:]
-        comma = _CTE_COMMA_RE.match(masked, pos)
-        if comma is None:
-            return sql[start + pos:]
-        pos = comma.end()
+    """The statement that runs, as the classifiers read it: ``sql``
+    from its first token past leading comments and a leading ``WITH``
+    list, with comments, literals and quoted names blanked
+    (``_mask_code``). ``/* c */ INSERT …`` and ``WITH c AS (…) INSERT
+    …`` read as the INSERT, ``WITH c AS (…) SELECT …`` as a query."""
+    masked, start = _statement_start(sql)
+    return masked[start:]
 
 
 #: target-table extraction for DML statements (affected-count + txn
@@ -188,10 +256,7 @@ def dml_target(sql: str) -> str | None:
     """Target table of an INSERT/DELETE/UPDATE/MERGE, else None;
     leading comments and a WITH list are looked past
     (``statement_body``)."""
-    m = _DML_TARGET_RE.match(_mask_literals(statement_body(sql)))
-    if not m:
-        return None
-    return m.group(1).strip("`")
+    return _target(_DML_TARGET_RE, sql)
 
 
 #: write-DDL target extraction — the reference carries these statement
@@ -222,13 +287,19 @@ def ddl_write_target(sql: str) -> str | None:
     CREATE/DROP VIEW), else None; leading comments are looked past
     (``statement_body``). TEMP views are session-local state, not a
     catalog write, and are excluded."""
-    masked = _mask_literals(statement_body(sql))
-    if _TEMP_VIEW_RE.match(masked):
+    if _TEMP_VIEW_RE.match(statement_body(sql)):
         return None
-    m = _DDL_TARGET_RE.match(masked)
+    return _target(_DDL_TARGET_RE, sql)
+
+
+def _target(pattern: re.Pattern, sql: str) -> str | None:
+    """Group 1 of ``pattern`` matched on ``statement_body(sql)``, read
+    from ``sql`` itself (a quoted name is blanked in the body)."""
+    masked, start = _statement_start(sql)
+    m = pattern.match(masked[start:])
     if not m:
         return None
-    return m.group(1).strip("`")
+    return sql[start + m.start(1):start + m.end(1)].strip("`")
 
 
 def split_statements(script: str) -> list[str]:

@@ -309,17 +309,15 @@ _EXCHANGE_OPS_RE = re.compile(
 
 #: a Spark-level SET/RESET (engine SETs are claimed by classify_command)
 _SPARK_SET_RE = re.compile(r"^\s*(?:SET|RESET)\b", re.IGNORECASE)
-#: leading blanks, comments and opening parentheses
-_LEAD = r"^(?:\s|--[^\n]*(?:\n|$)|/\*(?:[^*]|\*(?!/))*\*/|\()*"
-#: a query: the only statement EXPLAIN ANALYZE runs (matched against
-#: ``statement_body``, so a write behind a WITH list is no query)
+#: a query: the only statement EXPLAIN ANALYZE runs. Both patterns are
+#: matched on ``statement_body`` (comments blanked, a WITH list looked
+#: past), so a write behind a WITH list is no query.
 _QUERY_PREFIX_RE = re.compile(
-    _LEAD + r"(SELECT|WITH|VALUES|TABLE|FROM)\b", re.IGNORECASE | re.DOTALL)
+    r"^[\s(]*(SELECT|WITH|VALUES|TABLE|FROM)\b", re.IGNORECASE)
 #: a read-only command prepare analyzes besides a query (EXPLAIN ANALYZE
 #: runs its query)
 _READ_COMMAND_RE = re.compile(
-    _LEAD + r"(SHOW|DESC|DESCRIBE|EXPLAIN(?!\s+ANALYZE))\b",
-    re.IGNORECASE | re.DOTALL)
+    r"^[\s(]*(SHOW|DESC|DESCRIBE|EXPLAIN(?!\s+ANALYZE))\b", re.IGNORECASE)
 
 
 def _file_relation(st: SessionState, fmt: str, path: str,
@@ -1777,9 +1775,10 @@ class Engine:
         n_pos = 0 if params else _count_positional_params(sql)
         schema = None  # with markers: learned on the first execution
         if not params and not n_pos:
+            body = statement_body(sql)
             schema = (self._run_statement(st, sql).df.schema
-                      if _QUERY_PREFIX_RE.match(statement_body(sql))
-                      or _READ_COMMAND_RE.match(sql) else StructType([]))
+                      if _QUERY_PREFIX_RE.match(body)
+                      or _READ_COMMAND_RE.match(body) else StructType([]))
         names = params or [f"param_{i + 1}" for i in range(n_pos)]
         ps = PreparedStatement(
             str(uuid.uuid4()), sql, schema, names, positional=n_pos > 0)
@@ -1877,9 +1876,7 @@ class Engine:
                 df, lambda d: d.write.mode(save_mode).saveAsTable(table))
             sp.set_attribute("rows", n)
             self._refresh_everywhere(table, st.spark)
-            # an append leaves the metadata it read unchanged
-            self.warehouse.record(
-                st.spark, table, meta if mode == "append" else None)
+            self.warehouse.record(st.spark, table)
             if received is not None and n != received:
                 raise RuntimeError(
                     f"ingest into {table}: received {received} rows, "

@@ -48,10 +48,15 @@ _DANGEROUS_SET_RE = re.compile(
     re.IGNORECASE,
 )
 
+#: a write, matched on ``statement_body``: besides the DML and DDL
+#: words, Spark's COMMENT ON, EXECUTE IMMEDIATE (its SQL text is a
+#: value the gate cannot read) and a BEGIN … END script (a bare BEGIN
+#: [TRANSACTION] is the engine's transaction command)
 _WRITE_STMT_RE = re.compile(
     r"^\s*(INSERT|UPDATE|DELETE|MERGE|CREATE|DROP|ALTER|TRUNCATE|REPLACE"
     r"|COPY|CALL|VACUUM|ANALYZE|REFRESH|CACHE|UNCACHE|GRANT|REVOKE|MSCK"
-    r"|OPTIMIZE|RESTORE)\b",
+    r"|OPTIMIZE|RESTORE|COMMENT|EXECUTE"
+    r"|BEGIN(?!(?:\s+TRANSACTION)?\s*;?\s*$))\b",
     re.IGNORECASE,
 )
 
@@ -114,12 +119,13 @@ def check_admin_gate(sql: str, is_admin: bool) -> None:
 
 def check_readonly(sql: str, role: str) -> None:
     """Reject write statements for the readonly role
-    (duckdb_statement.cpp:1080-1094), a write behind leading comments
-    or a WITH list included (``statement_body``). TEMP VIEW creation is
-    allowed (session-local, like DuckDB temp schema writes)."""
+    (duckdb_statement.cpp:1080-1094), read as Spark reads them
+    (``statement_body``): a write behind comments, a WITH list or a
+    FROM clause is a write. TEMP VIEW creation is allowed
+    (session-local, like DuckDB temp schema writes)."""
     if role != "readonly":
         return
-    masked = _mask_literals(statement_body(sql))
+    masked = statement_body(sql)
     m = _WRITE_STMT_RE.match(masked)
     if m and not re.match(
         r"^\s*CREATE\s+(?:OR\s+REPLACE\s+)?TEMP(?:ORARY)?\s+VIEW\b",

@@ -284,20 +284,16 @@ class WarehouseCatalog:
         with self._lock:
             self._mutate(_apply)
 
-    def record(self, spark: SparkSession, table: str,
-               meta: TableMetadata | None = None) -> None:
-        """Upsert a table's manifest entry after a catalog write; a name
-        the catalog no longer has (e.g. a DROP that already ran) is
-        forgotten, and a temp view is skipped. ``meta`` is the table's
-        metadata when the caller already holds it as the write left it
-        (an append changes none); otherwise it is read
-        (``table_metadata``). An unchanged entry writes no commit."""
+    def record(self, spark: SparkSession, table: str) -> None:
+        """Upsert a table's manifest entry from the table's metadata as
+        the write left it (``table_metadata``); a name the catalog no
+        longer has (e.g. a DROP that already ran) is forgotten, and a
+        temp view is skipped. An unchanged entry writes no commit."""
         if not _IDENT_RE.match(table or ""):
             return
         name = table.split(".")[-1].lower()
         try:
-            if meta is None:
-                meta = table_metadata(spark, table)
+            meta = table_metadata(spark, table)
         except Exception:
             return
         if meta is None:

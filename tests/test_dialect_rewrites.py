@@ -157,15 +157,46 @@ def test_pivot_literal_typing():
 
 @pytest.mark.parametrize("sql,body,target", [
     ("WITH c AS (SELECT 5L AS id) INSERT INTO t SELECT * FROM c",
-     " INSERT INTO t SELECT * FROM c", "t"),
+     "INSERT INTO t SELECT * FROM c", "t"),
     ("with a(x) as (select '(' as x), b as (select ')') select * from a",
-     " select * from a", None),
+     "select * from a", None),
     ("-- don't\nWITH RECURSIVE c AS (SELECT (1)) DELETE FROM u",
-     " DELETE FROM u", "u"),
+     "DELETE FROM u", "u"),
     ("/* c */ INSERT INTO t VALUES (1)", "INSERT INTO t VALUES (1)", "t"),
     ("-- c\n  UPDATE u SET a = 1", "UPDATE u SET a = 1", "u"),
     ("/* c */ WITH `c d` AS (SELECT 1) MERGE INTO m USING c ON true",
-     " MERGE INTO m USING c ON true", "m"),
+     "MERGE INTO m USING c ON true", "m"),
+    # comments inside and after the WITH list
+    ("WITH c AS (SELECT 5L AS id) /* x */ INSERT INTO t SELECT * FROM c",
+     "INSERT INTO t SELECT * FROM c", "t"),
+    ("WITH c AS (SELECT 5L AS id) -- x\nINSERT INTO t SELECT * FROM c",
+     "INSERT INTO t SELECT * FROM c", "t"),
+    ("WITH /* x */ c AS (SELECT 1) INSERT INTO t SELECT * FROM c",
+     "INSERT INTO t SELECT * FROM c", "t"),
+    ("WITH a AS (SELECT 1), /* x */ b AS (SELECT 2) INSERT INTO t TABLE b",
+     "INSERT INTO t TABLE b", "t"),
+    ("WITH c AS (SELECT 1 AS id -- )\n) INSERT INTO t TABLE c",
+     "INSERT INTO t TABLE c", "t"),
+    ("WITH c AS (SELECT 1 /* /* ) */ */ AS x) INSERT INTO t TABLE c",
+     "INSERT INTO t TABLE c", "t"),
+    ("WITH c AS (SELECT 1 AS x -- \\\n)\n) INSERT INTO t TABLE c",
+     "INSERT INTO t TABLE c", "t"),
+    # literals and quoted names Spark's lexer reads past
+    ("WITH c AS (SELECT 'a\\')' AS x) INSERT INTO t TABLE c",
+     "INSERT INTO t TABLE c", "t"),
+    ("WITH c AS (SELECT r'\\' AS x) INSERT INTO t TABLE c",
+     "INSERT INTO t TABLE c", "t"),
+    ("WITH c AS (SELECT 1 AS `)`) INSERT INTO `t u` TABLE c",
+     "INSERT INTO `   ` TABLE c", "t u"),
+    ("WITH RECURSIVE r(n) MAX RECURSION LEVEL 5 AS (SELECT 1) "
+     "INSERT INTO t TABLE r", "INSERT INTO t TABLE r", "t"),
+    # a FROM-first multi-insert reads as its first INSERT
+    ("FROM s INSERT INTO t SELECT *", "INSERT INTO t SELECT *", "t"),
+    ("WITH c AS (SELECT 1) FROM c INSERT INTO t SELECT *",
+     "INSERT INTO t SELECT *", "t"),
+    ("FROM (SELECT 1 AS insert) s SELECT *",
+     "FROM (SELECT 1 AS insert) s SELECT *", None),
+    ("SELECT '--' AS x -- c", "SELECT      AS x     ", None),
     ("SELECT 1", "SELECT 1", None),
     (" WITH c AS (SELECT 1", "WITH c AS (SELECT 1", None),
     ("WITHOUT x", "WITHOUT x", None),

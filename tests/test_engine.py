@@ -124,6 +124,9 @@ def test_readonly_blocks_writes():
         security.check_readonly("DROP TABLE t", "readonly")
     security.check_readonly("SELECT 1", "readonly")
     security.check_readonly("CREATE TEMP VIEW v AS SELECT 1", "readonly")
+    security.check_readonly("BEGIN TRANSACTION", "readonly")
+    with pytest.raises(security.CommandDenied):
+        security.check_readonly("BEGIN DELETE FROM t; END", "readonly")
     security.check_readonly("INSERT INTO t VALUES (1)", "user")
 
 

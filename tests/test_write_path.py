@@ -65,6 +65,30 @@ def test_append_leaves_manifest_alone(eng):
     assert "t_wp_commit" not in eng.warehouse.tables()
 
 
+def test_append_records_the_table_its_job_left(eng, monkeypatch):
+    """An append records the table's metadata as read after its job: a
+    schema-changing replace from another session that lands between
+    the append's first metadata read and its record stays recorded."""
+    sid, other = (eng.create_session(role="admin") for _ in range(2))
+    eng.ingest(sid, "t_wp_racing", pa.table({"id": [1]}), mode="replace")
+    real = Engine._refresh_everywhere
+    raced: list[bool] = []
+
+    def refresh(self, table, spark):
+        real(self, table, spark)
+        if not raced:
+            raced.append(True)
+            eng.ingest(other, "t_wp_racing",
+                       pa.table({"id": [2], "tag": ["x"]}), mode="replace")
+
+    monkeypatch.setattr(Engine, "_refresh_everywhere", refresh)
+    eng.ingest(sid, "t_wp_racing", pa.table({"id": [3]}), mode="append")
+    monkeypatch.undo()
+    assert raced
+    assert "`tag` string" in eng.warehouse.tables()["t_wp_racing"]["schema"]
+    eng.execute_sql(sid, "DROP TABLE t_wp_racing")
+
+
 def test_restart_reattaches_appended_table(spark):
     """A child interpreter creates a table and appends to it (the
     append writes no commit); a new Engine in this process re-attaches
@@ -183,6 +207,28 @@ def test_session_opened_during_refresh(eng, monkeypatch):
 _CTE_INSERT = "WITH c AS (SELECT 5L AS id) INSERT INTO t_wp_cte SELECT * FROM c"
 
 
+#: writes Spark's lexer and parser read past comments, literals, quoted
+#: names, a WITH list or a FROM clause to; each one wrote a row from a
+#: readonly session before the gate read statements as Spark does
+_READONLY_DENIED = (
+    _CTE_INSERT,
+    "/* c */ INSERT INTO t_wp_cte VALUES (9)",
+    "-- c\nINSERT INTO t_wp_cte VALUES (9)",
+    "WITH c AS (SELECT 5L AS id) /* x */ INSERT INTO t_wp_cte SELECT * FROM c",
+    "WITH c AS (SELECT 5L AS id) -- x\nINSERT INTO t_wp_cte SELECT * FROM c",
+    "WITH /* x */ c AS (SELECT 5L AS id) INSERT INTO t_wp_cte SELECT * FROM c",
+    "WITH a AS (SELECT 1), /* x */ c AS (SELECT 5L AS id) "
+    "INSERT INTO t_wp_cte SELECT * FROM c",
+    "WITH c AS (SELECT 5L AS id -- )\n) INSERT INTO t_wp_cte SELECT * FROM c",
+    "WITH c AS (SELECT 5L AS id, 'a\\')' AS s) "
+    "INSERT INTO t_wp_cte SELECT id FROM c",
+    "WITH c AS (SELECT 5L AS `)`) INSERT INTO t_wp_cte SELECT * FROM c",
+    "FROM t_wp_cte INSERT INTO t_wp_cte SELECT *",
+    "EXECUTE IMMEDIATE 'INSERT INTO t_wp_cte VALUES (9)'",
+    "BEGIN INSERT INTO t_wp_cte VALUES (9); END",
+)
+
+
 def test_write_behind_a_with_list(eng):
     """``WITH … INSERT`` is a write: a readonly session is denied (as
     for a write behind a comment), a session that read the table sees
@@ -192,10 +238,11 @@ def test_write_behind_a_with_list(eng):
     ro = eng.create_session(role="readonly")
     eng.ingest(admin, "t_wp_cte", pa.table({"id": [1]}), mode="replace")
     try:
-        for sql in (_CTE_INSERT, "/* c */ INSERT INTO t_wp_cte VALUES (9)",
-                    "-- c\nINSERT INTO t_wp_cte VALUES (9)"):
+        for sql in _READONLY_DENIED:
             with pytest.raises(CommandDenied):
                 eng.execute_sql(ro, sql)
+        fresh = eng.create_session(role="admin")
+        assert _count(eng, fresh, "t_wp_cte") == 1
         assert _count(eng, reader, "t_wp_cte") == 1
         eng.execute_sql(admin, _CTE_INSERT)
         assert _count(eng, reader, "t_wp_cte") == 2
