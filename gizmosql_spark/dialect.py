@@ -17,7 +17,6 @@ quote-aware scanner.
 
 from __future__ import annotations
 
-import functools
 import re
 from dataclasses import dataclass
 
@@ -192,15 +191,12 @@ _CTE_COMMA_RE = re.compile(r"\s*,")
 _FROM_RE = re.compile(r"FROM\b", re.IGNORECASE)
 
 
-@functools.lru_cache(maxsize=32)
 def _statement_start(sql: str) -> tuple[str, int]:
     """``(_mask_code(sql), start)``: ``start`` is the offset of the
     first token of the statement that runs, past leading blanks and
     comments and a leading ``WITH`` list; in a FROM-first multi-insert
     (``FROM s INSERT INTO t SELECT …``) it is the first top-level
-    INSERT. A WITH list that does not scan leaves it at the WITH. The
-    gates and the write-target lookups read one statement several
-    times, so the last few scans are kept."""
+    INSERT. A WITH list that does not scan leaves it at the WITH."""
     masked = _mask_code(sql)
     lead = len(masked) - len(masked.lstrip())
     m = _WITH_RE.match(masked)
