@@ -132,172 +132,6 @@ def classify_command(sql: str):
     return None
 
 
-#: where a comment, a literal or a quoted name may open
-_CODE_OPEN_RE = re.compile(r"['\"`]|--|/\*")
-
-
-def _mask_code(sql: str) -> str:
-    """``sql`` with its comments, string literals and the insides of its
-    backquoted identifiers replaced by spaces (same length; the
-    backquotes stay), by Spark's lexer rules: a ``'``/``"`` literal
-    takes backslash escapes unless it is raw (``r'…'``), ``--`` runs to
-    the end of a line not continued by a backslash, and ``/* */``
-    nests. What is left is only the code Spark parses. (``_mask_literals``
-    reads the DuckDB text the rewrites edit; this reads what Spark
-    runs.)"""
-    out = list(sql)
-    n = len(sql)
-    m = _CODE_OPEN_RE.search(sql)
-    while m is not None:
-        i, c = m.start(), m.group()
-        if c in ("'", '"'):
-            raw = (i > 0 and sql[i - 1] in "rR"
-                   and (i < 2 or not (sql[i - 2].isalnum()
-                                      or sql[i - 2] == "_")))
-            j = i + 1
-            while j < n and sql[j] != c:
-                j += 1 if raw or sql[j] != "\\" else 2
-            j, a = min(j + 1, n), i
-        elif c == "`":  # blank up to, not over, the closing quote
-            j = sql.find("`", i + 1)
-            j, a = (n if j < 0 else j), i + 1
-        elif c == "--":
-            j = i + 2
-            while j < n and sql[j] not in "\r\n":
-                j += 2 if sql.startswith("\\\n", j) else 1
-            a = i
-        else:
-            depth, j, a = 1, i + 2, i
-            while depth and j < n:
-                if sql.startswith("/*", j):
-                    depth, j = depth + 1, j + 2
-                elif sql.startswith("*/", j):
-                    depth, j = depth - 1, j + 2
-                else:
-                    j += 1
-        out[a:j] = " " * (j - a)
-        m = _CODE_OPEN_RE.search(sql, j + (c == "`"))
-    return "".join(out)
-
-
-#: on the masked text: a leading WITH; the head of one entry of its
-#: list, up to the parenthesis that opens the entry's query
-_WITH_RE = re.compile(r"\s*WITH(?:\s+RECURSIVE)?\s", re.IGNORECASE)
-_CTE_HEAD_RE = re.compile(
-    r"\s*(?:[A-Za-z_]\w*|(?:`[^`]*`)+)\s*(?:\([^()]*\)\s*)?"
-    r"(?:MAX\s+RECURSION\s+LEVEL\s+\d+\s+)?AS\s*\(",
-    re.IGNORECASE)
-_CTE_COMMA_RE = re.compile(r"\s*,")
-_FROM_RE = re.compile(r"FROM\b", re.IGNORECASE)
-
-
-def _statement_start(sql: str) -> tuple[str, int]:
-    """``(_mask_code(sql), start)``: ``start`` is the offset of the
-    first token of the statement that runs, past leading blanks and
-    comments and a leading ``WITH`` list; in a FROM-first multi-insert
-    (``FROM s INSERT INTO t SELECT …``) it is the first top-level
-    INSERT. A WITH list that does not scan leaves it at the WITH."""
-    masked = _mask_code(sql)
-    lead = len(masked) - len(masked.lstrip())
-    m = _WITH_RE.match(masked)
-    start = lead
-    if m is not None:
-        pos = m.end()
-        while True:
-            head = _CTE_HEAD_RE.match(masked, pos)
-            if head is None:
-                break
-            depth, pos = 1, head.end()
-            while depth and pos < len(masked):
-                depth += {"(": 1, ")": -1}.get(masked[pos], 0)
-                pos += 1
-            if depth:
-                break
-            comma = _CTE_COMMA_RE.match(masked, pos)
-            if comma is None:
-                rest = masked[pos:]
-                start = pos + len(rest) - len(rest.lstrip())
-                break
-            pos = comma.end()
-    if _FROM_RE.match(masked, start):
-        insert = _find_top_level(masked, "INSERT", start)
-        if insert is not None:
-            start = insert
-    return masked, start
-
-
-def statement_body(sql: str) -> str:
-    """The statement that runs, as the classifiers read it: ``sql``
-    from its first token past leading comments and a leading ``WITH``
-    list, with comments, literals and quoted names blanked
-    (``_mask_code``). ``/* c */ INSERT …`` and ``WITH c AS (…) INSERT
-    …`` read as the INSERT, ``WITH c AS (…) SELECT …`` as a query."""
-    masked, start = _statement_start(sql)
-    return masked[start:]
-
-
-#: target-table extraction for DML statements (affected-count + txn
-#: tracking; the reference reads counts from DuckDB's 1x1 BIGINT
-#: convention, duckdb_statement.cpp:2341-2380 — Spark returns no count,
-#: so the engine measures the target table instead)
-_DML_TARGET_RE = re.compile(
-    r"^\s*(?:INSERT\s+(?:OR\s+REPLACE\s+)?(?:INTO|OVERWRITE)(?:\s+TABLE)?"
-    r"|DELETE\s+FROM"
-    r"|UPDATE|MERGE\s+INTO)\s+([A-Za-z_][\w.]*|`[^`]+`)",
-    re.IGNORECASE,
-)
-
-
-def dml_target(sql: str) -> str | None:
-    """Target table of an INSERT/DELETE/UPDATE/MERGE, else None;
-    leading comments and a WITH list are looked past
-    (``statement_body``)."""
-    return _target(_DML_TARGET_RE, sql)
-
-
-#: write-DDL target extraction — the reference carries these statement
-#: classes in modified_databases and ACL-checks them exactly like DML
-#: (catalog_permissions_handler.cpp check sites)
-_DDL_TARGET_RE = re.compile(
-    r"^\s*(?:CREATE\s+(?:OR\s+REPLACE\s+)?(?:EXTERNAL\s+)?TABLE(?:\s+IF\s+NOT\s+EXISTS)?"
-    r"|REPLACE\s+TABLE"
-    r"|DROP\s+TABLE(?:\s+IF\s+EXISTS)?"
-    r"|ALTER\s+TABLE"
-    r"|TRUNCATE(?:\s+TABLE)?"
-    r"|CREATE\s+(?:OR\s+REPLACE\s+)?VIEW(?:\s+IF\s+NOT\s+EXISTS)?"
-    r"|DROP\s+VIEW(?:\s+IF\s+EXISTS)?"
-    r"|OPTIMIZE"
-    r"|RESTORE\s+TABLE"
-    r")\s+([A-Za-z_][\w.]*|`[^`]+`)",
-    re.IGNORECASE,
-)
-
-_TEMP_VIEW_RE = re.compile(
-    r"^\s*CREATE\s+(?:OR\s+REPLACE\s+)?(?:GLOBAL\s+)?TEMP(?:ORARY)?\s+VIEW",
-    re.IGNORECASE,
-)
-
-
-def ddl_write_target(sql: str) -> str | None:
-    """Target of a write DDL (CREATE/DROP/ALTER/TRUNCATE/REPLACE TABLE,
-    CREATE/DROP VIEW), else None; leading comments are looked past
-    (``statement_body``). TEMP views are session-local state, not a
-    catalog write, and are excluded."""
-    if _TEMP_VIEW_RE.match(statement_body(sql)):
-        return None
-    return _target(_DDL_TARGET_RE, sql)
-
-
-def _target(pattern: re.Pattern, sql: str) -> str | None:
-    """Group 1 of ``pattern`` matched on ``statement_body(sql)``, read
-    from ``sql`` itself (a quoted name is blanked in the body)."""
-    masked, start = _statement_start(sql)
-    m = pattern.match(masked[start:])
-    if not m:
-        return None
-    return sql[start + m.start(1):start + m.end(1)].strip("`")
-
-
 def split_statements(script: str) -> list[str]:
     """Split a multi-statement script on top-level semicolons.
 
@@ -601,6 +435,17 @@ def _pivot_literal(v) -> str:
     return f"'{q}'"
 
 
+def pivot_source(sql: str) -> str | None:
+    """A query reading what DuckDB's ``PIVOT`` statement reads (its
+    table, pivot column and aggregates), else None: the statement's
+    distinct-value probe is a job, so its source is gated first."""
+    m = _PIVOT_STMT_RE.match(sql)
+    if m is None:
+        return None
+    table, on_col, using, _ = m.groups()
+    return f"SELECT {on_col}, {using or 'count(*)'} FROM {table}"
+
+
 def rewrite_pivot_statement(sql: str, spark) -> str:
     """DuckDB's simplified ``PIVOT t ON col [USING aggs] [GROUP BY
     cols]`` statement → standard Spark PIVOT. DuckDB detects the
@@ -678,6 +523,39 @@ _ON_CONFLICT_RE = re.compile(
 )
 
 
+def _upsert(sql: str):
+    """``(or_replace, table, columns, source, on_conflict_match)`` of a
+    DuckDB upsert (the source ends before its ON CONFLICT clause), else
+    None."""
+    m = _UPSERT_RE.match(sql)
+    if m is None:
+        return None
+    or_replace, table, col_list, source = m.groups()
+    oc = _ON_CONFLICT_RE.search(_mask_literals(sql))
+    if not or_replace and oc is None:
+        return None
+    if oc is not None:
+        # slice from the ORIGINAL sql (masking only located it)
+        source = source[: oc.start() - m.start(4)]
+    return or_replace, table, col_list, source, oc
+
+
+def upsert_parts(sql: str) -> tuple[str, list[str]] | None:
+    """A DuckDB upsert's target table and the Spark statements that
+    read what it reads: the INSERT without OR REPLACE and ON CONFLICT,
+    and a DO UPDATE SET list as a select list. None for any other
+    statement."""
+    up = _upsert(sql)
+    if up is None:
+        return None
+    _, table, col_list, source, oc = up
+    cols = f" ({col_list})" if col_list else ""
+    texts = [f"INSERT INTO {table}{cols} {source.strip().rstrip(';')}"]
+    if oc is not None and oc.group(3):
+        texts.append(f"SELECT {oc.group(3)}")
+    return table, texts
+
+
 def rewrite_insert_upsert(sql: str, spark, pk_of) -> str:
     """DuckDB upsert forms → MERGE INTO (executed by dml.apply_merge):
 
@@ -691,17 +569,12 @@ def rewrite_insert_upsert(sql: str, spark, pk_of) -> str:
 
     ``pk_of(table)`` supplies declared key columns when the conflict
     target is implicit. Plain INSERTs pass through unchanged."""
-    m = _UPSERT_RE.match(sql)
-    if m is None:
+    up = _upsert(sql)
+    if up is None:
         return sql
-    or_replace, table, col_list, source = m.groups()
-    oc = _ON_CONFLICT_RE.search(_mask_literals(sql))
-    if not or_replace and oc is None:
-        return sql
+    or_replace, table, col_list, source, oc = up
     conflict_cols, action, set_clause = None, None, None
     if oc is not None:
-        # slice from the ORIGINAL sql (masking only located it)
-        source = source[: oc.start() - m.start(4)]
         conflict_cols = (
             [c.strip() for c in oc.group(1).split(",")] if oc.group(1)
             else None)
@@ -1062,6 +935,12 @@ def rewrite_columns(sql: str, spark) -> str:
 
 _STAR_REPLACE_RE = re.compile(
     r"\*\s*REPLACE\s*\(([^()]*(?:\([^()]*\)[^()]*)*)\)", re.IGNORECASE)
+
+
+def star_replace_items(sql: str) -> str:
+    """``sql`` with each ``* REPLACE (items)`` read as ``*, items``: the
+    same relations and expressions, in a form Spark's parser reads."""
+    return _STAR_REPLACE_RE.sub(lambda m: "*, " + m.group(1), sql)
 
 
 def rewrite_star_replace(sql: str, spark) -> str:

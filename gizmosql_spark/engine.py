@@ -27,11 +27,11 @@ import re
 import threading
 import time
 import uuid
-from dataclasses import dataclass, field
+from dataclasses import dataclass, field, replace
 from typing import Any
 
 import pyarrow as pa
-from pyspark.errors import AnalysisException
+from pyspark.errors import AnalysisException, ParseException
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
@@ -44,8 +44,6 @@ from gizmosql_spark.dialect import (
     SetCommand,
     TxnCommand,
     classify_command,
-    ddl_write_target,
-    dml_target,
     extract_file_scans,
     extract_flight_scans,
     parse_attach_flight,
@@ -53,7 +51,6 @@ from gizmosql_spark.dialect import (
     replace_pseudo_functions,
     rewrite_settings_function,
     split_statements,
-    statement_body,
 )
 from gizmosql_spark.querylog import QueryLog
 from gizmosql_spark.session import get_spark
@@ -307,17 +304,10 @@ _EXCHANGE_OPS_RE = re.compile(
     r"Repartition\w*|RebalancePartitions|Intersect|Except)\b|"
     r"\b(?:scalar-subquery|exists|list)#\d")
 
-#: a Spark-level SET/RESET (engine SETs are claimed by classify_command)
-_SPARK_SET_RE = re.compile(r"^\s*(?:SET|RESET)\b", re.IGNORECASE)
-#: a query: the only statement EXPLAIN ANALYZE runs. Both patterns are
-#: matched on ``statement_body`` (comments blanked, a WITH list looked
-#: past), so a write behind a WITH list is no query.
-_QUERY_PREFIX_RE = re.compile(
-    r"^[\s(]*(SELECT|WITH|VALUES|TABLE|FROM)\b", re.IGNORECASE)
-#: a read-only command prepare analyzes besides a query (EXPLAIN ANALYZE
-#: runs its query)
-_READ_COMMAND_RE = re.compile(
-    r"^[\s(]*(SHOW|DESC|DESCRIBE|EXPLAIN(?!\s+ANALYZE))\b", re.IGNORECASE)
+#: plan roots of the DML that runs on the DML path (a FROM-first
+#: multi-insert is a Union of INSERTs)
+_DML_ROOTS = frozenset({"InsertIntoStatement", "UpdateTable",
+                        "DeleteFromTable", "MergeIntoTable", "Union"})
 
 
 def _file_relation(st: SessionState, fmt: str, path: str,
@@ -345,6 +335,71 @@ def _file_relation(st: SessionState, fmt: str, path: str,
         telemetry.add_counter("engine.file_relations_total",
                               result="hit" if hit else "miss")
     return df, ident
+
+
+def _resolve_stars(st: SessionState, sql: str) -> str:
+    """``sql`` with its schema-resolved rewrites applied (COLUMNS('re'),
+    ``* REPLACE``, ORDER BY ALL), which read the schemas of the tables
+    it names."""
+    from gizmosql_spark.dialect import (
+        rewrite_columns,
+        rewrite_order_by_all,
+        rewrite_star_replace,
+    )
+
+    if "COLUMNS" in sql.upper():
+        # ADD COLUMNS etc. never match the call-form regex
+        sql = rewrite_columns(sql, st.spark)
+    if "REPLACE" in sql.upper():
+        sql = rewrite_star_replace(sql, st.spark)
+    if "ALL" in sql.upper():
+        sql = rewrite_order_by_all(sql, st.spark)
+    return sql
+
+
+@dataclass
+class _Rewritten:
+    """A statement after its text rewrites, classified and gated
+    (``Engine._rewrite``): the text that runs, what it does, and what
+    must be registered or fetched before it runs."""
+
+    sql: str
+    stmt: security.Statement
+    #: an engine command, (name, what its parser read): the rewrites
+    #: stop at some (secret, macro, pivot, summarize, explain, pragma);
+    #: ``Engine._classify`` parses the rest, which run once the views
+    #: the statement reads are registered (``Engine._run_command``)
+    command: tuple | None = None
+    #: it registers views of its own other than file scans, so its
+    #: plan is never reused (``Engine._run_statement``)
+    ephemeral: bool = False
+    #: table functions whose call became a view (``_register_table_fn``)
+    table_fns: list = field(default_factory=list)
+    #: (view, table, from, to) of each table_changes call
+    changes: list = field(default_factory=list)
+    #: (view, table, version or timestamp) of each time-travel read
+    travels: list = field(default_factory=list)
+    #: (view, operator, dir) of each pipeline_op call
+    pops: list = field(default_factory=list)
+    #: (view, format, path) of each file scan
+    scans: list = field(default_factory=list)
+    #: (view, uri, query, user, password) of each flight_scan call
+    fscans: list = field(default_factory=list)
+    #: (view, alias, table) of each read of an attached engine's table
+    remote: list = field(default_factory=list)
+
+    @property
+    def dml(self) -> str | None:
+        """The first table a DML statement writes (None: not DML)."""
+        writes = self.stmt.writes
+        return (".".join(writes[0])
+                if writes and self.stmt.root in _DML_ROOTS else None)
+
+    @property
+    def targets(self) -> list[str]:
+        """The catalog tables and views the statement writes."""
+        return [".".join(p) for p in self.stmt.writes
+                if p and p[0].lower() != "global_temp"]
 
 
 @dataclass(frozen=True)
@@ -700,7 +755,7 @@ class Engine:
             # the reference): Spark has no secondary indexes — recorded
             # as engine metadata, surfaced via engine_index_info
             # (SURVEY §2C DDL row).
-            security.check_readonly(sql, st.role)
+            security.check_readonly(security.Statement("write"), st.role)
             reg = self.system_catalog.registry
             if cmd.action == "create":
                 reg.declare_index(cmd.table, cmd.name, *cmd.columns)
@@ -712,32 +767,31 @@ class Engine:
             )
 
         t_start = time.perf_counter()
-        self._gate(st, sql, entry)
+        rw = self._gate(st, sql, args, entry)
         # ATTACH/DETACH of remote Flight engines (adbc_scanner analog;
         # reaches here only for admins — the admin gate above blocks
         # ATTACH/DETACH for everyone else)
-        att, det = parse_attach_flight(sql), parse_detach(sql)
-        if att is not None or det in st.attached:
-            if att is not None:
-                alias, uri, user, pw = att
+        name, parsed = rw.command or (None, None)
+        if name in ("attach", "detach"):
+            if name == "attach":
+                alias, uri, user, pw = parsed
                 st.attached[alias] = (uri, user, pw)
                 info = {"attached": alias}
             else:
-                st.attached.pop(det)
-                info = {"detached": det}
+                st.attached.pop(parsed)
+                info = {"detached": parsed}
             self._record_outcome(st, sql, "ok", t_start)
             return StatementResult("set", info=info)
 
         self.system_catalog.observe_statement(sql)
-        write_target = dml_target(sql) or ddl_write_target(sql)
-        if write_target is not None:
-            self.warehouse.prepare_write(st.spark, write_target)
+        for target in rw.targets:
+            self.warehouse.prepare_write(st.spark, target)
         stmt_id = self.instr.statement(session_id, sql, entry, True)
         try:
             with self.telemetry.span(
                 "statement.execute", session=session_id,
                 user=st.username) as sp:
-                result = self._run_statement(st, sql, args, stmt_id, sp)
+                result = self._run_statement(st, rw, args, stmt_id, sp)
                 sp.set_attribute("statement.kind", result.kind)
                 if result.plan_cache is not None:
                     sp.set_attribute("plan_cache", result.plan_cache)
@@ -749,17 +803,12 @@ class Engine:
             raise
         if result.kind != "query":
             self._invalidate_plans()
-        if write_target is not None:
-            # keep the persistent manifest in step with catalog writes
-            # (record() no-ops for temp views; resolves to forget()
-            # when the table no longer exists, e.g. after DROP)
-            self.warehouse.record(st.spark, write_target)
-            ren = self._RENAME_TO_RE.match(sql)
-            if ren is not None:
-                # RENAME TO: the write target is the OLD name (now
-                # forgotten above); record the NEW name so the files
-                # survive a restart under it
-                self.warehouse.record(st.spark, ren.group(1).strip("`"))
+        # keep the persistent manifest in step with catalog writes
+        # (record() no-ops for temp views and resolves to forget() for
+        # a name that no longer exists: a dropped table, a renamed
+        # table's old name)
+        for target in rw.targets:
+            self.warehouse.record(st.spark, target)
         elapsed = self._record_outcome(st, sql, "ok", t_start)
         result.statement_id = stmt_id
         result.trace_id = sp.trace_id
@@ -772,34 +821,40 @@ class Engine:
                 rows_fetched=result.affected_rows)
         return result
 
-    def _gate(self, st: SessionState, sql: str, entry: str) -> None:
-        """The checks a statement passes before it runs or is prepared:
-        admin gate, readonly role, catalog ACL, system-catalog writes.
-        A denial is recorded (``_record_outcome`` and a failed statement
-        row under ``entry``) and raised."""
+    def _gate(self, st: SessionState, sql: str,
+              args: dict[str, Any] | None, entry: str) -> _Rewritten:
+        """Rewrite, classify and check a statement before it runs or is
+        prepared (``_rewrite``). A statement that fails here is recorded
+        (``_record_outcome`` and a failed statement row under ``entry``):
+        ``denied`` when a check rejects it, ``error`` when, for one, no
+        parser reads it."""
         t_start = time.perf_counter()
         try:
-            security.check_admin_gate(sql, st.is_admin)
-            security.check_readonly(sql, st.role)
-            if st.read_catalogs is not None or st.write_catalogs is not None:
-                try:
-                    current_cat = st.spark.catalog.currentCatalog()
-                except Exception:
-                    current_cat = security.DEFAULT_CATALOG
-                # write DDL (CREATE/DROP/ALTER/TRUNCATE TABLE, views)
-                # is ACL-checked like DML — the reference tracks these
-                # in modified_databases
-                security.check_catalog_access(
-                    sql, st.read_catalogs, st.write_catalogs,
-                    dml_target(sql) or ddl_write_target(sql),
-                    current_catalog=current_cat,
-                )
-            check_system_catalog_write(sql)
+            return self._rewrite(st, sql, args)
         except Exception as exc:
-            self._record_outcome(st, sql, "denied", t_start)
+            status = "denied" if isinstance(exc, PermissionError) else "error"
+            self._record_outcome(st, sql, status, t_start)
             self.instr.statement(
                 st.session_id, sql, entry, False, str(exc))
             raise
+
+    def _check(self, st: SessionState, stmt: security.Statement) -> None:
+        """The checks a classified statement passes: the admin gate (its
+        text rules ran before the rewrites), the readonly role, the
+        catalog ACL and system-catalog writes."""
+        security.check_admin_gate(None, st.is_admin, stmt)
+        security.check_readonly(stmt, st.role)
+        if st.read_catalogs is not None or st.write_catalogs is not None:
+            try:
+                current_cat = st.spark.catalog.currentCatalog()
+            except Exception:
+                current_cat = security.DEFAULT_CATALOG
+            conf = st.spark.conf
+            security.check_catalog_access(
+                stmt, st.read_catalogs, st.write_catalogs, current_cat,
+                lambda name: name.lower() == security.DEFAULT_CATALOG
+                or conf.get(f"spark.sql.catalog.{name}", None) is not None)
+        check_system_catalog_write(stmt)
 
     def _record_outcome(self, st: SessionState, sql: str, status: str,
                         t_start: float) -> float:
@@ -845,139 +900,113 @@ class Engine:
             self.catalog_log.close()
             self.catalog_log = None
 
-    _QUERY_LOG_FN_RE = __import__("re").compile(
-        r"\bengine_query_log\s*\(\s*\)", __import__("re").IGNORECASE
-    )
-    _CATALOG_LOG_FN_RE = __import__("re").compile(
-        r"\bengine_logs\s*\(\s*\)", __import__("re").IGNORECASE
-    )
-    _SECRETS_FN_RE = __import__("re").compile(
-        r"\bengine_secrets\s*\(\s*\)", __import__("re").IGNORECASE
-    )
-    _TABLE_CHANGES_RE = __import__("re").compile(
+    #: table functions whose call becomes a view the engine registers
+    #: for the statement (``_register_table_fn``); the last two only
+    #: admins may read
+    _TABLE_FNS = tuple(
+        (name, re.compile(rf"\b{name}\s*\(\s*\)", re.IGNORECASE))
+        for name in ("engine_query_log", "engine_macros", "engine_access_log",
+                     "engine_admission_stats", "engine_logs",
+                     "engine_secrets"))
+    _TABLE_CHANGES_RE = re.compile(
         r"\btable_changes\s*\(\s*'([A-Za-z_][\w.]*)'\s*,\s*(\d+)"
-        r"(?:\s*,\s*(\d+))?\s*\)",
-        __import__("re").IGNORECASE,
-    )
-    _ACCESS_LOG_FN_RE = __import__("re").compile(
-        r"\bengine_access_log\s*\(\s*\)", __import__("re").IGNORECASE
-    )
-    _MACROS_FN_RE = __import__("re").compile(
-        r"\bengine_macros\s*\(\s*\)", __import__("re").IGNORECASE
-    )
-    _EXPORT_DB_RE = __import__("re").compile(
-        r"^\s*(EXPORT|IMPORT)\s+DATABASE\s+'([^']+)'\s*;?\s*$",
-        __import__("re").IGNORECASE,
-    )
-    _RENAME_TO_RE = __import__("re").compile(
-        r"^\s*ALTER\s+TABLE\s+(?:[A-Za-z_][\w.]*|`[^`]+`)\s+RENAME"
-        r"\s+TO\s+([A-Za-z_][\w.]*|`[^`]+`)\s*;?\s*$",
-        __import__("re").IGNORECASE,
-    )
-    _ADMISSION_FN_RE = __import__("re").compile(
-        r"\bengine_admission_stats\s*\(\s*\)", __import__("re").IGNORECASE
-    )
-    _INSTR_VIEW_RE = __import__("re").compile(
+        r"(?:\s*,\s*(\d+))?\s*\)", re.IGNORECASE)
+    _INSTR_VIEW_RE = re.compile(
         r"\bengine_(?:instr_\w+|active_sessions|session_activity)\b",
-        __import__("re").IGNORECASE,
-    )
+        re.IGNORECASE)
     #: table functions that register a view per statement
-    _EPHEMERAL_VIEW_RES = (
-        _QUERY_LOG_FN_RE, _MACROS_FN_RE, _ACCESS_LOG_FN_RE,
-        _CATALOG_LOG_FN_RE, _SECRETS_FN_RE, _ADMISSION_FN_RE,
-        _INSTR_VIEW_RE, _TABLE_CHANGES_RE)
+    _EPHEMERAL_VIEW_RES = (*(fn_re for _, fn_re in _TABLE_FNS),
+                           _INSTR_VIEW_RE, _TABLE_CHANGES_RE)
+    _EXPORT_DB_RE = re.compile(
+        r"^\s*(EXPORT|IMPORT)\s+DATABASE\s+'([^']+)'\s*;?\s*$",
+        re.IGNORECASE)
+    _CHECKPOINT_RE = re.compile(r"^\s*CHECKPOINT\s*;?\s*$", re.IGNORECASE)
 
-    def _run_statement(self, st: SessionState, sql: str,
-                       args: dict[str, Any] | None = None,
-                       stmt_id: str | None = None,
-                       span=None) -> StatementResult:
-        """Rewrite and run (a query: analyze) one gated statement.
-        ``args`` bind its markers in the final ``spark.sql``, never
-        plan-cached; ``stmt_id``/``span`` are what a run inside the
-        statement (EXPLAIN ANALYZE) records under."""
+    def _rewrite(self, st: SessionState, sql: str,
+                 args: dict[str, Any] | None) -> _Rewritten:
+        """Apply the statement's text rewrites, which run nothing, then
+        classify and check it (``_check``), so every check passes before
+        a view is registered, an operator or a remote scan runs, or the
+        statement runs. An engine command stops at its own parser."""
         from gizmosql_spark.dialect import (
+            extract_pipeline_ops,
+            extract_time_travel,
+            parse_create_macro,
+            parse_drop_macro,
             parse_pragma,
             parse_summarize,
+            pivot_source,
             rewrite_asof_join,
             rewrite_distinct_on,
             rewrite_exclude,
             rewrite_qualify,
+            rewrite_unpivot_statement,
+            star_replace_items,
         )
         from gizmosql_spark.secrets import parse_secret_ddl
 
+        Statement = security.Statement
+        raw = sql
+        # the text rules first: ATTACH and the like are no statement
+        # Spark's parser reads
+        security.check_admin_gate(raw, st.is_admin)
         if args is not None:
             # before any rewrite copies or reorders a marker
             sql = _name_positional_params(sql)
+
+        def gated(stmt: security.Statement, command=None,
+                  **kw) -> _Rewritten:
+            self._check(st, stmt)
+            return _Rewritten(sql, stmt, command, **kw)
+
+        def source(query: str, what: str) -> security.Statement:
+            # a statement that runs a query of its own: the query, never
+            # a write, is what it does
+            stmt, command = self._classify(st, query)
+            if stmt.kind != "query" or command is not None:
+                raise ValueError(f"{what} supports a table or a query only")
+            return replace(stmt, kind="command")
+
         sec_ddl = parse_secret_ddl(sql)
         if sec_ddl is not None:
-            # CREATE/DROP SECRET (admin-only — check_admin_gate already
-            # rejected non-admins before this point)
-            if sec_ddl[0] == "create":
-                _, secret, replace = sec_ddl
-                self.secrets.create(secret, replace=replace)
-                return StatementResult(
-                    "update", affected_rows=0,
-                    info={"secret": secret.name, "action": "create"})
-            _, sname, if_exists = sec_ddl
-            dropped = self.secrets.drop(sname, if_exists=if_exists)
-            return StatementResult(
-                "update", affected_rows=0,
-                info={"secret": sname,
-                      "action": "drop" if dropped else "noop"})
-
+            return gated(Statement("write"), ("secret", sec_ddl))
         if "MACRO" in sql.upper():
-            from gizmosql_spark.dialect import (
-                parse_create_macro,
-                parse_drop_macro,
-            )
-
             cm = parse_create_macro(sql)
             if cm is not None:
-                name, params, defaults, body, is_table, replace = cm
-                key = name.lower()
-                if key in self.macros and not replace:
-                    raise ValueError(f"macro {name} already exists")
-                self.macros[key] = (params, defaults, body, is_table)
-                return StatementResult(
-                    "update", affected_rows=0,
-                    info={"macro": name, "action": "create"})
+                return gated(Statement("write"), ("create_macro", cm))
             dm = parse_drop_macro(sql)
             if dm is not None:
-                name, if_exists = dm
-                if name.lower() not in self.macros and not if_exists:
-                    raise ValueError(f"macro {name} does not exist")
-                self.macros.pop(name.lower(), None)
-                return StatementResult(
-                    "update", affected_rows=0,
-                    info={"macro": name, "action": "drop"})
+                return gated(Statement("write"), ("drop_macro", dm))
         if self.macros:
             from gizmosql_spark.dialect import expand_macros
 
             sql = expand_macros(sql, self.macros)
-
-        up0 = sql.upper().lstrip()
-        if up0.startswith("PIVOT"):
-            from gizmosql_spark.dialect import rewrite_pivot_statement
-
-            sql = rewrite_pivot_statement(sql, st.spark)
-        elif up0.startswith("UNPIVOT"):
-            from gizmosql_spark.dialect import rewrite_unpivot_statement
-
-            sql = rewrite_unpivot_statement(sql)
-
-        summarize_target = parse_summarize(sql)
-        if summarize_target is not None:
-            return StatementResult(
-                "query", df=self._summarize(st, summarize_target))
-        ea = __import__("re").match(
-            r"^\s*EXPLAIN\s+ANALYZE\s+(.+)$", sql,
-            __import__("re").IGNORECASE | __import__("re").DOTALL)
+        src = pivot_source(sql)
+        if src is not None:
+            return gated(source(src, "PIVOT"), ("pivot", None))
+        sql = rewrite_unpivot_statement(sql)
+        target = parse_summarize(sql)
+        if target is not None:
+            query = (f"SELECT * FROM {target}"
+                     if re.fullmatch(r"\s*[A-Za-z_][\w.]*\s*", target)
+                     else target)
+            return gated(source(query, "SUMMARIZE"), ("summarize", query))
+        ea = re.match(r"^\s*EXPLAIN\s+ANALYZE\s+(.+)$", sql,
+                      re.IGNORECASE | re.DOTALL)
         if ea is not None:
-            return self._explain_analyze(
-                st, ea.group(1), args, stmt_id, span)
+            inner = self._rewrite(st, ea.group(1), args)
+            if inner.stmt.kind != "query":
+                raise ValueError(
+                    "EXPLAIN ANALYZE supports query statements only")
+            return _Rewritten(sql, replace(inner.stmt, kind="command"),
+                              ("explain", inner))
         pragma = parse_pragma(sql)
         if pragma is not None:
-            return self._run_pragma(st, *pragma)
+            name, arg = pragma
+            stmt = (Statement("write") if name == "import_database" else
+                    Statement("command",
+                              reads=(tuple(arg.split(".")),) if arg else ()))
+            return gated(stmt, ("pragma", pragma))
 
         sql = replace_pseudo_functions(sql, self._pseudo_values(st))
         if "ASOF" in sql.upper():
@@ -985,20 +1014,6 @@ class Engine:
         sql = rewrite_qualify(sql)
         sql = rewrite_distinct_on(sql)
         sql = rewrite_exclude(sql)
-        if "COLUMNS" in sql.upper():
-            from gizmosql_spark.dialect import rewrite_columns
-
-            # schema-resolved rewrite (COLUMNS('re') star-expression);
-            # ADD COLUMNS etc. never match the call-form regex
-            sql = rewrite_columns(sql, st.spark)
-        if "REPLACE" in sql.upper():
-            from gizmosql_spark.dialect import rewrite_star_replace
-
-            sql = rewrite_star_replace(sql, st.spark)
-        if "ALL" in sql.upper():
-            from gizmosql_spark.dialect import rewrite_order_by_all
-
-            sql = rewrite_order_by_all(sql, st.spark)
         sql, used_settings = rewrite_settings_function(sql)
         # a statement that registers views of its own, other than
         # identity-checked file scans, is never reused; and since views
@@ -1006,122 +1021,256 @@ class Engine:
         # the new registrations, it empties the session's plan cache
         ephemeral = used_settings or bool(st.attached) or any(
             r.search(sql) for r in self._EPHEMERAL_VIEW_RES)
-        if used_settings:
-            self._register_settings_view(st)
-        if self._QUERY_LOG_FN_RE.search(sql):
-            # engine_query_log() table function: the redacted statement
-            # ring as a queryable view (reference: query-log telemetry,
-            # gizmosql_logging.cpp)
-            sql = self._QUERY_LOG_FN_RE.sub("engine_query_log", sql)
-            rows = [
-                (e.session_id, e.sql, e.status, float(e.elapsed_ms), float(e.at))
-                for e in self.query_log.entries()
-            ]
-            st.spark.createDataFrame(
-                rows,
-                "session_id string, sql string, status string,"
-                " elapsed_ms double, at double",
-            ).createOrReplaceTempView("engine_query_log")
-        if self._MACROS_FN_RE.search(sql):
-            # engine_macros() table function: registered macro
-            # templates (duckdb_functions() lists macros the same way)
-            sql = self._MACROS_FN_RE.sub("engine_macros", sql)
-            rows = [
-                (name, list(params), str(dict(defaults)), body,
-                 "table" if is_table else "scalar")
-                for name, (params, defaults, body, is_table)
-                in sorted(self.macros.items())
-            ] or [("", [], "", "", "")]
-            st.spark.createDataFrame(
-                rows,
-                "macro_name string, parameters array<string>,"
-                " defaults string, body string, macro_type string",
-            ).filter("macro_name <> ''").createOrReplaceTempView(
-                "engine_macros")
-        if self._ACCESS_LOG_FN_RE.search(sql):
-            # engine_access_log() table function: the per-call access
-            # log (method/peer/identity/status/duration, redacted) as
-            # a queryable view (access_log_middleware.cpp analog)
-            from gizmosql_spark.instrumentation import AccessLog
+        table_fns = ["engine_settings"] if used_settings else []
+        for name, fn_re in self._TABLE_FNS:
+            if fn_re.search(sql):
+                if name in ("engine_logs", "engine_secrets") \
+                        and not st.is_admin:
+                    raise security.CommandDenied(
+                        f"{name}() requires admin role")
+                sql = fn_re.sub(name, sql)
+                table_fns.append(name)
+        changes = []
+        for m in list(self._TABLE_CHANGES_RE.finditer(sql)):
+            tbl, v1, v2 = m.group(1), int(m.group(2)), m.group(3)
+            view = re.sub(
+                r"\W", "_", f"table_changes_{tbl}_{v1}_{v2 or 'live'}")
+            changes.append(
+                (view, tbl, v1, int(v2) if v2 is not None else None))
+            sql = sql.replace(m.group(0), view)
+        sql, travels = extract_time_travel(sql)
+        sql, pops = extract_pipeline_ops(sql)
+        sql, scans = extract_file_scans(sql)
+        # remote-engine scans (flight_scan table function + attached
+        # Flight catalogs) — admin-only, like ATTACH itself
+        sql, fscans = extract_flight_scans(sql)
+        if fscans and not st.is_admin:
+            raise security.CommandDenied("flight_scan requires admin role")
+        remote: list[tuple[str, str, str]] = []
+        for alias in st.attached:
+            def _sub(m, _alias=alias):
+                view = f"{_alias}__{m.group(2)}"
+                remote.append((view, _alias, m.group(2)))
+                return f"{m.group(1)} {view}"
 
-            sql = self._ACCESS_LOG_FN_RE.sub("engine_access_log", sql)
-            st.spark.createDataFrame(
-                self.access_log.entries() or [
-                    (0.0, "", "", "", "", 0.0, "")],
-                AccessLog.SCHEMA,
-            ).filter("method <> ''").createOrReplaceTempView(
-                "engine_access_log")
-        if self._CATALOG_LOG_FN_RE.search(sql):
-            # engine_logs() table function: the catalog-logging table
-            # (docs/catalog_logging.md). System-managed → admin-only
-            # read, exactly like the reference's log catalog.
-            if not st.is_admin:
-                raise security.CommandDenied(
-                    "engine_logs() requires admin role")
-            sql = self._CATALOG_LOG_FN_RE.sub("engine_logs", sql)
+            sql = re.sub(
+                rf"\b(FROM|JOIN)\s+{alias}\s*\.\s*([A-Za-z_]\w*)", _sub,
+                sql, flags=re.IGNORECASE)
+
+        # the schema-resolved rewrites (COLUMNS, * REPLACE, ORDER BY
+        # ALL) run after the gate; a * REPLACE list reads as a select
+        # list here
+        stmt, command = self._classify(
+            st, star_replace_items(sql) if "REPLACE" in sql.upper() else sql)
+        read_by_name = [t for _, t, *_ in changes] + [t for _, t, _ in travels]
+        if read_by_name:
+            stmt = stmt.merge(Statement(
+                "query", reads=tuple(tuple(t.split(".")) for t in read_by_name)))
+        return gated(stmt, command, ephemeral=bool(
+                         ephemeral or travels or pops or fscans),
+                     table_fns=table_fns, changes=changes, travels=travels,
+                     pops=pops, scans=scans, fscans=fscans, remote=remote)
+
+    def _classify(self, st: SessionState, sql: str
+                  ) -> tuple[security.Statement, tuple | None]:
+        """``sql``'s classification and, for an engine command, what its
+        parser read, ``(name, parsed)``, which ``_run_command`` runs.
+        The commands Spark cannot parse and the DML the engine emulates
+        are classified by the engine's own parser (its target is the
+        table that parser names); anything else from Spark's parsed
+        plan (``security.classify``)."""
+        from gizmosql_spark import dml, maintenance
+        from gizmosql_spark.dialect import upsert_parts
+        from gizmosql_spark.sources.registry import parse_copy
+
+        Statement = security.Statement
+        for name, parse in (("optimize", maintenance.parse_optimize),
+                            ("restore", maintenance.parse_restore),
+                            ("vacuum", maintenance.parse_vacuum)):
+            got = parse(sql)
+            if got is not None:
+                return (Statement("write", writes=(tuple(got[0].split(".")),)),
+                        (name, got))
+        exp = self._EXPORT_DB_RE.match(sql)
+        att, det = parse_attach_flight(sql), parse_detach(sql)
+        for name, got in (("checkpoint", self._CHECKPOINT_RE.match(sql)),
+                          ("export", exp and exp.groups()),
+                          ("attach", att),
+                          ("detach", det if det in st.attached else None)):
+            if got:
+                return Statement("write"), (name, got)
+        cp = parse_copy(sql)
+        if cp is not None:
+            direction, src, path = cp[:3]
+            if direction == "from":
+                stmt = Statement("write", writes=(tuple(src.split(".")),))
+            else:
+                stmt, _ = self._classify(
+                    st, src[1:-1] if src.startswith("(") else f"TABLE {src}")
+            return replace(stmt, kind="write", paths=(path,)), ("copy", cp)
+        up = upsert_parts(sql)
+        if up is not None:
+            table, texts = up
+            stmt = Statement("write", writes=(tuple(table.split(".")),),
+                             root="InsertIntoStatement")
+            for text in texts:
+                stmt = stmt.merge(security.classify(st.spark, text))
+            return stmt, ("upsert", None)
+        command = None
+        for name, parse in (("update", dml.parse_update),
+                            ("delete", dml.parse_delete),
+                            ("merge", dml.parse_merge)):
+            got = parse(sql)
+            if got is not None:
+                command = (name, got)
+                break
+        try:
+            stmt = security.classify(st.spark, sql)
+        except ParseException:
+            if command is None:
+                raise
+            # what its expressions read is unknown
+            stmt = Statement("write", opaque=True, root="UpdateTable")
+        if command is not None:
+            target = tuple(command[1][0].split("."))
+            stmt = replace(stmt, kind="write", writes=(target,),
+                           reads=stmt.reads + (target,))
+        return stmt, command
+
+    def _register_table_fn(self, st: SessionState, name: str) -> None:
+        """Register the view a table function's call was replaced by."""
+        if name == "engine_settings":
+            return self._register_settings_view(st)
+        if name == "engine_logs":
+            # the catalog-logging table (docs/catalog_logging.md),
+            # drained first so reads see a committed prefix of the stream
             if self.catalog_log is not None:
-                # drain what queued so far — reads see a consistent
-                # committed prefix of the stream
                 self.catalog_log.flush(timeout=10)
                 df = self.catalog_log.logs_df(st.spark)
             else:
                 from gizmosql_spark.catalog_logging import LOG_SCHEMA
 
                 df = st.spark.createDataFrame([], LOG_SCHEMA)
-            df.createOrReplaceTempView("engine_logs")
-        if self._SECRETS_FN_RE.search(sql):
-            # engine_secrets() table function (duckdb_secrets analog) —
-            # ALWAYS admin-only (admin_command_gating.md:55); values
-            # are masked, raw material never leaves the registry
-            if not st.is_admin:
-                raise security.CommandDenied(
-                    "engine_secrets() requires admin role")
-            sql = self._SECRETS_FN_RE.sub("engine_secrets", sql)
-            st.spark.createDataFrame(
-                self.secrets.listing() or
-                [("", "", "", False, "")],
-                "name string, type string, scope string,"
-                " persistent boolean, options string",
-            ).filter("name <> ''").createOrReplaceTempView(
-                "engine_secrets")
-        if self._ADMISSION_FN_RE.search(sql):
-            # engine_admission_stats(): statement-queue depth metrics
+            return df.createOrReplaceTempView(name)
+        if name == "engine_query_log":
+            # the redacted statement ring (reference: query-log
+            # telemetry, gizmosql_logging.cpp)
+            rows = [(e.session_id, e.sql, e.status, float(e.elapsed_ms),
+                     float(e.at)) for e in self.query_log.entries()]
+            schema = ("session_id string, sql string, status string,"
+                      " elapsed_ms double, at double")
+        elif name == "engine_macros":
+            # registered macro templates (duckdb_functions() lists
+            # macros the same way)
+            rows = [(macro, list(params), str(dict(defaults)), body,
+                     "table" if is_table else "scalar")
+                    for macro, (params, defaults, body, is_table)
+                    in sorted(self.macros.items())]
+            schema = ("macro_name string, parameters array<string>,"
+                      " defaults string, body string, macro_type string")
+        elif name == "engine_access_log":
+            # the per-call access log, redacted
+            # (access_log_middleware.cpp analog)
+            from gizmosql_spark.instrumentation import AccessLog
+
+            rows, schema = self.access_log.entries(), AccessLog.SCHEMA
+        elif name == "engine_secrets":
+            # duckdb_secrets analog, always admin-only
+            # (admin_command_gating.md:55); values are masked, raw
+            # material never leaves the registry
+            rows = self.secrets.listing()
+            schema = ("name string, type string, scope string,"
+                      " persistent boolean, options string")
+        else:
+            # engine_admission_stats: statement-queue depth metrics
             # (reference statement_queuing.md depth/peak telemetry)
-            s = self._admission.stats()
-            sql = self._ADMISSION_FN_RE.sub("engine_admission_stats", sql)
-            st.spark.createDataFrame(
-                [(s.executing, s.queued, s.peak_executing, s.peak_queued,
-                  s.total_admitted, s.total_rejected, s.total_timeouts,
-                  self._admission.max_concurrent,
-                  self._admission.max_queued)],
-                "executing int, queued int, peak_executing int,"
-                " peak_queued int, total_admitted bigint,"
-                " total_rejected bigint, total_timeouts bigint,"
-                " max_concurrent int, max_queued int",
-            ).createOrReplaceTempView("engine_admission_stats")
+            a = self._admission
+            s = a.stats()
+            rows = [(s.executing, s.queued, s.peak_executing, s.peak_queued,
+                     s.total_admitted, s.total_rejected, s.total_timeouts,
+                     a.max_concurrent, a.max_queued)]
+            schema = ("executing int, queued int, peak_executing int,"
+                      " peak_queued int, total_admitted bigint,"
+                      " total_rejected bigint, total_timeouts bigint,"
+                      " max_concurrent int, max_queued int")
+        st.spark.createDataFrame(rows, schema).createOrReplaceTempView(name)
+
+    def _run_statement(self, st: SessionState, rw: _Rewritten,
+                       args: dict[str, Any] | None = None,
+                       stmt_id: str | None = None,
+                       span=None) -> StatementResult:
+        """Run (a query: analyze) one gated statement (``_rewrite``).
+        ``args`` bind its markers in the final ``spark.sql``, never
+        plan-cached; ``stmt_id``/``span`` are what a run inside the
+        statement (EXPLAIN ANALYZE) records under."""
+        from gizmosql_spark.dialect import rewrite_pivot_statement
+
+        sql = rw.sql
+        if rw.command is not None:
+            name, parsed = rw.command
+            if name == "secret":
+                # CREATE/DROP SECRET (admin-only by the admin gate)
+                if parsed[0] == "create":
+                    _, secret, replace_ = parsed
+                    self.secrets.create(secret, replace=replace_)
+                    return StatementResult(
+                        "update", affected_rows=0,
+                        info={"secret": secret.name, "action": "create"})
+                _, sname, if_exists = parsed
+                dropped = self.secrets.drop(sname, if_exists=if_exists)
+                return StatementResult(
+                    "update", affected_rows=0,
+                    info={"secret": sname,
+                          "action": "drop" if dropped else "noop"})
+            if name == "create_macro":
+                mname, params, defaults, body, is_table, replace_ = parsed
+                key = mname.lower()
+                if key in self.macros and not replace_:
+                    raise ValueError(f"macro {mname} already exists")
+                self.macros[key] = (params, defaults, body, is_table)
+                return StatementResult(
+                    "update", affected_rows=0,
+                    info={"macro": mname, "action": "create"})
+            if name == "drop_macro":
+                mname, if_exists = parsed
+                if mname.lower() not in self.macros and not if_exists:
+                    raise ValueError(f"macro {mname} does not exist")
+                self.macros.pop(mname.lower(), None)
+                return StatementResult(
+                    "update", affected_rows=0,
+                    info={"macro": mname, "action": "drop"})
+            if name == "pivot":
+                # the distinct-value probe runs now that its source
+                # passed the gate; the standard PIVOT it writes is
+                # gated again
+                pivoted = rewrite_pivot_statement(sql, st.spark)
+                return self._run_statement(
+                    st, self._rewrite(st, pivoted, args), args, stmt_id,
+                    span)
+            if name == "summarize":
+                return StatementResult(
+                    "query", df=self._summarize(st, parsed))
+            if name == "explain":
+                return self._explain_analyze(st, parsed, args, stmt_id, span)
+            if name == "pragma":
+                return self._run_pragma(st, *parsed)
+
+        for name in rw.table_fns:
+            self._register_table_fn(st, name)
         if self._INSTR_VIEW_RE.search(sql):
             # instrumentation views refresh on reference
             # (session_instrumentation.md read-only views)
             self.instr.publish(self.spark)
-        for m in list(self._TABLE_CHANGES_RE.finditer(sql)):
+        for view, tbl, v1, v2 in rw.changes:
             # table_changes('t', v_from[, v_to]) table function: the
             # Delta Change-Data-Feed analog over warehouse snapshots
             # (maintenance.table_changes; deviations documented in
             # docs/transactions_and_lakehouse.md §4)
             from gizmosql_spark.maintenance import table_changes
 
-            tbl, v1, v2 = m.group(1), int(m.group(2)), m.group(3)
-            view = __import__("re").sub(
-                r"\W", "_", f"table_changes_{tbl}_{v1}_{v2 or 'live'}")
-            df = table_changes(
-                st.spark, self.warehouse, tbl, v1,
-                int(v2) if v2 is not None else None)
-            df.createOrReplaceTempView(view)
-            sql = sql.replace(m.group(0), view)
-        from gizmosql_spark.dialect import extract_time_travel
-
-        sql, travels = extract_time_travel(sql)
-        for view, tbl, spec in travels:
+            table_changes(st.spark, self.warehouse, tbl, v1,
+                          v2).createOrReplaceTempView(view)
+        for view, tbl, spec in rw.travels:
             if isinstance(spec, int):
                 vpath = self.warehouse.version_path(tbl, spec)
             else:
@@ -1148,10 +1297,7 @@ class Engine:
         # the SQL surface a reference user gets for the extension tier.
         # Local dirs passed the read_* admin gate upstream
         # (security.check_admin_gate).
-        from gizmosql_spark.dialect import extract_pipeline_ops
-
-        sql, pops = extract_pipeline_ops(sql)
-        for view, op_name, op_dir in pops:
+        for view, op_name, op_dir in rw.pops:
             from gizmosql_spark.operators import registry as op_registry
 
             if not op_dir:
@@ -1169,9 +1315,9 @@ class Engine:
                 raise ValueError(str(exc)) from exc
             fn(st.spark, op_dir).createOrReplaceTempView(view)
 
-        sql, scans = extract_file_scans(sql)
+        sql = _resolve_stars(st, sql)
         relations, scan_ids = [], []
-        for view, fmt, path in scans:
+        for view, fmt, path in rw.scans:
             if "://" in path and not path.startswith("file:"):
                 # remote path: apply the best-scope-matching secret's
                 # credentials to the Hadoop conf before the read (the
@@ -1181,20 +1327,12 @@ class Engine:
             relations.append((view, df))
             scan_ids.append((fmt, path, ident))
 
-        # remote-engine scans (flight_scan table function + attached
-        # Flight catalogs) — admin-only, like ATTACH itself; results
-        # are re-fetched per statement so reads are never stale
-        sql, fscans = extract_flight_scans(sql)
-        if fscans and not st.is_admin:
-            raise security.CommandDenied(
-                "flight_scan requires admin role")
-
-        is_set = bool(_SPARK_SET_RE.match(sql))
+        is_set = rw.stmt.root in ("SetCommand", "ResetCommand")
         if is_set:
             # a Spark-level SET/RESET: confs such as
             # spark.sql.caseSensitive shape the file relations
             session_cache.for_spark(st.spark).clear()
-        if ephemeral or travels or pops or fscans or is_set:
+        if rw.ephemeral or is_set:
             st.plans.clear()
             key = None
         elif args is not None or any(
@@ -1214,53 +1352,30 @@ class Engine:
             key = None
         for view, df in relations:
             df.createOrReplaceTempView(view)
-        if fscans or st.attached:
+        if rw.fscans or rw.remote:
             from gizmosql_spark.sources.flight_scan import flight_scan_df
 
-            for view, uri, rsql, user, pw in fscans:
+            fetches = list(rw.fscans)
+            for view, alias, tbl in rw.remote:
+                uri, user, pw = st.attached[alias]
+                fetches.append((view, uri, f"SELECT * FROM {tbl}", user, pw))
+            for view, uri, rsql, user, pw in fetches:
                 if user is None and pw is None:
-                    # bare flight_scan: credentials from an adbc-type
-                    # secret scoped to the uri (the reference's
-                    # CREATE SECRET + bare ATTACH flow)
+                    # credentials from an adbc-type secret scoped to the
+                    # uri (the reference's CREATE SECRET + bare ATTACH
+                    # flow)
                     user, pw = self.secrets.flight_credentials(uri)
                 flight_scan_df(
                     st.spark, uri, rsql, user=user, password=pw
                 ).createOrReplaceTempView(view)
-            for alias, (uri, user, pw) in st.attached.items():
-                if user is None and pw is None:
-                    user, pw = self.secrets.flight_credentials(uri)
-                pat = __import__("re").compile(
-                    rf"\b(FROM|JOIN)\s+{alias}\s*\.\s*([A-Za-z_]\w*)",
-                    __import__("re").IGNORECASE)
 
-                def _sub(m, _alias=alias, _uri=uri, _user=user, _pw=pw):
-                    tbl = m.group(2)
-                    view = f"{_alias}__{tbl}"
-                    flight_scan_df(
-                        st.spark, _uri, f"SELECT * FROM {tbl}",
-                        user=_user, password=_pw,
-                    ).createOrReplaceTempView(view)
-                    return f"{m.group(1)} {view}"
-
-                sql = pat.sub(_sub, sql)
+        if rw.command is not None:
+            return self._run_command(st, rw)
 
         from gizmosql_spark import maintenance
 
-        opt = maintenance.parse_optimize(sql)
-        if opt is not None:
-            # compaction rewrites files in place — snapshot the
-            # pre-image so VERSION AS OF survives it
-            table, target_mb, zorder = opt
-            if st.txn is not None:
-                self._txn_snapshot(st, table)
-            self.warehouse.snapshot(st.spark, table)
-            report = maintenance.apply_optimize(
-                st.spark, table, target_mb, zorder=zorder)
-            self._refresh_everywhere(table, st.spark)
-            return StatementResult("query", df=report)
-
-        an = maintenance.parse_analyze(sql)
-        if an is not None:
+        if rw.stmt.root in ("AnalyzeTable", "AnalyzeColumn"):
+            an = ".".join(rw.stmt.reads[0])
             # native ANALYZE computes the stats; the engine then folds
             # them into the manifest so the catalog carries statistics
             # across restarts (DuckLake stores stats in its catalog)
@@ -1273,86 +1388,6 @@ class Engine:
                     st.spark, an)
                 self.warehouse.upsert_entry(name, entry)
             return StatementResult("update", df=df, affected_rows=None)
-
-        if __import__("re").match(r"^\s*CHECKPOINT\s*;?\s*$", sql,
-                                  __import__("re").IGNORECASE):
-            # DuckDB CHECKPOINT = flush the WAL; here = snapshot+prune
-            # the catalog commit log (admin-gated by _ADMIN_STMT_RE)
-            seq = self.warehouse.checkpoint_now()
-            return StatementResult("update", affected_rows=seq)
-
-        exp = self._EXPORT_DB_RE.match(sql)
-        if exp is not None:
-            # EXPORT/IMPORT DATABASE statement forms (the reference
-            # classifies both admin-only, admin_command_guard.cpp:
-            # 348-381; the gate already ran in execute_sql)
-            from gizmosql_spark.sources.registry import (
-                export_database,
-                import_database,
-            )
-
-            word, target = exp.group(1).upper(), exp.group(2)
-            if word == "EXPORT":
-                counts = export_database(st.spark, target)
-                return StatementResult(
-                    "update", affected_rows=len(counts))
-            import os as _os
-
-            tables = sorted(
-                d for d in _os.listdir(target)
-                if _os.path.isdir(_os.path.join(target, d)))
-            for t in tables:
-                # an import overwrites: clear re-attached EXTERNAL
-                # tables / crash leftovers at the destination first
-                self.warehouse.prepare_write(st.spark, t, overwrite=True)
-            import_database(st.spark, target, tables)
-            for t in tables:
-                self._refresh_everywhere(t, st.spark)
-                self.warehouse.record(st.spark, t)
-            return StatementResult("update", affected_rows=len(tables))
-
-        from gizmosql_spark.sources.registry import copy_to, parse_copy
-
-        cp = parse_copy(sql)
-        if cp is not None:
-            # COPY … TO/FROM statement form (reference:
-            # admin_command_guard.cpp:348-381; gate already ran in
-            # execute_sql). TO exports a query/table; FROM appends a
-            # file into a managed table.
-            direction, src, path, fmt, opts = cp
-            if direction == "to":
-                q = src[1:-1] if src.startswith("(") else f"SELECT * FROM {src}"
-                n = _counted_write(
-                    st.spark.sql(q),
-                    lambda d: copy_to(d, path, fmt=fmt, **opts))
-                return StatementResult("update", affected_rows=n)
-            reader = st.spark.read.format(fmt)
-            for k, v in opts.items():
-                reader = reader.option(k, v)
-            if fmt == "csv" and "inferSchema" not in opts:
-                reader = reader.option("inferSchema", "true")
-            n = _counted_write(
-                reader.load(path),
-                lambda d: d.write.mode("append").insertInto(src))
-            self._refresh_everywhere(src, st.spark)
-            self.warehouse.record(st.spark, src)
-            return StatementResult("update", affected_rows=n)
-
-        res = maintenance.parse_restore(sql)
-        if res is not None:
-            table, version = res
-            report = maintenance.apply_restore(
-                st.spark, table, version, self.warehouse)
-            self._refresh_everywhere(table, st.spark)
-            self.warehouse.record(st.spark, table)
-            return StatementResult("query", df=report)
-
-        vac = maintenance.parse_vacuum(sql)
-        if vac is not None:
-            table, retain = vac
-            report = maintenance.apply_vacuum(
-                st.spark, table, retain, self.warehouse)
-            return StatementResult("query", df=report)
 
         evo = maintenance.parse_alter_evolution(sql)
         if evo is not None:
@@ -1368,54 +1403,19 @@ class Engine:
             self._refresh_everywhere(table, st.spark)
             return StatementResult("update", affected_rows=0)
 
-        target = dml_target(sql)
+        target = rw.dml
         if target is not None:
-            from gizmosql_spark import dml
-
-            up = sql.upper()
-            if "OR REPLACE INTO" in up or "ON CONFLICT" in up:
-                from gizmosql_spark.dialect import rewrite_insert_upsert
-
-                sql = rewrite_insert_upsert(
-                    sql, st.spark,
-                    lambda t: self.system_catalog.registry.primary_keys
-                    .get(t.split(".")[-1].lower()))
-
-            mrg = dml.parse_merge(sql)
-            if mrg is not None:
-                if st.txn is not None:
-                    self._txn_snapshot(st, target)
-                self.warehouse.snapshot(st.spark, target)
-                affected = dml.apply_merge(st.spark, mrg)
-                self._refresh_everywhere(target, st.spark)
-                return StatementResult("update", affected_rows=affected)
-            upd = dml.parse_update(sql)
-            dele = dml.parse_delete(sql)
-            if upd is not None or dele is not None:
-                # UPDATE/DELETE on managed parquet tables: Spark only
-                # supports these on Delta/Iceberg — emulate copy-on-
-                # write at the engine layer (dml.py)
-                if st.txn is not None:
-                    self._txn_snapshot(st, target)
-                self.warehouse.snapshot(st.spark, target)
-                if upd is not None:
-                    _, assignments, where = upd
-                    affected = dml.apply_update(st.spark, target, assignments, where)
-                else:
-                    _, where = dele
-                    affected = dml.apply_delete(st.spark, target, where)
-                self._refresh_everywhere(target, st.spark)
-                return StatementResult("update", affected_rows=affected)
             # DML path: runs eagerly inside spark.sql(). Affected count
             # is measured as the table's row-count delta — count() on a
             # managed parquet table is row-group metadata only, no scan
             # (the reference reads DuckDB's changes() convention,
             # duckdb_statement.cpp:2341-2380).
-            if st.txn is not None:
-                self._txn_snapshot(st, target)
+            for t in rw.targets if st.txn is not None else ():
+                self._txn_snapshot(st, t)
             before = self._table_count(st, target)
             df = st.spark.sql(sql, args=args)
-            self._refresh_everywhere(target, st.spark)
+            for t in rw.targets:
+                self._refresh_everywhere(t, st.spark)
             after = self._table_count(st, target)
             affected = abs(after - before) if before is not None else None
             return StatementResult("update", df=df, affected_rows=affected)
@@ -1424,6 +1424,111 @@ class Engine:
         if outcome is not None:
             return StatementResult("query", df=df, plan_cache=outcome)
         return StatementResult("update", df=df, affected_rows=None)
+
+    def _run_command(self, st: SessionState,
+                     rw: _Rewritten) -> StatementResult:
+        """Run the engine command ``_classify`` parsed, once the views
+        its query reads are registered."""
+        from gizmosql_spark import dml, maintenance
+
+        name, parsed = rw.command
+        table = ".".join(rw.stmt.writes[0]) if rw.stmt.writes else None
+        if name in ("optimize", "update", "delete", "merge", "upsert"):
+            # a rewrite in place: snapshot the pre-image so VERSION AS
+            # OF (and a rollback) survives it
+            if st.txn is not None:
+                self._txn_snapshot(st, table)
+            self.warehouse.snapshot(st.spark, table)
+        if name == "optimize":
+            _, target_mb, zorder = parsed
+            report = maintenance.apply_optimize(
+                st.spark, table, target_mb, zorder=zorder)
+            self._refresh_everywhere(table, st.spark)
+            return StatementResult("query", df=report)
+        if name == "restore":
+            report = maintenance.apply_restore(
+                st.spark, table, parsed[1], self.warehouse)
+            self._refresh_everywhere(table, st.spark)
+            self.warehouse.record(st.spark, table)
+            return StatementResult("query", df=report)
+        if name == "vacuum":
+            report = maintenance.apply_vacuum(
+                st.spark, table, parsed[1], self.warehouse)
+            return StatementResult("query", df=report)
+        if name == "checkpoint":
+            # DuckDB CHECKPOINT = flush the WAL; here = snapshot+prune
+            # the catalog commit log (admin-gated by _ADMIN_STMT_RE)
+            seq = self.warehouse.checkpoint_now()
+            return StatementResult("update", affected_rows=seq)
+        if name == "export":
+            # EXPORT/IMPORT DATABASE statement forms (the reference
+            # classifies both admin-only, admin_command_guard.cpp:
+            # 348-381)
+            from gizmosql_spark.sources.registry import (
+                export_database,
+                import_database,
+            )
+
+            word, target = parsed
+            if word.upper() == "EXPORT":
+                counts = export_database(st.spark, target)
+                return StatementResult(
+                    "update", affected_rows=len(counts))
+            tables = sorted(
+                d for d in os.listdir(target)
+                if os.path.isdir(os.path.join(target, d)))
+            for t in tables:
+                # an import overwrites: clear re-attached EXTERNAL
+                # tables / crash leftovers at the destination first
+                self.warehouse.prepare_write(st.spark, t, overwrite=True)
+            import_database(st.spark, target, tables)
+            for t in tables:
+                self._refresh_everywhere(t, st.spark)
+                self.warehouse.record(st.spark, t)
+            return StatementResult("update", affected_rows=len(tables))
+        if name == "copy":
+            # COPY … TO/FROM statement form (reference:
+            # admin_command_guard.cpp:348-381). TO exports a
+            # query/table; FROM appends a file into a managed table.
+            from gizmosql_spark.sources.registry import copy_to
+
+            direction, src, path, fmt, opts = parsed
+            if direction == "to":
+                q = src[1:-1] if src.startswith("(") else f"SELECT * FROM {src}"
+                n = _counted_write(
+                    st.spark.sql(_resolve_stars(st, q)),
+                    lambda d: copy_to(d, path, fmt=fmt, **opts))
+                return StatementResult("update", affected_rows=n)
+            reader = st.spark.read.format(fmt)
+            for k, v in opts.items():
+                reader = reader.option(k, v)
+            if fmt == "csv" and "inferSchema" not in opts:
+                reader = reader.option("inferSchema", "true")
+            n = _counted_write(
+                reader.load(path),
+                lambda d: d.write.mode("append").insertInto(src))
+            self._refresh_everywhere(src, st.spark)
+            self.warehouse.record(st.spark, src)
+            return StatementResult("update", affected_rows=n)
+        # DML on managed parquet tables, which Spark runs only on
+        # Delta/Iceberg: copy-on-write at the engine layer (dml.py); an
+        # upsert runs as the MERGE it writes
+        if name == "upsert":
+            from gizmosql_spark.dialect import rewrite_insert_upsert
+
+            name, parsed = "merge", dml.parse_merge(rewrite_insert_upsert(
+                rw.sql, st.spark,
+                lambda t: self.system_catalog.registry.primary_keys
+                .get(t.split(".")[-1].lower())))
+        if name == "merge":
+            affected = dml.apply_merge(st.spark, parsed)
+        elif name == "update":
+            _, assignments, where = parsed
+            affected = dml.apply_update(st.spark, table, assignments, where)
+        else:
+            affected = dml.apply_delete(st.spark, table, parsed[1])
+        self._refresh_everywhere(table, st.spark)
+        return StatementResult("update", affected_rows=affected)
 
     # --- plan cache ---------------------------------------------------
     # A query repeated in a session reuses its analyzed DataFrame,
@@ -1689,7 +1794,7 @@ class Engine:
         self.telemetry.add_counter("engine.rows_fetched_total", float(n_rows))
         return out["value"], elapsed_ms
 
-    def _explain_analyze(self, st: SessionState, inner_sql: str,
+    def _explain_analyze(self, st: SessionState, inner: _Rewritten,
                          args: dict[str, Any] | None,
                          stmt_id: str | None, span) -> StatementResult:
         """DuckDB-style ``EXPLAIN ANALYZE <query>``: run the query to
@@ -1699,12 +1804,10 @@ class Engine:
         inner statement goes through the normal gate/rewrite path, so
         readonly/ACL rules apply exactly as for direct execution.
         Restricted to query statements (documented deviation: DuckDB
-        also accepts DML here) so the EXPLAIN prefix can never smuggle
-        a write past a readonly session's statement classifier."""
-        if not _QUERY_PREFIX_RE.match(statement_body(inner_sql)):
-            raise ValueError(
-                "EXPLAIN ANALYZE supports query statements only")
-        result = self._run_statement(st, inner_sql, args)
+        also accepts DML here; ``_rewrite`` refuses any other kind) so
+        the EXPLAIN prefix can never smuggle a write past a readonly
+        session."""
+        result = self._run_statement(st, inner, args)
         if result.df is None:
             raise ValueError("EXPLAIN ANALYZE requires a query statement")
         # the run is a statement execution like any other (admission,
@@ -1770,15 +1873,14 @@ class Engine:
         executions then hit); any other statement without markers gets
         no columns and runs only when it is executed."""
         st = self._session(session_id)
-        self._gate(st, sql, "prepare")
+        rw = self._gate(st, sql, None, "prepare")
         params = _named_params(sql)
         n_pos = 0 if params else _count_positional_params(sql)
         schema = None  # with markers: learned on the first execution
         if not params and not n_pos:
-            body = statement_body(sql)
-            schema = (self._run_statement(st, sql).df.schema
-                      if _QUERY_PREFIX_RE.match(body)
-                      or _READ_COMMAND_RE.match(body) else StructType([]))
+            schema = (self._run_statement(st, rw).df.schema
+                      if rw.stmt.kind in ("query", "describe")
+                      else StructType([]))
         names = params or [f"param_{i + 1}" for i in range(n_pos)]
         ps = PreparedStatement(
             str(uuid.uuid4()), sql, schema, names, positional=n_pos > 0)
@@ -1884,20 +1986,16 @@ class Engine:
         self.telemetry.add_counter("engine.ingest_rows_total", float(n))
         return n
 
-    def _summarize(self, st: SessionState, target: str):
+    def _summarize(self, st: SessionState, query: str):
         """SUMMARIZE <table|SELECT …> — DuckDB's per-column profile
         statement, same column contract (column_name/column_type/min/
-        max/approx_unique/avg/std/q25/q50/q75/count/null_percentage).
+        max/approx_unique/avg/std/q25/q50/q75/count/null_percentage),
+        over ``query`` (a table reads as ``SELECT * FROM`` it).
         One wide aggregation pass over the relation (every stat is a
         partial agg; percentiles are approx sketches), then the single
         collected row unpivots into the per-column report — scalars to
         the driver, never data."""
-        import re as _re
-
-        t = target.strip()
-        df = (st.spark.table(t)
-              if _re.fullmatch(r"[A-Za-z_][\w.]*", t)
-              else st.spark.sql(t))
+        df = st.spark.sql(query)
         num_types = ("int", "bigint", "smallint", "tinyint", "double",
                      "float", "decimal")
         aggs, meta = [], []

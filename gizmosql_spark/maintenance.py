@@ -62,11 +62,6 @@ _RESTORE_RE = re.compile(
     re.IGNORECASE,
 )
 
-_ANALYZE_RE = re.compile(
-    rf"^\s*ANALYZE\s+TABLE\s+({_IDENT})\s+COMPUTE\s+STATISTICS"
-    r"(\s+FOR\s+(?:ALL\s+COLUMNS|COLUMNS\s+.+?))?\s*;?\s*$",
-    re.IGNORECASE,
-)
 _VACUUM_RE = re.compile(
     rf"^\s*VACUUM\s+({_IDENT})"
     r"(?:\s+RETAIN\s+(\d+)\s+VERSIONS?)?\s*;?\s*$",
@@ -184,12 +179,6 @@ def table_changes(spark: SparkSession, warehouse, table: str,
             F.abs("_d").alias("_change_count"),
         )
     )
-
-
-def parse_analyze(sql: str):
-    """``ANALYZE TABLE t COMPUTE STATISTICS [FOR …]`` -> table."""
-    m = _ANALYZE_RE.match(sql)
-    return m.group(1).strip("`") if m else None
 
 
 def parse_vacuum(sql: str):

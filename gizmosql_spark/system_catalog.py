@@ -95,20 +95,11 @@ class SystemCatalog:
         )
 
 
-_SYSTEM_WRITE_RE = re.compile(
-    r"^\s*(?:INSERT|UPDATE|DELETE|MERGE|DROP|ALTER|TRUNCATE|CREATE)\b",
-    re.IGNORECASE,
-)
-
-
-def check_system_catalog_write(sql: str) -> None:
-    """Reject writes addressing the system views — for **all** roles,
-    like the reference (duckdb_statement.cpp:1019-1050)."""
-    if not _SYSTEM_WRITE_RE.match(sql):
-        return
-    low = sql.lower()
-    for view in SYSTEM_VIEWS:
-        if re.search(rf"\b(?:global_temp\.)?{view}\b", low):
+def check_system_catalog_write(stmt) -> None:
+    """Reject a classified statement (``security.Statement``) that
+    writes a system view, for **all** roles, like the reference
+    (duckdb_statement.cpp:1019-1050)."""
+    for parts in stmt.writes:
+        if parts and parts[-1].lower() in SYSTEM_VIEWS:
             raise PermissionError(
-                f"system catalog view is read-only: {view}"
-            )
+                f"system catalog view is read-only: {parts[-1]}")

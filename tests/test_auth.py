@@ -104,19 +104,22 @@ def test_catalog_acl_enforced(engine):
     engine.close_session(sid)
 
 
-def test_ddl_write_target_extraction():
-    from gizmosql_spark.dialect import ddl_write_target
+def test_ddl_write_target_extraction(spark):
+    def writes(sql):
+        return security.classify(spark, sql).writes
 
-    assert ddl_write_target("CREATE TABLE prod.db.t AS SELECT 1") == "prod.db.t"
-    assert ddl_write_target("CREATE OR REPLACE TABLE t2 (a INT)") == "t2"
-    assert ddl_write_target("DROP TABLE IF EXISTS prod.db.t") == "prod.db.t"
-    assert ddl_write_target("ALTER TABLE t ADD COLUMN c INT") == "t"
-    assert ddl_write_target("TRUNCATE TABLE prod.db.t") == "prod.db.t"
-    assert ddl_write_target("DROP VIEW v1") == "v1"
+    assert writes("CREATE TABLE prod.db.t AS SELECT 1") == (("prod", "db", "t"),)
+    assert writes("CREATE OR REPLACE TABLE t2 (a INT)") == (("t2",),)
+    assert writes("DROP TABLE IF EXISTS prod.db.t") == (("prod", "db", "t"),)
+    assert writes("ALTER TABLE t ADD COLUMN c INT") == (("t",),)
+    assert writes("TRUNCATE TABLE prod.db.t") == (("prod", "db", "t"),)
+    assert writes("DROP VIEW v1") == (("v1",),)
     # TEMP views are session-local, not a catalog write
-    assert ddl_write_target("CREATE TEMP VIEW v AS SELECT 1") is None
-    assert ddl_write_target("CREATE OR REPLACE TEMPORARY VIEW v AS SELECT 1") is None
-    assert ddl_write_target("SELECT * FROM t") is None
+    assert writes("CREATE TEMP VIEW v AS SELECT 1") == ()
+    assert writes("CREATE OR REPLACE TEMPORARY VIEW v AS SELECT 1") == ()
+    assert writes("SELECT * FROM t") == ()
+    # a rename writes the old name and the new one
+    assert writes("ALTER TABLE t RENAME TO u") == (("t",), ("u",))
 
 
 def test_catalog_acl_gates_ddl(engine):
@@ -135,35 +138,92 @@ def test_catalog_acl_gates_ddl(engine):
     engine.close_session(sid)
 
 
-def test_struct_field_access_not_a_catalog_ref():
-    """Qualified struct access (alias.col.field) must not parse as a
+def test_struct_field_access_not_a_catalog_ref(spark):
+    """Qualified struct access (alias.col.field) must not read as a
     catalog reference — it used to spuriously deny ACL'd sessions."""
+    def check(sql):
+        security.check_catalog_access(
+            security.classify(spark, sql),
+            read_catalogs=["spark_catalog"], write_catalogs=None)
+
     # alias 'e' is not a catalog: allowed
-    security.check_catalog_access(
-        "SELECT e.props.k FROM events e",
-        read_catalogs=["spark_catalog"], write_catalogs=None,
-        write_target=None,
-    )
+    check("SELECT e.props.k FROM events e")
     # real three-part reference in FROM position: denied
     with pytest.raises(security.CommandDenied):
-        security.check_catalog_access(
-            "SELECT * FROM prod.db.t",
-            read_catalogs=["spark_catalog"], write_catalogs=None,
-            write_target=None,
-        )
+        check("SELECT * FROM prod.db.t")
     # comma continuation of a FROM list is still caught
     with pytest.raises(security.CommandDenied):
-        security.check_catalog_access(
-            "SELECT * FROM spark_catalog.default.a, prod.db.t",
-            read_catalogs=["spark_catalog"], write_catalogs=None,
-            write_target=None,
-        )
+        check("SELECT * FROM spark_catalog.default.a, prod.db.t")
     # JOIN position caught, struct access in SELECT list ignored
-    security.check_catalog_access(
-        "SELECT a.b.c FROM t1 a JOIN spark_catalog.default.t2 b ON a.id = b.id",
-        read_catalogs=["spark_catalog"], write_catalogs=None,
-        write_target=None,
-    )
+    check("SELECT a.b.c FROM t1 a JOIN spark_catalog.default.t2 b"
+          " ON a.id = b.id")
+
+
+def _acl_session(engine, name, read, write):
+    engine.add_user(name, "pw", role="user", read_catalogs=read,
+                    write_catalogs=write)
+    return engine.create_session(token=engine.authenticate(name, "pw"))
+
+
+@pytest.mark.parametrize("user,read,write,sql", [
+    # a comma-joined relation of an unreadable catalog
+    ("acl_comma", ["spark_catalog", "dev_*"], ["dev_*"],
+     "SELECT * FROM t, cat2.db.c"),
+    # a MERGE source
+    ("acl_merge", ["spark_catalog", "dev_*"], ["dev_*"],
+     "MERGE INTO dev_x.db.a USING cat2.db.s ON a.k = s.k"
+     " WHEN MATCHED THEN UPDATE SET *"),
+    # a quoted catalog in a subquery
+    ("acl_subquery", ["spark_catalog", "dev_*"], ["dev_*"],
+     "SELECT * FROM dev_x.db.t WHERE k IN (SELECT k FROM `cat2`.db.c)"),
+    # an unqualified name reads the current catalog
+    ("acl_current", ["cat1"], ["cat1"], "SELECT * FROM cat1.db.a JOIN t"),
+    # the second INSERT of a FROM-first multi-insert writes cat2
+    ("acl_multi", ["*"], ["dev_*"],
+     "FROM s INSERT INTO dev_x.db.a SELECT * INSERT INTO cat2.db.b SELECT *"),
+    # a quoted name part holding ", " the plan cannot render exactly,
+    # bare and after a literal or comment that holds a quote
+    ("acl_ambiguous", ["spark_catalog", "dev_*"], ["dev_*"],
+     "SELECT * FROM `dev_x, cat2`.db.c"),
+    ("acl_ambiguous_esc", ["spark_catalog", "dev_*"], ["dev_*"],
+     "SELECT 'a\\'' AS q, * FROM `dev_x, cat2`.db.c"),
+    ("acl_ambiguous_raw", ["spark_catalog", "dev_*"], ["dev_*"],
+     "SELECT r'\\' AS q, * FROM `dev_x, cat2`.db.c"),
+    ("acl_ambiguous_cmt", ["spark_catalog", "dev_*"], ["dev_*"],
+     "SELECT /* ` */ * FROM `dev_x, cat2`.db.c"),
+])
+def test_catalog_acl_reads_every_relation(engine, user, read, write, sql):
+    """Each shape passed the text-based ACL; the gate denies it from the
+    parsed plan before analysis (no catalog cat1, cat2 or dev_x
+    exists)."""
+    sid = _acl_session(engine, user, read, write)
+    try:
+        with pytest.raises(security.CommandDenied):
+            engine.execute_sql(sid, sql)
+    finally:
+        engine.close_session(sid)
+
+
+def test_catalog_acl_reads_quoted_names(engine):
+    """Names quoted one by one, as BI and JDBC clients send them, are
+    read exactly: a comma or bracket between two quoted names is no
+    part of either."""
+    sid = _acl_session(engine, "acl_quoted", ["spark_catalog"],
+                       ["spark_catalog"])
+    try:
+        engine.execute_sql(
+            sid, "CREATE OR REPLACE TEMP VIEW v_quoted AS"
+                 " SELECT 1 AS a, 2 AS b, array(3) AS arr")
+        for sql in ("SELECT `a`, `b` FROM v_quoted",
+                    "SELECT `arr`[0] AS x, `a` FROM `v_quoted`",
+                    "SELECT '`, `' AS s, `a` FROM v_quoted"):
+            assert engine.collect(sid, engine.execute_sql(sid, sql))
+    finally:
+        engine.close_session(sid)
+    stmt = security.classify(
+        engine.spark, "INSERT INTO t (`x`, `y`) VALUES (1, 2)")
+    assert not stmt.opaque
+    security.check_catalog_access(stmt, ["spark_catalog"], ["spark_catalog"])
 
 
 # --- JWKS key-set verification + rotation (jwks_manager.cpp analog) --

@@ -46,7 +46,8 @@ def test_index_info(spark, registry):
 
 def test_collect_arrow(spark, sf_smoke):
     eng = Engine(spark)
-    sid = eng.create_session()
+    # a local path in Spark's parquet.`path` form is admin-only
+    sid = eng.create_session(role="admin")
     res = eng.execute_sql(
         sid, f"SELECT n_nationkey, n_name FROM parquet.`{sf_smoke}/nation.parquet` ORDER BY n_nationkey"
     )

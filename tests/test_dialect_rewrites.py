@@ -9,15 +9,15 @@ import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
+from pyspark.errors import ParseException
+
+from gizmosql_spark import security
 from gizmosql_spark.dialect import (
-    ddl_write_target,
-    dml_target,
     expand_macros,
     parse_create_macro,
     rewrite_asof_join,
     rewrite_insert_upsert,
     rewrite_unpivot_statement,
-    statement_body,
 )
 
 _PLAIN = [
@@ -155,57 +155,58 @@ def test_pivot_literal_typing():
     assert _pivot_literal(7) == "7"
 
 
-@pytest.mark.parametrize("sql,body,target", [
-    ("WITH c AS (SELECT 5L AS id) INSERT INTO t SELECT * FROM c",
-     "INSERT INTO t SELECT * FROM c", "t"),
+#: statements Spark's lexer and parser read past comments, literals,
+#: quoted names, a WITH list or a FROM clause, with the table each
+#: writes first (None: a query; ParseException: no statement)
+@pytest.mark.parametrize("sql,target", [
+    ("WITH c AS (SELECT 5L AS id) INSERT INTO t SELECT * FROM c", "t"),
     ("with a(x) as (select '(' as x), b as (select ')') select * from a",
-     "select * from a", None),
-    ("-- don't\nWITH RECURSIVE c AS (SELECT (1)) DELETE FROM u",
-     "DELETE FROM u", "u"),
-    ("/* c */ INSERT INTO t VALUES (1)", "INSERT INTO t VALUES (1)", "t"),
-    ("-- c\n  UPDATE u SET a = 1", "UPDATE u SET a = 1", "u"),
+     None),
+    ("-- don't\nWITH RECURSIVE c AS (SELECT (1)) DELETE FROM u", "u"),
+    ("/* c */ INSERT INTO t VALUES (1)", "t"),
+    ("-- c\n  UPDATE u SET a = 1", "u"),
+    # a MERGE without a WHEN clause is no statement Spark runs
     ("/* c */ WITH `c d` AS (SELECT 1) MERGE INTO m USING c ON true",
-     "MERGE INTO m USING c ON true", "m"),
+     ParseException),
     # comments inside and after the WITH list
     ("WITH c AS (SELECT 5L AS id) /* x */ INSERT INTO t SELECT * FROM c",
-     "INSERT INTO t SELECT * FROM c", "t"),
+     "t"),
     ("WITH c AS (SELECT 5L AS id) -- x\nINSERT INTO t SELECT * FROM c",
-     "INSERT INTO t SELECT * FROM c", "t"),
-    ("WITH /* x */ c AS (SELECT 1) INSERT INTO t SELECT * FROM c",
-     "INSERT INTO t SELECT * FROM c", "t"),
+     "t"),
+    ("WITH /* x */ c AS (SELECT 1) INSERT INTO t SELECT * FROM c", "t"),
     ("WITH a AS (SELECT 1), /* x */ b AS (SELECT 2) INSERT INTO t TABLE b",
-     "INSERT INTO t TABLE b", "t"),
-    ("WITH c AS (SELECT 1 AS id -- )\n) INSERT INTO t TABLE c",
-     "INSERT INTO t TABLE c", "t"),
-    ("WITH c AS (SELECT 1 /* /* ) */ */ AS x) INSERT INTO t TABLE c",
-     "INSERT INTO t TABLE c", "t"),
-    ("WITH c AS (SELECT 1 AS x -- \\\n)\n) INSERT INTO t TABLE c",
-     "INSERT INTO t TABLE c", "t"),
+     "t"),
+    ("WITH c AS (SELECT 1 AS id -- )\n) INSERT INTO t TABLE c", "t"),
+    ("WITH c AS (SELECT 1 /* /* ) */ */ AS x) INSERT INTO t TABLE c", "t"),
+    ("WITH c AS (SELECT 1 AS x -- \\\n)\n) INSERT INTO t TABLE c", "t"),
     # literals and quoted names Spark's lexer reads past
-    ("WITH c AS (SELECT 'a\\')' AS x) INSERT INTO t TABLE c",
-     "INSERT INTO t TABLE c", "t"),
-    ("WITH c AS (SELECT r'\\' AS x) INSERT INTO t TABLE c",
-     "INSERT INTO t TABLE c", "t"),
-    ("WITH c AS (SELECT 1 AS `)`) INSERT INTO `t u` TABLE c",
-     "INSERT INTO `   ` TABLE c", "t u"),
+    ("WITH c AS (SELECT 'a\\')' AS x) INSERT INTO t TABLE c", "t"),
+    ("WITH c AS (SELECT r'\\' AS x) INSERT INTO t TABLE c", "t"),
+    ("WITH c AS (SELECT 1 AS `)`) INSERT INTO `t u` TABLE c", "t u"),
     ("WITH RECURSIVE r(n) MAX RECURSION LEVEL 5 AS (SELECT 1) "
-     "INSERT INTO t TABLE r", "INSERT INTO t TABLE r", "t"),
-    # a FROM-first multi-insert reads as its first INSERT
-    ("FROM s INSERT INTO t SELECT *", "INSERT INTO t SELECT *", "t"),
-    ("WITH c AS (SELECT 1) FROM c INSERT INTO t SELECT *",
-     "INSERT INTO t SELECT *", "t"),
-    ("FROM (SELECT 1 AS insert) s SELECT *",
-     "FROM (SELECT 1 AS insert) s SELECT *", None),
-    ("SELECT '--' AS x -- c", "SELECT      AS x     ", None),
-    ("SELECT 1", "SELECT 1", None),
-    (" WITH c AS (SELECT 1", "WITH c AS (SELECT 1", None),
-    ("WITHOUT x", "WITHOUT x", None),
+     "INSERT INTO t TABLE r", "t"),
+    # a FROM-first multi-insert writes its first INSERT's table first
+    ("FROM s INSERT INTO t SELECT *", "t"),
+    ("WITH c AS (SELECT 1) FROM c INSERT INTO t SELECT *", "t"),
+    ("FROM (SELECT 1 AS insert) s SELECT *", None),
+    ("SELECT '--' AS x -- c", None),
+    ("SELECT 1", None),
+    (" WITH c AS (SELECT 1", ParseException),
+    ("WITHOUT x", ParseException),
 ])
-def test_statement_body_looks_past_comments_and_a_with_list(sql, body, target):
-    assert statement_body(sql) == body
-    assert dml_target(sql) == target
+def test_statement_body_looks_past_comments_and_a_with_list(spark, sql,
+                                                            target):
+    if target is ParseException:
+        with pytest.raises(ParseException):
+            security.classify(spark, sql)
+        return
+    stmt = security.classify(spark, sql)
+    assert stmt.kind == ("query" if target is None else "write")
+    assert (stmt.writes[0] if stmt.writes else None) == (
+        None if target is None else (target,))
 
 
-def test_ddl_target_looks_past_comments():
-    assert ddl_write_target("/* c */ DROP TABLE t") == "t"
-    assert ddl_write_target("-- c\nCREATE TEMP VIEW v AS SELECT 1") is None
+def test_ddl_target_looks_past_comments(spark):
+    assert security.classify(spark, "/* c */ DROP TABLE t").writes == (("t",),)
+    temp = security.classify(spark, "-- c\nCREATE TEMP VIEW v AS SELECT 1")
+    assert temp.kind == "command" and not temp.writes

@@ -19,6 +19,7 @@ from gizmosql_spark.admission import AdmissionController, QueueFullError
 from gizmosql_spark.dialect import (
     KillCommand,
     SetCommand,
+    TxnCommand,
     classify_command,
     extract_file_scans,
     replace_pseudo_functions,
@@ -117,17 +118,63 @@ def test_admin_gate_blocks_non_admin():
     security.check_admin_gate("ATTACH '/tmp/x.db' AS x", is_admin=True)
 
 
-def test_readonly_blocks_writes():
+def test_readonly_blocks_writes(spark):
+    def check(sql, role="readonly"):
+        security.check_readonly(security.classify(spark, sql), role)
+
     with pytest.raises(security.CommandDenied):
-        security.check_readonly("INSERT INTO t VALUES (1)", "readonly")
+        check("INSERT INTO t VALUES (1)")
     with pytest.raises(security.CommandDenied):
-        security.check_readonly("DROP TABLE t", "readonly")
-    security.check_readonly("SELECT 1", "readonly")
-    security.check_readonly("CREATE TEMP VIEW v AS SELECT 1", "readonly")
-    security.check_readonly("BEGIN TRANSACTION", "readonly")
+        check("DROP TABLE t")
+    check("SELECT 1")
+    check("CREATE TEMP VIEW v AS SELECT 1")
+    # BEGIN TRANSACTION is the engine's own command, claimed before
+    # the gate; BEGIN … END is a Spark script
+    assert isinstance(classify_command("BEGIN TRANSACTION"), TxnCommand)
     with pytest.raises(security.CommandDenied):
-        security.check_readonly("BEGIN DELETE FROM t; END", "readonly")
-    security.check_readonly("INSERT INTO t VALUES (1)", "user")
+        check("BEGIN DELETE FROM t; END")
+    check("INSERT INTO t VALUES (1)", "user")
+
+
+@pytest.mark.parametrize("role", ["user", "readonly"])
+@pytest.mark.parametrize("sql", [
+    "SELECT * FROM text.`/etc/hostname`",
+    "SELECT count(*) FROM csv.`/etc/passwd`",
+    "SELECT * FROM `org.apache.spark.sql.execution.datasources.text"
+    ".TextFileFormat`.`/etc/hostname`",
+    "ADD FILE '/etc/hostname'",
+    "ADD JAR '/tmp/x.jar'",
+    "ADD ARCHIVE '/tmp/x.zip'",
+    "CREATE FUNCTION f_gate AS 'x.Y' USING JAR '/tmp/x.jar'",
+    "CREATE TABLE t_gate (a INT) USING text LOCATION '/etc'",
+    "LOAD DATA LOCAL INPATH '/etc/passwd' INTO TABLE t_gate",
+    "INSERT OVERWRITE DIRECTORY '/tmp/gate_out' USING parquet SELECT 1",
+    "SELECT TRANSFORM(id) USING 'cat' FROM range(1)",
+    "SELECT reflect('java.lang.System', 'getProperty', 'user.name')",
+    "SELECT id FROM range(1) WHERE java_method('java.lang.Math', 'abs', -1)"
+    " = 1",
+])
+def test_admin_gate_spark_file_access(engine, role, sql):
+    """Spark's own file syntax, code loading, script transforms and Java
+    reflection are admin-only: each read or listed a server file, or
+    would run a program or any static Java method."""
+    sid = engine.create_session(role=role)
+    try:
+        with pytest.raises(security.CommandDenied):
+            engine.execute_sql(sid, sql)
+        assert engine.collect(sid, engine.execute_sql(sid, "LIST FILES")) == []
+    finally:
+        engine.close_session(sid)
+
+
+def test_admin_gate_spark_file_access_remote_and_admin(spark, engine,
+                                                       session):
+    for sql in ("SELECT * FROM parquet.`s3://b/x.parquet`",
+                "SELECT * FROM t AS a JOIN db.parquet b ON a.k = b.k"):
+        security.check_admin_gate(sql, False, security.classify(spark, sql))
+    rows = engine.collect(session, engine.execute_sql(
+        session, "SELECT * FROM text.`/etc/hostname`"))
+    assert len(rows) == 1
 
 
 # --- admission --------------------------------------------------------
@@ -690,8 +737,10 @@ def test_classify_txn():
     assert classify_command("BEGIN WORK NOW") is None
 
 
-def test_dml_target():
-    from gizmosql_spark.dialect import dml_target
+def test_dml_target(spark):
+    def dml_target(sql):
+        writes = security.classify(spark, sql).writes
+        return ".".join(writes[0]) if writes else None
 
     assert dml_target("INSERT INTO t SELECT 1") == "t"
     assert dml_target("insert overwrite table db.t values (1)") == "db.t"
@@ -833,10 +882,18 @@ def test_system_catalog_views(engine, session, spark):
 
 
 def test_system_catalog_readonly(engine, session):
-    with pytest.raises(PermissionError):
-        engine.execute_sql(
-            session, "DROP VIEW global_temp.engine_index_info"
-        )
+    for sql in (
+        "DROP VIEW global_temp.engine_index_info",
+        # a write behind a comment, a WITH list or a leading FROM
+        "/* c */ INSERT INTO global_temp.engine_index_info"
+        " SELECT * FROM global_temp.engine_index_info",
+        "WITH c AS (SELECT * FROM global_temp.engine_index_info)"
+        " INSERT INTO global_temp.engine_index_info SELECT * FROM c",
+        "FROM global_temp.engine_index_info"
+        " INSERT INTO global_temp.engine_index_info SELECT *",
+    ):
+        with pytest.raises(PermissionError):
+            engine.execute_sql(session, sql)
 
 
 def test_query_log_redaction(engine, session):
@@ -1149,6 +1206,25 @@ class TestSummarizePragma:
         rows = engine.collect(session, engine.execute_sql(
             session, "SUMMARIZE SELECT id FROM range(7)"))
         assert rows[0]["count"] == 7
+
+    def test_summarize_runs_only_a_query(self, engine, session):
+        """SUMMARIZE runs its statement eagerly, so a write there would
+        run, a readonly session's included: any role is refused one."""
+        eng = engine
+        eng.execute_sql(session, "DROP TABLE IF EXISTS t_summ_w")
+        eng.execute_sql(session, "CREATE TABLE t_summ_w AS SELECT 1 AS a")
+        ro = eng.create_session(role="readonly")
+        try:
+            for sid in (ro, session):
+                for sql in ("SUMMARIZE INSERT INTO t_summ_w VALUES (2)",
+                            "SUMMARIZE DROP TABLE t_summ_w"):
+                    with pytest.raises(ValueError, match="SUMMARIZE"):
+                        eng.execute_sql(sid, sql)
+            assert eng.collect(session, eng.execute_sql(
+                session, "SELECT count(*) AS n FROM t_summ_w"))[0]["n"] == 1
+        finally:
+            eng.close_session(ro)
+            eng.execute_sql(session, "DROP TABLE t_summ_w")
 
     def test_explain_analyze_runs_and_reports(self, engine, session):
         rows = engine.collect(session, engine.execute_sql(
