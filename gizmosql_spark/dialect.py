@@ -18,7 +18,6 @@ quote-aware scanner.
 from __future__ import annotations
 
 import re
-from dataclasses import dataclass
 
 
 def _mask_literals(sql: str) -> str:
@@ -47,89 +46,6 @@ def _mask_literals(sql: str) -> str:
             out.append(c)
             i += 1
     return "".join(out)
-
-
-# --- statement classification ----------------------------------------
-
-_SET_RE = re.compile(
-    r"^\s*SET\s+(?:(SESSION|GLOBAL)\s+)?(engine\.[a-z_.]+|gizmosql\.[a-z_.]+)"
-    r"\s*(?:=|\s+TO\s+)\s*(.+?)\s*;?\s*$",
-    re.IGNORECASE | re.DOTALL,
-)
-_KILL_RE = re.compile(
-    r"^\s*KILL\s+SESSION\s+'?([0-9a-fA-F-]+)'?\s*;?\s*$", re.IGNORECASE
-)
-_TXN_RE = re.compile(
-    r"^\s*(BEGIN(?:\s+TRANSACTION)?|START\s+TRANSACTION|COMMIT|ROLLBACK|ABORT)"
-    r"\s*;?\s*$",
-    re.IGNORECASE,
-)
-
-
-@dataclass
-class SetCommand:
-    scope: str  # "session" | "global"
-    name: str
-    value: str
-
-
-@dataclass
-class KillCommand:
-    session_id: str
-
-
-@dataclass
-class TxnCommand:
-    action: str  # "begin" | "commit" | "rollback"
-
-
-@dataclass
-class IndexCommand:
-    action: str  # "create" | "drop"
-    name: str
-    table: str | None = None
-    columns: tuple[str, ...] = ()
-
-
-_CREATE_INDEX_RE = re.compile(
-    r"^\s*CREATE\s+(?:UNIQUE\s+)?INDEX\s+(?:IF\s+NOT\s+EXISTS\s+)?"
-    r"([A-Za-z_]\w*)\s+ON\s+([A-Za-z_][\w.]*)\s*\(([^)]+)\)\s*;?\s*$",
-    re.IGNORECASE,
-)
-_DROP_INDEX_RE = re.compile(
-    r"^\s*DROP\s+INDEX\s+(?:IF\s+EXISTS\s+)?([A-Za-z_]\w*)\s*;?\s*$",
-    re.IGNORECASE,
-)
-
-
-def classify_command(sql: str):
-    """Detect engine-level commands that never reach Spark.
-
-    Returns SetCommand | KillCommand | TxnCommand | None (plain SQL).
-    """
-    m = _SET_RE.match(sql)
-    if m:
-        scope = (m.group(1) or "session").lower()
-        name = m.group(2).lower().replace("gizmosql.", "engine.")
-        value = m.group(3).strip().strip("'\"")
-        return SetCommand(scope, name, value)
-    m = _KILL_RE.match(sql)
-    if m:
-        return KillCommand(m.group(1))
-    m = _TXN_RE.match(sql)
-    if m:
-        word = m.group(1).split()[0].upper()
-        action = {"BEGIN": "begin", "START": "begin", "COMMIT": "commit",
-                  "ROLLBACK": "rollback", "ABORT": "rollback"}[word]
-        return TxnCommand(action)
-    m = _CREATE_INDEX_RE.match(sql)
-    if m:
-        cols = tuple(c.strip().strip('"`') for c in m.group(3).split(","))
-        return IndexCommand("create", m.group(1), m.group(2), cols)
-    m = _DROP_INDEX_RE.match(sql)
-    if m:
-        return IndexCommand("drop", m.group(1))
-    return None
 
 
 def split_statements(script: str) -> list[str]:
@@ -283,8 +199,8 @@ def extract_file_scans(sql: str) -> tuple[str, list[tuple[str, str, str]]]:
 # operator (operators/registry.py — dedup tiers, quality gates,
 # samplers, sketches, …) to SQL clients over the same wire as any
 # query, so a Flight SQL user can run the training-data operators
-# without touching Python. Local dirs inherit the read_* admin gate
-# (security._GATED_FN_RE).
+# without touching Python. A non-admin may name no local dir: the dir
+# joins the statement's paths, which the admin gate reads.
 
 _PIPELINE_OP_RE = re.compile(
     r"\bpipeline_op\s*\(\s*'([A-Za-z0-9_]+)'\s*(?:,\s*'([^']+)'\s*)?\)",
@@ -435,27 +351,28 @@ def _pivot_literal(v) -> str:
     return f"'{q}'"
 
 
-def pivot_source(sql: str) -> str | None:
-    """A query reading what DuckDB's ``PIVOT`` statement reads (its
-    table, pivot column and aggregates), else None: the statement's
-    distinct-value probe is a job, so its source is gated first."""
+def parse_pivot(sql: str) -> tuple | None:
+    """DuckDB's simplified ``PIVOT t ON col [USING aggs] [GROUP BY
+    cols]`` statement → (table, column, aggregates, group-by columns),
+    else None."""
     m = _PIVOT_STMT_RE.match(sql)
-    if m is None:
-        return None
-    table, on_col, using, _ = m.groups()
+    return m and m.groups()
+
+
+def pivot_source(pivot: tuple) -> str:
+    """A query reading what a ``PIVOT`` statement (``parse_pivot``)
+    reads (its table, pivot column and aggregates): the statement's
+    distinct-value probe is a job, so its source is gated first."""
+    table, on_col, using, _ = pivot
     return f"SELECT {on_col}, {using or 'count(*)'} FROM {table}"
 
 
-def rewrite_pivot_statement(sql: str, spark) -> str:
-    """DuckDB's simplified ``PIVOT t ON col [USING aggs] [GROUP BY
-    cols]`` statement → standard Spark PIVOT. DuckDB detects the
-    pivot values with a bind-time DISTINCT scan (pivot.cpp) — the
-    rewrite does the identical probe, so both engines emit one column
-    per observed value in sorted order."""
-    m = _PIVOT_STMT_RE.match(sql)
-    if m is None:
-        return sql
-    table, on_col, using, group_by = m.groups()
+def rewrite_pivot_statement(pivot: tuple, spark) -> str:
+    """A ``PIVOT`` statement (``parse_pivot``) → standard Spark PIVOT.
+    DuckDB detects the pivot values with a bind-time DISTINCT scan
+    (pivot.cpp) — the rewrite does the identical probe, so both
+    engines emit one column per observed value in sorted order."""
+    table, on_col, using, group_by = pivot
     using = (using or "count(*)").strip()
     # bound bind-time probe: a pivot over a high-cardinality column
     # would otherwise collect unbounded values onto the driver AND

@@ -28,7 +28,7 @@ import threading
 import time
 import uuid
 from dataclasses import dataclass, field, replace
-from typing import Any
+from typing import Any, Callable
 
 import pyarrow as pa
 from pyspark.errors import AnalysisException, ParseException
@@ -36,26 +36,31 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
-from gizmosql_spark import security
+from gizmosql_spark import dml, maintenance, security
 from gizmosql_spark.admission import AdmissionController
 from gizmosql_spark.dialect import (
-    IndexCommand,
-    KillCommand,
-    SetCommand,
-    TxnCommand,
-    classify_command,
     extract_file_scans,
     extract_flight_scans,
     parse_attach_flight,
+    parse_create_macro,
     parse_detach,
+    parse_drop_macro,
+    parse_pragma,
+    parse_pivot,
+    parse_summarize,
+    pivot_source,
     replace_pseudo_functions,
     rewrite_settings_function,
     split_statements,
+    upsert_parts,
 )
 from gizmosql_spark.querylog import QueryLog
+from gizmosql_spark.secrets import parse_secret_ddl
+from gizmosql_spark.security import Statement
 from gizmosql_spark.session import get_spark
 from gizmosql_spark import session_cache
 from gizmosql_spark.session_cache import SessionLRU
+from gizmosql_spark.sources.registry import parse_copy
 from gizmosql_spark.settings import (
     SETTINGS_SCHEMA,
     SettingsState,
@@ -309,6 +314,33 @@ _EXCHANGE_OPS_RE = re.compile(
 _DML_ROOTS = frozenset({"InsertIntoStatement", "UpdateTable",
                         "DeleteFromTable", "MergeIntoTable", "Union"})
 
+#: the grammars of the engine's own commands (``Engine._COMMANDS``)
+_SET_RE = re.compile(
+    r"^\s*SET\s+(?:(SESSION|GLOBAL)\s+)?((?:engine|gizmosql)\.[a-z_.]+)"
+    r"\s*(?:=|\s+TO\s+)\s*(.+?)\s*;?\s*$", re.IGNORECASE | re.DOTALL)
+_KILL_RE = re.compile(
+    r"^\s*KILL\s+SESSION\s+'?([0-9a-fA-F-]+)'?\s*;?\s*$", re.IGNORECASE)
+_TXN_RE = re.compile(
+    r"^\s*(BEGIN(?:\s+TRANSACTION)?|START\s+TRANSACTION|COMMIT|ROLLBACK"
+    r"|ABORT)\s*;?\s*$", re.IGNORECASE)
+_TXN_ACTIONS = {"BEGIN": "begin", "START": "begin", "COMMIT": "commit",
+                "ROLLBACK": "rollback", "ABORT": "rollback"}
+_CREATE_INDEX_RE = re.compile(
+    r"^\s*CREATE\s+(?:UNIQUE\s+)?INDEX\s+(?:IF\s+NOT\s+EXISTS\s+)?"
+    r"([A-Za-z_]\w*)\s+ON\s+([A-Za-z_][\w.]*)\s*\(([^)]+)\)\s*;?\s*$",
+    re.IGNORECASE)
+_DROP_INDEX_RE = re.compile(
+    r"^\s*DROP\s+INDEX\s+(?:IF\s+EXISTS\s+)?([A-Za-z_]\w*)\s*;?\s*$",
+    re.IGNORECASE)
+_EXPLAIN_ANALYZE_RE = re.compile(r"^\s*EXPLAIN\s+ANALYZE\s+(.+)$",
+                                 re.IGNORECASE | re.DOTALL)
+_ATTACH_RE = re.compile(r"^\s*ATTACH\b", re.IGNORECASE)
+_EXTENSION_RE = re.compile(r"^\s*(?:FORCE\s+)?(INSTALL|LOAD)\b(?!\s+DATA\b)",
+                           re.IGNORECASE)
+_CHECKPOINT_RE = re.compile(r"^\s*CHECKPOINT\s*;?\s*$", re.IGNORECASE)
+_DATABASE_RE = re.compile(
+    r"^\s*(EXPORT|IMPORT)\s+DATABASE\s+'([^']+)'\s*;?\s*$", re.IGNORECASE)
+
 
 def _file_relation(st: SessionState, fmt: str, path: str,
                    telemetry=None) -> tuple[DataFrame, tuple | None]:
@@ -357,6 +389,22 @@ def _resolve_stars(st: SessionState, sql: str) -> str:
     return sql
 
 
+@dataclass(frozen=True)
+class _Command:
+    """One engine command: a row of ``Engine._COMMANDS``."""
+
+    #: (engine, session, text) → (what the gates read, what the parse
+    #: read), or None when the text is not this command
+    parse: Callable
+    #: (engine, session, _Rewritten) → the command's result
+    run: Callable
+    #: it reads the text as sent (else the text after the rewrites)
+    raw: bool = False
+    #: it changes no relation a query resolves, so the sessions' cached
+    #: plans stay fresh
+    keeps_plans: bool = False
+
+
 @dataclass
 class _Rewritten:
     """A statement after its text rewrites, classified and gated
@@ -365,11 +413,15 @@ class _Rewritten:
 
     sql: str
     stmt: security.Statement
-    #: an engine command, (name, what its parser read): the rewrites
-    #: stop at some (secret, macro, pivot, summarize, explain, pragma);
-    #: ``Engine._classify`` parses the rest, which run once the views
-    #: the statement reads are registered (``Engine._run_command``)
-    command: tuple | None = None
+    #: the engine command that runs it (``Engine._run_command``) and
+    #: what that command's parser read; None: Spark runs the text
+    command: _Command | None = None
+    parsed: Any = None
+    #: the values bound to its markers (None: it has none)
+    args: dict[str, Any] | None = None
+    #: the statement row and span a run inside it records under
+    #: (EXPLAIN ANALYZE)
+    trace: tuple = (None, None)
     #: it registers views of its own other than file scans, so its
     #: plan is never reused (``Engine._run_statement``)
     ephemeral: bool = False
@@ -496,6 +548,39 @@ def _upload_frame(st: SessionState,
                if plan.nodeName() == "LogicalRDD" else 1)
     parts = min(batches, st.spark.sparkContext.defaultParallelism)
     return df.coalesce(parts), parts
+
+
+def _parser(parse, statement):
+    """A command-table parser from a parser of the text alone:
+    ``statement(what it read)`` is what the gates read."""
+    def parse_row(engine, st, sql):
+        got = parse(sql)
+        return got and (statement(got), got)
+    return parse_row
+
+
+def _writes(i: int):
+    """What the gates read of a command that rewrites the table its
+    parser read at ``i``."""
+    return lambda got: Statement("write", writes=(tuple(got[i].split(".")),))
+
+
+def _dml_parser(parse):
+    """A command-table parser of UPDATE, DELETE or MERGE, which the
+    engine runs copy-on-write: its target is the table ``parse`` names,
+    which it reads as well, and what else it reads is what Spark's plan
+    shows."""
+    def parse_row(engine, st, sql):
+        got = parse(sql)
+        if got:
+            try:
+                stmt = security.classify(st.spark, sql)
+            except ParseException:  # what its expressions read is unknown
+                stmt = Statement("write", opaque=True, root="UpdateTable")
+            target = tuple(got[0].split("."))
+            return replace(stmt, kind="write", writes=(target,),
+                           reads=stmt.reads + (target,)), got
+    return parse_row
 
 
 class Engine:
@@ -678,19 +763,6 @@ class Engine:
 
     # --- settings -----------------------------------------------------
 
-    def _apply_set(self, st: SessionState, cmd: SetCommand) -> StatementResult:
-        target = self.global_settings if cmd.scope == "global" else st.settings
-        value = target.set(cmd.name, cmd.value, cmd.scope, st.is_admin)
-        if cmd.name == "engine.max_concurrent_statements":
-            self._admission.max_concurrent = int(value)
-        elif cmd.name == "engine.max_queued_statements":
-            self._admission.max_queued = int(value)
-        elif cmd.name == "engine.max_queue_wait":
-            self._admission.max_wait_seconds = float(value)
-        elif cmd.name == "engine.graceful_shutdown" and value:
-            self.begin_drain()
-        return StatementResult("set", info={cmd.name: str(value)})
-
     def _register_settings_view(self, st: SessionState) -> None:
         rows = settings_rows(st.settings, self.global_settings)
         st.spark.createDataFrame(rows, SETTINGS_SCHEMA).createOrReplaceTempView(
@@ -738,70 +810,32 @@ class Engine:
             raise ServerDraining("server is draining")
         st = self._session(session_id)
 
-        cmd = classify_command(sql)
-        if isinstance(cmd, SetCommand):
-            return self._apply_set(st, cmd)
-        if isinstance(cmd, KillCommand):
-            ok = self.kill_session(cmd.session_id, by=session_id)
-            return StatementResult("kill", info={"killed": str(ok).lower()})
-        if isinstance(cmd, TxnCommand):
-            if cmd.action == "begin":
-                self.begin_transaction(session_id)
-            else:
-                self.end_transaction(session_id, commit=cmd.action == "commit")
-            return StatementResult("txn", info={"action": cmd.action})
-        if isinstance(cmd, IndexCommand):
-            # CREATE/DROP INDEX (tests/test_v1_22_features.py:52-54 in
-            # the reference): Spark has no secondary indexes — recorded
-            # as engine metadata, surfaced via engine_index_info
-            # (SURVEY §2C DDL row).
-            security.check_readonly(security.Statement("write"), st.role)
-            reg = self.system_catalog.registry
-            if cmd.action == "create":
-                reg.declare_index(cmd.table, cmd.name, *cmd.columns)
-            else:
-                for table, idx in list(reg.indexes.items()):
-                    idx.pop(cmd.name, None)
-            return StatementResult(
-                "update", affected_rows=0, info={"index": cmd.name}
-            )
-
         t_start = time.perf_counter()
         rw = self._gate(st, sql, args, entry)
-        # ATTACH/DETACH of remote Flight engines (adbc_scanner analog;
-        # reaches here only for admins — the admin gate above blocks
-        # ATTACH/DETACH for everyone else)
-        name, parsed = rw.command or (None, None)
-        if name in ("attach", "detach"):
-            if name == "attach":
-                alias, uri, user, pw = parsed
-                st.attached[alias] = (uri, user, pw)
-                info = {"attached": alias}
-            else:
-                st.attached.pop(parsed)
-                info = {"detached": parsed}
-            self._record_outcome(st, sql, "ok", t_start)
-            return StatementResult("set", info=info)
-
-        self.system_catalog.observe_statement(sql)
+        self.system_catalog.observe_statement(sql, rw.stmt)
         for target in rw.targets:
             self.warehouse.prepare_write(st.spark, target)
         stmt_id = self.instr.statement(session_id, sql, entry, True)
+        # an engine command that changes no relation a query resolves
+        # leaves every session's cached plans fresh
+        keeps_plans = rw.command is not None and rw.command.keeps_plans
         try:
             with self.telemetry.span(
                 "statement.execute", session=session_id,
                 user=st.username) as sp:
-                result = self._run_statement(st, rw, args, stmt_id, sp)
+                rw.trace = stmt_id, sp
+                result = self._run_statement(st, rw)
                 sp.set_attribute("statement.kind", result.kind)
                 if result.plan_cache is not None:
                     sp.set_attribute("plan_cache", result.plan_cache)
         except Exception as exc:
-            self._invalidate_plans()
+            if not keeps_plans:
+                self._invalidate_plans()
             elapsed = self._record_outcome(st, sql, "error", t_start)
             self.instr.execution(
                 stmt_id, "error", duration_ms=elapsed, error=str(exc))
             raise
-        if result.kind != "query":
+        if result.kind != "query" and not keeps_plans:
             self._invalidate_plans()
         # keep the persistent manifest in step with catalog writes
         # (record() no-ops for temp views and resolves to forget() for
@@ -839,10 +873,9 @@ class Engine:
             raise
 
     def _check(self, st: SessionState, stmt: security.Statement) -> None:
-        """The checks a classified statement passes: the admin gate (its
-        text rules ran before the rewrites), the readonly role, the
-        catalog ACL and system-catalog writes."""
-        security.check_admin_gate(None, st.is_admin, stmt)
+        """The checks a classified statement passes: the admin gate, the
+        readonly role, the catalog ACL and system-catalog writes."""
+        security.check_admin_gate(stmt, st.is_admin)
         security.check_readonly(stmt, st.role)
         if st.read_catalogs is not None or st.write_catalogs is not None:
             try:
@@ -902,12 +935,13 @@ class Engine:
 
     #: table functions whose call becomes a view the engine registers
     #: for the statement (``_register_table_fn``); the last two only
-    #: admins may read
+    #: admins may read (``_ADMIN_TABLE_FNS``)
     _TABLE_FNS = tuple(
         (name, re.compile(rf"\b{name}\s*\(\s*\)", re.IGNORECASE))
         for name in ("engine_query_log", "engine_macros", "engine_access_log",
                      "engine_admission_stats", "engine_logs",
                      "engine_secrets"))
+    _ADMIN_TABLE_FNS = ("engine_logs", "engine_secrets")
     _TABLE_CHANGES_RE = re.compile(
         r"\btable_changes\s*\(\s*'([A-Za-z_][\w.]*)'\s*,\s*(\d+)"
         r"(?:\s*,\s*(\d+))?\s*\)", re.IGNORECASE)
@@ -917,25 +951,18 @@ class Engine:
     #: table functions that register a view per statement
     _EPHEMERAL_VIEW_RES = (*(fn_re for _, fn_re in _TABLE_FNS),
                            _INSTR_VIEW_RE, _TABLE_CHANGES_RE)
-    _EXPORT_DB_RE = re.compile(
-        r"^\s*(EXPORT|IMPORT)\s+DATABASE\s+'([^']+)'\s*;?\s*$",
-        re.IGNORECASE)
-    _CHECKPOINT_RE = re.compile(r"^\s*CHECKPOINT\s*;?\s*$", re.IGNORECASE)
 
     def _rewrite(self, st: SessionState, sql: str,
                  args: dict[str, Any] | None) -> _Rewritten:
-        """Apply the statement's text rewrites, which run nothing, then
-        classify and check it (``_check``), so every check passes before
-        a view is registered, an operator or a remote scan runs, or the
-        statement runs. An engine command stops at its own parser."""
+        """Classify the statement (``_classify``) and check it
+        (``_check``): an engine command that reads the text as sent, or
+        else the text after its rewrites, which run nothing, so every
+        check passes before a view is registered, an operator or a
+        remote scan runs, or the statement runs."""
         from gizmosql_spark.dialect import (
+            expand_macros,
             extract_pipeline_ops,
             extract_time_travel,
-            parse_create_macro,
-            parse_drop_macro,
-            parse_pragma,
-            parse_summarize,
-            pivot_source,
             rewrite_asof_join,
             rewrite_distinct_on,
             rewrite_exclude,
@@ -943,71 +970,17 @@ class Engine:
             rewrite_unpivot_statement,
             star_replace_items,
         )
-        from gizmosql_spark.secrets import parse_secret_ddl
 
-        Statement = security.Statement
-        raw = sql
-        # the text rules first: ATTACH and the like are no statement
-        # Spark's parser reads
-        security.check_admin_gate(raw, st.is_admin)
         if args is not None:
             # before any rewrite copies or reorders a marker
             sql = _name_positional_params(sql)
-
-        def gated(stmt: security.Statement, command=None,
-                  **kw) -> _Rewritten:
-            self._check(st, stmt)
-            return _Rewritten(sql, stmt, command, **kw)
-
-        def source(query: str, what: str) -> security.Statement:
-            # a statement that runs a query of its own: the query, never
-            # a write, is what it does
-            stmt, command = self._classify(st, query)
-            if stmt.kind != "query" or command is not None:
-                raise ValueError(f"{what} supports a table or a query only")
-            return replace(stmt, kind="command")
-
-        sec_ddl = parse_secret_ddl(sql)
-        if sec_ddl is not None:
-            return gated(Statement("write"), ("secret", sec_ddl))
-        if "MACRO" in sql.upper():
-            cm = parse_create_macro(sql)
-            if cm is not None:
-                return gated(Statement("write"), ("create_macro", cm))
-            dm = parse_drop_macro(sql)
-            if dm is not None:
-                return gated(Statement("write"), ("drop_macro", dm))
+        got = self._classify(st, sql, raw=True)
+        if got is not None:
+            self._check(st, got[0])
+            return _Rewritten(sql, *got, args=args)
         if self.macros:
-            from gizmosql_spark.dialect import expand_macros
-
             sql = expand_macros(sql, self.macros)
-        src = pivot_source(sql)
-        if src is not None:
-            return gated(source(src, "PIVOT"), ("pivot", None))
         sql = rewrite_unpivot_statement(sql)
-        target = parse_summarize(sql)
-        if target is not None:
-            query = (f"SELECT * FROM {target}"
-                     if re.fullmatch(r"\s*[A-Za-z_][\w.]*\s*", target)
-                     else target)
-            return gated(source(query, "SUMMARIZE"), ("summarize", query))
-        ea = re.match(r"^\s*EXPLAIN\s+ANALYZE\s+(.+)$", sql,
-                      re.IGNORECASE | re.DOTALL)
-        if ea is not None:
-            inner = self._rewrite(st, ea.group(1), args)
-            if inner.stmt.kind != "query":
-                raise ValueError(
-                    "EXPLAIN ANALYZE supports query statements only")
-            return _Rewritten(sql, replace(inner.stmt, kind="command"),
-                              ("explain", inner))
-        pragma = parse_pragma(sql)
-        if pragma is not None:
-            name, arg = pragma
-            stmt = (Statement("write") if name == "import_database" else
-                    Statement("command",
-                              reads=(tuple(arg.split(".")),) if arg else ()))
-            return gated(stmt, ("pragma", pragma))
-
         sql = replace_pseudo_functions(sql, self._pseudo_values(st))
         if "ASOF" in sql.upper():
             sql = rewrite_asof_join(sql)
@@ -1024,10 +997,6 @@ class Engine:
         table_fns = ["engine_settings"] if used_settings else []
         for name, fn_re in self._TABLE_FNS:
             if fn_re.search(sql):
-                if name in ("engine_logs", "engine_secrets") \
-                        and not st.is_admin:
-                    raise security.CommandDenied(
-                        f"{name}() requires admin role")
                 sql = fn_re.sub(name, sql)
                 table_fns.append(name)
         changes = []
@@ -1042,10 +1011,8 @@ class Engine:
         sql, pops = extract_pipeline_ops(sql)
         sql, scans = extract_file_scans(sql)
         # remote-engine scans (flight_scan table function + attached
-        # Flight catalogs) — admin-only, like ATTACH itself
+        # Flight catalogs)
         sql, fscans = extract_flight_scans(sql)
-        if fscans and not st.is_admin:
-            raise security.CommandDenied("flight_scan requires admin role")
         remote: list[tuple[str, str, str]] = []
         for alias in st.attached:
             def _sub(m, _alias=alias):
@@ -1060,82 +1027,39 @@ class Engine:
         # the schema-resolved rewrites (COLUMNS, * REPLACE, ORDER BY
         # ALL) run after the gate; a * REPLACE list reads as a select
         # list here
-        stmt, command = self._classify(
+        stmt, command, parsed = self._classify(
             st, star_replace_items(sql) if "REPLACE" in sql.upper() else sql)
-        read_by_name = [t for _, t, *_ in changes] + [t for _, t, _ in travels]
-        if read_by_name:
-            stmt = stmt.merge(Statement(
-                "query", reads=tuple(tuple(t.split(".")) for t in read_by_name)))
-        return gated(stmt, command, ephemeral=bool(
-                         ephemeral or travels or pops or fscans),
-                     table_fns=table_fns, changes=changes, travels=travels,
-                     pops=pops, scans=scans, fscans=fscans, remote=remote)
+        # what the rewrites took out of the text: the tables read by
+        # name, the paths scanned, and the calls only an admin may make
+        # (flight_scan, like ATTACH; the admin-only table functions)
+        admin = "flight_scan()" if fscans else next(
+            (f"{n}()" for n in table_fns if n in self._ADMIN_TABLE_FNS), None)
+        stmt = stmt.merge(Statement(
+            "query", reads=tuple(
+                tuple(t.split(".")) for _, t, *_ in changes + travels),
+            paths=tuple(p for *_, p in scans) + tuple(
+                d for *_, d in pops if d), admin=admin))
+        self._check(st, stmt)
+        return _Rewritten(sql, stmt, command, parsed, args, ephemeral=bool(
+                              ephemeral or travels or pops or fscans),
+                          table_fns=table_fns, changes=changes,
+                          travels=travels, pops=pops, scans=scans,
+                          fscans=fscans, remote=remote)
 
-    def _classify(self, st: SessionState, sql: str
-                  ) -> tuple[security.Statement, tuple | None]:
-        """``sql``'s classification and, for an engine command, what its
-        parser read, ``(name, parsed)``, which ``_run_command`` runs.
-        The commands Spark cannot parse and the DML the engine emulates
-        are classified by the engine's own parser (its target is the
-        table that parser names); anything else from Spark's parsed
-        plan (``security.classify``)."""
-        from gizmosql_spark import dml, maintenance
-        from gizmosql_spark.dialect import upsert_parts
-        from gizmosql_spark.sources.registry import parse_copy
-
-        Statement = security.Statement
-        for name, parse in (("optimize", maintenance.parse_optimize),
-                            ("restore", maintenance.parse_restore),
-                            ("vacuum", maintenance.parse_vacuum)):
-            got = parse(sql)
-            if got is not None:
-                return (Statement("write", writes=(tuple(got[0].split(".")),)),
-                        (name, got))
-        exp = self._EXPORT_DB_RE.match(sql)
-        att, det = parse_attach_flight(sql), parse_detach(sql)
-        for name, got in (("checkpoint", self._CHECKPOINT_RE.match(sql)),
-                          ("export", exp and exp.groups()),
-                          ("attach", att),
-                          ("detach", det if det in st.attached else None)):
-            if got:
-                return Statement("write"), (name, got)
-        cp = parse_copy(sql)
-        if cp is not None:
-            direction, src, path = cp[:3]
-            if direction == "from":
-                stmt = Statement("write", writes=(tuple(src.split(".")),))
-            else:
-                stmt, _ = self._classify(
-                    st, src[1:-1] if src.startswith("(") else f"TABLE {src}")
-            return replace(stmt, kind="write", paths=(path,)), ("copy", cp)
-        up = upsert_parts(sql)
-        if up is not None:
-            table, texts = up
-            stmt = Statement("write", writes=(tuple(table.split(".")),),
-                             root="InsertIntoStatement")
-            for text in texts:
-                stmt = stmt.merge(security.classify(st.spark, text))
-            return stmt, ("upsert", None)
-        command = None
-        for name, parse in (("update", dml.parse_update),
-                            ("delete", dml.parse_delete),
-                            ("merge", dml.parse_merge)):
-            got = parse(sql)
-            if got is not None:
-                command = (name, got)
-                break
-        try:
-            stmt = security.classify(st.spark, sql)
-        except ParseException:
-            if command is None:
-                raise
-            # what its expressions read is unknown
-            stmt = Statement("write", opaque=True, root="UpdateTable")
-        if command is not None:
-            target = tuple(command[1][0].split("."))
-            stmt = replace(stmt, kind="write", writes=(target,),
-                           reads=stmt.reads + (target,))
-        return stmt, command
+    def _classify(self, st: SessionState, sql: str, raw: bool = False):
+        """``(what it does, the engine command that runs it, what that
+        command's parser read)``: the first row of the command table
+        (``_COMMANDS``; with ``raw``, the rows that read the text as
+        sent) whose parser reads ``sql``, else Spark's parsed plan
+        (``security.classify``) and no command. With ``raw``, None when
+        no row reads it. This is the one place a command's text is
+        parsed."""
+        for command in self._COMMANDS:
+            if command.raw == raw:
+                got = command.parse(self, st, sql)
+                if got:
+                    return got[0], command, got[1]
+        return None if raw else (security.classify(st.spark, sql), None, None)
 
     def _register_table_fn(self, st: SessionState, name: str) -> None:
         """Register the view a table function's call was replaced by."""
@@ -1195,66 +1119,13 @@ class Engine:
                       " max_concurrent int, max_queued int")
         st.spark.createDataFrame(rows, schema).createOrReplaceTempView(name)
 
-    def _run_statement(self, st: SessionState, rw: _Rewritten,
-                       args: dict[str, Any] | None = None,
-                       stmt_id: str | None = None,
-                       span=None) -> StatementResult:
-        """Run (a query: analyze) one gated statement (``_rewrite``).
-        ``args`` bind its markers in the final ``spark.sql``, never
-        plan-cached; ``stmt_id``/``span`` are what a run inside the
-        statement (EXPLAIN ANALYZE) records under."""
-        from gizmosql_spark.dialect import rewrite_pivot_statement
-
+    def _run_statement(self, st: SessionState,
+                       rw: _Rewritten) -> StatementResult:
+        """Run (a query: analyze) one gated statement (``_rewrite``)
+        once the views it reads are registered: its engine command
+        (``_run_command``), or its text, with its bound values binding
+        its markers in the final ``spark.sql``, never plan-cached."""
         sql = rw.sql
-        if rw.command is not None:
-            name, parsed = rw.command
-            if name == "secret":
-                # CREATE/DROP SECRET (admin-only by the admin gate)
-                if parsed[0] == "create":
-                    _, secret, replace_ = parsed
-                    self.secrets.create(secret, replace=replace_)
-                    return StatementResult(
-                        "update", affected_rows=0,
-                        info={"secret": secret.name, "action": "create"})
-                _, sname, if_exists = parsed
-                dropped = self.secrets.drop(sname, if_exists=if_exists)
-                return StatementResult(
-                    "update", affected_rows=0,
-                    info={"secret": sname,
-                          "action": "drop" if dropped else "noop"})
-            if name == "create_macro":
-                mname, params, defaults, body, is_table, replace_ = parsed
-                key = mname.lower()
-                if key in self.macros and not replace_:
-                    raise ValueError(f"macro {mname} already exists")
-                self.macros[key] = (params, defaults, body, is_table)
-                return StatementResult(
-                    "update", affected_rows=0,
-                    info={"macro": mname, "action": "create"})
-            if name == "drop_macro":
-                mname, if_exists = parsed
-                if mname.lower() not in self.macros and not if_exists:
-                    raise ValueError(f"macro {mname} does not exist")
-                self.macros.pop(mname.lower(), None)
-                return StatementResult(
-                    "update", affected_rows=0,
-                    info={"macro": mname, "action": "drop"})
-            if name == "pivot":
-                # the distinct-value probe runs now that its source
-                # passed the gate; the standard PIVOT it writes is
-                # gated again
-                pivoted = rewrite_pivot_statement(sql, st.spark)
-                return self._run_statement(
-                    st, self._rewrite(st, pivoted, args), args, stmt_id,
-                    span)
-            if name == "summarize":
-                return StatementResult(
-                    "query", df=self._summarize(st, parsed))
-            if name == "explain":
-                return self._explain_analyze(st, parsed, args, stmt_id, span)
-            if name == "pragma":
-                return self._run_pragma(st, *parsed)
-
         for name in rw.table_fns:
             self._register_table_fn(st, name)
         if self._INSTR_VIEW_RE.search(sql):
@@ -1295,8 +1166,8 @@ class Engine:
         # pipeline-operator table function: every registered operator
         # (dedup, quality, sampling, sketches, …) callable from SQL —
         # the SQL surface a reference user gets for the extension tier.
-        # Local dirs passed the read_* admin gate upstream
-        # (security.check_admin_gate).
+        # The dir is one of the statement's paths: a non-admin's local
+        # dir was denied by the admin gate.
         for view, op_name, op_dir in rw.pops:
             from gizmosql_spark.operators import registry as op_registry
 
@@ -1315,7 +1186,8 @@ class Engine:
                 raise ValueError(str(exc)) from exc
             fn(st.spark, op_dir).createOrReplaceTempView(view)
 
-        sql = _resolve_stars(st, sql)
+        if rw.command is None:
+            sql = _resolve_stars(st, sql)
         relations, scan_ids = [], []
         for view, fmt, path in rw.scans:
             if "://" in path and not path.startswith("file:"):
@@ -1335,7 +1207,7 @@ class Engine:
         if rw.ephemeral or is_set:
             st.plans.clear()
             key = None
-        elif args is not None or any(
+        elif rw.command is not None or rw.args is not None or any(
                 ident is None for *_, ident in scan_ids):
             key = None
         else:
@@ -1372,8 +1244,6 @@ class Engine:
         if rw.command is not None:
             return self._run_command(st, rw)
 
-        from gizmosql_spark import maintenance
-
         if rw.stmt.root in ("AnalyzeTable", "AnalyzeColumn"):
             an = ".".join(rw.stmt.reads[0])
             # native ANALYZE computes the stats; the engine then folds
@@ -1389,20 +1259,6 @@ class Engine:
                 self.warehouse.upsert_entry(name, entry)
             return StatementResult("update", df=df, affected_rows=None)
 
-        evo = maintenance.parse_alter_evolution(sql)
-        if evo is not None:
-            # DROP/RENAME COLUMN: unsupported on v1 parquet tables —
-            # copy-on-write schema evolution (snapshot first, so the
-            # archived version keeps the pre-evolution schema)
-            kind, table, args = evo
-            if st.txn is not None:
-                self._txn_snapshot(st, table)
-            self.warehouse.snapshot(st.spark, table)
-            maintenance.apply_alter(
-                st.spark, kind, table, args, warehouse=self.warehouse)
-            self._refresh_everywhere(table, st.spark)
-            return StatementResult("update", affected_rows=0)
-
         target = rw.dml
         if target is not None:
             # DML path: runs eagerly inside spark.sql(). Affected count
@@ -1413,122 +1269,310 @@ class Engine:
             for t in rw.targets if st.txn is not None else ():
                 self._txn_snapshot(st, t)
             before = self._table_count(st, target)
-            df = st.spark.sql(sql, args=args)
+            df = st.spark.sql(sql, args=rw.args)
             for t in rw.targets:
                 self._refresh_everywhere(t, st.spark)
             after = self._table_count(st, target)
             affected = abs(after - before) if before is not None else None
             return StatementResult("update", df=df, affected_rows=affected)
 
-        df, outcome = self._analyze(st, sql, key, args)
+        df, outcome = self._analyze(st, sql, key, rw.args)
         if outcome is not None:
             return StatementResult("query", df=df, plan_cache=outcome)
         return StatementResult("update", df=df, affected_rows=None)
 
+    # --- the engine's own commands ------------------------------------
+    # Each is one row of _COMMANDS (the end of the class): its parser,
+    # which returns what the gates read and what it read, and the
+    # method that runs what it read. _classify is the one place their
+    # text is parsed, _run_command the one dispatch.
+
     def _run_command(self, st: SessionState,
                      rw: _Rewritten) -> StatementResult:
-        """Run the engine command ``_classify`` parsed, once the views
-        its query reads are registered."""
-        from gizmosql_spark import dml, maintenance
+        """Run what the statement's command parser read, once the views
+        its statement reads are registered."""
+        return rw.command.run(self, st, rw)
 
-        name, parsed = rw.command
-        table = ".".join(rw.stmt.writes[0]) if rw.stmt.writes else None
-        if name in ("optimize", "update", "delete", "merge", "upsert"):
-            # a rewrite in place: snapshot the pre-image so VERSION AS
-            # OF (and a rollback) survives it
-            if st.txn is not None:
-                self._txn_snapshot(st, table)
-            self.warehouse.snapshot(st.spark, table)
-        if name == "optimize":
-            _, target_mb, zorder = parsed
-            report = maintenance.apply_optimize(
-                st.spark, table, target_mb, zorder=zorder)
-            self._refresh_everywhere(table, st.spark)
-            return StatementResult("query", df=report)
-        if name == "restore":
-            report = maintenance.apply_restore(
-                st.spark, table, parsed[1], self.warehouse)
-            self._refresh_everywhere(table, st.spark)
-            self.warehouse.record(st.spark, table)
-            return StatementResult("query", df=report)
-        if name == "vacuum":
-            report = maintenance.apply_vacuum(
-                st.spark, table, parsed[1], self.warehouse)
-            return StatementResult("query", df=report)
-        if name == "checkpoint":
-            # DuckDB CHECKPOINT = flush the WAL; here = snapshot+prune
-            # the catalog commit log (admin-gated by _ADMIN_STMT_RE)
-            seq = self.warehouse.checkpoint_now()
-            return StatementResult("update", affected_rows=seq)
-        if name == "export":
-            # EXPORT/IMPORT DATABASE statement forms (the reference
-            # classifies both admin-only, admin_command_guard.cpp:
-            # 348-381)
-            from gizmosql_spark.sources.registry import (
-                export_database,
-                import_database,
-            )
-
-            word, target = parsed
-            if word.upper() == "EXPORT":
-                counts = export_database(st.spark, target)
-                return StatementResult(
-                    "update", affected_rows=len(counts))
-            tables = sorted(
-                d for d in os.listdir(target)
-                if os.path.isdir(os.path.join(target, d)))
-            for t in tables:
-                # an import overwrites: clear re-attached EXTERNAL
-                # tables / crash leftovers at the destination first
-                self.warehouse.prepare_write(st.spark, t, overwrite=True)
-            import_database(st.spark, target, tables)
-            for t in tables:
-                self._refresh_everywhere(t, st.spark)
-                self.warehouse.record(st.spark, t)
-            return StatementResult("update", affected_rows=len(tables))
-        if name == "copy":
-            # COPY … TO/FROM statement form (reference:
-            # admin_command_guard.cpp:348-381). TO exports a
-            # query/table; FROM appends a file into a managed table.
-            from gizmosql_spark.sources.registry import copy_to
-
-            direction, src, path, fmt, opts = parsed
-            if direction == "to":
-                q = src[1:-1] if src.startswith("(") else f"SELECT * FROM {src}"
-                n = _counted_write(
-                    st.spark.sql(_resolve_stars(st, q)),
-                    lambda d: copy_to(d, path, fmt=fmt, **opts))
-                return StatementResult("update", affected_rows=n)
-            reader = st.spark.read.format(fmt)
-            for k, v in opts.items():
-                reader = reader.option(k, v)
-            if fmt == "csv" and "inferSchema" not in opts:
-                reader = reader.option("inferSchema", "true")
-            n = _counted_write(
-                reader.load(path),
-                lambda d: d.write.mode("append").insertInto(src))
-            self._refresh_everywhere(src, st.spark)
-            self.warehouse.record(st.spark, src)
-            return StatementResult("update", affected_rows=n)
-        # DML on managed parquet tables, which Spark runs only on
-        # Delta/Iceberg: copy-on-write at the engine layer (dml.py); an
-        # upsert runs as the MERGE it writes
-        if name == "upsert":
-            from gizmosql_spark.dialect import rewrite_insert_upsert
-
-            name, parsed = "merge", dml.parse_merge(rewrite_insert_upsert(
-                rw.sql, st.spark,
-                lambda t: self.system_catalog.registry.primary_keys
-                .get(t.split(".")[-1].lower())))
-        if name == "merge":
-            affected = dml.apply_merge(st.spark, parsed)
-        elif name == "update":
-            _, assignments, where = parsed
-            affected = dml.apply_update(st.spark, table, assignments, where)
-        else:
-            affected = dml.apply_delete(st.spark, table, parsed[1])
+    def _in_place(self, st: SessionState, table: str, rewrite):
+        """``rewrite()``, which rewrites ``table`` in place, after a
+        snapshot of its pre-image so VERSION AS OF (and a rollback)
+        survives it; every session then reads the new table."""
+        if st.txn is not None:
+            self._txn_snapshot(st, table)
+        self.warehouse.snapshot(st.spark, table)
+        out = rewrite()
         self._refresh_everywhere(table, st.spark)
-        return StatementResult("update", affected_rows=affected)
+        return out
+
+    def _source(self, st: SessionState, query: str, what: str):
+        """What a command that runs a query of its own does: the query,
+        never a write or a command."""
+        stmt, command, _ = self._classify(st, query)
+        if stmt.kind != "query" or command is not None:
+            raise ValueError(f"{what} supports a table or a query only")
+        return replace(stmt, kind="command")
+
+    def _run_set(self, st, rw):
+        scope, name, value = rw.parsed.groups()
+        scope = (scope or "session").lower()
+        name = name.lower().replace("gizmosql.", "engine.")
+        target = self.global_settings if scope == "global" else st.settings
+        value = target.set(name, value.strip().strip("'\""), scope,
+                           st.is_admin)
+        if name == "engine.max_concurrent_statements":
+            self._admission.max_concurrent = int(value)
+        elif name == "engine.max_queued_statements":
+            self._admission.max_queued = int(value)
+        elif name == "engine.max_queue_wait":
+            self._admission.max_wait_seconds = float(value)
+        elif name == "engine.graceful_shutdown" and value:
+            self.begin_drain()
+        return StatementResult("set", info={name: str(value)})
+
+    def _run_kill(self, st, rw):
+        ok = self.kill_session(rw.parsed[1], by=st.session_id)
+        return StatementResult("kill", info={"killed": str(ok).lower()})
+
+    def _run_txn(self, st, rw):
+        action = _TXN_ACTIONS[rw.parsed[1].split()[0].upper()]
+        if action == "begin":
+            self.begin_transaction(st.session_id)
+        else:
+            self.end_transaction(st.session_id, commit=action == "commit")
+        return StatementResult("txn", info={"action": action})
+
+    # CREATE/DROP INDEX (tests/test_v1_22_features.py:52-54 in the
+    # reference): Spark has no secondary indexes — recorded as engine
+    # metadata, surfaced via engine_index_info (SURVEY §2C DDL row)
+
+    def _run_create_index(self, st, rw):
+        name, table, cols = rw.parsed.groups()
+        self.system_catalog.registry.declare_index(
+            table, name, *(c.strip().strip('"`') for c in cols.split(",")))
+        return StatementResult("update", affected_rows=0,
+                               info={"index": name})
+
+    def _run_drop_index(self, st, rw):
+        for idx in list(self.system_catalog.registry.indexes.values()):
+            idx.pop(rw.parsed[1], None)
+        return StatementResult("update", affected_rows=0,
+                               info={"index": rw.parsed[1]})
+
+    def _run_secret(self, st, rw):
+        action, what, flag = rw.parsed  # a Secret, or the name to drop
+        if action == "create":
+            self.secrets.create(what, replace=flag)
+        elif not self.secrets.drop(what, if_exists=flag):
+            action = "noop"
+        return StatementResult("update", affected_rows=0, info={
+            "secret": what.name if action == "create" else what,
+            "action": action})
+
+    def _run_create_macro(self, st, rw):
+        mname, params, defaults, body, is_table, replace_ = rw.parsed
+        if mname.lower() in self.macros and not replace_:
+            raise ValueError(f"macro {mname} already exists")
+        self.macros[mname.lower()] = (params, defaults, body, is_table)
+        return StatementResult("update", affected_rows=0,
+                               info={"macro": mname, "action": "create"})
+
+    def _run_drop_macro(self, st, rw):
+        mname, if_exists = rw.parsed
+        if self.macros.pop(mname.lower(), None) is None and not if_exists:
+            raise ValueError(f"macro {mname} does not exist")
+        return StatementResult("update", affected_rows=0,
+                               info={"macro": mname, "action": "drop"})
+
+    def _parse_explain(self, st, sql):
+        m = _EXPLAIN_ANALYZE_RE.match(sql)
+        if m:
+            inner = self._rewrite(st, m.group(1), None)
+            if inner.stmt.kind != "query":
+                raise ValueError(
+                    "EXPLAIN ANALYZE supports query statements only")
+            return replace(inner.stmt, kind="command"), inner
+
+    def _run_attach(self, st, rw):
+        # a remote Flight engine (adbc_scanner analog); any other
+        # ATTACH is parsed too, so a non-admin's is denied
+        alias, uri, user, pw = rw.parsed
+        if alias is None:
+            raise ValueError("only a Flight engine attaches: ATTACH"
+                             " 'grpc://host:port' AS name (TYPE flight)")
+        st.attached[alias] = (uri, user, pw)
+        return StatementResult("set", info={"attached": alias})
+
+    def _run_detach(self, st, rw):
+        if st.attached.pop(rw.parsed, None) is None:
+            raise ValueError(f"no attached engine named {rw.parsed}")
+        return StatementResult("set", info={"detached": rw.parsed})
+
+    def _run_extension(self, st, rw):
+        raise ValueError(f"{rw.parsed[1].upper()}: Spark loads no DuckDB"
+                         " extensions")
+
+    def _run_checkpoint(self, st, rw):
+        # DuckDB CHECKPOINT = flush the WAL; here = snapshot+prune the
+        # catalog commit log
+        seq = self.warehouse.checkpoint_now()
+        return StatementResult("update", affected_rows=seq)
+
+    def _run_database(self, st, rw):
+        # EXPORT/IMPORT DATABASE statement forms (the reference
+        # classifies both admin-only, admin_command_guard.cpp:348-381)
+        from gizmosql_spark.sources.registry import export_database
+
+        word, target = rw.parsed.groups()
+        if word.upper() == "EXPORT":
+            counts = export_database(st.spark, target)
+            return StatementResult("update", affected_rows=len(counts))
+        return self._import_database(st, target)
+
+    def _parse_pivot(self, st, sql):
+        got = parse_pivot(sql)
+        return got and (self._source(st, pivot_source(got), "PIVOT"), got)
+
+    def _run_pivot(self, st, rw):
+        # the distinct-value probe runs now that its source passed the
+        # gate; the standard PIVOT it writes is gated again
+        from gizmosql_spark.dialect import rewrite_pivot_statement
+
+        pivoted = self._rewrite(
+            st, rewrite_pivot_statement(rw.parsed, st.spark), rw.args)
+        pivoted.trace = rw.trace
+        return self._run_statement(st, pivoted)
+
+    def _parse_summarize(self, st, sql):
+        target = parse_summarize(sql)
+        if target:
+            query = (f"SELECT * FROM {target}"
+                     if re.fullmatch(r"\s*[A-Za-z_][\w.]*\s*", target)
+                     else target)
+            return self._source(st, query, "SUMMARIZE"), query
+
+    def _run_summarize(self, st, rw):
+        return StatementResult("query", df=self._summarize(st, rw.parsed))
+
+    def _run_optimize(self, st, rw):
+        table, target_mb, zorder = rw.parsed
+        return StatementResult("query", df=self._in_place(
+            st, table, lambda: maintenance.apply_optimize(
+                st.spark, table, target_mb, zorder=zorder)))
+
+    def _run_restore(self, st, rw):
+        table, version = rw.parsed
+        report = maintenance.apply_restore(
+            st.spark, table, version, self.warehouse)
+        self._refresh_everywhere(table, st.spark)
+        self.warehouse.record(st.spark, table)
+        return StatementResult("query", df=report)
+
+    def _run_vacuum(self, st, rw):
+        table, retain = rw.parsed
+        return StatementResult("query", df=maintenance.apply_vacuum(
+            st.spark, table, retain, self.warehouse))
+
+    def _run_evolution(self, st, rw):
+        # DROP/RENAME COLUMN, which v1 parquet tables cannot run:
+        # copy-on-write schema evolution (snapshot first, so the
+        # archived version keeps the pre-evolution schema)
+        kind, table, args = rw.parsed
+        self._in_place(st, table, lambda: maintenance.apply_alter(
+            st.spark, kind, table, args, warehouse=self.warehouse))
+        return StatementResult("update", affected_rows=0)
+
+    def _parse_copy(self, st, sql):
+        cp = parse_copy(sql)
+        if cp:
+            direction, src, path = cp[:3]
+            stmt = (Statement("write", writes=(tuple(src.split(".")),))
+                    if direction == "from" else self._classify(
+                        st, src[1:-1] if src.startswith("(")
+                        else f"TABLE {src}")[0])
+            return replace(stmt, kind="write",
+                           paths=stmt.paths + (path,)), cp
+
+    def _run_copy(self, st, rw):
+        # COPY … TO/FROM statement form (reference:
+        # admin_command_guard.cpp:348-381). TO exports a query/table;
+        # FROM appends a file into a managed table.
+        from gizmosql_spark.sources.registry import copy_to
+
+        direction, src, path, fmt, opts = rw.parsed
+        if direction == "to":
+            q = src[1:-1] if src.startswith("(") else f"SELECT * FROM {src}"
+            n = _counted_write(
+                st.spark.sql(_resolve_stars(st, q)),
+                lambda d: copy_to(d, path, fmt=fmt, **opts))
+            return StatementResult("update", affected_rows=n)
+        reader = st.spark.read.format(fmt)
+        for k, v in opts.items():
+            reader = reader.option(k, v)
+        if fmt == "csv" and "inferSchema" not in opts:
+            reader = reader.option("inferSchema", "true")
+        n = _counted_write(
+            reader.load(path),
+            lambda d: d.write.mode("append").insertInto(src))
+        self._refresh_everywhere(src, st.spark)
+        self.warehouse.record(st.spark, src)
+        return StatementResult("update", affected_rows=n)
+
+    # DML on managed parquet tables, which Spark runs only on
+    # Delta/Iceberg: copy-on-write at the engine layer (dml.py)
+
+    def _parse_upsert(self, st, sql):
+        up = upsert_parts(sql)
+        if up:
+            table, texts = up
+            stmt = Statement(
+                "write", writes=(tuple(table.split(".")),),
+                root="InsertIntoStatement")
+            for text in texts:
+                stmt = stmt.merge(security.classify(st.spark, text))
+            return stmt, table
+
+    def _run_upsert(self, st, rw):
+        # an upsert runs as the MERGE it writes
+        from gizmosql_spark.dialect import rewrite_insert_upsert
+
+        merge = dml.parse_merge(rewrite_insert_upsert(
+            rw.sql, st.spark, lambda t: self.system_catalog.registry
+            .primary_keys.get(t.split(".")[-1].lower())))
+        return StatementResult("update", affected_rows=self._in_place(
+            st, rw.parsed, lambda: dml.apply_merge(st.spark, merge)))
+
+    def _run_update(self, st, rw):
+        table, assignments, where = rw.parsed
+        return StatementResult("update", affected_rows=self._in_place(
+            st, table, lambda: dml.apply_update(
+                st.spark, table, assignments, where)))
+
+    def _run_delete(self, st, rw):
+        table, where = rw.parsed
+        return StatementResult("update", affected_rows=self._in_place(
+            st, table, lambda: dml.apply_delete(st.spark, table, where)))
+
+    def _run_merge(self, st, rw):
+        return StatementResult("update", affected_rows=self._in_place(
+            st, rw.parsed[0], lambda: dml.apply_merge(st.spark, rw.parsed)))
+
+    def _import_database(self, st: SessionState,
+                         source: str) -> StatementResult:
+        """IMPORT DATABASE (the statement or the PRAGMA DuckDB parses it
+        as): every table directory under ``source``, overwriting."""
+        from gizmosql_spark.sources.registry import import_database
+
+        tables = sorted(d for d in os.listdir(source)
+                        if os.path.isdir(os.path.join(source, d)))
+        for t in tables:
+            # clear re-attached EXTERNAL tables / crash leftovers at the
+            # destination first
+            self.warehouse.prepare_write(st.spark, t, overwrite=True)
+        import_database(st.spark, source, tables)
+        for t in tables:
+            self._refresh_everywhere(t, st.spark)
+            self.warehouse.record(st.spark, t)
+        return StatementResult("update", affected_rows=len(tables))
 
     # --- plan cache ---------------------------------------------------
     # A query repeated in a session reuses its analyzed DataFrame,
@@ -1794,9 +1838,8 @@ class Engine:
         self.telemetry.add_counter("engine.rows_fetched_total", float(n_rows))
         return out["value"], elapsed_ms
 
-    def _explain_analyze(self, st: SessionState, inner: _Rewritten,
-                         args: dict[str, Any] | None,
-                         stmt_id: str | None, span) -> StatementResult:
+    def _run_explain(self, st: SessionState,
+                     rw: _Rewritten) -> StatementResult:
         """DuckDB-style ``EXPLAIN ANALYZE <query>``: run the query to
         completion, then report the AQE-FINALIZED physical plan (the
         plan Spark actually executed, with runtime-re-planned joins
@@ -1804,17 +1847,17 @@ class Engine:
         inner statement goes through the normal gate/rewrite path, so
         readonly/ACL rules apply exactly as for direct execution.
         Restricted to query statements (documented deviation: DuckDB
-        also accepts DML here; ``_rewrite`` refuses any other kind) so
+        also accepts DML here; its parser refuses any other kind) so
         the EXPLAIN prefix can never smuggle a write past a readonly
         session."""
-        result = self._run_statement(st, inner, args)
+        result = self._run_statement(st, replace(rw.parsed, args=rw.args))
         if result.df is None:
             raise ValueError("EXPLAIN ANALYZE requires a query statement")
         # the run is a statement execution like any other (admission,
         # engine.query_timeout, cancel), recorded under the outer
         # statement's row and trace. The noop sink evaluates every
         # column, where count() would prune the projections away.
-        result.statement_id = stmt_id
+        result.statement_id, span = rw.trace
         if span is not None:
             result.trace_id, result.root_span_id = span.trace_id, span.span_id
         n_rows, elapsed_ms = self._materialize(
@@ -2047,12 +2090,12 @@ class Engine:
             " null_percentage double",
         )
 
-    def _run_pragma(self, st: SessionState, name: str,
-                    arg: str | None) -> StatementResult:
+    def _run_pragma(self, st: SessionState,
+                    rw: _Rewritten) -> StatementResult:
         """DuckDB client-compat PRAGMAs (the reference passes PRAGMA
         statements through to DuckDB; admin_command_guard.cpp:372
         gates the dangerous ones). Unknown pragmas fail closed."""
-        spark = st.spark
+        spark, (name, arg) = st.spark, rw.parsed
         if name == "version":
             df = spark.createDataFrame(
                 [(f"spark-{spark.version}", "gizmosql-spark")],
@@ -2097,8 +2140,6 @@ class Engine:
             # whether compaction is worth a rewrite
             if not arg:
                 raise ValueError("PRAGMA table_files requires a table")
-            import os
-
             meta = table_metadata(spark, arg)
             if meta is None:
                 raise ValueError(f"PRAGMA table_files: no such table {arg!r}")
@@ -2120,21 +2161,8 @@ class Engine:
                 rows or [("", 0)], "file string, size_bytes bigint")
             return StatementResult("query", df=df.filter("file <> ''"))
         if name == "import_database":
-            # parsed as PRAGMA by DuckDB (admin_command_guard.cpp:373);
-            # route through the same admin gate as the statement form
-            security.check_admin_gate(
-                f"IMPORT DATABASE '{arg}'", is_admin=st.is_admin)
-            import os
-
-            from gizmosql_spark.sources.registry import import_database
-
-            tables = sorted(
-                d for d in os.listdir(arg)
-                if os.path.isdir(os.path.join(arg, d)))
-            import_database(spark, arg, tables)
-            for t in tables:
-                self._refresh_everywhere(t, spark)
-            return StatementResult("update", affected_rows=len(tables))
+            # parsed as PRAGMA by DuckDB (admin_command_guard.cpp:373)
+            return self._import_database(st, arg)
         raise ValueError(f"unsupported PRAGMA: {name}")
 
     def register_arrow_view(self, session_id: str, name: str,
@@ -2224,3 +2252,63 @@ class Engine:
             "stale": age > 3 * getattr(self, "_health_interval", 5.0),
             "last_ok_age_s": age,
         }
+
+    #: the engine's own commands, each parsed once (``_classify``), gated
+    #: by what its parser read and run from one dispatch
+    #: (``_run_command``). The rows that read the text as sent are tried
+    #: before the rewrites, the others after them; text no row reads is
+    #: Spark's.
+    _COMMANDS = (
+        _Command(_parser(_SET_RE.match, lambda m: Statement("command")),
+                 _run_set, raw=True, keeps_plans=True),
+        _Command(_parser(_KILL_RE.match, lambda m: Statement(
+            "command", admin="KILL SESSION")),
+                 _run_kill, raw=True, keeps_plans=True),
+        _Command(_parser(_TXN_RE.match, lambda m: Statement("command")),
+                 _run_txn, raw=True, keeps_plans=True),
+        _Command(_parser(_CREATE_INDEX_RE.match, lambda m: Statement(
+            "write", reads=(tuple(m[2].split(".")),))),
+                 _run_create_index, raw=True, keeps_plans=True),
+        _Command(_parser(_DROP_INDEX_RE.match, lambda m: Statement("write")),
+                 _run_drop_index, raw=True, keeps_plans=True),
+        _Command(_parser(parse_secret_ddl, lambda got: Statement(
+            "write", admin=f"{got[0].upper()} SECRET")),
+                 _run_secret, raw=True),
+        _Command(_parser(parse_create_macro, lambda got: Statement("write")),
+                 _run_create_macro, raw=True),
+        _Command(_parser(parse_drop_macro, lambda got: Statement("write")),
+                 _run_drop_macro, raw=True),
+        _Command(_parser(parse_pragma, lambda got: Statement(
+            "write", admin="IMPORT DATABASE")
+            if got[0] == "import_database" else Statement(
+                "command",
+                reads=(tuple(got[1].split(".")),) if got[1] else ())),
+                 _run_pragma, raw=True),
+        _Command(_parse_explain, _run_explain, raw=True),
+        _Command(_parser(lambda sql: _ATTACH_RE.match(sql) and (
+            parse_attach_flight(sql) or (None,) * 4),
+            lambda got: Statement("write", admin="ATTACH")),
+                 _run_attach, raw=True),
+        _Command(_parser(parse_detach, lambda got: Statement(
+            "write", admin="DETACH")), _run_detach, raw=True),
+        _Command(_parser(_EXTENSION_RE.match, lambda m: Statement(
+            "write", admin=m[1].upper())), _run_extension, raw=True),
+        _Command(_parser(_CHECKPOINT_RE.match, lambda m: Statement(
+            "write", admin="CHECKPOINT")), _run_checkpoint, raw=True),
+        _Command(_parser(_DATABASE_RE.match, lambda m: Statement(
+            "write", admin=f"{m[1].upper()} DATABASE", paths=(m[2],))),
+                 _run_database, raw=True),
+        _Command(_parse_pivot, _run_pivot),
+        _Command(_parse_summarize, _run_summarize),
+        _Command(_parser(maintenance.parse_optimize, _writes(0)),
+                 _run_optimize),
+        _Command(_parser(maintenance.parse_restore, _writes(0)), _run_restore),
+        _Command(_parser(maintenance.parse_vacuum, _writes(0)), _run_vacuum),
+        _Command(_parse_copy, _run_copy),
+        _Command(_parse_upsert, _run_upsert),
+        _Command(_dml_parser(dml.parse_update), _run_update),
+        _Command(_dml_parser(dml.parse_delete), _run_delete),
+        _Command(_dml_parser(dml.parse_merge), _run_merge),
+        _Command(_parser(maintenance.parse_alter_evolution, _writes(1)),
+                 _run_evolution),
+    )

@@ -9,10 +9,10 @@ statement's read and modified databases (:1052-1077). The reference
 walks DuckDB's parse tree; here :func:`classify` walks the plan Spark's
 own parser builds for the statement, once, and every gate reads that
 one :class:`Statement`: its kind, the tables and views it writes, the
-relations it reads and the files it names by path. The engine's own
-commands, which Spark cannot parse, are classified by the engine's
-parser for each. Only the admin gate's DuckDB file-function, local-path
-and statement-opener rules still read the raw text.
+relations it reads, the files it names by path and why only an admin
+may run it. The engine's own commands, which Spark cannot parse, are
+classified by their row of the engine's command table
+(``Engine._COMMANDS``); no gate reads the statement's text.
 """
 
 from __future__ import annotations
@@ -22,40 +22,12 @@ import json
 import re
 from dataclasses import dataclass
 
-from gizmosql_spark.dialect import _mask_literals
-
 #: remote schemes allowed for non-admin reads (admin_command_guard.cpp:68-76)
 REMOTE_SCHEMES = (
     "s3://", "s3a://", "s3n://", "gs://", "gcs://", "r2://",
     "az://", "azure://", "abfs://", "abfss://",
     "http://", "https://", "hf://",
 )
-
-#: statement openers only admins may run (admin_command_guard.cpp:282-389)
-_ADMIN_STMT_RE = re.compile(
-    r"^\s*(ATTACH|DETACH|INSTALL|LOAD|CHECKPOINT|EXPORT\s+DATABASE"
-    r"|IMPORT\s+DATABASE|CREATE\s+(?:OR\s+REPLACE\s+)?(?:PERSISTENT\s+)?SECRET"
-    r"|DROP\s+SECRET)\b",
-    re.IGNORECASE,
-)
-
-#: gated table functions when pointed at the local filesystem
-#: (admin_command_guard.cpp:107-120)
-_GATED_FN_RE = re.compile(
-    r"\b(read_parquet|parquet_scan|parquet_metadata|parquet_schema|read_csv_auto"
-    r"|read_csv|sniff_csv|read_json_auto|read_json|read_ndjson_auto|read_ndjson"
-    r"|read_text|read_blob|glob|pipeline_op)\s*\(",
-    re.IGNORECASE,
-)
-
-#: dangerous global SETs for non-admins (admin_command_guard.cpp:129-144)
-_DANGEROUS_SET_RE = re.compile(
-    r"^\s*SET\s+(?:GLOBAL\s+)?(memory_limit|threads|temp_directory"
-    r"|extension_directory|allow_unsigned_extensions|enable_external_access)\b",
-    re.IGNORECASE,
-)
-
-_PATH_LITERAL_RE = re.compile(r"'([^']*)'")
 
 DEFAULT_CATALOG = "spark_catalog"
 
@@ -91,6 +63,8 @@ class Statement:
     opaque: bool = False
     #: the plan's root node below a WITH list ("" for engine commands)
     root: str = ""
+    #: name parts of the view it creates or replaces, temp views too
+    view: tuple[str, ...] = ()
 
     def merge(self, other: Statement) -> Statement:
         """Both statements' effects, as one statement has them."""
@@ -98,7 +72,8 @@ class Statement:
             max(self.kind, other.kind, key=KINDS.index),
             self.writes + other.writes, self.reads + other.reads,
             self.paths + other.paths, self.admin or other.admin,
-            self.opaque or other.opaque, self.root or other.root)
+            self.opaque or other.opaque, self.root or other.root,
+            self.view or other.view)
 
 
 #: nodes a query plan is built of, and leaves that only name an object
@@ -159,6 +134,16 @@ _ADMIN_NODES = {
 #: functions only an admin may call: they call any static Java method
 #: (``java.lang.System.exit`` included)
 _ADMIN_FUNCTIONS = frozenset({"reflect", "java_method", "try_reflect"})
+#: DuckDB file functions no rewrite took (admin_command_guard.cpp:
+#: 107-120): their first argument is the path they read
+_FILE_FUNCTIONS = frozenset("""glob sniff_csv read_blob parquet_metadata
+    parquet_schema read_parquet parquet_scan read_csv read_csv_auto read_json
+    read_json_auto read_ndjson read_ndjson_auto read_text""".split())
+#: DuckDB settings only an admin may change (admin_command_guard.cpp:
+#: 129-144)
+_ADMIN_SETTINGS = frozenset("""memory_limit threads temp_directory
+    extension_directory allow_unsigned_extensions
+    enable_external_access""".split())
 #: first parts of ``fmt.`path``` relations Spark reads as files (any
 #: dotted first part names a data source class)
 _DATA_SOURCES = frozenset("""parquet csv json orc text avro binaryfile xml
@@ -221,6 +206,7 @@ class _Walk:
         self.paths: list[str] = []
         self.admin: str | None = None
         self.opaque = False
+        self.view: tuple[str, ...] = ()
 
     def plan(self, nodes: list, ctes: frozenset) -> None:
         self.visit(_tree(nodes)[0], ctes)
@@ -276,6 +262,8 @@ class _Walk:
             target = self.target(skip)
             if target is not None:
                 self.writes.append(target)
+                if name in ("CreateView", "AlterViewAs"):
+                    self.view = target
                 if name in _READ_TARGET:
                     self.reads.append(target)
             if name == "RenameTable":
@@ -284,14 +272,14 @@ class _Walk:
                 self.paths.append(node["path"])
         elif name == "CreateViewCommand":
             temp = node["viewType"]["object"].rsplit(".", 1)[-1]
+            self.view = (("global_temp", node["name"]["table"])
+                         if temp == "GlobalTempView$"
+                         else _table_ident(node["name"]))
             if temp == "LocalTempView$":
                 kind = 2
             else:
                 kind = 3
-                self.writes.append(
-                    ("global_temp", node["name"]["table"])
-                    if temp == "GlobalTempView$"
-                    else _table_ident(node["name"]))
+                self.writes.append(self.view)
         elif name == "CreateTableLikeCommand":
             kind = 3
             self.writes.append(_table_ident(node["targetTable"]))
@@ -301,9 +289,18 @@ class _Walk:
                 self.paths.append(node["location"])
         elif name in _ADMIN_NODES:
             kind, self.admin = 3, _ADMIN_NODES[name]
-        elif (name == "UnresolvedFunction" and _parts(
-                node["nameParts"])[-1].lower() in _ADMIN_FUNCTIONS):
-            self.admin = "reflect()"
+        elif name in ("UnresolvedFunction", "UnresolvedTableValuedFunction"):
+            fn = _parts(node.get("nameParts") or node["name"])[-1].lower()
+            args = ([kid[0] for kid in kids] if name == "UnresolvedFunction"
+                    else [arg[0] for arg in node["functionArgs"]])
+            if fn in _ADMIN_FUNCTIONS:
+                self.admin = f"{fn}()"
+            elif fn in _FILE_FUNCTIONS:
+                if args and args[0]["class"].endswith(".Literal") \
+                        and args[0].get("dataType") == "string":
+                    self.paths.append(args[0]["value"])
+                else:  # a path the plan does not show
+                    self.admin = f"{fn}()"
         elif name in ("CreateFunction", "CreateFunctionCommand"):
             kind = 3
             if node.get("resources"):
@@ -356,13 +353,17 @@ def classify(spark, sql: str) -> Statement:
     walk = _Walk()
     walk.plan(nodes, frozenset())
     root = nodes[0]["class"]
+    if root.endswith(".SetCommand") and plan.kv().isDefined():
+        key = plan.kv().get()._1()
+        if key.lower() in _ADMIN_SETTINGS:
+            walk.admin = f"SET {key}"
     if root.endswith(".UnresolvedWith"):  # its child follows it
         root = nodes[1]["class"]
     return Statement(
         KINDS[walk.kind], tuple(walk.writes), tuple(walk.reads),
         tuple(walk.paths), walk.admin,
         walk.opaque or _ambiguous_names(spark, sql),
-        root.rsplit(".", 1)[-1])
+        root.rsplit(".", 1)[-1], walk.view)
 
 
 # --- the gates ---------------------------------------------------------
@@ -373,37 +374,15 @@ def _is_remote(path: str) -> bool:
     return any(p.startswith(s) for s in REMOTE_SCHEMES)
 
 
-def _local_paths(sql: str) -> list[str]:
-    """String literals that look like local filesystem paths."""
-    out = []
-    for lit in _PATH_LITERAL_RE.findall(sql):
-        looks_pathy = (
-            lit.startswith(("/", "./", "~", "../"))
-            or re.search(r"\.(parquet|csv|json|ndjson|txt|db|duckdb)$", lit, re.IGNORECASE)
-            or "*" in lit
-        )
-        if looks_pathy and not _is_remote(lit):
-            out.append(lit)
-    return out
-
-
-def check_admin_gate(sql: str | None, is_admin: bool,
-                     stmt: Statement | None = None) -> None:
-    """Raise CommandDenied if a non-admin statement is gated.
-
-    Mirrors ClassifyStatement (admin_command_guard.cpp:282-389). From
-    the text as sent (``sql``; None: checked already): admin-only
-    statement classes, local-filesystem file functions and replacement
-    scans, and dangerous bare SETs. From the classified statement
-    (``stmt``): the commands that load code, run a program or write the
-    server's files, and every local path it names (Spark's
-    ``fmt.`path``` relations, a table LOCATION, LOAD DATA). Remote
-    object-store paths pass (the reference's proven-remote rule)."""
+def check_admin_gate(stmt: Statement, is_admin: bool) -> None:
+    """Raise CommandDenied if a non-admin may not run the classified
+    statement (ClassifyStatement, admin_command_guard.cpp:282-389): an
+    admin-only command or setting, a call that loads code or runs a
+    program, or a local path it names (a file scan, a data-source
+    relation, a table LOCATION, LOAD DATA, COPY, a ``pipeline_op``
+    dir). Remote object-store paths pass (the reference's proven-remote
+    rule)."""
     if is_admin:
-        return
-    if sql is not None:
-        _check_admin_text(sql)
-    if stmt is None:
         return
     if stmt.admin is not None:
         raise CommandDenied(f"statement requires admin role: {stmt.admin}")
@@ -411,29 +390,6 @@ def check_admin_gate(sql: str | None, is_admin: bool,
         if not _is_remote(path):
             raise CommandDenied(
                 f"local filesystem access requires admin role: {path!r}")
-
-
-def _check_admin_text(sql: str) -> None:
-    masked = _mask_literals(sql)
-    m = _ADMIN_STMT_RE.match(masked)
-    if m:
-        raise CommandDenied(f"statement requires admin role: {m.group(1).upper()}")
-    if _DANGEROUS_SET_RE.match(masked):
-        raise CommandDenied("setting requires admin role")
-    if _GATED_FN_RE.search(masked) or re.search(
-        r"(\bFROM\s+|\bJOIN\s+)'", sql, re.IGNORECASE
-    ):
-        local = _local_paths(sql)
-        if local:
-            raise CommandDenied(
-                f"local filesystem access requires admin role: {local[0]!r}"
-            )
-    if re.match(r"^\s*COPY\b", masked, re.IGNORECASE):
-        local = _local_paths(sql)
-        if local:
-            raise CommandDenied(
-                f"local COPY requires admin role: {local[0]!r}"
-            )
 
 
 def check_readonly(stmt: Statement, role: str) -> None:

@@ -18,8 +18,6 @@ to the system catalog (duckdb_statement.cpp:1019-1050).
 
 from __future__ import annotations
 
-import re
-
 from pyspark.sql import DataFrame, SparkSession
 
 from gizmosql_spark.constraints import ConstraintRegistry
@@ -37,13 +35,6 @@ _VIEW_DEF_SCHEMA = (
     " view_definition string"
 )
 
-_CREATE_VIEW_RE = re.compile(
-    r"^\s*CREATE\s+(?:OR\s+REPLACE\s+)?(?:GLOBAL\s+)?(?:TEMP(?:ORARY)?\s+)?"
-    r"VIEW\s+(?:IF\s+NOT\s+EXISTS\s+)?([A-Za-z_][\w.]*|`[^`]+`)",
-    re.IGNORECASE,
-)
-
-
 class SystemCatalog:
     """Engine-maintained metadata, published as global temp views."""
 
@@ -53,11 +44,11 @@ class SystemCatalog:
         #: engine (system_catalog.cpp records from duckdb_views())
         self.view_definitions: dict[str, str] = {}
 
-    def observe_statement(self, sql: str) -> None:
-        """Record view DDL passing through the engine."""
-        m = _CREATE_VIEW_RE.match(sql)
-        if m:
-            self.view_definitions[m.group(1).strip("`")] = sql.strip()
+    def observe_statement(self, sql: str, stmt) -> None:
+        """Record view DDL passing through the engine: the view a
+        classified statement (``security.Statement``) creates."""
+        if stmt.view:
+            self.view_definitions[stmt.view[-1]] = sql.strip()
 
     def index_info(self, spark: SparkSession) -> DataFrame:
         """gizmosql_index_info analog: PK/UNIQUE constraints and

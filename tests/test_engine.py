@@ -17,10 +17,6 @@ import pytest
 from gizmosql_spark import security, session_cache
 from gizmosql_spark.admission import AdmissionController, QueueFullError
 from gizmosql_spark.dialect import (
-    KillCommand,
-    SetCommand,
-    TxnCommand,
-    classify_command,
     extract_file_scans,
     replace_pseudo_functions,
 )
@@ -49,22 +45,37 @@ def session(engine):
 # --- dialect ----------------------------------------------------------
 
 
-def test_classify_set():
-    cmd = classify_command("SET engine.query_timeout = 5")
-    assert isinstance(cmd, SetCommand)
-    assert cmd.scope == "session" and cmd.name == "engine.query_timeout"
-    cmd = classify_command("set global gizmosql.max_concurrent_statements TO 3;")
-    assert isinstance(cmd, SetCommand)
-    assert cmd.scope == "global"
-    assert cmd.name == "engine.max_concurrent_statements"
-    assert classify_command("SELECT 1") is None
+def _command(engine, sid, sql):
+    """The engine command that runs ``sql`` as sent (None: not one)."""
+    got = engine._classify(engine._session(sid), sql, raw=True)
+    return got and got[1]
+
+
+def test_classify_set(engine, session):
+    res = engine.execute_sql(session, "SET engine.query_timeout = 5")
+    assert res.kind == "set" and res.info == {"engine.query_timeout": "5"}
+    assert engine._session(session).settings.get(
+        "engine.query_timeout", engine.global_settings) == 5
+    prev = engine._admission.max_concurrent
+    try:
+        res = engine.execute_sql(
+            session, "set global gizmosql.max_concurrent_statements TO 3;")
+        assert res.info == {"engine.max_concurrent_statements": "3"}
+        assert engine.global_settings.get(
+            "engine.max_concurrent_statements") == 3
+        assert engine._admission.max_concurrent == 3
+    finally:
+        engine.execute_sql(
+            session, f"SET GLOBAL engine.max_concurrent_statements = {prev}")
+    assert _command(engine, session, "SELECT 1") is None
     # plain Spark SET is not an engine command
-    assert classify_command("SET spark.sql.shuffle.partitions=8") is None
+    assert _command(engine, session,
+                    "SET spark.sql.shuffle.partitions=8") is None
 
 
-def test_classify_kill():
-    cmd = classify_command("KILL SESSION 'abc-123'")
-    assert isinstance(cmd, KillCommand) and cmd.session_id == "abc-123"
+def test_classify_kill(engine, session):
+    res = engine.execute_sql(session, "KILL SESSION 'abc-123'")
+    assert res.kind == "kill" and res.info == {"killed": "false"}
 
 
 def test_pseudo_function_replacement():
@@ -105,20 +116,50 @@ def test_settings_scope_and_validation():
 # --- security gates ---------------------------------------------------
 
 
-def test_admin_gate_blocks_non_admin():
-    with pytest.raises(security.CommandDenied):
-        security.check_admin_gate("ATTACH '/tmp/x.db' AS x", is_admin=False)
-    with pytest.raises(security.CommandDenied):
-        security.check_admin_gate("SELECT * FROM read_csv('/etc/passwd')", is_admin=False)
-    with pytest.raises(security.CommandDenied):
-        security.check_admin_gate("COPY t TO '/tmp/out.csv'", is_admin=False)
-    # remote schemes pass (proven-remote rule)
-    security.check_admin_gate("SELECT * FROM read_parquet('s3://b/x.parquet')", False)
-    # admin passes everything
-    security.check_admin_gate("ATTACH '/tmp/x.db' AS x", is_admin=True)
+def _gated(engine, sid, sql):
+    """``sql`` classified and checked for the session, not run."""
+    return engine._rewrite(engine._session(sid), sql, None)
 
 
-def test_readonly_blocks_writes(spark):
+def test_admin_gate_blocks_non_admin(engine, session):
+    user = engine.create_session(role="user")
+    try:
+        for sql in ("ATTACH '/tmp/x.db' AS x",
+                    "SELECT * FROM read_csv('/etc/passwd')",
+                    "COPY t TO '/tmp/out.csv'", "INSTALL httpfs",
+                    "LOAD httpfs", "SET threads = 4",
+                    # a local read inside a COPY to a remote path
+                    "COPY (SELECT * FROM text.`/etc/hostname`)"
+                    " TO 's3://b/out'"):
+            with pytest.raises(security.CommandDenied):
+                engine.execute_sql(user, sql)
+        # remote schemes pass (proven-remote rule)
+        _gated(engine, user, "SELECT * FROM read_parquet('s3://b/x.parquet')")
+    finally:
+        engine.close_session(user)
+    # admin passes the gate: only a Flight engine attaches
+    with pytest.raises(ValueError, match="Flight engine"):
+        engine.execute_sql(session, "ATTACH '/tmp/x.db' AS x")
+
+
+@pytest.mark.parametrize("sql", [
+    "SELECT * FROM read_parquet('s3://b/x.parquet') WHERE note = '/tmp/a'",
+    "SELECT * FROM read_parquet('s3://b/x.parquet') WHERE f LIKE '%.csv'",
+    "SELECT 'a*b' AS x FROM read_parquet('https://h/x.parquet')",
+])
+def test_admin_gate_reads_paths_not_literals(engine, sql):
+    """A literal that looks like a local path is no path the statement
+    reads: a remote scan beside one passes a non-admin session."""
+    user = engine.create_session(role="user")
+    try:
+        rw = _gated(engine, user, sql)
+        assert [path for *_, path in rw.scans] == list(rw.stmt.paths)
+        assert all(p.startswith(("s3://", "https://")) for p in rw.stmt.paths)
+    finally:
+        engine.close_session(user)
+
+
+def test_readonly_blocks_writes(spark, engine):
     def check(sql, role="readonly"):
         security.check_readonly(security.classify(spark, sql), role)
 
@@ -128,9 +169,15 @@ def test_readonly_blocks_writes(spark):
         check("DROP TABLE t")
     check("SELECT 1")
     check("CREATE TEMP VIEW v AS SELECT 1")
-    # BEGIN TRANSACTION is the engine's own command, claimed before
-    # the gate; BEGIN … END is a Spark script
-    assert isinstance(classify_command("BEGIN TRANSACTION"), TxnCommand)
+    # BEGIN TRANSACTION is the engine's own command, which a readonly
+    # session may run; BEGIN … END is a Spark script
+    ro = engine.create_session(role="readonly")
+    try:
+        assert engine.execute_sql(ro, "BEGIN TRANSACTION").info == {
+            "action": "begin"}
+        engine.execute_sql(ro, "ROLLBACK")
+    finally:
+        engine.close_session(ro)
     with pytest.raises(security.CommandDenied):
         check("BEGIN DELETE FROM t; END")
     check("INSERT INTO t VALUES (1)", "user")
@@ -171,7 +218,7 @@ def test_admin_gate_spark_file_access_remote_and_admin(spark, engine,
                                                        session):
     for sql in ("SELECT * FROM parquet.`s3://b/x.parquet`",
                 "SELECT * FROM t AS a JOIN db.parquet b ON a.k = b.k"):
-        security.check_admin_gate(sql, False, security.classify(spark, sql))
+        security.check_admin_gate(security.classify(spark, sql), False)
     rows = engine.collect(session, engine.execute_sql(
         session, "SELECT * FROM text.`/etc/hostname`"))
     assert len(rows) == 1
@@ -721,20 +768,18 @@ def test_split_statements():
     assert stmts[1] == "SELECT 'a;b' AS s"
 
 
-def test_classify_txn():
-    from gizmosql_spark.dialect import TxnCommand, classify_command
-
+def test_classify_txn(engine, session):
     for sql, action in [
         ("BEGIN", "begin"),
-        ("begin transaction;", "begin"),
-        ("START TRANSACTION", "begin"),
         ("COMMIT", "commit"),
+        ("begin transaction;", "begin"),
         ("ROLLBACK;", "rollback"),
+        ("START TRANSACTION", "begin"),
         ("ABORT", "rollback"),
     ]:
-        cmd = classify_command(sql)
-        assert isinstance(cmd, TxnCommand) and cmd.action == action
-    assert classify_command("BEGIN WORK NOW") is None
+        res = engine.execute_sql(session, sql)
+        assert res.kind == "txn" and res.info == {"action": action}
+    assert _command(engine, session, "BEGIN WORK NOW") is None
 
 
 def test_dml_target(spark):
@@ -1334,3 +1379,66 @@ class TestPipelineOpTableFunction:
         with pytest.raises(Exception, match="pipeline_data_dir"):
             engine.execute_sql(
                 session, "SELECT * FROM pipeline_op('dataset_split')")
+
+
+# --- the engine's own commands on the statement path ------------------
+
+
+def test_engine_commands_take_the_statement_path(spark):
+    """SET engine.*, KILL SESSION, transactions and indexes are gated
+    and recorded like every statement: one query-log row, one
+    access-log row, one statement row and one statement.execute span
+    each; a readonly CREATE INDEX is recorded denied."""
+    eng = Engine(spark)
+    sid = eng.create_session(role="admin")
+    stmts = ["SET engine.query_timeout = 30", "KILL SESSION 'abc-123'",
+             "BEGIN", "COMMIT", "BEGIN TRANSACTION", "ROLLBACK",
+             "CREATE INDEX i_path ON t_path (a)", "DROP INDEX i_path"]
+    for sql in stmts:
+        eng.execute_sql(sid, sql)
+    assert [(e.sql, e.status) for e in eng.query_log.entries()] == [
+        (sql, "ok") for sql in stmts]
+    assert [(e[6], e[4]) for e in eng.access_log.entries()] == [
+        (sql, "OK") for sql in stmts]
+    assert [(r[2], r[3]) for r in eng.instr.statements] == [
+        (sql, "execute_sql") for sql in stmts]
+    assert len([s for s in eng.telemetry.spans()
+                if s.name == "statement.execute"]) == len(stmts)
+    ro = eng.create_session(role="readonly")
+    try:
+        with pytest.raises(security.CommandDenied):
+            eng.execute_sql(ro, "CREATE INDEX i_ro ON t_path (a)")
+        assert eng.query_log.entries()[-1].status == "denied"
+        assert "t_path" not in eng.system_catalog.registry.indexes or (
+            "i_ro" not in eng.system_catalog.registry.indexes["t_path"])
+    finally:
+        eng.close_session(ro)
+        eng.close_session(sid)
+
+
+def test_engine_commands_keep_other_sessions_plans(spark):
+    """SET engine.* and CREATE INDEX change no relation a query
+    resolves, so another session's repeated query stays a plan-cache
+    hit."""
+    eng = Engine(spark)
+    a, b = eng.create_session(role="admin"), eng.create_session(role="admin")
+    q = "SELECT id FROM range(5)"
+    outcomes = []
+    for sql in (None, None, "SET engine.query_timeout = 30",
+                "CREATE INDEX i_keep ON t_keep (a)"):
+        if sql is not None:
+            eng.execute_sql(a, sql)
+        res = eng.execute_sql(b, q)
+        eng.collect(b, res)
+        outcomes.append(res.plan_cache)
+    assert outcomes == ["miss", "hit", "hit", "hit"]
+    eng.close_session(a)
+    eng.close_session(b)
+
+
+def test_view_definition_behind_a_comment(engine, session):
+    """A view is recorded from what the statement creates, whatever
+    comment comes before it."""
+    sql = "/* c */ CREATE OR REPLACE TEMP VIEW v_obs AS SELECT 1 AS x"
+    engine.execute_sql(session, sql)
+    assert engine.system_catalog.view_definitions["v_obs"] == sql

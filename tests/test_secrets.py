@@ -126,3 +126,33 @@ def test_persistent_secret_survives_restart(engine, spark):
     assert "zzz" not in rows[0]["options"]
     eng2.execute_sql(sid2, "DROP SECRET persist_me")
     eng2.close_session(sid2)
+
+
+@pytest.mark.parametrize("role", ["user", "readonly"])
+@pytest.mark.parametrize("sql", [
+    "CREATE TEMPORARY SECRET u2 (TYPE s3, KEY_ID 'k', SECRET 's',"
+    " SCOPE 's3://corp')",
+    "CREATE TEMP SECRET u3 (TYPE s3, KEY_ID 'k', SECRET 's')",
+    "CREATE OR REPLACE TEMPORARY SECRET adm (TYPE s3, KEY_ID 'k',"
+    " SECRET 's')",
+    "DROP TEMPORARY SECRET adm",
+    "DROP PERSISTENT SECRET adm",
+])
+def test_every_secret_ddl_form_is_admin_only(engine, role, sql):
+    """Every TEMP/TEMPORARY/PERSISTENT form the secret parser reads is
+    gated as the plain form is: a non-admin neither adds credentials
+    for every session's reads nor drops an admin's secret."""
+    admin = engine.create_session(role="admin")
+    engine.execute_sql(
+        admin, "CREATE OR REPLACE SECRET adm (TYPE s3, KEY_ID 'a',"
+               " SECRET 'b', SCOPE 's3://corp')")
+    before = engine.secrets.listing()
+    sid = engine.create_session(role=role)
+    try:
+        with pytest.raises(CommandDenied):
+            engine.execute_sql(sid, sql)
+        assert engine.secrets.listing() == before
+    finally:
+        engine.close_session(sid)
+        engine.execute_sql(admin, "DROP SECRET IF EXISTS adm")
+        engine.close_session(admin)
