@@ -622,7 +622,7 @@ def expand_macros(sql: str, macros: dict) -> str:
     string literals."""
     for _ in range(_MACRO_MAX_DEPTH):
         replaced = False
-        for name, (params, defaults, body, _is_table) in macros.items():
+        for name, (params, defaults, body, *_) in macros.items():
             pat = re.compile(rf"\b{re.escape(name)}\s*\(", re.IGNORECASE)
             pos = 0
             while True:

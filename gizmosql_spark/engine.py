@@ -145,9 +145,14 @@ class StatementResult:
     #: trace context (telemetry.py; collect spans parent onto these)
     trace_id: str | None = None
     root_span_id: str | None = None
-    #: plan cache outcome of a query (``hit``/``miss``/``ineligible``);
-    #: None for every other statement
+    #: plan cache outcome of a query (``hit``/``miss``/``ineligible``,
+    #: or ``reused`` when its entry held a fresh stored result); None for
+    #: every other statement
     plan_cache: str | None = None
+    #: (plan cache key, map generation, entry) under which
+    #: ``collect_arrow`` serves or stores the query's result
+    #: (``Engine._arrow``); None: never
+    reuse: tuple | None = None
 
 
 @dataclass
@@ -186,10 +191,13 @@ class SessionState:
     #: (adbc_scanner ATTACH analog)
     attached: dict[str, tuple[str, str | None, str | None]] = field(
         default_factory=dict)
-    #: analyzed queries: (rewritten SQL, file scans) -> _Plan
-    #: (Engine._cached_plan)
-    plans: SessionLRU = field(
-        default_factory=lambda: SessionLRU(_PLANS_PER_SESSION))
+    #: analyzed queries and their stored results: (rewritten SQL, file
+    #: scans) -> _Plan (Engine._cached_plan, Engine._arrow)
+    plans: SessionLRU = field(default_factory=lambda: SessionLRU(
+        _PLANS_PER_SESSION, _RESULT_BYTES_PER_SESSION, _result_bytes))
+    #: view registrations its statements made (Engine._run_statement);
+    #: a plan cache entry checked before the last one is checked again
+    views: int = 0
     #: held while an upload lowers the session's local-relation
     #: threshold (_upload_frame)
     upload_lock: threading.Lock = field(default_factory=threading.Lock)
@@ -197,6 +205,11 @@ class SessionState:
     @property
     def is_admin(self) -> bool:
         return self.role == "admin"
+
+    @property
+    def principal(self) -> tuple[str, str]:
+        """Who runs the session's statements: its user and role."""
+        return self.username, self.role
 
 
 # `::` excluded so DuckDB-style casts (x::int) never read as a param
@@ -286,6 +299,11 @@ _LOCAL_RELATION_THRESHOLD = "spark.sql.execution.arrow.localRelationThreshold"
 #: analyzed queries one session keeps; the least recently used is
 #: dropped past this
 _PLANS_PER_SESSION = 64
+#: Arrow bytes of the stored results one session keeps; the least
+#: recently used entries are dropped past this
+_RESULT_BYTES_PER_SESSION = 1 << 20
+#: the rows of one Arrow batch, the most a stored result holds
+_ARROW_BATCH_ROWS = "spark.sql.execution.arrow.maxRecordsPerBatch"
 
 #: analyzed-plan leaves a reused plan may read: file and catalog
 #: relations, a one-row or inline relation, range()
@@ -422,8 +440,9 @@ class _Rewritten:
     #: the statement row and span a run inside it records under
     #: (EXPLAIN ANALYZE)
     trace: tuple = (None, None)
-    #: it registers views of its own other than file scans, so its
-    #: plan is never reused (``Engine._run_statement``)
+    #: it reads what changes from one statement to the next (an engine
+    #: table function, a remote engine, a table's history), so its plan
+    #: and result are never reused (``Engine._run_statement``)
     ephemeral: bool = False
     #: table functions whose call became a view (``_register_table_fn``)
     table_fns: list = field(default_factory=list)
@@ -456,15 +475,34 @@ class _Rewritten:
 
 @dataclass(frozen=True)
 class _Plan:
-    """A plan cache entry: a query's analyzed DataFrame and the engine's
-    write sequence number read before it was analyzed."""
+    """A plan cache entry: a query's analyzed plan, what of it a repeat
+    may reuse (the analyzed DataFrame, the result of its last run), and
+    what that reuse is checked against."""
 
-    #: None once the plan was found not reusable
+    #: the analyzed DataFrame a repeat reuses; None when the plan may
+    #: not be reused (``_plan_tables``)
     df: DataFrame | None
+    #: its analyzed ``LogicalPlan`` (JVM), which a re-analysis of the
+    #: statement is compared with
+    plan: Any
+    #: the engine's write sequence number read before the analysis
     seq: int
+    #: ``SessionState.views`` read before the analysis, or before the
+    #: last re-analysis that found the same plan
+    views: int
     #: lower-case names of the catalog tables the plan reads; None
-    #: until the first repeat checked the plan (_plan_tables)
+    #: until a repeat or a stored result checked the plan
     tables: tuple[str, ...] | None = None
+    #: the Arrow result of a run, at most one batch (``Engine._arrow``),
+    #: and ``(path, file_identity)`` of every file the plan reads, read
+    #: before that run
+    result: pa.Table | None = None
+    idents: tuple = ()
+
+
+def _result_bytes(entry: _Plan) -> int:
+    """What a plan cache entry weighs against the session's budget."""
+    return 0 if entry.result is None else entry.result.nbytes
 
 
 def _table_key(name: str) -> str:
@@ -473,32 +511,66 @@ def _table_key(name: str) -> str:
     return name.split(".")[-1].strip("`").lower()
 
 
-def _plan_tables(df: DataFrame) -> tuple[str, ...] | None:
-    """The catalog tables a query's plan reads, or None when the plan
-    must not be reused: a nondeterministic or current-time/user
-    expression, a leaf outside ``_REUSABLE_LEAVES`` (a command result,
-    a Python-built frame, a streaming source), or a physical plan with
-    an exchange, a subquery or an adaptive wrapper. The tables are
-    taken from the analyzed plan's leaves, after view expansion."""
-    qe = df._jdf.queryExecution()
-    analyzed = qe.analyzed()
+def _plan_reads(df: DataFrame) -> tuple[tuple[str, ...],
+                                          tuple[str, ...] | None] | None:
+    """The catalog tables and the files a query's analyzed plan reads
+    (files None: a relation that is not file-backed), or None when two
+    runs of the plan may differ: a nondeterministic or current-time/user
+    expression, or a leaf outside ``_REUSABLE_LEAVES`` (a command
+    result, a Python-built frame, a streaming source). Both are taken
+    from the plan's leaves, after view expansion."""
+    analyzed = df._jdf.queryExecution().analyzed()
     if not analyzed.deterministic() or _NOW_CALL_RE.search(
             analyzed.toString()):
         return None
-    tables = set()
+    tables, paths = set(), set()
     leaves = analyzed.collectLeaves()
     for i in range(leaves.size()):
         leaf = leaves.apply(i)
         kind = leaf.getClass().getSimpleName()
         if kind not in _REUSABLE_LEAVES:
             return None
-        if kind == "LogicalRelation" and leaf.catalogTable().isDefined():
-            tables.add(_table_key(leaf.catalogTable().get().identifier().table()))
+        if kind == "LogicalRelation":
+            if leaf.catalogTable().isDefined():
+                tables.add(_table_key(
+                    leaf.catalogTable().get().identifier().table()))
+            relation = leaf.relation()
+            if relation.getClass().getSimpleName() != "HadoopFsRelation":
+                paths = None
+            elif paths is not None:
+                roots = relation.location().rootPaths()
+                paths.update(roots.apply(j).toString()
+                             for j in range(roots.size()))
         elif kind == "HiveTableRelation":
             tables.add(_table_key(leaf.tableMeta().identifier().table()))
-    if _STATEFUL_EXEC_RE.search(qe.executedPlan().toString()):
+            if paths is not None:
+                paths.add(leaf.tableMeta().location().toString())
+    return tuple(sorted(tables)), None if paths is None else tuple(
+        sorted(paths))
+
+
+def _stateful(df: DataFrame) -> bool:
+    """Whether a query's physical plan has an exchange, a subquery or an
+    adaptive wrapper, whose output a reused frame would keep."""
+    return bool(_STATEFUL_EXEC_RE.search(
+        df._jdf.queryExecution().executedPlan().toString()))
+
+
+def _plan_tables(df: DataFrame) -> tuple[str, ...] | None:
+    """The catalog tables a query's plan reads, or None when the plan
+    must not be reused: two runs may differ (``_plan_reads``) or its
+    physical plan is stateful (``_stateful``)."""
+    reads = _plan_reads(df)
+    return None if reads is None or _stateful(df) else reads[0]
+
+
+def _identities(paths: tuple[str, ...] | None) -> tuple | None:
+    """``(path, file_identity)`` of each path, or None when one has no
+    identity (or ``paths`` is None)."""
+    if paths is None:
         return None
-    return tuple(sorted(tables))
+    got = tuple((p, session_cache.file_identity(p)) for p in paths)
+    return None if any(ident is None for _, ident in got) else got
 
 
 def _counted_write(df: DataFrame, write) -> int:
@@ -563,6 +635,22 @@ def _writes(i: int):
     """What the gates read of a command that rewrites the table its
     parser read at ``i``."""
     return lambda got: Statement("write", writes=(tuple(got[i].split(".")),))
+
+
+def _macro_parser(parse):
+    """A command-table parser of CREATE or DROP MACRO, a write. Macros
+    expand into every session's statements, so a non-admin may not
+    replace or drop one another principal created."""
+    def parse_row(engine, st, sql):
+        got = parse(sql)
+        if got:
+            held = engine.macros.get(got[0].lower())
+            if held is not None and not st.is_admin \
+                    and held[4] != st.principal:
+                raise security.CommandDenied(
+                    f"macro {got[0]} was created by another principal")
+            return Statement("write"), got
+    return parse_row
 
 
 def _dml_parser(parse):
@@ -649,7 +737,8 @@ class Engine:
         self.secrets = SecretsManager(
             store_dir=os.path.join(warehouse_dir(self.spark), "_secrets"))
         #: DuckDB-style macros: lower-name → (params, defaults, body,
-        #: is_table); expanded textually at bind time (dialect.py)
+        #: is_table, the principal that created it); expanded textually
+        #: at bind time (dialect.py)
         self.macros: dict[str, tuple] = {}
         self.reattach()
         #: captured execution profiles (engine.capture_query_profile;
@@ -988,10 +1077,8 @@ class Engine:
         sql = rewrite_distinct_on(sql)
         sql = rewrite_exclude(sql)
         sql, used_settings = rewrite_settings_function(sql)
-        # a statement that registers views of its own, other than
-        # identity-checked file scans, is never reused; and since views
-        # over those names (an operator may register any name) now read
-        # the new registrations, it empties the session's plan cache
+        # a statement over a view that changes from one statement to the
+        # next is never reused
         ephemeral = used_settings or bool(st.attached) or any(
             r.search(sql) for r in self._EPHEMERAL_VIEW_RES)
         table_fns = ["engine_settings"] if used_settings else []
@@ -1041,7 +1128,7 @@ class Engine:
                 d for *_, d in pops if d), admin=admin))
         self._check(st, stmt)
         return _Rewritten(sql, stmt, command, parsed, args, ephemeral=bool(
-                              ephemeral or travels or pops or fscans),
+                              ephemeral or travels or fscans),
                           table_fns=table_fns, changes=changes,
                           travels=travels, pops=pops, scans=scans,
                           fscans=fscans, remote=remote)
@@ -1088,7 +1175,7 @@ class Engine:
             # macros the same way)
             rows = [(macro, list(params), str(dict(defaults)), body,
                      "table" if is_table else "scalar")
-                    for macro, (params, defaults, body, is_table)
+                    for macro, (params, defaults, body, is_table, _)
                     in sorted(self.macros.items())]
             schema = ("macro_name string, parameters array<string>,"
                       " defaults string, body string, macro_type string")
@@ -1128,7 +1215,8 @@ class Engine:
         sql = rw.sql
         for name in rw.table_fns:
             self._register_table_fn(st, name)
-        if self._INSTR_VIEW_RE.search(sql):
+        instr = self._INSTR_VIEW_RE.search(sql)
+        if instr:
             # instrumentation views refresh on reference
             # (session_instrumentation.md read-only views)
             self.instr.publish(self.spark)
@@ -1185,6 +1273,28 @@ class Engine:
             except KeyError as exc:
                 raise ValueError(str(exc)) from exc
             fn(st.spark, op_dir).createOrReplaceTempView(view)
+        if rw.fscans or rw.remote:
+            from gizmosql_spark.sources.flight_scan import flight_scan_df
+
+            fetches = list(rw.fscans)
+            for view, alias, tbl in rw.remote:
+                uri, user, pw = st.attached[alias]
+                fetches.append((view, uri, f"SELECT * FROM {tbl}", user, pw))
+            for view, uri, rsql, user, pw in fetches:
+                if user is None and pw is None:
+                    # credentials from an adbc-type secret scoped to the
+                    # uri (the reference's CREATE SECRET + bare ATTACH
+                    # flow)
+                    user, pw = self.secrets.flight_credentials(uri)
+                flight_scan_df(
+                    st.spark, uri, rsql, user=user, password=pw
+                ).createOrReplaceTempView(view)
+        if (rw.table_fns or instr or rw.changes or rw.travels or rw.pops
+                or rw.fscans or rw.remote):
+            # names its cached plans resolve may now name other data (an
+            # operator may register any view)
+            with self._lock:
+                st.views += 1
 
         if rw.command is None:
             sql = _resolve_stars(st, sql)
@@ -1202,44 +1312,26 @@ class Engine:
         is_set = rw.stmt.root in ("SetCommand", "ResetCommand")
         if is_set:
             # a Spark-level SET/RESET: confs such as
-            # spark.sql.caseSensitive shape the file relations
+            # spark.sql.caseSensitive shape the file relations and plans
             session_cache.for_spark(st.spark).clear()
-        if rw.ephemeral or is_set:
             st.plans.clear()
-            key = None
-        elif rw.command is not None or rw.args is not None or any(
-                ident is None for *_, ident in scan_ids):
+        if (is_set or rw.ephemeral or rw.command is not None
+                or rw.args is not None
+                or any(ident is None for *_, ident in scan_ids)):
             key = None
         else:
             key = (sql, tuple(scan_ids))
+        generation = st.plans.generation
         cached = self._cached_plan(st, key)
-        if cached is not None and cached.df is not None:
+        if (cached is not None and cached.df is not None
+                and cached.views == st.views):
             # the scan views still name these relations: a rebuilt
             # relation or a re-pointed view would have made the entry
             # stale, so their registration is skipped
-            self.telemetry.add_counter("engine.plan_cache_total",
-                                       result="hit")
-            return StatementResult("query", df=cached.df, plan_cache="hit")
-        if cached is not None:  # checked, and not reusable
-            key = None
+            return self._query_result(cached.df, "hit", key, generation,
+                                      cached)
         for view, df in relations:
             df.createOrReplaceTempView(view)
-        if rw.fscans or rw.remote:
-            from gizmosql_spark.sources.flight_scan import flight_scan_df
-
-            fetches = list(rw.fscans)
-            for view, alias, tbl in rw.remote:
-                uri, user, pw = st.attached[alias]
-                fetches.append((view, uri, f"SELECT * FROM {tbl}", user, pw))
-            for view, uri, rsql, user, pw in fetches:
-                if user is None and pw is None:
-                    # credentials from an adbc-type secret scoped to the
-                    # uri (the reference's CREATE SECRET + bare ATTACH
-                    # flow)
-                    user, pw = self.secrets.flight_credentials(uri)
-                flight_scan_df(
-                    st.spark, uri, rsql, user=user, password=pw
-                ).createOrReplaceTempView(view)
 
         if rw.command is not None:
             return self._run_command(st, rw)
@@ -1276,10 +1368,11 @@ class Engine:
             affected = abs(after - before) if before is not None else None
             return StatementResult("update", df=df, affected_rows=affected)
 
-        df, outcome = self._analyze(st, sql, key, rw.args)
-        if outcome is not None:
-            return StatementResult("query", df=df, plan_cache=outcome)
-        return StatementResult("update", df=df, affected_rows=None)
+        df, outcome, entry = self._analyze(st, sql, key, rw.args, cached,
+                                           generation)
+        if outcome is None:
+            return StatementResult("update", df=df, affected_rows=None)
+        return self._query_result(df, outcome, key, generation, entry)
 
     # --- the engine's own commands ------------------------------------
     # Each is one row of _COMMANDS (the end of the class): its parser,
@@ -1372,7 +1465,8 @@ class Engine:
         mname, params, defaults, body, is_table, replace_ = rw.parsed
         if mname.lower() in self.macros and not replace_:
             raise ValueError(f"macro {mname} already exists")
-        self.macros[mname.lower()] = (params, defaults, body, is_table)
+        self.macros[mname.lower()] = (params, defaults, body, is_table,
+                                      st.principal)
         return StatementResult("update", affected_rows=0,
                                info={"macro": mname, "action": "create"})
 
@@ -1576,51 +1670,119 @@ class Engine:
 
     # --- plan cache ---------------------------------------------------
     # A query repeated in a session reuses its analyzed DataFrame,
-    # skipping parse, analysis and planning; every run still reads its
-    # rows anew. The key is the final SQL plus each file scan's
-    # identity. The session's map is emptied by a Spark-level SET/RESET,
-    # a rebuilt file scan relation and a statement that registers views
-    # of its own; an entry goes stale once a table its plan reads is
-    # written (_refresh_everywhere) or all plans are invalidated
-    # (_invalidate_plans).
+    # skipping parse, analysis and planning, and the Arrow result of its
+    # last run while the data that run read is unchanged, skipping the
+    # Spark job too. The key is the final SQL plus each file scan's
+    # identity. The session's map is emptied by a Spark-level SET/RESET
+    # and a rebuilt file scan relation; an entry goes stale once a table
+    # its plan reads is written (_refresh_everywhere) or all plans are
+    # invalidated (_invalidate_plans), and is checked again once the
+    # session registered views (SessionState.views). A stored result
+    # is also checked against the identity of every file it read.
 
     def _cached_plan(self, st: SessionState,
                      key: tuple | None) -> _Plan | None:
-        """The session's entry for ``key`` while it is fresh. The first
-        repeat checks the plan (``_plan_tables``); ``df`` is None when
-        the plan may not be reused."""
+        """The session's entry for ``key`` while it is fresh
+        (``_fresh``). The first repeat checks the plan
+        (``_plan_tables``); ``df`` is None when the plan may not be
+        reused."""
         generation = st.plans.generation
         got = st.plans.get(key) if key is not None else None
         if got is None or got.seq < self._invalidated_at:
             return None
         if got.tables is None:
             tables = _plan_tables(got.df)
-            got = _Plan(got.df if tables is not None else None, got.seq,
-                        tables or ())
+            got = replace(got, df=got.df if tables is not None else None,
+                          tables=tables or ())
             st.plans.put(key, got, generation)
-        if any(self._written_at.get(t, 0) > got.seq for t in got.tables):
-            return None
-        return got
+        return got if self._fresh(got) else None
+
+    def _fresh(self, entry: _Plan) -> bool:
+        """No engine-wide invalidation, and no write to a table the
+        entry's plan reads, since its analysis."""
+        return entry.seq >= self._invalidated_at and not any(
+            self._written_at.get(t, 0) > entry.seq
+            for t in entry.tables or ())
+
+    def _result_fresh(self, entry: _Plan) -> bool:
+        """Whether the entry's stored result is what a run would return
+        now: the entry is fresh and every file it read keeps its
+        identity."""
+        return entry.result is not None and self._fresh(entry) and all(
+            session_cache.file_identity(p) == ident
+            for p, ident in entry.idents)
 
     def _analyze(self, st: SessionState, sql: str, key: tuple | None,
-                 args: dict[str, Any] | None = None,
-                 ) -> tuple[DataFrame, str | None]:
+                 args: dict[str, Any] | None, cached: _Plan | None,
+                 generation: int,
+                 ) -> tuple[DataFrame, str | None, _Plan | None]:
         """Analyze the statement's final SQL with ``args`` bound to its
-        markers, keeping a query's DataFrame under ``key`` (None: not
-        reusable) for its repeats. Returns the frame and its plan cache
-        outcome, None when the statement is not a query."""
-        generation, seq = st.plans.generation, self._plan_seq
+        markers. Returns the frame, its plan cache outcome (None: not a
+        query) and the entry its result is served from or stored under
+        (None: never). ``cached``, the fresh entry for ``key``, stands
+        when the session registered no view since it was checked or this
+        analysis finds the same plan; else a new entry replaces it, kept
+        now when the plan may be reused (no exchange)."""
+        seq, views = self._plan_seq, st.views
         df = st.spark.sql(sql, args=args)
         if not (df.isStreaming or df.schema.fields):
-            return df, None
-        if key is None or _EXCHANGE_OPS_RE.search(
-                df._jdf.queryExecution().analyzed().toString()):
-            outcome = "ineligible"
-        else:
-            outcome = "miss"
-            st.plans.put(key, _Plan(df, seq), generation)
+            return df, None, None
+        if key is None:
+            return df, "ineligible", None
+        plan = df._jdf.queryExecution().analyzed()
+        if cached is not None and (
+                cached.views == views or plan.sameResult(cached.plan)):
+            if cached.views != views:
+                cached = replace(cached, views=views)
+                st.plans.put(key, cached, generation)
+            if cached.df is None:
+                return df, "ineligible", cached
+            return cached.df, "hit", cached
+        entry = _Plan(None, plan, seq, views)
+        if _EXCHANGE_OPS_RE.search(plan.toString()):
+            return df, "ineligible", entry
+        entry = replace(entry, df=df)
+        st.plans.put(key, entry, generation)
+        return df, "miss", entry
+
+    def _query_result(self, df: DataFrame, outcome: str, key: tuple | None,
+                      generation: int, entry: _Plan | None
+                      ) -> StatementResult:
+        """A query's result, counted under its plan cache outcome:
+        ``reused`` when its entry holds a fresh stored result."""
+        if entry is not None and self._result_fresh(entry):
+            outcome = "reused"
         self.telemetry.add_counter("engine.plan_cache_total", result=outcome)
-        return df, outcome
+        return StatementResult(
+            "query", df=df, plan_cache=outcome,
+            reuse=None if entry is None else (key, generation, entry))
+
+    def _arrow(self, st: SessionState, result: StatementResult) -> pa.Table:
+        """``result`` as an Arrow table: its entry's stored result while
+        that is fresh (``_result_fresh``), else a run of its frame. The
+        run's table is stored in the entry when its plan gives the same
+        rows again (``_plan_reads``), every file it reads has an
+        identity, and it is one Arrow batch within the session's
+        budget."""
+        if result.reuse is None:
+            return result.df.toArrow()
+        key, generation, entry = result.reuse
+        if self._result_fresh(entry):
+            return entry.result
+        reads = _plan_reads(result.df)
+        idents = None if reads is None else _identities(reads[1])
+        table = result.df.toArrow()
+        if (idents is not None
+                and table.num_rows <= int(st.spark.conf.get(
+                    _ARROW_BATCH_ROWS))
+                and table.nbytes <= _RESULT_BYTES_PER_SESSION):
+            df = entry.df
+            if df is not None and entry.tables is None and _stateful(df):
+                df = None
+            st.plans.put(key, replace(entry, df=df, tables=reads[0],
+                                      result=table, idents=idents),
+                         generation)
+        return table
 
     def _invalidate_plans(self) -> None:
         """Make every session's cached plans stale: a statement that is
@@ -1755,7 +1917,8 @@ class Engine:
         Shares one statement lifecycle with ``collect``
         (``_materialize``)."""
         st = self._session(session_id)
-        table = self._materialize(st, result, result.df.toArrow, timeout)[0]
+        table = self._materialize(
+            st, result, lambda: self._arrow(st, result), timeout)[0]
         # GeoArrow export: stamp geometry (WKB) binary columns with
         # extension metadata at the Arrow boundary, like the reference
         # (docs/geometry.md; only binary columns are even inspected)
@@ -1850,7 +2013,10 @@ class Engine:
         also accepts DML here; its parser refuses any other kind) so
         the EXPLAIN prefix can never smuggle a write past a readonly
         session."""
-        result = self._run_statement(st, replace(rw.parsed, args=rw.args))
+        # it reports a run of the plan it analyzes, so neither a cached
+        # plan nor a stored result stands in for that
+        result = self._run_statement(
+            st, replace(rw.parsed, args=rw.args, ephemeral=True))
         if result.df is None:
             raise ValueError("EXPLAIN ANALYZE requires a query statement")
         # the run is a statement execution like any other (admission,
@@ -2016,7 +2182,10 @@ class Engine:
                 if meta is None:
                     raise ValueError(
                         f"ingest append: no such table {table!r}")
-                df = df.select(*meta.schema.fieldNames())
+                # saveAsTable appends by name; the projection drops an
+                # extra column and fails on a missing one
+                if df.columns != meta.schema.fieldNames():
+                    df = df.select(*meta.schema.fieldNames())
             n = _counted_write(
                 df, lambda d: d.write.mode(save_mode).saveAsTable(table))
             sp.set_attribute("rows", n)
@@ -2274,10 +2443,9 @@ class Engine:
         _Command(_parser(parse_secret_ddl, lambda got: Statement(
             "write", admin=f"{got[0].upper()} SECRET")),
                  _run_secret, raw=True),
-        _Command(_parser(parse_create_macro, lambda got: Statement("write")),
-                 _run_create_macro, raw=True),
-        _Command(_parser(parse_drop_macro, lambda got: Statement("write")),
-                 _run_drop_macro, raw=True),
+        _Command(_macro_parser(parse_create_macro), _run_create_macro,
+                 raw=True),
+        _Command(_macro_parser(parse_drop_macro), _run_drop_macro, raw=True),
         _Command(_parser(parse_pragma, lambda got: Statement(
             "write", admin="IMPORT DATABASE")
             if got[0] == "import_database" else Statement(

@@ -6,12 +6,14 @@ relations, the operator tier's fixture tables, persisted intermediate
 frames, fitted models and scalars collected from them. An entry built
 from files carries their identity (``file_identity``) and is rebuilt
 when that changes, so a result follows the data it was built from. An
-engine session's analyzed plans live in a second map of the same type
-(``SessionState.plans``), which the engine invalidates by its own rules.
+engine session's analyzed plans and stored results live in a second map
+of the same type (``SessionState.plans``), which the engine invalidates
+by its own rules.
 
 Each map is bounded and drops its least recently used entry past the
-bound. A frame the map replaces, evicts or clears is unpersisted, and
-a session clone it holds is dropped with its own map. The engine
+bound: a count of entries, and optionally a budget of their weight. A
+frame the map replaces, evicts or clears is unpersisted, and a session
+clone it holds is dropped with its own map. The engine
 empties a session's maps when the session closes or is killed, and
 when a Spark-level SET/RESET changes how plans are built.
 """
@@ -101,8 +103,14 @@ class SessionLRU:
     the value if the map was cleared meanwhile: a build racing with a
     clear can then not leave an entry made under the old state."""
 
-    def __init__(self, capacity: int):
+    def __init__(self, capacity: int, budget: int | None = None,
+                 weigh: Callable[[Any], int] | None = None):
         self.capacity = capacity
+        #: the most the entries may weigh together (``weigh(value)``
+        #: each); None: no budget
+        self.budget = budget
+        self._weigh = weigh or (lambda value: 0)
+        self.weight = 0
         self.generation = 0
         self._items: OrderedDict[Hashable, Any] = OrderedDict()
         self._lock = threading.Lock()
@@ -127,11 +135,17 @@ class SessionLRU:
                 dropped.append(value)
             else:
                 old = self._items.pop(key, None)
-                if old is not None and old is not value:
-                    dropped.append(old)
+                if old is not None:
+                    self.weight -= self._weigh(old)
+                    if old is not value:
+                        dropped.append(old)
                 self._items[key] = value
-                while len(self._items) > self.capacity:
-                    dropped.append(self._items.popitem(last=False)[1])
+                self.weight += self._weigh(value)
+                while len(self._items) > self.capacity or (
+                        self.budget is not None and self.weight > self.budget):
+                    old = self._items.popitem(last=False)[1]
+                    self.weight -= self._weigh(old)
+                    dropped.append(old)
         for v in dropped:
             _release(v)
 
@@ -158,6 +172,7 @@ class SessionLRU:
         with self._lock:
             dropped = list(self._items.values())
             self._items.clear()
+            self.weight = 0
             self.generation += 1
         for v in dropped:
             _release(v)

@@ -609,6 +609,43 @@ def test_kill_session_requires_admin(engine):
     engine.close_session(admin)
 
 
+def test_macro_of_another_principal_is_not_replaced(engine):
+    """A macro expands into every session's statements: a non-admin may
+    not replace or drop one another principal created."""
+    admin = engine.create_session(role="admin")
+    user = engine.create_session(role="user")
+    name = f"tbl_m_{time.monotonic_ns()}"
+    sql = f"SELECT * FROM {name}()"
+    try:
+        engine.execute_sql(admin, f"CREATE MACRO {name}() AS TABLE "
+                                  "SELECT 1 AS x")
+        denied = engine.telemetry.counter_value(
+            "engine.statements_total", status="denied")
+        for stmt in (f"CREATE OR REPLACE MACRO {name}() AS TABLE "
+                     "SELECT * FROM engine_secrets()",
+                     f"DROP MACRO {name}"):
+            with pytest.raises(security.CommandDenied):
+                engine.execute_sql(user, stmt)
+        assert engine.telemetry.counter_value(
+            "engine.statements_total", status="denied") == denied + 2
+        assert [e.status for e in engine.query_log.entries()[-2:]] == \
+            ["denied", "denied"]
+        rows = engine.collect_arrow(admin, engine.execute_sql(admin, sql))
+        assert rows.to_pylist() == [{"x": 1}]
+        # a user's own macro stays the user's to replace; an admin may
+        # replace any
+        own = f"{name}_u"
+        engine.execute_sql(user, f"CREATE MACRO {own}() AS TABLE "
+                                 "SELECT 2 AS x")
+        engine.execute_sql(user, f"CREATE OR REPLACE MACRO {own}() AS "
+                                 "TABLE SELECT 3 AS x")
+        engine.execute_sql(admin, f"DROP MACRO {own}")
+    finally:
+        engine.execute_sql(admin, f"DROP MACRO IF EXISTS {name}")
+        engine.close_session(user)
+        engine.close_session(admin)
+
+
 def test_readonly_session_rejects_writes(engine):
     ro = engine.create_session(role="readonly")
     with pytest.raises(security.CommandDenied):
@@ -632,6 +669,34 @@ def test_ingest_modes(engine, session, spark):
     with pytest.raises(Exception):
         engine.ingest(session, "ingest_t", df, mode="create")
     spark.sql("DROP TABLE IF EXISTS ingest_t")
+
+
+@pytest.mark.parametrize("columns, selects", [(["a", "b"], 0),
+                                             (["b", "a"], 1)])
+def test_ingest_append_projects_only_reordered_columns(
+        engine, session, spark, monkeypatch, columns, selects):
+    """An append whose columns are the table's, in order, is written as
+    uploaded; a reordered one is projected onto the table's order."""
+    name = f"ingest_proj_{time.monotonic_ns()}"
+    engine.ingest(session, name, pa.table({"a": [1, 2], "b": ["x", "y"]}),
+                  mode="create")
+    try:
+        calls = []
+        frame = type(spark.range(1))  # the concrete class behind DataFrame
+        real = frame.select
+        monkeypatch.setattr(frame, "select", lambda self, *a: calls.append(
+            a) or real(self, *a))
+        data = {"a": [3], "b": ["z"]}
+        assert engine.ingest(session, name,
+                             pa.table({c: data[c] for c in columns}),
+                             mode="append") == 1
+        assert len(calls) == selects
+        monkeypatch.undo()
+        rows = engine.collect(session, engine.execute_sql(
+            session, f"SELECT a, b FROM {name} ORDER BY a"))
+        assert [tuple(r) for r in rows] == [(1, "x"), (2, "y"), (3, "z")]
+    finally:
+        engine.execute_sql(session, f"DROP TABLE IF EXISTS {name}")
 
 
 @pytest.fixture()

@@ -144,6 +144,10 @@ def test_served_statement_is_recorded(server, client, admin_session):
     desc = flight.FlightDescriptor.for_command(
         json.dumps({"type": "statement_query", "session": sid,
                     "sql": sql}).encode())
+    # a result over one Arrow batch is never stored, so the repeat runs
+    # the cached plan again (test_result_reuse covers a stored result)
+    eng.execute_sql(sid, "SET spark.sql.execution.arrow.maxRecordsPerBatch"
+                         " = 10")
     for outcome in ("miss", "hit"):
         ok0 = eng.telemetry.counter_value(
             "engine.statements_total", status="ok")
@@ -179,6 +183,7 @@ def test_served_statement_is_recorded(server, client, admin_session):
         assert len(collects) == 1
         assert collects[0].parent_id == execute.span_id
         assert collects[0].attributes["rows"] == table.num_rows
+    eng.execute_sql(sid, "RESET spark.sql.execution.arrow.maxRecordsPerBatch")
 
 
 def test_tpch_q01_over_flight(client, admin_session):
